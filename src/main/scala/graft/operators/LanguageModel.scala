@@ -39,18 +39,25 @@ import org.apache.spark.sql.functions._
   * scalar driver values (T, V). Scoring is one corpus pass: per-doc token
   * arrays explode to a transition stream that left-joins the two count
   * tables (AQE broadcasts them when they fit, shuffled hash join when
-  * not) and re-aggregates by doc id. No driver-side state rides the
-  * scoring pass.
+  * not) and re-aggregates by doc id. The only driver-side state is a
+  * unigram table within the distillation budget ([[fromRaw]]).
   */
 object LanguageModel {
 
   /** A trained count LM. `unigrams`: (word, c); `bigrams`: (w1, w2, c);
     * `totalTokens` = T (reference token count, minCount-surviving words
-    * only); `vocabSize` = V. Count tables are materialized once —
-    * training is paid per model, not per scoring action.
+    * only); `vocabSize` = V. The unigram table is a snapshot: held on the
+    * driver when it fits [[DistillBudget]], materialized once otherwise
+    * (see [[fromRaw]]). The bigram table is a plan over the raw counts,
+    * computed by whichever consumer reads it.
     */
   final case class NgramLm(unigrams: DataFrame, bigrams: DataFrame,
       totalTokens: Long, vocabSize: Long)
+
+  /** Default entry budget of a distilled model, and the size up to which
+    * [[fromRaw]] keeps the unigram table on the driver.
+    */
+  val DistillBudget = 500000
 
   /** Lowercased whitespace token array per doc, empties dropped so token
     * POSITIONS (bigram adjacency) survive multi-space runs identically in
@@ -93,13 +100,15 @@ object LanguageModel {
     * model-assembly time ([[fromRaw]]), never at count time, so an
     * incremental catalog can merge deltas by plain count addition
     * (associative — ingest order cannot change the model) and a word can
-    * cross the vocabulary threshold as later deltas arrive. One
-    * scan+tokenize pass feeds both aggregates (the duplicateSpans
-    * materialize-the-front-half discipline). Output: ((word, c),
-    * (w1, w2, c)).
+    * cross the vocabulary threshold as later deltas arrive. Nothing is
+    * materialized: the two aggregates are read by different actions (the
+    * two catalog writes, [[fromRaw]]'s unigram collect and the bigram
+    * consumer), and each tokenizes the reference slice itself — a narrow
+    * stage over a bounded slice, cheaper than the extra job a token
+    * checkpoint costs. Output: ((word, c), (w1, w2, c)).
     */
   def rawCounts(ref: DataFrame, idCol: String, textCol: String): (DataFrame, DataFrame) = {
-    val toks = Materialize.once(tokenArrays(ref, idCol, textCol))
+    val toks = tokenArrays(ref, idCol, textCol)
     val uni = toks.select(explode(col("__t")).as("__w"))
       .groupBy(col("__w").as("word"))
       .agg(count(lit(1)).as("c"))
@@ -134,21 +143,33 @@ object LanguageModel {
     * an in-vocab context); T/V from the surviving vocabulary. Filtering
     * aggregated counts here equals filtering pairs before aggregation,
     * so train == fromRaw∘rawCounts by construction.
+    *
+    * The vocabulary is collected once, bounded by [[DistillBudget]]: when
+    * it fits, it becomes a driver-held table and T/V are summed on the
+    * driver, so a model the distiller will take costs one bounded
+    * collect here and no checkpoint. A vocabulary past the budget is the
+    * join scorer's case: it is materialized once (the scorer reads it twice,
+    * the T/V aggregate once more) and T/V come from one aggregate over
+    * it. The bigram table stays a plan either way.
     */
   def fromRaw(uniRaw: DataFrame, biRaw: DataFrame, minCount: Long = 1L): NgramLm = {
-    val uni = Materialize.once(uniRaw.where(col("c") >= minCount))
-    val vocab1 = uni.select(col("word").as("w1"))
-    val vocab2 = uni.select(col("word").as("w2"))
+    val cut = uniRaw.where(col("c") >= minCount).select("word", "c")
+    val rows = cut.limit(DistillBudget + 1).collect()
+    val (uni, t, v) =
+      if (rows.length <= DistillBudget)
+        (cut.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), cut.schema),
+          rows.iterator.map(_.getLong(1)).sum, rows.length.toLong)
+      else {
+        val m = Materialize.once(cut)
+        val agg = m.agg(coalesce(sum(col("c")), lit(0L)), count(lit(1))).head()
+        (m, agg.getLong(0), agg.getLong(1))
+      }
     // re-pin column ORDER after the using-column semi-joins (they move
     // the join column first); consumers that collect read positionally
-    val bi = Materialize.once(
-      biRaw.join(vocab1, Seq("w1"), "left_semi")
-        .join(vocab2, Seq("w2"), "left_semi")
-        .select("w1", "w2", "c"))
-    val agg = uni.agg(
-      coalesce(sum(col("c")), lit(0L)).as("t"),
-      count(lit(1)).as("v")).head()
-    NgramLm(uni, bi, agg.getLong(0), agg.getLong(1))
+    val bi = biRaw.join(uni.select(col("word").as("w1")), Seq("w1"), "left_semi")
+      .join(uni.select(col("word").as("w2")), Seq("w2"), "left_semi")
+      .select("w1", "w2", "c")
+    NgramLm(uni, bi, t, v)
   }
 
   /** Score documents under a trained LM: (idCol, n_tokens, lm_bits,
@@ -226,12 +247,12 @@ object LanguageModel {
     * [[scoreDocs]]' three-join pipeline otherwise. Output is IDENTICAL
     * either way — the distilled kernel replicates the join arithmetic
     * bit for bit (spec-gated both sides of the gate; q_lm_score's oracle
-    * hash-gates the composed result). The size probe is two counts over
-    * the already-materialized count tables — bounded work, never a
-    * corpus pass.
+    * hash-gates the composed result). The size probe is the distiller's
+    * own bounded collect ([[distillIfFits]]) — at most `maxEntries + 1`
+    * rows, never a corpus pass.
     */
   def scoreDocsAuto(df: DataFrame, idCol: String, textCol: String,
-      lm: NgramLm, maxEntries: Int = 500000): DataFrame =
+      lm: NgramLm, maxEntries: Int = DistillBudget): DataFrame =
     distillIfFits(lm, maxEntries) match {
       case Some(d) => scoreDocsDistilled(df, idCol, textCol, d)
       case None => scoreDocs(df, idCol, textCol, lm)
@@ -489,24 +510,28 @@ object LanguageModel {
     * inside `maxEntries`; CCNet itself ships a compact distilled model to
     * its scoring pass rather than joining against raw counts.
     */
-  def distill(lm: NgramLm, maxEntries: Int = 500000): DistilledLm =
+  def distill(lm: NgramLm, maxEntries: Int = DistillBudget): DistilledLm =
     distillIfFits(lm, maxEntries).getOrElse(throw new IllegalArgumentException(
       s"LM too large to distill: uni+bi > $maxEntries entries " +
         "(raise minCount at train time, or score with the join-based scoreDocs)"))
 
   /** [[distill]]'s size probe without the hard failure: Some(distilled)
     * when uni+bi fits `maxEntries`, None otherwise — the gate behind
-    * [[scoreDocsAuto]]'s distilled-vs-join decision.
+    * [[scoreDocsAuto]]'s distilled-vs-join decision. Each table is
+    * collected once, capped one row past what is left of the budget, so
+    * the probe IS the distillation and the driver never holds more than
+    * `maxEntries + 1` rows. A driver-held unigram table (the common case,
+    * see [[fromRaw]]) collects without a job.
     */
-  def distillIfFits(lm: NgramLm, maxEntries: Int = 500000): Option[DistilledLm] = {
-    val nUni = lm.unigrams.count()
-    val nBi = lm.bigrams.count()
-    if (nUni + nBi > maxEntries) None
+  def distillIfFits(lm: NgramLm, maxEntries: Int = DistillBudget): Option[DistilledLm] = {
+    def upTo(n: Long) = math.min(n + 1, Int.MaxValue).toInt
+    val uni = lm.unigrams.select("word", "c").limit(upTo(maxEntries)).collect()
+    val bi = if (uni.length > maxEntries) Array.empty[org.apache.spark.sql.Row]
+      else lm.bigrams.select("w1", "w2", "c").limit(upTo(maxEntries.toLong - uni.length)).collect()
+    if (uni.length + bi.length > maxEntries) None
     else Some(DistilledLm(
-      lm.unigrams.select("word", "c").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap,
-      lm.bigrams.select("w1", "w2", "c").collect()
-        .map(r => r.getString(0) + " " + r.getString(1) -> r.getLong(2)).toMap,
+      uni.map(r => r.getString(0) -> r.getLong(1)).toMap,
+      bi.map(r => r.getString(0) + " " + r.getString(1) -> r.getLong(2)).toMap,
       lm.totalTokens, lm.vocabSize))
   }
 

@@ -54,12 +54,9 @@ object Vocabulary {
     * use [[oovRateAgainst]] to score against a reference corpus instead).
     * Output: (idCol, n_tokens, n_oov, oov_rate).
     *
-    * The vocab pass and the probe pass both need the token stream;
-    * the per-doc token array (≈ the text's own size, strictly smaller
-    * than the token shuffle each pass already pays) is materialized once
-    * so the corpus is scanned and tokenized once, not twice — the x16
-    * bench lane measured the recompute as this query's whole
-    * Spark-vs-DuckDB gap (DuckDB materializes the shared CTE).
+    * The corpus is read twice: once by the vocabulary aggregate, whose
+    * thresholded output is collected, and once by the scoring pass
+    * ([[oovAgainstAuto]]).
     */
   def oovRate(df: DataFrame, idCol: String, textCol: String,
       minCount: Long, maxDistillEntries: Int = 500000): DataFrame =
@@ -71,32 +68,34 @@ object Vocabulary {
     oovAgainstAuto(df, idCol, textCol, vocabDf, maxDistillEntries)
 
   /** Vocabulary-size adaptive scoring (r16, the scoreDocsAuto
-    * discipline): the vocabulary is materialized once and counted; when
-    * it fits `maxDistillEntries` the corpus pass is ONE codegen'd scan
-    * against a distilled membership set
+    * discipline): the vocabulary is collected once, capped one row past
+    * `maxDistillEntries`; when it fits, the corpus pass is ONE codegen'd
+    * scan against a distilled membership set
     * ([[graft.functions.OovRateScore]]) — no token-array checkpoint, no
     * corpus-sized explode, no vocabulary join, no per-doc re-aggregation
     * — with arithmetic identical to the join path (spec-gated; the
     * oracle replays the join form). Past the budget (Heaps' law at web
-    * scale with low minCount) the probe falls back to the join path;
-    * the fallback re-tokenizes for the probe pass instead of
-    * checkpointing corpus-sized token arrays — at the scale where the
-    * fallback triggers, re-running the narrow tokenize stage is cheaper
-    * than writing (and 2x-replicating, on a cluster) the token stream.
+    * scale with low minCount) the probe falls back to the join path
+    * against the vocabulary materialized once; the fallback re-tokenizes
+    * for the probe pass instead of checkpointing corpus-sized token
+    * arrays — at the scale where the fallback triggers, re-running the
+    * narrow tokenize stage is cheaper than writing (and 2x-replicating,
+    * on a cluster) the token stream.
     */
   private def oovAgainstAuto(df: DataFrame, idCol: String, textCol: String,
       vocabDf: DataFrame, maxDistillEntries: Int): DataFrame = {
-    val vocab = Materialize.once(vocabDf)
-    if (vocab.count() <= maxDistillEntries) {
-      val words = vocab.select(col("word")).collect().map(_.getString(0))
+    val words = vocabDf.select(col("word"))
+      .limit(math.min(maxDistillEntries.toLong + 1, Int.MaxValue).toInt).collect()
+    if (words.length <= maxDistillEntries) {
       val score = org.apache.spark.sql.GraftBridge.column(
         graft.functions.OovRateScore(
-          org.apache.spark.sql.GraftBridge.expression(col(textCol)), words))
+          org.apache.spark.sql.GraftBridge.expression(col(textCol)), words.map(_.getString(0))))
       KeepRows.nonNull(df.select(col(idCol), col(textCol)), "__s", score)
         .select(col(idCol), col("__s.n_tokens").as("n_tokens"),
           col("__s.n_oov").as("n_oov"), col("__s.oov_rate").as("oov_rate"))
     } else
-      oovFromTokens(explodeTokens(tokenArrays(df, idCol, textCol)), idCol, vocab)
+      oovFromTokens(explodeTokens(tokenArrays(df, idCol, textCol)), idCol,
+        Materialize.once(vocabDf))
   }
 
   private def oovFromTokens(tok: DataFrame, idCol: String,

@@ -26,7 +26,7 @@ case class Doc(doc_id: Long, text: String, lang: String, source: String, n_chars
 
 object Tables {
   def df(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.GraftIO.loadParquet(spark, s"$dir/$name.parquet")
 
   /** Normalize a timestamp-ish column to nanos-since-epoch BIGINT,
     * whatever physical type the data generator used for it that round:

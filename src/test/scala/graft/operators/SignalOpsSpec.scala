@@ -120,6 +120,32 @@ class SignalOpsSpec extends AnyFunSuite {
     val jA = rows(Vocabulary.oovRateAgainst(docs, "doc_id", "text", vocab,
       maxDistillEntries = 0))
     assert(kA == jA && kA.nonEmpty)
+    // the gate's boundary: a budget of exactly the vocabulary size takes
+    // the kernel, one less takes the join; both equal the join path
+    val size = Vocabulary.vocabulary(docs, "doc_id", "text", 2).count().toInt
+    val atSize = Vocabulary.oovRate(docs, "doc_id", "text", minCount = 2,
+      maxDistillEntries = size)
+    val under = Vocabulary.oovRate(docs, "doc_id", "text", minCount = 2,
+      maxDistillEntries = size - 1)
+    assert(!atSize.queryExecution.analyzed.toString.contains("Join"))
+    assert(under.queryExecution.analyzed.toString.contains("Join"))
+    assert(rows(atSize) == joined && rows(under) == joined)
+  }
+
+  test("q_oov_rate and q_lm_score build with a bounded number of Spark jobs") {
+    // query construction pays one bounded collect per table it must
+    // know: the vocabulary (a shuffle-map job + the collect) for
+    // q_oov_rate; the unigram and the vocabulary-restricted bigram tables
+    // for q_lm_score; no schema job for the parquet load
+    val dir = java.nio.file.Files.createTempDirectory("graft-build-jobs").toString
+    corpusDf.write.parquet(s"$dir/documents.parquet")
+    def buildJobs(q: String) =
+      org.apache.spark.JobCount(spark.sparkContext)(graft.SparkEntry.queries(q)(spark, dir))
+    val (oov, oovJobs) = buildJobs("q_oov_rate")
+    val (lm, lmJobs) = buildJobs("q_lm_score")
+    assert(oovJobs <= 2, s"q_oov_rate built with $oovJobs jobs")
+    assert(lmJobs <= 5, s"q_lm_score built with $lmJobs jobs")
+    assert(oov.count() == 40 && lm.count() == 40)
   }
 
   test("oovRateAgainst: reference-vocabulary scoring") {
@@ -655,6 +681,33 @@ class SignalOpsSpec extends AnyFunSuite {
     assert(fallback.queryExecution.analyzed.toString.contains("Join"),
       "the fallback is the three-join scorer")
     assert(rows(fallback) == joined)
+    // the gate's boundary: uni + bi == maxEntries distils, one less
+    // falls back; both equal the join path
+    val size = (lm.unigrams.count() + lm.bigrams.count()).toInt
+    val atSize = LanguageModel.scoreDocsAuto(docs, "doc_id", "text", lm, maxEntries = size)
+    val under = LanguageModel.scoreDocsAuto(docs, "doc_id", "text", lm, maxEntries = size - 1)
+    assert(atSize.queryExecution.analyzed.toString.contains("graft_distilled_lm_score"))
+    assert(!under.queryExecution.analyzed.toString.contains("graft_distilled_lm_score"))
+    assert(rows(atSize) == joined && rows(under) == joined)
+  }
+
+  test("a vocabulary past the distillation budget is materialized and scored by joins") {
+    // one distinct word per reference doc: DistillBudget + 1 unigrams, so
+    // fromRaw materializes the vocabulary and sums T/V by aggregate
+    val n = LanguageModel.DistillBudget + 1L
+    val ref = spark.range(n).select(col("id").as("doc_id"),
+      concat(lit("w"), col("id").cast("string")).as("text"))
+    val lm = LanguageModel.train(ref, "doc_id", "text")
+    assert(lm.totalTokens == n && lm.vocabSize == n)
+    assert(LanguageModel.distillIfFits(lm).isEmpty)
+    val docs = Seq((1L, "w7"), (2L, "w7 w8"), (3L, "unseen")).toDF("doc_id", "text")
+    // first token: |bin(T+V)| - |bin(c+1)|; second (unseen pair):
+    // |bin(c(w7)+V)| - |bin(1)|
+    val first = java.lang.Long.toBinaryString(2 * n).length
+    val bits = LanguageModel.scoreDocsAuto(docs, "doc_id", "text", lm)
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(bits == Map(1L -> (first - 2L), 2L -> (first - 2L +
+      java.lang.Long.toBinaryString(1 + n).length - 1L), 3L -> (first - 1L)))
   }
 
   test("dsirAgainstSlicePreds (one shared corpus tokenize) == general dsirAgainstSlices") {
