@@ -538,23 +538,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // InferFiltersFromGenerate duplicates every kernel-array generator
-      // into a Filter below the Generate (size(kernel(..)) > 0 AND ..
-      // IS NOT NULL) that pushdown re-inlines -- the gram/band kernels
-      // then run TWICE per row, and the Generate already skips null/empty
-      // arrays on its own (outer = false). Always a pessimization for
-      // this engine's plans (ProbePlanGate r12), so excluded.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.sessionBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val benchSet = Queries.all.filter(_.bench)

@@ -184,7 +184,8 @@ object InflatedCorpus {
     val factor = args.lift(1).map(_.toInt).getOrElse(16)
     val docLen = args.lift(3).map(_.toInt).getOrElse(1)
     val outDir = args.lift(2).getOrElse(defaultDir(sfDir, factor, docLen))
-    val spark = DevSpark.session()
+    val spark = SparkEntry.sessionBuilder(32).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     val b = ensure(spark, sfDir, factor, outDir, docLen)
     println(s"[inflate] dir=${b.dir} factor=${b.factor} built=${b.built} " +
       f"build_sec=${b.buildSec}%.1f")

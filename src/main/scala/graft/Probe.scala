@@ -1,31 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Shared local session for the dev probes (same config as Bench). */
-private[graft] object DevSpark {
-  def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // InferFiltersFromGenerate duplicates every kernel-array generator
-      // into a Filter below the Generate (size(kernel(..)) > 0 AND ..
-      // IS NOT NULL) that pushdown re-inlines -- the gram/band kernels
-      // then run TWICE per row, and the Generate already skips null/empty
-      // arrays on its own (outer = false). Always a pessimization for
-      // this engine's plans (ProbePlanGate r12), so excluded.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-}
-
 /** Ad-hoc plan/perf probe (dev tool, not part of the driver contract):
   * prints the executed plan and isolated timings for one named query.
   * `Probe --dot <query> [out.dot]` instead renders the executed plan as
@@ -33,36 +7,33 @@ private[graft] object DevSpark {
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("--dot")) { dot(args.drop(1)); return }
-    val name = args.headOption.getOrElse("q_revenue_by_nation")
+    val dotMode = args.headOption.contains("--dot")
+    val rest = if (dotMode) args.drop(1) else args
+    val name = rest.headOption.getOrElse("q_revenue_by_nation")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = DevSpark.session()
+    val spark = SparkEntry.sessionBuilder(32).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     val qd = graft.queries.Queries.all.find(_.name == name).get
-    // warm-up then 3 timed runs
-    qd.fn(spark, sfDir).count()
-    (1 to 3).foreach { i =>
-      val t0 = System.nanoTime()
+    if (dotMode) {
+      val out = rest.lift(1).getOrElse(name + ".dot")
+      val df = qd.fn(spark, sfDir)
+      df.count() // execute so AQE settles on the final plan
+      val dotStr = graft.plans.PlanDot.toDot(df.queryExecution.executedPlan, name)
+      java.nio.file.Files.write(java.nio.file.Paths.get(out),
+        dotStr.getBytes("UTF-8"))
+      println(s"[probe] wrote $out (${dotStr.linesIterator.size} lines)")
+    } else {
+      // warm-up then 3 timed runs
       qd.fn(spark, sfDir).count()
-      println(f"[probe] run$i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      (1 to 3).foreach { i =>
+        val t0 = System.nanoTime()
+        qd.fn(spark, sfDir).count()
+        println(f"[probe] run$i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      }
+      val df = qd.fn(spark, sfDir)
+      df.count()
+      println(df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0))
     }
-    val df = qd.fn(spark, sfDir)
-    df.count()
-    println(df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0))
-    spark.stop()
-  }
-
-  private def dot(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse("q_revenue_by_nation")
-    val out = args.lift(1).getOrElse(name + ".dot")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = DevSpark.session()
-    val qd = graft.queries.Queries.all.find(_.name == name).get
-    val df = qd.fn(spark, sfDir)
-    df.count() // execute so AQE settles on the final plan
-    val dotStr = graft.plans.PlanDot.toDot(df.queryExecution.executedPlan, name)
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      dotStr.getBytes("UTF-8"))
-    println(s"[probe] wrote $out (${dotStr.linesIterator.size} lines)")
     spark.stop()
   }
 }

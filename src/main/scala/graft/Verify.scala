@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,25 +13,8 @@ object Verify {
         System.err.println("usage: graft.Verify <sfDir> <outDir> [q_name1,q_name2,...]")
         sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // InferFiltersFromGenerate duplicates every kernel-array generator
-      // into a Filter below the Generate (size(kernel(..)) > 0 AND ..
-      // IS NOT NULL) that pushdown re-inlines -- the gram/band kernels
-      // then run TWICE per row, and the Generate already skips null/empty
-      // arrays on its own (outer = false). Always a pessimization for
-      // this engine's plans (ProbePlanGate r12), so excluded.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts physical type has varied by round (int64 ns, then
-      // timestamp[us]); nanosAsLong covers the ns variant and
-      // Tables.eventsNs normalizes whichever arrives to nanos longs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = SparkEntry.sessionBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -665,8 +665,9 @@ case class SignatureAgreement(left: Expression, right: Expression)
 
 /** first_agree_pos(a, b): the 1-based position of the FIRST index where
   * two array<long> signatures agree, 0 when none does — value-identical
-  * to `array_position(zip_with(a, b, (x, y) -> x = y), true)` over
-  * equal-length null-free arrays (the band-hash contract; spec-pinned).
+  * to `array_position(zip_with(a, b, (x, y) -> x = y), true)` on every
+  * input (spec-pinned): positions past the shorter array and null slots
+  * never agree, since `x = y` is null there, not true.
   * That composition is the exact-once dedup condition of the LSH bucket
   * join (a pair colliding in k bands keeps only its first-agreeing-band
   * copy), and as a JOIN CONDITION it ran INTERPRETED per collision row:
@@ -692,7 +693,8 @@ case class FirstAgreePos(left: Expression, right: Expression)
     val n = math.min(a.numElements(), b.numElements())
     var i = 0
     while (i < n) {
-      if (a.getLong(i) == b.getLong(i)) return (i + 1).toLong
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i))
+        return (i + 1).toLong
       i += 1
     }
     0L
@@ -702,11 +704,18 @@ case class FirstAgreePos(left: Expression, right: Expression)
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
+      // null-slot checks only where the type admits nulls: the band-hash
+      // kernels declare containsNull = false, so their loop is unchanged
+      def present(arr: String, e: Expression) = e.dataType match {
+        case ArrayType(_, true) => s"!$arr.isNullAt($i) && "
+        case _ => ""
+      }
+      val agree = s"${present(a, left)}${present(b, right)}$a.getLong($i) == $b.getLong($i)"
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |${ev.value} = 0L;
          |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) { ${ev.value} = $i + 1L; break; }
+         |  if ($agree) { ${ev.value} = $i + 1L; break; }
          |}
        """.stripMargin
     })

@@ -74,42 +74,9 @@ object Dedup {
     * PIPELINE — banding, bucket join, first-agreeing-band exact-once
     * filter, full-signature verify — on the oracle-gated path.
     */
-  /** Bloom-prune the full-signature verify joins (guide §3.2, r16):
-    * when ON, the doc-count-sized `sigs` relation is filtered through a
-    * Bloom filter over the surviving candidate-pair ids BEFORE the two
-    * verify joins — at scale those joins otherwise shuffle EVERY
-    * document's numHashes-long signature even though only candidate
-    * docs (the dup mass, typically a small fraction) can match. False
-    * positives only admit extra build rows that the inner join drops, so
-    * the pair set is unchanged (spec-gated, DedupSpec). Cost: the
-    * exact-once pairs are materialized (they gain a second consumer —
-    * the filter build) plus one count and one bloom-build job, which is
-    * why this is OFF by default locally: at bench scale the verify
-    * joins are broadcasts and the extra driver actions would only add
-    * fixed overhead (ProbeMinhash: verify adds ~0 ms at x16). Enable at
-    * cluster scale with SPARK_GRAFT_MINHASH_VERIFY_BLOOM=1 — the
-    * decision is corpus-size-dependent, so it is parameterised rather
-    * than hard-coded to either regime. Ids must be integral (the bloom
-    * probe is mightContainLong); non-integral ids keep the unpruned
-    * joins.
-    */
-  private val VerifyBloomDefault: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_MINHASH_VERIFY_BLOOM", "0") == "1"
-
-  private def bloomPrunedSigs(sigs: DataFrame, pairs: DataFrame): DataFrame = {
-    val ids = pairs.select(col("idA").as("__pid"))
-      .unionAll(pairs.select(col("idB").as("__pid")))
-    val n = math.max(ids.count(), 1L)
-    val bf = ids.stat.bloomFilter("__pid", n, 0.01)
-    val bfB = sigs.sparkSession.sparkContext.broadcast(bf)
-    val might = udf((id: Long) => bfB.value.mightContainLong(id))
-    Materialize.once(sigs.where(might(col("__id"))))
-  }
-
   private[graft] def minhashPairsFromSigs(sigs: DataFrame, bands: Int,
       threshold: Double, bandHash: Column => Column,
-      pairWhere: Option[Column] = None,
-      verifyBloom: Boolean = VerifyBloomDefault): DataFrame = {
+      pairWhere: Option[Column] = None): DataFrame = {
     // Candidate generation carries only (id, band hashes): the banding
     // explode and bucket join shuffle `bands` longs per doc, not the full
     // `numHashes`-long signature. A pair colliding in k bands appears k
@@ -161,21 +128,12 @@ object Dedup {
       .join(withBh.select(col("__id").as("idB"), col("__bh").as("__bhB")), "idB")
       .where(col("__band") === firstAgree - 1)
       .select(col("idA"), col("idB"))
-    // full-signature verify only for surviving candidate pairs; at
-    // cluster scale the verify side is bloom-pruned to candidate docs
-    // first (see bloomPrunedSigs — identical pair set, spec-gated)
-    val integralId = sigs.schema("__id").dataType match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType => true
-      case _ => false
-    }
-    val (pairsIn, verifySide) =
-      if (verifyBloom && integralId) {
-        val p = Materialize.once(pairs)
-        (p, bloomPrunedSigs(sigs, p))
-      } else (pairs, sigs)
-    KeepRows.matching(pairsIn
-        .join(verifySide.select(col("__id").as("idA"), col("__sig").as("__sigA")), "idA")
-        .join(verifySide.select(col("__id").as("idB"), col("__sig").as("__sigB")), "idB"),
+    // full-signature verify only for surviving candidate pairs: each
+    // side joins the whole doc-count-sized signature relation (broadcast
+    // at local scale, shuffled beyond)
+    KeepRows.matching(pairs
+        .join(sigs.select(col("__id").as("idA"), col("__sig").as("__sigA")), "idA")
+        .join(sigs.select(col("__id").as("idB"), col("__sig").as("__sigB")), "idB"),
         "est_jaccard",
         graft.functions.HashExpressions.signatureAgreement(col("__sigA"), col("__sigB")),
         _ >= threshold)
@@ -209,9 +167,6 @@ object Dedup {
       .withColumnsRenamed(Map("idA" -> "probe_id", "idB" -> "ref_id"))
   }
 
-  /** [[minhashCrossDuplicates]] under the fixture hash family — the
-    * oracle-gated twin (the q_dedup_minhash_fixed discipline).
-    */
   /** Signature cost must never be serialized through the input FILE
     * layout: a small parquet reads as ONE partition and the whole corpus
     * hashes in one task (measured: the interpreted fixture chains at 10x
@@ -243,6 +198,9 @@ object Dedup {
     else df
   }
 
+  /** [[minhashCrossDuplicates]] under the fixture hash family — the
+    * oracle-gated twin (the q_dedup_minhash_fixed discipline).
+    */
   def minhashCrossDuplicatesFixture(probe: DataFrame, reference: DataFrame,
       idCol: String, textCol: String, shingle: Int = 3, numHashes: Int = 64,
       bands: Int = 16, threshold: Double = 0.7): DataFrame = {

@@ -113,9 +113,10 @@ object ExtQueries {
   }
 
   /** Fixture merge table for q_bpe_apply: real BPE rules trained once on
-    * the sf0.01 documents corpus by [[graft.functions.Bpe.train]] (ProbeBpe
-    * prints them; training is deterministic — count-desc/lexicographic
-    * dictionary cut, lexicographic tie-break on the pair argmax).
+    * the sf0.01 documents corpus, `Bpe.train(docs, "text", numMerges =
+    * 16)` over `documents.parquet` (training is deterministic —
+    * count-desc/lexicographic dictionary cut, lexicographic tie-break on
+    * the pair argmax).
     * Constants here so the DuckDB oracle can interpolate the SAME rules.
     */
   private[graft] val BpeFixtureMerges: Seq[(String, String)] = Seq(
@@ -165,9 +166,10 @@ object ExtQueries {
 
   /** Fixture merge table for q_bpe_bytes: byte-level (GPT-2-style) BPE
     * rules trained once on the sf0.01 documents corpus by
-    * [[graft.functions.ByteBpe.train]] (ProbeByteBpe prints them;
-    * training is deterministic — count-desc/lexicographic dictionary
-    * cut, lexicographic pair tie-break). Symbols are UPPERCASE-hex
+    * `ByteBpe.train(docs, "text", numMerges = 16)` over
+    * `documents.parquet` (training is deterministic —
+    * count-desc/lexicographic dictionary cut, lexicographic pair
+    * tie-break). Symbols are UPPERCASE-hex
     * UTF-8 bytes — on this ASCII corpus the learned rules mirror the
     * char-level [[BpeFixtureMerges]] byte for byte (er/in/ow/or/st/...),
     * which is itself a fixture-level consistency check between the two
@@ -216,9 +218,10 @@ object ExtQueries {
 
   /** Fixture vocabulary for q_unigram_apply: a real unigram-LM
     * (SentencePiece-style) vocab trained once on the sf0.01 documents
-    * corpus by [[graft.functions.Unigram.train]] (ProbeUnigram prints
-    * it; Viterbi-EM is deterministic — ordered cuts, integer surprisal
-    * costs in 1/256-bit units). Constants here so the DuckDB oracle can
+    * corpus, `Unigram.train(docs, "text", vocabSize = 160, maxPieceLen
+    * = 4, iters = 3, seed = 2048)` over `documents.parquet` (Viterbi-EM
+    * is deterministic — ordered cuts, integer surprisal costs in
+    * 1/256-bit units). Constants here so the DuckDB oracle can
     * interpolate the SAME pieces/costs.
     */
   private val UnigramFixture: Seq[(String, Long)] = Seq(
@@ -300,9 +303,9 @@ object ExtQueries {
 
   /** Fixture vocab for q_wordpiece_apply: a real WordPiece vocabulary
     * (likelihood-score merges, Wu et al. 2016) trained once on the
-    * sf0.01 documents corpus by [[graft.functions.WordPiece.train]]
-    * (ProbeWordPiece prints it; training is deterministic — integer
-    * cross-multiplied score argmax, lexicographic ties, ordered
+    * sf0.01 documents corpus, `WordPiece.train(docs, "text", numMerges
+    * = 24)` over `documents.parquet` (training is deterministic —
+    * integer cross-multiplied score argmax, lexicographic ties, ordered
     * dictionary cut). Constants here so the DuckDB oracle can
     * interpolate the SAME pieces.
     */

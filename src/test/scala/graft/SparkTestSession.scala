@@ -5,22 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One SparkSession for the whole forked test JVM. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // InferFiltersFromGenerate duplicates every kernel-array generator
-      // into a Filter below the Generate (size(kernel(..)) > 0 AND ..
-      // IS NOT NULL) that pushdown re-inlines -- the gram/band kernels
-      // then run TWICE per row, and the Generate already skips null/empty
-      // arrays on its own (outer = false). Always a pessimization for
-      // this engine's plans (ProbePlanGate r12), so excluded.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = SparkEntry.sessionBuilder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -87,6 +87,46 @@ class HashExpressionsSpec extends AnyFunSuite {
     val lit3 = org.apache.spark.sql.catalyst.expressions.Literal.create(
       rows.head._2, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))
     assert(FirstAgreePos(lit2, lit3).eval(null) == want.head)
+
+    // nullable elements: a null slot never agrees (x === null is null,
+    // not true), even where the other slot is null too or the value a
+    // null slot would read as (0); the HOF composition skips those
+    // positions, and so must both the interpreted and codegen kernels
+    val planted = Seq(
+      (Seq(None, Some(5L)), Seq(Some(0L), Some(5L))),
+      (Seq(Some(0L), Some(5L)), Seq(None, Some(5L))),
+      (Seq(None, Some(7L)), Seq(None, Some(7L))),
+      (Seq(None, None), Seq(None, None)),
+      (Seq(None, Some(1L)), Seq(Some(0L))),
+      (Seq(Some(3L), None), Seq(Some(3L), None)))
+    val nullRows = planted ++ (0 until 200).map { _ =>
+      val n = 1 + rnd.nextInt(8)
+      def slot() = if (rnd.nextInt(3) == 0) None else Some(rnd.nextInt(3).toLong)
+      (Seq.fill(n)(slot()), Seq.fill(n)(slot()))
+    }
+    // repartition keeps the projection above a real exchange, so it is
+    // compiled rather than folded into a local relation
+    val ndf = nullRows.toDF("a", "b").repartition(2)
+      .withColumn("want", array_position(zip_with($"a", $"b", (x, y) => x === y), lit(true)))
+      .withColumn("got", HashExpressions.firstAgreePos($"a", $"b"))
+    assert(ndf.schema("a").dataType ==
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, true))
+    ndf.select($"a", $"b", $"want", $"got").collect().foreach { r =>
+      assert(r.getLong(3) == r.getLong(2), s"codegen: a=${r.get(0)} b=${r.get(1)}")
+    }
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val arrT = org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, true)
+    val expr = FirstAgreePos(BoundReference(0, arrT, true), BoundReference(1, arrT, true))
+    val compiled = UnsafeProjection.create(Seq(expr))
+    val wantPlanted = Seq(2L, 2L, 2L, 0L, 0L, 1L)
+    planted.zip(wantPlanted).foreach { case ((a, b), w) =>
+      def arr(xs: Seq[Option[Long]]) = new GenericArrayData(xs.map(_.map(Long.box).orNull))
+      val row = InternalRow(arr(a), arr(b))
+      assert(expr.eval(row) == w, s"eval: a=$a b=$b")
+      assert(compiled(row).getLong(0) == w, s"codegen: a=$a b=$b")
+    }
   }
 
   test("interpreted eval matches codegen result") {

@@ -78,24 +78,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got.getDouble(3) == prec)
   }
 
-  test("verify-join bloom prune leaves the minhash pair set unchanged") {
-    // guide §3.2 (r16): pruning the doc-count-sized verify side through a
-    // bloom over candidate ids can only drop rows the inner join would
-    // not have matched (no false negatives), so the pair set — ids AND
-    // est_jaccard — must be identical with the prune on and off
-    import org.apache.spark.sql.functions.col
-    val many = docs().unionByName(
-      docs().select((col("doc_id") + 100).as("doc_id"), col("text")))
-    val sigs = Materialize.once(many.select(col("doc_id").as("__id"),
-      Dedup.minhashSignature(col("text"), 3, 64).as("__sig")))
-    def pairSet(bloom: Boolean) = Dedup.minhashPairsFromSigs(sigs, 16, 0.7,
-        graft.functions.HashExpressions.bandHashes(_, 16), verifyBloom = bloom)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val off = pairSet(bloom = false)
-    val on = pairSet(bloom = true)
-    assert(off.nonEmpty && on == off)
-  }
-
   test("minhash est_jaccard is 1.0 for exact duplicates") {
     val est = Dedup.minhashNearDuplicates(docs(), "doc_id", "text")
       .where($"idA" === 0 && $"idB" === 3).collect()
