@@ -147,17 +147,31 @@ def main(sf_dir, out_dir):
 # InflatedCorpus, Probe), which live outside these packages; an env-gated
 # path inside the engine is a second code path nobody benchmarks.
 ENGINE_PACKAGES = "core functions operators plans queries sources streaming".split()
-ENGINE_KNOB = re.compile(r"\bsys\.env\b|\bSystem\.getenv\b|\budf\(")
+ENGINE_KNOB = re.compile(r"\bsys\.env\b|\bSystem\.getenv\b|\budf\s*[({]")
+# (file, stripped source line) -> reason. Every entry must still match a
+# line, so the list cannot go stale and a new site always fails.
+ENGINE_KNOB_ALLOW = {
+    ("src/main/scala/graft/streaming/GraftStreaming.scala",
+     "val clean = udf { (text: String) =>"):
+        "decontaminateSpanStream's per-row span strip: its HOF form "
+        "(an aggregate fold over the token array) is O(n^2) per document",
+}
 
 def engine_knobs():
     repo = os.path.join(os.path.dirname(__file__), "..")
-    hits = []
+    hits, allowed = [], set()
     for pkg in ENGINE_PACKAGES:
         pattern = os.path.join(repo, "src", "main", "scala", "graft", pkg, "**", "*.scala")
         for path in sorted(glob.glob(pattern, recursive=True)):
+            rel = os.path.relpath(path, repo)
             for n, line in enumerate(open(path, encoding="utf-8"), 1):
                 if ENGINE_KNOB.search(line):
-                    hits.append(f"{os.path.relpath(path, repo)}:{n}: {line.strip()[:120]}")
+                    if (rel, line.strip()) in ENGINE_KNOB_ALLOW:
+                        allowed.add((rel, line.strip()))
+                    else:
+                        hits.append(f"{rel}:{n}: {line.strip()[:120]}")
+    for rel, line in sorted(set(ENGINE_KNOB_ALLOW) - allowed):
+        hits.append(f"stale allowlist entry, no longer in {rel}: {line}")
     return hits
 
 def bench_check(path):

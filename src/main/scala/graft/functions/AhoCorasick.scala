@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.GraftBridge.InputType
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -138,16 +138,13 @@ final class AcAutomaton(val patterns: Array[String]) extends Serializable {
   * (overlaps included) under a plan-constant automaton — one codegen'd
   * scan for the whole blocklist.
   */
-case class AcCounts(child: Expression, patterns: Seq[String]) extends UnaryExpression {
+case class AcCounts(child: Expression, patterns: Seq[String])
+    extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_ac_counts"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   @transient private lazy val ac = new AcAutomaton(patterns.toArray)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
   override def nullSafeEval(input: Any): Any =
     new GenericArrayData(ac.countAll(input.asInstanceOf[UTF8String]))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {

@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.GraftBridge.InputType
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -286,16 +286,12 @@ object BpeRuntime {
   * serialization per row.
   */
 case class BpeApplyWord(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_bpe_apply_word"
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   @transient private lazy val lefts: Array[String] = merges.map(_._1).toArray
   @transient private lazy val rights: Array[String] = merges.map(_._2).toArray
@@ -322,16 +318,12 @@ case class BpeApplyWord(child: Expression, merges: Seq[(String, String)])
   * the numbers.
   */
 case class BpeApplyText(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_bpe_apply_text"
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   @transient private lazy val lefts: Array[String] = merges.map(_._1).toArray
   @transient private lazy val rights: Array[String] = merges.map(_._2).toArray
@@ -483,16 +475,12 @@ object Bpe {
   * WholeStageCodegen.
   */
 case class ByteBpeApplyWord(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_byte_bpe_apply_word"
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   // pre-decoded rule bytes for the span-based fast path (r15) — the
   // hex decode happens once per expression instance, not per word
@@ -525,16 +513,12 @@ case class ByteBpeApplyWord(child: Expression, merges: Seq[(String, String)])
   * ByteBpeSpec).
   */
 case class ByteBpeApplyText(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_byte_bpe_apply_text"
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   @transient private lazy val lefts: Array[Array[Byte]] =
     merges.map(m => BpeRuntime.decodeHex(m._1)).toArray
@@ -566,16 +550,13 @@ case class ByteBpeApplyText(child: Expression, merges: Seq[(String, String)])
   * ProbeBpeParts A/B). Multi-byte UTF-8 sequences never contain ASCII
   * values, so the byte scan equals a character scan for ASCII targets.
   */
-case class ByteOccurrences(child: Expression, b: Byte) extends UnaryExpression {
+case class ByteOccurrences(child: Expression, b: Byte)
+    extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_byte_occurrences"
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     BpeRuntime.byteOccurrences(input.asInstanceOf[UTF8String], b)

@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.GraftBridge.InputType
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -114,7 +114,7 @@ object CdcRuntime {
   * min/avg/max ride as plan-time constants into generated code.
   */
 case class CdcChunks(child: Expression, minSize: Int, avgBits: Int, maxSize: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(minSize >= 1 && maxSize >= minSize && avgBits >= 1 && avgBits <= 28,
     s"bad CDC dials: min=$minSize avgBits=$avgBits max=$maxSize")
   override def prettyName: String = "graft_cdc_chunks"
@@ -125,11 +125,7 @@ case class CdcChunks(child: Expression, minSize: Int, avgBits: Int, maxSize: Int
     StructField("piece", StringType, nullable = false))), containsNull = false)
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     CdcRuntime.chunks(input.asInstanceOf[UTF8String], minSize, avgBits, maxSize)

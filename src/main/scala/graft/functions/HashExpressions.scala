@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression,
+  UnsafeArrayData, XXH64}
+import org.apache.spark.sql.GraftBridge.InputType
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftBridge
@@ -25,14 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (Capability surface: extension ops beyond the reference, which has no
   * scalar/hash library at all — SURVEY.md §2.8.)
   */
-abstract class ShingleHashExpression extends UnaryExpression {
+abstract class ShingleHashExpression extends UnaryExpression with ExpectsInputTypes {
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(ArrayType(StringType))
 
   protected final val xxh = classOf[XXH64].getName
   protected final val uad = classOf[UnsafeArrayData].getName
@@ -435,16 +432,13 @@ case class SimHashTokens(child: Expression, n: Int) extends ShingleHashExpressio
   * of `len/bands` longs down to one 64-bit bucket key — the LSH banding
   * step without the array-slice + string-cast detour.
   */
-case class BandHashes(child: Expression, bands: Int) extends UnaryExpression {
+case class BandHashes(child: Expression, bands: Int)
+    extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_band_hashes"
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint>, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(ArrayType(LongType))
 
   private val xxh = classOf[XXH64].getName
   private val uad = classOf[UnsafeArrayData].getName
@@ -505,7 +499,7 @@ case class BandHashes(child: Expression, bands: Int) extends UnaryExpression {
   * mirrored in Bloom.positionSqls).
   */
 case class BloomHits(child: Expression, words: Array[Long], mBits: Int, k: Int,
-    foldWide: Boolean) extends UnaryExpression {
+    foldWide: Boolean) extends UnaryExpression with ExpectsInputTypes {
   require(mBits > 0 && mBits % 64 == 0 && words.length == mBits / 64,
     s"words must hold exactly mBits/64 longs (mBits=$mBits, got ${words.length})")
   require(k > 0, s"k must be positive, got $k — k=0 would count EVERY gram as a hit")
@@ -513,11 +507,7 @@ case class BloomHits(child: Expression, words: Array[Long], mBits: Int, k: Int,
   override def nullable: Boolean = true
   override def dataType: DataType = IntegerType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint>, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(ArrayType(LongType))
 
   // the ONE fixture modulus: build-side positions (Bloom.positionExprs /
   // positionSqls) derive from the same constant, so build and probe can
@@ -579,16 +569,12 @@ case class BloomHits(child: Expression, words: Array[Long], mBits: Int, k: Int,
   * sequences compare equal across sources — required before fingerprint/
   * dedup of multi-source corpora.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
+case class NfcNormalize(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_nfc"
   override def nullable: Boolean = true
   override def dataType: DataType = StringType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
@@ -618,16 +604,12 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
   * fused loop instead of `aggregate(zip_with(...))`.
   */
 case class SignatureAgreement(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_sig_agreement"
   override def nullable: Boolean = true
   override def dataType: DataType = DoubleType
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two array<bigint>, got ${l.simpleString}, ${r.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(ArrayType(LongType), ArrayType(LongType))
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
@@ -677,16 +659,12 @@ case class SignatureAgreement(left: Expression, right: Expression)
   * x16 pipeline). This kernel is one fused loop with an early exit.
   */
 case class FirstAgreePos(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_first_agree_pos"
   override def nullable: Boolean = true
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two array<bigint>, got ${l.simpleString}, ${r.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(ArrayType(LongType), ArrayType(LongType))
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
@@ -734,16 +712,12 @@ case class FirstAgreePos(left: Expression, right: Expression)
   * allocates a up-to-64-char UTF8String per call just to read its
   * length, this kernel is a single branch-free intrinsic (r15).
   */
-case class BinLength(child: Expression) extends UnaryExpression {
+case class BinLength(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_bin_length"
   override def nullable: Boolean = child.nullable
   override def dataType: DataType = IntegerType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects bigint, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(LongType)
 
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[Long]
@@ -774,17 +748,13 @@ case class BinLength(child: Expression) extends UnaryExpression {
   * for payloads up to ~1.5 GB (255*n*(n/bits+1) < 2^63) — far beyond any
   * sane single-row media payload. Empty payloads hash to 0.
   */
-case class PhashBytes(child: Expression, bits: Int) extends UnaryExpression {
+case class PhashBytes(child: Expression, bits: Int) extends UnaryExpression with ExpectsInputTypes {
   require(bits > 0 && bits <= 60, s"bits must be in [1, 60], got $bits")
   override def prettyName: String = "graft_phash"
   override def nullable: Boolean = true
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any = {
     val b = input.asInstanceOf[Array[Byte]]
@@ -846,17 +816,14 @@ object PhashBytes {
   * samples. Empty payloads hash to 0; `bits` ≤ 60 keeps the signature a
   * nonnegative long (the SimFixtureBits chunk-key discipline).
   */
-case class AudioFingerprint(child: Expression, bits: Int) extends UnaryExpression {
+case class AudioFingerprint(child: Expression, bits: Int)
+    extends UnaryExpression with ExpectsInputTypes {
   require(bits > 0 && bits <= 60, s"bits must be in [1, 60], got $bits")
   override def prettyName: String = "graft_audio_fingerprint"
   override def nullable: Boolean = true
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any =
     AudioFingerprint.hashBytes(input.asInstanceOf[Array[Byte]], bits)
@@ -925,16 +892,12 @@ object AudioFingerprint {
   * comparison (never a product of two cross-multiplied terms) keeps the
   * arithmetic overflow-free for any payload under ~2⁵⁶ total amplitude.
   */
-case class AudioStatsBytes(child: Expression) extends UnaryExpression {
+case class AudioStatsBytes(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_audio_stats"
   override def nullable: Boolean = true
   override def dataType: DataType = AudioStatsBytes.schema
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any =
     AudioStatsBytes.stats(input.asInstanceOf[Array[Byte]])
@@ -993,16 +956,12 @@ object AudioStatsBytes {
   * values flag degenerate repetition — the standard cheap corpus-quality
   * cut at both tails. One pass, 256-long histogram, codegen'd.
   */
-case class ByteEntropyBits(child: Expression) extends UnaryExpression {
+case class ByteEntropyBits(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_byte_entropy_bits"
   override def nullable: Boolean = true
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any =
     ByteEntropyBits.num(input.asInstanceOf[Array[Byte]])
@@ -1047,16 +1006,12 @@ object ByteEntropyBits {
   * the script counts, one whitespace split with a shared stopword→langs
   * hash map for all six ratios.
   */
-case class LangIdHeuristic(child: Expression) extends UnaryExpression {
+case class LangIdHeuristic(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_langid"
   override def nullable: Boolean = true
   override def dataType: DataType = StringType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     LangIdHeuristic.id(input.asInstanceOf[UTF8String])
@@ -1158,16 +1113,12 @@ object LangIdHeuristic {
   * `lower` (UTF8String.toLowerCase: ASCII fast path, full mapping
   * otherwise).
   */
-case class QualityFeaturesExpr(child: Expression) extends UnaryExpression {
+case class QualityFeaturesExpr(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_quality_features"
   override def nullable: Boolean = true
   override def dataType: DataType = QualityFeaturesExpr.schema
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     QualityFeaturesExpr.features(input.asInstanceOf[UTF8String])
@@ -1390,18 +1341,14 @@ object FixtureHashes {
   * selects windowHashes or the minhash signature.
   */
 case class FixtureTextHashes(child: Expression, shingle: Int, numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(shingle > 0)
   override def prettyName: String =
     if (numHashes == 0) "graft_fixture_window_hashes" else "graft_fixture_minhash_sig"
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String]
@@ -1423,17 +1370,13 @@ case class FixtureTextHashes(child: Expression, shingle: Int, numHashes: Int)
 
 /** String → long fixture simhash signature ([[FixtureHashes.simhashSig]]). */
 case class FixtureSimhashSig(child: Expression, shingle: Int, bits: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(shingle > 0 && bits > 0 && bits < 63)
   override def prettyName: String = "graft_fixture_simhash_sig"
   override def nullable: Boolean = true
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     FixtureHashes.simhashSig(input.asInstanceOf[UTF8String], shingle, bits)
@@ -1449,17 +1392,13 @@ case class FixtureSimhashSig(child: Expression, shingle: Int, bits: Int)
 
 /** array<long> signature → array<long> per-band chained fixture hash. */
 case class FixtureBandHashes(child: Expression, bands: Int, rowsPerBand: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(bands > 0 && rowsPerBand > 0)
   override def prettyName: String = "graft_fixture_band_hashes"
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint>, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(ArrayType(LongType))
 
   override def nullSafeEval(input: Any): Any =
     FixtureHashes.bandHashes(input.asInstanceOf[ArrayData], bands, rowsPerBand)
@@ -1492,18 +1431,13 @@ case class FixtureBandHashes(child: Expression, bands: Int, rowsPerBand: Int)
   * engine (the DuckDB oracle included) agrees on every emitted value.
   */
 case class BandedLevenshtein(left: Expression, right: Expression, maxDist: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with ExpectsInputTypes {
   require(maxDist >= 0, "maxDist must be >= 0")
   override def prettyName: String = "graft_banded_levenshtein"
   override def nullable: Boolean = true
   override def dataType: DataType = IntegerType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (string, string), got $other")
-    }
+  override def inputTypes: Seq[InputType] = Seq(StringType, StringType)
 
   override def nullSafeEval(l: Any, r: Any): Any =
     BandedLevenshtein.dist(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String], maxDist)

@@ -1,7 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.GraftBridge.InputType
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.catalyst.InternalRow
@@ -98,7 +98,7 @@ final class DistilledLmRuntime(uni: Map[String, Long], bi: Map[String, Long],
   * and the round(_, 6) rate replicate the join path's arithmetic
   * (spec-gated equal; the oracle replays the join form in SQL).
   */
-final class OovRuntime(vocab: Array[String]) extends Serializable {
+final class OovRuntime(vocab: Seq[String]) extends Serializable {
   @transient private lazy val set: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String](vocab.length * 2)
     vocab.foreach(s.add)
@@ -131,8 +131,8 @@ final class OovRuntime(vocab: Array[String]) extends Serializable {
   * struct(n_tokens, n_oov, oov_rate), null for zero-token texts (the rows
   * the join path's explode never produced).
   */
-case class OovRateScore(child: Expression, vocab: Array[String])
-    extends UnaryExpression {
+case class OovRateScore(child: Expression, vocab: Seq[String])
+    extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_oov_rate_score"
   override def nullable: Boolean = true
   override def dataType: DataType = StructType(Seq(
@@ -140,11 +140,7 @@ case class OovRateScore(child: Expression, vocab: Array[String])
     StructField("n_oov", LongType, nullable = false),
     StructField("oov_rate", DoubleType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   @transient private lazy val runtime = new OovRuntime(vocab)
 
@@ -170,7 +166,7 @@ case class OovRateScore(child: Expression, vocab: Array[String])
   */
 case class DistilledLmScore(child: Expression,
     uni: Map[String, Long], bi: Map[String, Long],
-    totalTokens: Long, vocabSize: Long) extends UnaryExpression {
+    totalTokens: Long, vocabSize: Long) extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_distilled_lm_score"
   override def nullable: Boolean = true
   override def dataType: DataType = StructType(Seq(
@@ -178,11 +174,7 @@ case class DistilledLmScore(child: Expression,
     StructField("lm_bits", LongType, nullable = false),
     StructField("bits_per_token", DoubleType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   @transient private lazy val runtime =
     new DistilledLmRuntime(uni, bi, totalTokens, vocabSize)

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.GraftBridge.InputType
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
@@ -99,25 +100,19 @@ object PqRuntime {
   }
 }
 
-private[functions] trait PqVecInput { self: Expression =>
-  def vecChild: Expression
+/** A kernel whose first child is the `array<float|double>` vector. */
+private[functions] trait PqVecInput extends ExpectsInputTypes {
+  override def inputTypes: Seq[InputType] = Seq(VectorExpressions.FloatOrDoubleArray)
   protected def isFloat: Boolean =
-    vecChild.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  protected def checkVec(name: String): TypeCheckResult = vecChild.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$name expects array<float|double>, got ${other.simpleString}")
-  }
+    children.head.dataType.asInstanceOf[ArrayType].elementType == FloatType
 }
 
 /** pq_encode(vec): array<int> of m nearest-centroid codes. */
 case class PqEncode(child: Expression, books: Array[Array[Array[Float]]])
     extends UnaryExpression with PqVecInput {
-  override def vecChild: Expression = child
   override def prettyName: String = "graft_pq_encode"
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = checkVec(prettyName)
 
   override def nullSafeEval(input: Any): Any =
     UnsafeArrayData.fromPrimitiveArray(
@@ -137,11 +132,9 @@ case class PqEncode(child: Expression, books: Array[Array[Array[Float]]])
 /** pq_lut(query_vec): array<double> of m*ksub subspace distances. */
 case class PqLut(child: Expression, books: Array[Array[Array[Float]]])
     extends UnaryExpression with PqVecInput {
-  override def vecChild: Expression = child
   override def prettyName: String = "graft_pq_lut"
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = checkVec(prettyName)
 
   override def nullSafeEval(input: Any): Any =
     UnsafeArrayData.fromPrimitiveArray(
@@ -160,17 +153,12 @@ case class PqLut(child: Expression, books: Array[Array[Array[Float]]])
 
 /** pq_adc(lut, codes): the estimated squared L2 distance. */
 case class PqAdc(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_pq_adc"
   override def nullable: Boolean = true
   override def dataType: DataType = DoubleType
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(DoubleType, _), ArrayType(IntegerType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (array<double>, array<int>), got ${l.simpleString}, ${r.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(ArrayType(DoubleType), ArrayType(IntegerType))
 
   override def nullSafeEval(l: Any, r: Any): Any =
     PqRuntime.adc(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], ksub)

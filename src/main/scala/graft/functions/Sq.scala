@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.GraftBridge.InputType
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -73,11 +73,9 @@ object SqRuntime {
 /** sq_encode(vec): array<int> of per-dimension 8-bit codes. */
 case class SqEncode(child: Expression, mins: Array[Double], maxs: Array[Double])
     extends UnaryExpression with PqVecInput {
-  override def vecChild: Expression = child
   override def prettyName: String = "graft_sq_encode"
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = checkVec(prettyName)
 
   override def nullSafeEval(input: Any): Any =
     UnsafeArrayData.fromPrimitiveArray(
@@ -99,18 +97,12 @@ case class SqEncode(child: Expression, mins: Array[Double], maxs: Array[Double])
 case class SqAdc(left: Expression, right: Expression,
     mins: Array[Double], maxs: Array[Double])
     extends BinaryExpression with PqVecInput {
-  override def vecChild: Expression = left
   override def prettyName: String = "graft_sq_adc"
   override def nullable: Boolean = true
   override def dataType: DataType = DoubleType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), ArrayType(IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<float|double>, array<int>), got ${l.simpleString}, ${r.simpleString}")
-    }
+  override def inputTypes: Seq[InputType] =
+    Seq(VectorExpressions.FloatOrDoubleArray, ArrayType(IntegerType))
 
   override def nullSafeEval(l: Any, r: Any): Any =
     SqRuntime.adc(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData],

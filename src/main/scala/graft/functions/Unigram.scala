@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.GraftBridge.InputType
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
@@ -139,16 +139,12 @@ object UnigramRuntime {
   * HashMap, one static call per row inside WholeStageCodegen.
   */
 case class UnigramPacked(child: Expression, vocab: Seq[(String, Long)],
-    maxLen: Int, unkCost: Long) extends UnaryExpression {
+    maxLen: Int, unkCost: Long) extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_unigram_packed"
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   @transient private lazy val map: java.util.HashMap[String, java.lang.Long] =
     UnigramRuntime.buildMap(vocab.map(_._1).toArray, vocab.map(_._2).toArray)
@@ -170,16 +166,12 @@ case class UnigramPacked(child: Expression, vocab: Seq[(String, Long)],
   * tokenization output; [[UnigramPacked]] is its cost/count summary).
   */
 case class UnigramPieces(child: Expression, vocab: Seq[(String, Long)],
-    maxLen: Int, unkCost: Long) extends UnaryExpression {
+    maxLen: Int, unkCost: Long) extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "graft_unigram_pieces"
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   @transient private lazy val map: java.util.HashMap[String, java.lang.Long] =
     UnigramRuntime.buildMap(vocab.map(_._1).toArray, vocab.map(_._2).toArray)

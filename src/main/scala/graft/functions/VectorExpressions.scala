@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.GraftBridge.InputType
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the dense-vector hot path.
@@ -19,23 +19,14 @@ import org.apache.spark.sql.types._
   * Each accumulates in double in index order, bit-compatible with the
   * sequential HOF definition (and the DuckDB oracle).
   */
-abstract class VectorBinaryExpression extends BinaryExpression {
+abstract class VectorBinaryExpression extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
+  override def inputTypes: Seq[InputType] =
+    Seq(VectorExpressions.FloatOrDoubleArray, VectorExpressions.FloatOrDoubleArray)
 
   protected def elemType(e: Expression): DataType =
     e.dataType.asInstanceOf[ArrayType].elementType
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(e: Expression) = e.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left) && ok(right)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float|double> inputs, got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-  }
 
   /** elementwise getter returning double, for eval. */
   protected def getter(dt: DataType): (ArrayData, Int) => Double = dt match {
@@ -239,17 +230,13 @@ case class L2Distance(left: Expression, right: Expression) extends VectorBinaryE
   * element — this is bits× less work and stays in whole-stage codegen.
   */
 case class HyperplaneSignature(child: Expression, bits: Int, seed: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with ExpectsInputTypes {
   require(bits <= 63, "signature fits one long")
   override def prettyName: String = "graft_hyperplane_sig"
   override def nullable: Boolean = true
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float|double>, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(VectorExpressions.FloatOrDoubleArray)
 
   private def elemT: DataType = child.dataType.asInstanceOf[ArrayType].elementType
   private val xxh = classOf[org.apache.spark.sql.catalyst.expressions.XXH64].getName
@@ -326,20 +313,12 @@ case class HyperplaneSignature(child: Expression, bits: Int, seed: Int)
   * vector quantizes to zeros with scale 0. Null elements read as 0.
   */
 case class QuantizeInt8(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with PqVecInput {
   override def prettyName: String = "graft_quantize_int8"
   override def nullable: Boolean = true
   override def dataType: DataType = StructType(Seq(
     StructField("scale", DoubleType, nullable = false),
     StructField("q", ArrayType(IntegerType, containsNull = false), nullable = false)))
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float|double>, got ${other.simpleString}")
-  }
-
-  private def isFloat = child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def nullSafeEval(input: Any): Any = {
     val a = input.asInstanceOf[ArrayData]
@@ -407,6 +386,9 @@ case class QuantizeInt8(child: Expression)
 }
 
 object VectorExpressions {
+  /** `array<float|double>`, either element nullability: the vector kernels' input. */
+  val FloatOrDoubleArray: InputType = GraftBridge.oneOf(ArrayType(FloatType), ArrayType(DoubleType))
+
   def quantizeInt8(v: Column): Column =
     GraftBridge.column(QuantizeInt8(GraftBridge.expression(v)))
   def dot(a: Column, b: Column): Column =

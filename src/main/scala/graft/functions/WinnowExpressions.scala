@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression,
+  GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.GraftBridge.InputType
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -182,7 +183,7 @@ case class WordShingleMd5s(child: Expression, n: Int) extends ShingleHashExpress
 /** winnow_select(hashes, w): array<struct<pos:int, fp:string>> of the
   * winnowed (position, fingerprint) selections over the gram-hash array.
   */
-case class WinnowSelect(child: Expression, w: Int) extends UnaryExpression {
+case class WinnowSelect(child: Expression, w: Int) extends UnaryExpression with ExpectsInputTypes {
   require(w >= 2, s"winnow window must be >= 2, got $w")
   override def prettyName: String = "graft_winnow_select"
   override def nullable: Boolean = true
@@ -192,11 +193,7 @@ case class WinnowSelect(child: Expression, w: Int) extends UnaryExpression {
       StructField("fp", StringType, nullable = false))),
     containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     WinnowRuntime.select(input.asInstanceOf[ArrayData], w)
@@ -214,7 +211,8 @@ case class WinnowSelect(child: Expression, w: Int) extends UnaryExpression {
   * the bloom-gated decontamination lanes use (fixture window hashes mod
   * P for the oracle, xxhash64 for production).
   */
-case class WinnowSelectLong(child: Expression, w: Int) extends UnaryExpression {
+case class WinnowSelectLong(child: Expression, w: Int)
+    extends UnaryExpression with ExpectsInputTypes {
   require(w >= 2, s"winnow window must be >= 2, got $w")
   override def prettyName: String = "graft_winnow_select_long"
   override def nullable: Boolean = true
@@ -224,11 +222,7 @@ case class WinnowSelectLong(child: Expression, w: Int) extends UnaryExpression {
       StructField("fp", LongType, nullable = false))),
     containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint>, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(ArrayType(LongType))
 
   override def nullSafeEval(input: Any): Any =
     WinnowRuntime.selectLong(input.asInstanceOf[ArrayData], w)

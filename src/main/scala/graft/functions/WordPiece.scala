@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.GraftBridge.InputType
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -55,17 +55,13 @@ object WordPieceRuntime {
   * application is one codegen'd per-word scan.
   */
 case class WordPieceApplyWord(child: Expression, vocab: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(vocab.nonEmpty, "wordpiece vocab must be non-empty")
   override def prettyName: String = "graft_wordpiece_apply_word"
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] = Seq(StringType)
 
   @transient private lazy val set: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String](vocab.size * 2)

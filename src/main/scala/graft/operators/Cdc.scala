@@ -144,14 +144,12 @@ object Cdc {
     * ([[dedupAgainst]]) run as compaction, or the bloom gate
     * ([[contaminationBloomColumn]] — bounded at any catalog size).
     */
-  def distillCatalog(catalog: DataFrame, maxEntries: Int = 500000): Array[String] = {
-    val distinctFps = catalog.select(col("fp")).distinct()
-    val n = distinctFps.count()
-    require(n <= maxEntries,
-      s"chunk-fp catalog too large to distill: $n > $maxEntries entries — " +
-        "use the join-based dedupAgainst (as compaction) or the bloom gate")
-    distinctFps.collect().map(_.getString(0)).sorted
-  }
+  def distillCatalog(catalog: DataFrame, maxEntries: Int = 500000): Array[String] =
+    Materialize.collectUpTo(catalog.select(col("fp")).distinct(), maxEntries).getOrElse(
+      throw new IllegalArgumentException(
+        s"chunk-fp catalog too large to distill: more than $maxEntries entries — " +
+          "use the join-based dedupAgainst (as compaction) or the bloom gate"))
+      .map(_.getString(0)).sorted
 
   // ---- Bloom-gated chunk contamination: the [[Winnow]] bloom-lane
   // discipline over content-defined chunks — the catalog distills to an

@@ -684,13 +684,11 @@ object Dedup {
     * what the 100 TB path does anyway. The LanguageModel.distill
     * contract.
     */
-  def distillGramDf(counts: DataFrame, maxEntries: Int = 500000): Map[Long, Long] = {
-    val n = counts.count()
-    require(n <= maxEntries,
-      s"gram-df catalog has $n entries > maxEntries=$maxEntries — " +
-        "use softWeightsAgainstCounts (join form) at this scale")
-    counts.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
+  def distillGramDf(counts: DataFrame, maxEntries: Int = 500000): Map[Long, Long] =
+    Materialize.collectUpTo(counts, maxEntries).getOrElse(throw new IllegalArgumentException(
+      s"gram-df catalog has more than maxEntries=$maxEntries entries — " +
+        "use softWeightsAgainstCounts (join form) at this scale"))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   /** Map-side [[softWeightsAgainst]]: one kernel pass + one plan-literal
     * map fold per row — no joins, no shuffle, no state; spec-gated
@@ -1168,11 +1166,11 @@ object Dedup {
         graft.functions.HashExpressions.ngramHashesAll(col("__t"), k))
         .otherwise(typedLit(Array.empty[Long]))).as("__gh"))
       .distinct()
-    val n = pool.count()
-    require(n <= maxEntries,
-      s"benchmark gram set too large to distill: $n > $maxEntries entries — " +
-        "run the batch removeContaminationSpans as compaction instead")
-    val arr = pool.collect().map(_.getLong(0))
+    val arr = Materialize.collectUpTo(pool, maxEntries).getOrElse(
+      throw new IllegalArgumentException(
+        s"benchmark gram set too large to distill: more than $maxEntries entries — " +
+          "run the batch removeContaminationSpans as compaction instead"))
+      .map(_.getLong(0))
     java.util.Arrays.sort(arr)
     arr
   }
@@ -1306,13 +1304,12 @@ object Dedup {
     * belongs in the join form ([[paragraphDedupAgainst]]) or the
     * persistent fingerprint catalog ([[AnnIndex]]).
     */
-  def distillParagraphCatalog(catalog: DataFrame, maxEntries: Int = 500000): Array[String] = {
-    val n = catalog.count()
-    require(n <= maxEntries,
-      s"paragraph catalog too large to distill: $n > $maxEntries entries — " +
-        "use the join-based paragraphDedupAgainst or a persistent fingerprint catalog")
-    catalog.select(col("fp")).collect().map(_.getString(0)).sorted
-  }
+  def distillParagraphCatalog(catalog: DataFrame, maxEntries: Int = 500000): Array[String] =
+    Materialize.collectUpTo(catalog.select(col("fp")), maxEntries).getOrElse(
+      throw new IllegalArgumentException(
+        s"paragraph catalog too large to distill: more than $maxEntries entries — " +
+          "use the join-based paragraphDedupAgainst or a persistent fingerprint catalog"))
+      .map(_.getString(0)).sorted
 
   /** Embedding near-duplicates: cosine ≥ threshold pairs, candidates via
     * random-hyperplane LSH buckets (exact within-bucket verify). At corpus

@@ -523,17 +523,14 @@ object LanguageModel {
     * `maxEntries + 1` rows. A driver-held unigram table (the common case,
     * see [[fromRaw]]) collects without a job.
     */
-  def distillIfFits(lm: NgramLm, maxEntries: Int = DistillBudget): Option[DistilledLm] = {
-    def upTo(n: Long) = math.min(n + 1, Int.MaxValue).toInt
-    val uni = lm.unigrams.select("word", "c").limit(upTo(maxEntries)).collect()
-    val bi = if (uni.length > maxEntries) Array.empty[org.apache.spark.sql.Row]
-      else lm.bigrams.select("w1", "w2", "c").limit(upTo(maxEntries.toLong - uni.length)).collect()
-    if (uni.length + bi.length > maxEntries) None
-    else Some(DistilledLm(
+  def distillIfFits(lm: NgramLm, maxEntries: Int = DistillBudget): Option[DistilledLm] =
+    for {
+      uni <- Materialize.collectUpTo(lm.unigrams.select("word", "c"), maxEntries)
+      bi <- Materialize.collectUpTo(lm.bigrams.select("w1", "w2", "c"), maxEntries - uni.length)
+    } yield DistilledLm(
       uni.map(r => r.getString(0) -> r.getLong(1)).toMap,
       bi.map(r => r.getString(0) + " " + r.getString(1) -> r.getLong(2)).toMap,
-      lm.totalTokens, lm.vocabSize))
-  }
+      lm.totalTokens, lm.vocabSize)
 
   /** Per-row surprisal under a distilled LM: ONE map-side expression —
     * token array fold with plan-literal map lookups, no joins, no

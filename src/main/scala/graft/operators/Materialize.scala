@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.storage.StorageLevel
 
 /** Materialize a mid-pipeline table exactly once with a bounded lifetime:
@@ -42,5 +42,17 @@ object Materialize {
       if (df.sparkSession.sparkContext.isLocal) StorageLevel.MEMORY_AND_DISK
       else StorageLevel.MEMORY_AND_DISK_2
     df.localCheckpoint(eager = true, storageLevel = level)
+  }
+
+  /** The rows of `df` when there are at most `maxRows` of them, in ONE
+    * query: the collect is capped one row past the budget, so an
+    * oversized input shows as `None` without a separate `count()` that
+    * would run the upstream plan a second time, and the driver never
+    * holds more than `maxRows + 1` rows. The driver-side distillers'
+    * size gate.
+    */
+  def collectUpTo(df: DataFrame, maxRows: Int): Option[Array[Row]] = {
+    val rows = df.limit(math.min(maxRows.toLong + 1, Int.MaxValue).toInt).collect()
+    if (rows.length > maxRows) None else Some(rows)
   }
 }

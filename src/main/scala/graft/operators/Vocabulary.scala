@@ -84,18 +84,18 @@ object Vocabulary {
     */
   private def oovAgainstAuto(df: DataFrame, idCol: String, textCol: String,
       vocabDf: DataFrame, maxDistillEntries: Int): DataFrame = {
-    val words = vocabDf.select(col("word"))
-      .limit(math.min(maxDistillEntries.toLong + 1, Int.MaxValue).toInt).collect()
-    if (words.length <= maxDistillEntries) {
-      val score = org.apache.spark.sql.GraftBridge.column(
-        graft.functions.OovRateScore(
-          org.apache.spark.sql.GraftBridge.expression(col(textCol)), words.map(_.getString(0))))
-      KeepRows.nonNull(df.select(col(idCol), col(textCol)), "__s", score)
-        .select(col(idCol), col("__s.n_tokens").as("n_tokens"),
-          col("__s.n_oov").as("n_oov"), col("__s.oov_rate").as("oov_rate"))
-    } else
-      oovFromTokens(explodeTokens(tokenArrays(df, idCol, textCol)), idCol,
-        Materialize.once(vocabDf))
+    Materialize.collectUpTo(vocabDf.select(col("word")), maxDistillEntries) match {
+      case Some(words) =>
+        val score = org.apache.spark.sql.GraftBridge.column(
+          graft.functions.OovRateScore(org.apache.spark.sql.GraftBridge.expression(col(textCol)),
+            words.toSeq.map(_.getString(0))))
+        KeepRows.nonNull(df.select(col(idCol), col(textCol)), "__s", score)
+          .select(col(idCol), col("__s.n_tokens").as("n_tokens"),
+            col("__s.n_oov").as("n_oov"), col("__s.oov_rate").as("oov_rate"))
+      case None =>
+        oovFromTokens(explodeTokens(tokenArrays(df, idCol, textCol)), idCol,
+          Materialize.once(vocabDf))
+    }
   }
 
   private def oovFromTokens(tok: DataFrame, idCol: String,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Spar
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Structured Streaming extension surface.
   *
@@ -695,9 +696,10 @@ object GraftStreaming {
       if (text == null) null
       else {
         // token + window-hash arithmetic identical to tokens() +
-        // NgramHashes(dedupe = false): trim-split on \s+, xxhash64 each
-        // token at the shingle seed, chain k token hashes per window
-        val toks = text.trim.split("\\s+")
+        // NgramHashes(dedupe = false): Spark's own trim (spaces only) and
+        // split (limit -1, so edge whitespace yields empty tokens), xxhash64
+        // each token at the shingle seed, chain k token hashes per window
+        val toks = UTF8String.fromString(text).trim().split(UTF8String.fromString("\\s+"), -1)
         val t = toks.length
         if (t < k) toks.mkString(" ") // no window can exist; normalize like stripSpans
         else {
@@ -705,8 +707,7 @@ object GraftStreaming {
           val th = new Array[Long](t)
           var i = 0
           while (i < t) {
-            th(i) = XXH64.hashUTF8String(
-              org.apache.spark.unsafe.types.UTF8String.fromString(toks(i)), seed)
+            th(i) = XXH64.hashUTF8String(toks(i), seed)
             i += 1
           }
           val windows = t - k + 1
@@ -733,13 +734,8 @@ object GraftStreaming {
               w = e + 1
             } else w += 1
           }
-          val sb = new StringBuilder
-          var j = 0
-          while (j < t) {
-            if (!covered(j)) { if (sb.nonEmpty) sb.append(' '); sb.append(toks(j)) }
-            j += 1
-          }
-          sb.toString
+          // concat_ws(" ", kept tokens): empty tokens keep their separators
+          toks.indices.filterNot(covered(_)).map(toks(_)).mkString(" ")
         }
       }
     }

@@ -4,12 +4,17 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Access bridge for the `private[sql]` Column<->Expression converters —
   * the supported way for libraries to surface custom Catalyst expressions
-  * as user-facing Columns on classic (non-Connect) Spark — and for the
-  * file index's `private[spark]` hidden-name rule.
+  * as user-facing Columns on classic (non-Connect) Spark — for the kernels'
+  * `private[sql]` input-type vocabulary, and for the file index's
+  * `private[spark]` hidden-name rule.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** An `ExpectsInputTypes.inputTypes` entry: one concrete type or a `oneOf` set. */
+  type InputType = types.AbstractDataType
+  def oneOf(ts: types.DataType*): InputType = types.TypeCollection(ts: _*)
 
   /** Fully convert a Column's node tree to a Catalyst expression —
     * `expression` wraps lazily (fine inside DataFrame plans, which convert

@@ -622,11 +622,36 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(4)))
     assert(viaCol.sortBy(_._1).toSeq == viaJoin.sortBy(_._1).toSeq,
       "distilled fold must equal the join form exactly")
-    // the distill guard refuses oversized catalogs LOUDLY
+    // the distill guard refuses oversized catalogs LOUDLY, from one row over
     intercept[IllegalArgumentException](Dedup.distillGramDf(counts, maxEntries = 3))
+    assert(Dedup.distillGramDf(counts, maxEntries = dfMap.size) == dfMap)
+    intercept[IllegalArgumentException](Dedup.distillGramDf(counts, maxEntries = dfMap.size - 1))
     // empty-map degenerate: all weights 1.0
     val w0 = probe.select(Dedup.softWeightColumn(col("text"), Map.empty, 2).getField("weight"))
       .collect().map(_.getDouble(0))
     assert(w0.forall(_ == 1.0))
+  }
+
+  test("distillers: accept maxEntries = n, refuse n - 1, and read their input once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_distill").resolve("docs").toString
+    val rows = Seq((0L, s"$base\n\n$unrelated"), (1L, s"$nearDup\n\n$base"), (2L, unrelated))
+    rows.toDF("doc_id", "text").write.parquet(dir)
+    val ref = spark.read.parquet(dir)
+    // each distiller over a shuffling upstream aggregate of the file
+    val distillers: Seq[(String, Int => Int)] = Seq(
+      "distillGramDf" -> (m => Dedup.distillGramDf(
+        Dedup.refGramCounts(ref, "doc_id", "text", shingle = 2), m).size),
+      "distillBenchmarkGrams" -> (m => Dedup.distillBenchmarkGrams(ref, "text", 3, m).length),
+      "distillParagraphCatalog" -> (m => Dedup.distillParagraphCatalog(
+        Dedup.paragraphCatalog(ref, "text"), m).length),
+      "Cdc.distillCatalog" -> (m => Cdc.distillCatalog(
+        Cdc.chunkCatalog(ref, "text", minSize = 8, avgBits = 4, maxSize = 32), m).length))
+    for ((name, distill) <- distillers) {
+      val (n, read) = org.apache.spark.JobCount.inputRecords(spark.sparkContext)(distill(100000))
+      assert(n > 1, name)
+      assert(read == rows.size, s"$name must read its input once, read $read records")
+      assert(distill(n) == n, name)
+      intercept[IllegalArgumentException](distill(n - 1))
+    }
   }
 }

@@ -606,7 +606,12 @@ class GraftStreamingSpec extends AnyFunSuite {
       (2L, s"aa $leaked bb cc dd $second ee"),                       // two spans, one doc
       (3L, "completely unrelated content with no benchmark overlap at all"),
       (4L, "shorty"),                                                // < k tokens
-      (5L, s"  spaced   out    $leaked   text  "))                   // whitespace variants
+      (5L, s"  spaced   out    $leaked   text  "),                   // whitespace variants
+      // Spark's trim strips spaces only and split keeps edge empties:
+      // a leading tab / trailing newline yields empty edge tokens, and a
+      // leading control char stays glued to the first token
+      (6L, s"\t$leaked tail\n"),
+      (7L, s"\u0001$leaked ctrl tail"))
     val grams = graft.operators.Dedup.distillBenchmarkGrams(bench, "btext", k = 3)
     val input = MemoryStream[(Long, String)]
     val out = GraftStreaming.decontaminateSpanStream(
@@ -627,6 +632,8 @@ class GraftStreamingSpec extends AnyFunSuite {
       assert(streamed(1L) == "intro words here and a unique tail follows")
       assert(streamed(2L) == "aa bb cc dd ee", "both leaked fragments excised")
       assert(streamed(5L) == "spaced out text", "whitespace-normalized like the batch renderer")
+      assert(streamed(6L) == " tail ", "edge tab/newline tokenize as empty tokens")
+      assert(streamed(7L) == "\u0001the ctrl tail", "a control char is not trimmed")
     } finally query.stop()
   }
 
