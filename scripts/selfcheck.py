@@ -139,6 +139,10 @@ def main(sf_dir, out_dir):
         bad += 1
         print(f"XX engine knob: {hit}")
 
+    for hit in codegen_loops():
+        bad += 1
+        print(f"XX codegen loop: {hit}")
+
     print(f"\n{len(results) - bad}/{len(results)} pass")
     return 1 if bad else 0
 
@@ -172,6 +176,39 @@ def engine_knobs():
                         hits.append(f"{rel}:{n}: {line.strip()[:120]}")
     for rel, line in sorted(set(ENGINE_KNOB_ALLOW) - allowed):
         hits.append(f"stale allowlist entry, no longer in {rel}: {line}")
+    return hits
+
+# one-body gate: a kernel under graft/functions whose doGenCode emits a
+# Java loop has written its algorithm a second time, next to the Scala
+# nullSafeEval. Codegen calls the runtime method that eval calls instead
+# (HashRuntime, VectorRuntime, PqRuntime, ...), so the two agree by
+# construction. A loop is emitted when `for (` or `while (` sits inside a
+# string: a stripMargin `|` line or after an odd number of quotes.
+CODEGEN_LOOP = re.compile(r"\b(for|while) \(")
+
+def codegen_loops():
+    repo = os.path.join(os.path.dirname(__file__), "..")
+    pattern = os.path.join(repo, "src", "main", "scala", "graft", "functions", "**", "*.scala")
+    hits = []
+    for path in sorted(glob.glob(pattern, recursive=True)):
+        rel = os.path.relpath(path, repo)
+        body_indent = None  # indentation of the open doGenCode's `def` line
+        flagged = False
+        for n, line in enumerate(open(path, encoding="utf-8"), 1):
+            indent = len(line) - len(line.lstrip())
+            if "def doGenCode" in line:
+                body_indent, flagged = indent, False
+                continue
+            if body_indent is None:
+                continue
+            if line.strip() and indent <= body_indent:
+                body_indent = None
+                continue
+            for m in CODEGEN_LOOP.finditer(line):
+                emitted = line.lstrip().startswith("|") or line[:m.start()].count('"') % 2 == 1
+                if emitted and not flagged:
+                    hits.append(f"{rel}:{n}: {line.strip()[:120]}")
+                    flagged = True
     return hits
 
 def bench_check(path):

@@ -23,6 +23,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * "one hash + k rehashes" MinHash (Broder's scheme as used in
   * Spark MLlib's MinHashLSH, mllib/feature/MinHashLSH.scala).
   *
+  * Every kernel here has ONE body: its algorithm is a method on a
+  * top-level runtime object ([[HashRuntime]] for the signature kernels,
+  * the object of the same name for the rest), and both `nullSafeEval`
+  * and the generated code call that method — so eval and codegen agree
+  * by construction.
+  *
   * (Capability surface: extension ops beyond the reference, which has no
   * scalar/hash library at all — SURVEY.md §2.8.)
   */
@@ -30,15 +36,6 @@ abstract class ShingleHashExpression extends UnaryExpression with ExpectsInputTy
   override def nullable: Boolean = true
 
   override def inputTypes: Seq[InputType] = Seq(ArrayType(StringType))
-
-  protected final val xxh = classOf[XXH64].getName
-  protected final val uad = classOf[UnsafeArrayData].getName
-  /** Seed matching Spark's `xxhash64` default so base hashes agree with
-    * the built-in function. ONE definition — the stream-side per-row
-    * twin ([[graft.streaming.GraftStreaming.decontaminateSpanStream]])
-    * reads [[HashExpressions.ShingleSeed]], which this aliases.
-    */
-  protected final val Seed = HashExpressions.ShingleSeed
 }
 
 /** minhash(shingles, k): array<long> of per-seed minima in one pass. Empty
@@ -50,42 +47,11 @@ case class MinHashSignatures(child: Expression, numHashes: Int)
   override def prettyName: String = "graft_minhash"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val h = XXH64.hashUTF8String(arr.getUTF8String(i), Seed)
-        HashRuntime.minhashLanes(h, mins)
-      }
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(mins)
-  }
+  override def nullSafeEval(input: Any): Any =
+    HashRuntime.minhash(input.asInstanceOf[ArrayData], numHashes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val mins = ctx.freshName("mins")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val n = ctx.freshName("n")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      s"""
-         |long[] $mins = new long[$numHashes];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |int $n = $arr.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    long $h = $xxh.hashUTF8String($arr.getUTF8String($i), ${Seed}L);
-         |    graft.functions.HashRuntime.minhashLanes($h, $mins);
-         |  }
-         |}
-         |${ev.value} = $uad.fromPrimitiveArray($mins);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, arr => s"graft.functions.HashRuntime.minhash($arr, $numHashes)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -106,65 +72,12 @@ case class MinHashTokens(child: Expression, n: Int, numHashes: Int)
   override def prettyName: String = "graft_minhash_tokens"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val t = arr.numElements()
-    val th = new Array[Long](t)
-    var i = 0
-    while (i < t) {
-      th(i) = if (arr.isNullAt(i)) 0L else XXH64.hashUTF8String(arr.getUTF8String(i), Seed)
-      i += 1
-    }
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    if (t > 0) {
-      val windows = math.max(1, t - n + 1)
-      var w = 0
-      while (w < windows) {
-        var h = Seed
-        var j = w
-        val end = math.min(w + n, t)
-        while (j < end) { h = XXH64.hashLong(th(j), h); j += 1 }
-        HashRuntime.minhashLanes(h, mins)
-        w += 1
-      }
-    }
-    UnsafeArrayData.fromPrimitiveArray(mins)
-  }
+  override def nullSafeEval(input: Any): Any =
+    HashRuntime.minhashTokens(input.asInstanceOf[ArrayData], n, numHashes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val t = ctx.freshName("t")
-      val th = ctx.freshName("th")
-      val mins = ctx.freshName("mins")
-      val i = ctx.freshName("i")
-      val w = ctx.freshName("w")
-      val j = ctx.freshName("j")
-      val s = ctx.freshName("s")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      val windows = ctx.freshName("windows")
-      val end = ctx.freshName("end")
-      s"""
-         |int $t = $arr.numElements();
-         |long[] $th = new long[$t];
-         |for (int $i = 0; $i < $t; $i++) {
-         |  $th[$i] = $arr.isNullAt($i) ? 0L
-         |    : $xxh.hashUTF8String($arr.getUTF8String($i), ${Seed}L);
-         |}
-         |long[] $mins = new long[$numHashes];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |int $windows = java.lang.Math.max(1, $t - $n + 1);
-         |if ($t > 0) {
-         |  for (int $w = 0; $w < $windows; $w++) {
-         |    long $h = ${Seed}L;
-         |    int $end = java.lang.Math.min($w + $n, $t);
-         |    for (int $j = $w; $j < $end; $j++) { $h = $xxh.hashLong($th[$j], $h); }
-         |    graft.functions.HashRuntime.minhashLanes($h, $mins);
-         |  }
-         |}
-         |${ev.value} = $uad.fromPrimitiveArray($mins);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, arr =>
+      s"graft.functions.HashRuntime.minhashTokens($arr, $n, $numHashes)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -184,82 +97,11 @@ case class NgramHashes(child: Expression, n: Int, dedupe: Boolean = true)
   override def prettyName: String = "graft_ngram_hashes"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val t = arr.numElements()
-    val th = new Array[Long](t)
-    var i = 0
-    while (i < t) {
-      th(i) = if (arr.isNullAt(i)) 0L else XXH64.hashUTF8String(arr.getUTF8String(i), Seed)
-      i += 1
-    }
-    val windows = math.max(1, t - n + 1)
-    val hs = new Array[Long](if (t > 0) windows else 0)
-    if (t > 0) {
-      var w = 0
-      while (w < windows) {
-        var h = Seed
-        var j = w
-        val end = math.min(w + n, t)
-        while (j < end) { h = XXH64.hashLong(th(j), h); j += 1 }
-        hs(w) = h
-        w += 1
-      }
-    }
-    if (!dedupe) return UnsafeArrayData.fromPrimitiveArray(hs)
-    java.util.Arrays.sort(hs)
-    var out = 0
-    var k = 0
-    while (k < hs.length) {
-      if (out == 0 || hs(k) != hs(out - 1)) { hs(out) = hs(k); out += 1 }
-      k += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(hs, out))
-  }
+  override def nullSafeEval(input: Any): Any =
+    HashRuntime.ngramHashes(input.asInstanceOf[ArrayData], n, dedupe)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val t = ctx.freshName("t")
-      val th = ctx.freshName("th")
-      val hs = ctx.freshName("hs")
-      val i = ctx.freshName("i")
-      val w = ctx.freshName("w")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val end = ctx.freshName("end")
-      val windows = ctx.freshName("windows")
-      val out = ctx.freshName("out")
-      val k = ctx.freshName("k")
-      val dedupeV = dedupe.toString
-      s"""
-         |int $t = $arr.numElements();
-         |long[] $th = new long[$t];
-         |for (int $i = 0; $i < $t; $i++) {
-         |  $th[$i] = $arr.isNullAt($i) ? 0L
-         |    : $xxh.hashUTF8String($arr.getUTF8String($i), ${Seed}L);
-         |}
-         |int $windows = java.lang.Math.max(1, $t - $n + 1);
-         |long[] $hs = new long[$t > 0 ? $windows : 0];
-         |if ($t > 0) {
-         |  for (int $w = 0; $w < $windows; $w++) {
-         |    long $h = ${Seed}L;
-         |    int $end = java.lang.Math.min($w + $n, $t);
-         |    for (int $j = $w; $j < $end; $j++) { $h = $xxh.hashLong($th[$j], $h); }
-         |    $hs[$w] = $h;
-         |  }
-         |}
-         |if (!$dedupeV) {
-         |  ${ev.value} = $uad.fromPrimitiveArray($hs);
-         |} else {
-         |  java.util.Arrays.sort($hs);
-         |  int $out = 0;
-         |  for (int $k = 0; $k < $hs.length; $k++) {
-         |    if ($out == 0 || $hs[$k] != $hs[$out - 1]) { $hs[$out] = $hs[$k]; $out++; }
-         |  }
-         |  ${ev.value} = $uad.fromPrimitiveArray(java.util.Arrays.copyOf($hs, $out));
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, arr => s"graft.functions.HashRuntime.ngramHashes($arr, $n, $dedupe)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -271,54 +113,11 @@ case class SimHash64(child: Expression) extends ShingleHashExpression {
   override def prettyName: String = "graft_simhash"
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val votes = new Array[Int](64)
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val h = XXH64.hashUTF8String(arr.getUTF8String(i), Seed)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
-    sig
-  }
+  override def nullSafeEval(input: Any): Any =
+    HashRuntime.simhash(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val votes = ctx.freshName("votes")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val n = ctx.freshName("n")
-      val h = ctx.freshName("h")
-      val sig = ctx.freshName("sig")
-      s"""
-         |int[] $votes = new int[64];
-         |int $n = $arr.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    long $h = $xxh.hashUTF8String($arr.getUTF8String($i), ${Seed}L);
-         |    for (int $b = 0; $b < 64; $b++) {
-         |      if ((($h >>> $b) & 1L) == 1L) $votes[$b]++; else $votes[$b]--;
-         |    }
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($votes[$b] > 0) $sig |= (1L << $b);
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, arr => s"graft.functions.HashRuntime.simhash($arr)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -335,95 +134,11 @@ case class SimHashTokens(child: Expression, n: Int) extends ShingleHashExpressio
   override def prettyName: String = "graft_simhash_tokens"
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val t = arr.numElements()
-    if (t == 0) return 0L
-    val th = new Array[Long](t)
-    var i = 0
-    while (i < t) {
-      th(i) = if (arr.isNullAt(i)) 0L else XXH64.hashUTF8String(arr.getUTF8String(i), Seed)
-      i += 1
-    }
-    val windows = math.max(1, t - n + 1)
-    val wh = new Array[Long](windows)
-    var w = 0
-    while (w < windows) {
-      var h = Seed
-      var j = w
-      val end = math.min(w + n, t)
-      while (j < end) { h = XXH64.hashLong(th(j), h); j += 1 }
-      wh(w) = h
-      w += 1
-    }
-    java.util.Arrays.sort(wh)
-    val votes = new Array[Int](64)
-    var k = 0
-    while (k < windows) {
-      if (k == 0 || wh(k) != wh(k - 1)) {
-        val h = wh(k)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
-      }
-      k += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
-    sig
-  }
+  override def nullSafeEval(input: Any): Any =
+    HashRuntime.simhashTokens(input.asInstanceOf[ArrayData], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val t = ctx.freshName("t")
-      val th = ctx.freshName("th")
-      val wh = ctx.freshName("wh")
-      val votes = ctx.freshName("votes")
-      val i = ctx.freshName("i")
-      val w = ctx.freshName("w")
-      val j = ctx.freshName("j")
-      val k = ctx.freshName("k")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val end = ctx.freshName("end")
-      val windows = ctx.freshName("windows")
-      val sig = ctx.freshName("sig")
-      s"""
-         |int $t = $arr.numElements();
-         |long $sig = 0L;
-         |if ($t > 0) {
-         |  long[] $th = new long[$t];
-         |  for (int $i = 0; $i < $t; $i++) {
-         |    $th[$i] = $arr.isNullAt($i) ? 0L
-         |      : $xxh.hashUTF8String($arr.getUTF8String($i), ${Seed}L);
-         |  }
-         |  int $windows = java.lang.Math.max(1, $t - $n + 1);
-         |  long[] $wh = new long[$windows];
-         |  for (int $w = 0; $w < $windows; $w++) {
-         |    long $h = ${Seed}L;
-         |    int $end = java.lang.Math.min($w + $n, $t);
-         |    for (int $j = $w; $j < $end; $j++) { $h = $xxh.hashLong($th[$j], $h); }
-         |    $wh[$w] = $h;
-         |  }
-         |  java.util.Arrays.sort($wh);
-         |  int[] $votes = new int[64];
-         |  for (int $k = 0; $k < $windows; $k++) {
-         |    if ($k == 0 || $wh[$k] != $wh[$k - 1]) {
-         |      for (int $b = 0; $b < 64; $b++) {
-         |        if ((($wh[$k] >>> $b) & 1L) == 1L) $votes[$b]++; else $votes[$b]--;
-         |      }
-         |    }
-         |  }
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    if ($votes[$b] > 0) $sig |= (1L << $b);
-         |  }
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, arr => s"graft.functions.HashRuntime.simhashTokens($arr, $n)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -440,47 +155,11 @@ case class BandHashes(child: Expression, bands: Int)
 
   override def inputTypes: Seq[InputType] = Seq(ArrayType(LongType))
 
-  private val xxh = classOf[XXH64].getName
-  private val uad = classOf[UnsafeArrayData].getName
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val r = arr.numElements() / bands
-    val out = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var h = 42L ^ b
-      var j = 0
-      while (j < r) {
-        h = XXH64.hashLong(arr.getLong(b * r + j), h)
-        j += 1
-      }
-      out(b) = h
-      b += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    HashRuntime.bandHashes(input.asInstanceOf[ArrayData], bands)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val out = ctx.freshName("out")
-      val r = ctx.freshName("r")
-      val b = ctx.freshName("b")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      s"""
-         |int $r = $arr.numElements() / $bands;
-         |long[] $out = new long[$bands];
-         |for (int $b = 0; $b < $bands; $b++) {
-         |  long $h = 42L ^ $b;
-         |  for (int $j = 0; $j < $r; $j++) {
-         |    $h = $xxh.hashLong($arr.getLong($b * $r + $j), $h);
-         |  }
-         |  $out[$b] = $h;
-         |}
-         |${ev.value} = $uad.fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, arr => s"graft.functions.HashRuntime.bandHashes($arr, $bands)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -489,8 +168,8 @@ case class BandHashes(child: Expression, bands: Int)
   * have ALL k filter positions set in the `words` bitset. The scoring
   * kernel of [[graft.operators.Bloom]] — a higher-order `filter` would be
   * CodegenFallback (interpreted per gram), while this is one codegen'd
-  * loop with O(1) bit tests; the bitmap rides the generated class as a
-  * referenced object, not a plan literal.
+  * call with O(1) bit tests per gram; the bitmap rides the generated
+  * class as a referenced object, not a plan literal.
   *
   * Position arithmetic is EXACTLY the operator's two lanes: `foldWide`
   * xor-folds a full-range 64-bit hash to 31 nonnegative bits first (the
@@ -509,58 +188,14 @@ case class BloomHits(child: Expression, words: Array[Long], mBits: Int, k: Int,
 
   override def inputTypes: Seq[InputType] = Seq(ArrayType(LongType))
 
-  // the ONE fixture modulus: build-side positions (Bloom.positionExprs /
-  // positionSqls) derive from the same constant, so build and probe can
-  // never mix moduli
-  private val P = graft.operators.Dedup.FixtureP
+  override def nullSafeEval(input: Any): Any =
+    HashRuntime.bloomHits(input.asInstanceOf[ArrayData], words, mBits, k, foldWide)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    var hits = 0
-    var i = 0
-    while (i < arr.numElements()) {
-      val g = arr.getLong(i)
-      val base = if (foldWide) (g ^ (g >>> 33)) & 0x7FFFFFFFL else g
-      var all = true
-      var j = 0
-      while (all && j < k) {
-        val pos = (((2L * j + 3) * base + (5L * j + 7)) % P % mBits).toInt
-        all = (words(pos >> 6) >>> (pos & 63) & 1L) == 1L
-        j += 1
-      }
-      if (all) hits += 1
-      i += 1
-    }
-    hits
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val w = ctx.addReferenceObj("bloomWords", words, "long[]")
+    defineCodeGen(ctx, ev, arr =>
+      s"graft.functions.HashRuntime.bloomHits($arr, $w, $mBits, $k, $foldWide)")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val w = ctx.addReferenceObj("bloomWords", words, "long[]")
-      val hits = ctx.freshName("hits")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val g = ctx.freshName("g")
-      val base = ctx.freshName("base")
-      val all = ctx.freshName("all")
-      val pos = ctx.freshName("pos")
-      val baseExpr =
-        if (foldWide) s"($g ^ ($g >>> 33)) & 0x7FFFFFFFL" else g
-      s"""
-         |int $hits = 0;
-         |for (int $i = 0; $i < $arr.numElements(); $i++) {
-         |  long $g = $arr.getLong($i);
-         |  long $base = $baseExpr;
-         |  boolean $all = true;
-         |  for (int $j = 0; $all && $j < $k; $j++) {
-         |    int $pos = (int) (((2L * $j + 3) * $base + (5L * $j + 7)) % ${P}L % $mBits);
-         |    $all = (($w[$pos >> 6] >>> ($pos & 63)) & 1L) == 1L;
-         |  }
-         |  if ($all) $hits++;
-         |}
-         |${ev.value} = $hits;
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -576,25 +211,10 @@ case class NfcNormalize(child: Expression) extends UnaryExpression with ExpectsI
 
   override def inputTypes: Seq[InputType] = Seq(StringType)
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    val n =
-      if (java.text.Normalizer.isNormalized(s, java.text.Normalizer.Form.NFC)) s
-      else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC)
-    UTF8String.fromString(n)
-  }
+  override def nullSafeEval(input: Any): Any = HashRuntime.nfc(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val s = ctx.freshName("s")
-      s"""
-         |String $s = $in.toString();
-         |if (!java.text.Normalizer.isNormalized($s, java.text.Normalizer.Form.NFC)) {
-         |  $s = java.text.Normalizer.normalize($s, java.text.Normalizer.Form.NFC);
-         |}
-         |${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString($s);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, in => s"graft.functions.HashRuntime.nfc($in)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -611,35 +231,11 @@ case class SignatureAgreement(left: Expression, right: Expression)
 
   override def inputTypes: Seq[InputType] = Seq(ArrayType(LongType), ArrayType(LongType))
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-    val n = math.min(a.numElements(), b.numElements())
-    if (n == 0) 0.0
-    else {
-      var same = 0
-      var i = 0
-      while (i < n) {
-        if (a.getLong(i) == b.getLong(i)) same += 1
-        i += 1
-      }
-      same.toDouble / n
-    }
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    HashRuntime.agreement(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val same = ctx.freshName("same")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |int $same = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) $same++;
-         |}
-         |${ev.value} = $n == 0 ? 0.0 : ((double) $same) / $n;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashRuntime.agreement($a, $b)")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
@@ -666,37 +262,11 @@ case class FirstAgreePos(left: Expression, right: Expression)
 
   override def inputTypes: Seq[InputType] = Seq(ArrayType(LongType), ArrayType(LongType))
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-    val n = math.min(a.numElements(), b.numElements())
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i))
-        return (i + 1).toLong
-      i += 1
-    }
-    0L
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    HashRuntime.firstAgreePos(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      // null-slot checks only where the type admits nulls: the band-hash
-      // kernels declare containsNull = false, so their loop is unchanged
-      def present(arr: String, e: Expression) = e.dataType match {
-        case ArrayType(_, true) => s"!$arr.isNullAt($i) && "
-        case _ => ""
-      }
-      val agree = s"${present(a, left)}${present(b, right)}$a.getLong($i) == $b.getLong($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |${ev.value} = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($agree) { ${ev.value} = $i + 1L; break; }
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashRuntime.firstAgreePos($a, $b)")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
@@ -719,14 +289,10 @@ case class BinLength(child: Expression) extends UnaryExpression with ExpectsInpu
 
   override def inputTypes: Seq[InputType] = Seq(LongType)
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[Long]
-    if (v == 0L) 1 else 64 - java.lang.Long.numberOfLeadingZeros(v)
-  }
+  override def nullSafeEval(input: Any): Any = HashRuntime.binLength(input.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = ($v == 0L) ? 1 : 64 - java.lang.Long.numberOfLeadingZeros($v);")
+    defineCodeGen(ctx, ev, v => s"graft.functions.HashRuntime.binLength($v)")
 
   override protected def withNewChildInternal(newChild: Expression): BinLength =
     copy(child = newChild)
@@ -1503,9 +1069,11 @@ object BandedLevenshtein {
   }
 }
 
-/** Shared JVM runtime for the signature kernels (top-level object ⇒
-  * static forwarders callable from generated code, the BpeRuntime
-  * pattern).
+/** The one body of each signature kernel above, shared by eval and
+  * generated code (top-level object ⇒ static forwarders callable from
+  * generated code, the BpeRuntime pattern). Each method reads
+  * `ArrayData`/`UTF8String` plus primitive parameters and returns a
+  * primitive or `ArrayData`, so nothing is boxed on either path.
   */
 object HashRuntime {
   // XXH64's primes (public constants of the xxHash spec; Spark's
@@ -1515,6 +1083,8 @@ object HashRuntime {
   private final val P3 = 1609587929392839161L
   private final val P4 = -8796714831421723037L
   private final val P5 = 2870177450012600261L
+
+  private final val Seed = HashExpressions.ShingleSeed
 
   /** For every lane s in [0, mins.length):
     * `v = XXH64.hashLong(h, s); if (v < mins[s]) mins[s] = v` —
@@ -1539,12 +1109,214 @@ object HashRuntime {
       s += 1
     }
   }
+
+  private def noMins(numHashes: Int): Array[Long] = {
+    val mins = new Array[Long](numHashes)
+    java.util.Arrays.fill(mins, Long.MaxValue)
+    mins
+  }
+
+  /** [[MinHashSignatures]]: each non-null shingle hashed once, k lanes. */
+  def minhash(shingles: ArrayData, numHashes: Int): ArrayData = {
+    val mins = noMins(numHashes)
+    val n = shingles.numElements()
+    var i = 0
+    while (i < n) {
+      if (!shingles.isNullAt(i))
+        minhashLanes(XXH64.hashUTF8String(shingles.getUTF8String(i), Seed), mins)
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(mins)
+  }
+
+  /** The chained n-gram window hashes of a token array — THE one
+    * definition behind [[MinHashTokens]], [[NgramHashes]],
+    * [[SimHashTokens]] and the stream-side span strip
+    * ([[graft.streaming.GraftStreaming.decontaminateSpanStream]]). Each
+    * token is xxhash64'd once at [[HashExpressions.ShingleSeed]] (a null
+    * slot hashes as 0); a window's hash chains its n token hashes,
+    * starting from the same seed. max(1, T − n + 1) windows in order:
+    * fewer than n tokens make one window over what is there, no tokens
+    * make none.
+    */
+  def windowHashes(tokens: ArrayData, n: Int): Array[Long] = {
+    val t = tokens.numElements()
+    if (t == 0) return Array.emptyLongArray
+    val th = new Array[Long](t)
+    var i = 0
+    while (i < t) {
+      th(i) = if (tokens.isNullAt(i)) 0L else XXH64.hashUTF8String(tokens.getUTF8String(i), Seed)
+      i += 1
+    }
+    val wh = new Array[Long](math.max(1, t - n + 1))
+    var w = 0
+    while (w < wh.length) {
+      var h = Seed
+      var j = w
+      val end = math.min(w + n, t)
+      while (j < end) { h = XXH64.hashLong(th(j), h); j += 1 }
+      wh(w) = h
+      w += 1
+    }
+    wh
+  }
+
+  /** [[MinHashTokens]]: k lanes over the window hashes. */
+  def minhashTokens(tokens: ArrayData, n: Int, numHashes: Int): ArrayData = {
+    val mins = noMins(numHashes)
+    val wh = windowHashes(tokens, n)
+    var w = 0
+    while (w < wh.length) { minhashLanes(wh(w), mins); w += 1 }
+    UnsafeArrayData.fromPrimitiveArray(mins)
+  }
+
+  /** [[NgramHashes]]: the window hashes, sorted and distinct when `dedupe`. */
+  def ngramHashes(tokens: ArrayData, n: Int, dedupe: Boolean): ArrayData = {
+    val wh = windowHashes(tokens, n)
+    UnsafeArrayData.fromPrimitiveArray(
+      if (dedupe) java.util.Arrays.copyOf(wh, sortDistinct(wh)) else wh)
+  }
+
+  /** [[SimHash64]]: the vote over every non-null shingle's hash. */
+  def simhash(shingles: ArrayData): Long = {
+    val n = shingles.numElements()
+    val hs = new Array[Long](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (!shingles.isNullAt(i)) {
+        hs(m) = XXH64.hashUTF8String(shingles.getUTF8String(i), Seed)
+        m += 1
+      }
+      i += 1
+    }
+    simhashVote(hs, m)
+  }
+
+  /** [[SimHashTokens]]: the vote over the DISTINCT window hashes. */
+  def simhashTokens(tokens: ArrayData, n: Int): Long = {
+    val wh = windowHashes(tokens, n)
+    simhashVote(wh, sortDistinct(wh))
+  }
+
+  /** Sorts `hs` and packs its distinct values to the front; returns
+    * their count. */
+  private def sortDistinct(hs: Array[Long]): Int = {
+    java.util.Arrays.sort(hs)
+    var out = 0
+    var k = 0
+    while (k < hs.length) {
+      if (out == 0 || hs(k) != hs(out - 1)) { hs(out) = hs(k); out += 1 }
+      k += 1
+    }
+    out
+  }
+
+  /** The 64-bit SimHash vote over `hs[0, len)`: bit b is set iff more
+    * hashes have bit b set than clear (0 for no hashes). */
+  private def simhashVote(hs: Array[Long], len: Int): Long = {
+    val votes = new Array[Int](64)
+    var i = 0
+    while (i < len) {
+      val h = hs(i)
+      var b = 0
+      while (b < 64) {
+        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
+        b += 1
+      }
+      i += 1
+    }
+    var sig = 0L
+    var b = 0
+    while (b < 64) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
+    sig
+  }
+
+  /** [[BandHashes]]: band b chains its `len/bands` longs from 42 ^ b. */
+  def bandHashes(sig: ArrayData, bands: Int): ArrayData = {
+    val r = sig.numElements() / bands
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var h = 42L ^ b
+      var j = 0
+      while (j < r) { h = XXH64.hashLong(sig.getLong(b * r + j), h); j += 1 }
+      out(b) = h
+      b += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** [[BloomHits]]: grams whose k positions are all set in `words`. The
+    * modulus is the ONE fixture modulus: build-side positions
+    * (Bloom.positionExprs / positionSqls) derive from the same constant,
+    * so build and probe can never mix moduli.
+    */
+  def bloomHits(grams: ArrayData, words: Array[Long], mBits: Int, k: Int,
+      foldWide: Boolean): Int = {
+    val p = graft.operators.Dedup.FixtureP
+    val n = grams.numElements()
+    var hits = 0
+    var i = 0
+    while (i < n) {
+      val g = grams.getLong(i)
+      val base = if (foldWide) (g ^ (g >>> 33)) & 0x7FFFFFFFL else g
+      var all = true
+      var j = 0
+      while (all && j < k) {
+        val pos = (((2L * j + 3) * base + (5L * j + 7)) % p % mBits).toInt
+        all = (words(pos >> 6) >>> (pos & 63) & 1L) == 1L
+        j += 1
+      }
+      if (all) hits += 1
+      i += 1
+    }
+    hits
+  }
+
+  /** [[NfcNormalize]]. */
+  def nfc(s: UTF8String): UTF8String = {
+    val j = s.toString
+    UTF8String.fromString(
+      if (java.text.Normalizer.isNormalized(j, java.text.Normalizer.Form.NFC)) j
+      else java.text.Normalizer.normalize(j, java.text.Normalizer.Form.NFC))
+  }
+
+  /** [[SignatureAgreement]]: agreeing positions over the common prefix. */
+  def agreement(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    if (n == 0) return 0.0
+    var same = 0
+    var i = 0
+    while (i < n) {
+      if (a.getLong(i) == b.getLong(i)) same += 1
+      i += 1
+    }
+    same.toDouble / n
+  }
+
+  /** [[FirstAgreePos]]: a null slot never agrees. */
+  def firstAgreePos(a: ArrayData, b: ArrayData): Long = {
+    val n = math.min(a.numElements(), b.numElements())
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i)) return i + 1L
+      i += 1
+    }
+    0L
+  }
+
+  /** [[BinLength]]. */
+  def binLength(v: Long): Int = if (v == 0L) 1 else 64 - java.lang.Long.numberOfLeadingZeros(v)
 }
 
 object HashExpressions {
-  /** The shingle-hash seed (= Spark's xxhash64 default) — the single
-    * definition behind every ShingleHashExpression AND the stream-side
-    * per-row gram arithmetic, so the two can never drift.
+  /** The shingle-hash seed (= Spark's xxhash64 default, so base hashes
+    * agree with the built-in function) — the single definition behind
+    * every ShingleHashExpression, all of which hash through
+    * [[HashRuntime]]; the stream-side span strip
+    * ([[graft.streaming.GraftStreaming.decontaminateSpanStream]]) calls
+    * [[HashRuntime.windowHashes]] too, so the two can never drift.
     */
   final val ShingleSeed = 42L
 

@@ -219,7 +219,7 @@ object Dedup {
     * intermediate (`acc*1000003 + v` with acc < p) stays far inside a
     * 64-bit integer on both engines.
     */
-  private[graft] val FixtureP = 1000000007L
+  private[graft] final val FixtureP = 1000000007L
 
   /** MinHash signature from the FIXTURE hash family — plain integer
     * arithmetic end to end (per-char polynomial token hash, chained window

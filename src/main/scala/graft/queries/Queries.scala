@@ -675,6 +675,31 @@ object Queries {
   // Headline relational queries (DataFrame lane — bench set)
   // ==========================================================
 
+  /** q_q1's sum_charge rendering: an exact e-10-dollar total
+    * (decimal(38,0)) as a double, HALF_UP-rounded to cents ONCE, equal
+    * to the oracle's CAST(ROUND(SUM(decimal(36,10)), 2) AS DOUBLE).
+    *
+    * Why not `round(total * 1e-10, 2)` (r16, ADVICE fix): decimal(38,0) ×
+    * decimal(10,10) has result precision 49, so Spark's
+    * allowPrecisionLoss adjustment coerces the product to decimal(38,6)
+    * — HALF_UP-rounding to 6 fractional digits BEFORE round(_, 2); an
+    * exact total like 100.0049999950 would read 100.01 vs the oracle's
+    * 100.00. So the rounding happens in EXACT decimal(38,0) integer
+    * arithmetic: bias by signum(total) × half a cent (5e7 e-10 units;
+    * a zero total may take either bias) and truncate the low 8 digits
+    * toward zero with `%` (whose result takes the dividend's sign) —
+    * HALF_UP, away from zero, for either sign. The one residual multiply
+    * by 1e-10 then scales an exact multiple of 1e8, whose product has ≤ 2
+    * fractional digits — the decimal(38,6) coercion rounds it exactly,
+    * and the final double equals the oracle's bit for bit.
+    */
+  private[graft] def centsHalfUp(totalE10: Column): Column = {
+    val e8 = lit(100000000L).cast("decimal(38,0)")
+    val half = lit(50000000L).cast("decimal(38,0)")
+    val biased = totalE10 + when(totalE10 < 0, -half).otherwise(half)
+    ((biased - biased % e8) * lit(new java.math.BigDecimal("0.0000000001"))).cast("double")
+  }
+
   // decimal widths chosen so every product stays inside DECIMAL(38,_) in
   // BOTH engines (overflow would silently demote to double / lose scale):
   // price(18,2) * disc(8,4) -> (27,6); * tax(8,4) -> (36,10).
@@ -745,28 +770,7 @@ object Queries {
         (join2(col("__pl"), col("__ph")) * unit("0.01")).cast("double").as("sum_base_price"),
         round(join2(col("__dl"), col("__dh")) * unit("0.000001"), 2)
           .cast("double").as("sum_disc_price"),
-        // sum_charge must round ONCE (r16, ADVICE fix): decimal(38,0) ×
-        // decimal(10,10) has result precision 49, so Spark's
-        // allowPrecisionLoss adjustment coerces the product to
-        // decimal(38,6) — HALF_UP-rounding the exact e-10-dollar total to
-        // 6 fractional digits BEFORE round(_, 2). The oracle sums
-        // decimal(36,10) and rounds once; an exact total like
-        // 100.0049999950 would read 100.01 through the double-rounded
-        // lane vs 100.00 in the oracle. So the scale-2 HALF_UP happens in
-        // EXACT decimal(38,0) integer arithmetic instead: add half a cent
-        // (5e7 e-10 units — totals are nonnegative: price ≥ 0, disc ≤ 1,
-        // tax ≥ 0) and clear the low 8 digits via pmod. The one
-        // residual multiply by 1e-10 then scales an exact multiple of
-        // 1e8, whose product has ≤ 2 fractional digits — the decimal(38,6)
-        // coercion rounds it exactly, and the final double equals the
-        // oracle's CAST(ROUND(SUM(..), 2) AS DOUBLE) bit for bit.
-        {
-          val e8 = lit(100000000L).cast("decimal(38,0)")
-          val biased = join3(col("__cl"), col("__cm"), col("__ch")) +
-            lit(50000000L).cast("decimal(38,0)")
-          ((biased - pmod(biased, e8)) * unit("0.0000000001"))
-            .cast("double").as("sum_charge")
-        },
+        centsHalfUp(join3(col("__cl"), col("__cm"), col("__ch"))).as("sum_charge"),
         ((dec(col("__qc")) * unit("0.01")).cast("double") /
           col("__n").cast("double")).as("avg_qty"),
         ((join2(col("__pl"), col("__ph")) * unit("0.01")).cast("double") /

@@ -680,48 +680,32 @@ object GraftStreaming {
     * Column form — the batch path's gaps-and-islands needs a window
     * function (not append-stream-safe) and an `aggregate` HOF fold would
     * copy the accumulator array per token (O(n²/doc)). The UDF walks the
-    * token array once per row, and its arithmetic CALLS the same XXH64
-    * primitives under [[graft.functions.HashExpressions.ShingleSeed]]
-    * that the batch NgramHashes expression compiles to, so the two paths
-    * cannot drift (and the agreement spec would trip if they did). It is
-    * a pure map — no state, no watermark, append-safe.
+    * token array once per row, and its window hashes come from
+    * [[graft.functions.HashRuntime.windowHashes]], the one body the batch
+    * NgramHashes expression calls too, so the two paths cannot drift
+    * (and the agreement spec would trip if they did). It is a pure map —
+    * no state, no watermark, append-safe.
     */
   def decontaminateSpanStream(stream: DataFrame, textCol: String,
       benchGrams: Array[Long], k: Int = 3, minSpan: Int = 5): DataFrame = {
     require(k >= 1 && minSpan >= k, "need minSpan >= k >= 1")
     val grams = benchGrams.clone()
     java.util.Arrays.sort(grams)
-    val seed = graft.functions.HashExpressions.ShingleSeed
     val clean = udf { (text: String) =>
       if (text == null) null
       else {
-        // token + window-hash arithmetic identical to tokens() +
-        // NgramHashes(dedupe = false): Spark's own trim (spaces only) and
-        // split (limit -1, so edge whitespace yields empty tokens), xxhash64
-        // each token at the shingle seed, chain k token hashes per window
+        // tokens exactly as tokens() + NgramHashes(dedupe = false): Spark's
+        // own trim (spaces only) and split (limit -1, so edge whitespace
+        // yields empty tokens), window hashes from the batch kernel's body
         val toks = UTF8String.fromString(text).trim().split(UTF8String.fromString("\\s+"), -1)
         val t = toks.length
         if (t < k) toks.mkString(" ") // no window can exist; normalize like stripSpans
         else {
-          import org.apache.spark.sql.catalyst.expressions.XXH64
-          val th = new Array[Long](t)
-          var i = 0
-          while (i < t) {
-            th(i) = XXH64.hashUTF8String(toks(i), seed)
-            i += 1
-          }
-          val windows = t - k + 1
-          val wh = new Array[Long](windows)
-          var w = 0
-          while (w < windows) {
-            var h = seed
-            var j = w
-            while (j < w + k) { h = XXH64.hashLong(th(j), h); j += 1 }
-            wh(w) = h
-            w += 1
-          }
+          val wh = graft.functions.HashRuntime.windowHashes(
+            new org.apache.spark.sql.catalyst.util.GenericArrayData(toks.toArray[Any]), k)
+          val windows = wh.length
           val covered = new Array[Boolean](t)
-          w = 0
+          var w = 0
           while (w < windows) {
             if (java.util.Arrays.binarySearch(grams, wh(w)) >= 0) {
               var e = w

@@ -1,6 +1,7 @@
 package graft.core
 
 import graft.SparkTestSession
+import graft.queries.Queries
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,10 +17,17 @@ class FixedPointRoundSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private val e8 = lit(100000000L).cast("decimal(38,0)")
   private val unitE10 = lit(new java.math.BigDecimal("0.0000000001"))
 
-  test("bias-and-pmod charge rendering rounds ONCE at scale 2, incl. the double-round boundary") {
+  /** The oracle's rounding: exact decimal, one scale-2 HALF_UP. */
+  private def halfUp(e10: Long): Double =
+    java.math.BigDecimal.valueOf(e10, 10).setScale(2, java.math.RoundingMode.HALF_UP).doubleValue
+
+  private def rendered(totals: Seq[Long]): Seq[Double] =
+    totals.toDF("e10").select(Queries.centsHalfUp(col("e10").cast("decimal(38,0)")))
+      .collect().map(_.getDouble(0)).toSeq
+
+  test("the q_q1 charge rendering rounds ONCE at scale 2, incl. the double-round boundary") {
     val cases = Seq(
       1000049999950L -> 100.00, // the ADVICE counterexample (old path: 100.01)
       1000050000000L -> 100.01, // exactly half a cent → HALF_UP bumps
@@ -29,11 +37,26 @@ class FixedPointRoundSpec extends AnyFunSuite {
       0L -> 0.0,
       49999999L -> 0.0, // 0.0049999999 → 0.00
       50000000L -> 0.01) // 0.0050000000 exactly → 0.01
-    val df = cases.map(_._1).toDF("e10")
-    val biased = col("e10").cast("decimal(38,0)") + lit(50000000L).cast("decimal(38,0)")
-    val single = ((biased - pmod(biased, e8)) * unitE10).cast("double")
-    val got = df.select(single).collect().map(_.getDouble(0)).toSeq
+    val got = rendered(cases.map(_._1))
     assert(got == cases.map(_._2), s"got $got")
+    assert(got == cases.map(c => halfUp(c._1)))
+  }
+
+  test("negative totals round HALF_UP (away from zero) like the oracle, exact halves included") {
+    val totals = Seq(
+      -50000000L, // -0.0050000000 exactly → -0.01 (half toward +∞ would give 0.00)
+      -49999999L, // → -0.00
+      -50000001L, // → -0.01
+      -1000050000000L, // -100.0050000000 → -100.01
+      -1000049999999L, // → -100.00
+      -1000049999950L, // → -100.00
+      -999999999999L, // → -100.00
+      -1234550000000L, // -123.455 → -123.46
+      -150000000L, // -0.015 → -0.02
+      -1L)
+    val got = rendered(totals)
+    assert(got == totals.map(halfUp), s"got $got")
+    assert(got.take(4) == Seq(-0.01, 0.0, -0.01, -100.01))
   }
 
   test("the replaced round(total * 1e-10, 2) formulation really double-rounds at the boundary") {
