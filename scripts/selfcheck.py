@@ -143,6 +143,10 @@ def main(sf_dir, out_dir):
         bad += 1
         print(f"XX codegen loop: {hit}")
 
+    for hit in hash_family():
+        bad += 1
+        print(f"XX hash family: {hit}")
+
     print(f"\n{len(results) - bad}/{len(results)} pass")
     return 1 if bad else 0
 
@@ -209,6 +213,33 @@ def codegen_loops():
                 if emitted and not flagged:
                     hits.append(f"{rel}:{n}: {line.strip()[:120]}")
                     flagged = True
+    return hits
+
+# hash-family gate: which hash lane an operator runs in (production xxhash64
+# or the SQL-replayable fixture arithmetic) is a HashFamily value passed to
+# one entry point. Only HashFamily.scala (the lanes) and HashExpressions.scala
+# (the kernels) name the fixture lane's helpers; an operator that needs the
+# oracle lane takes `family: HashFamily` instead of growing a *Fixture twin.
+HASH_FAMILY_HOMES = {"HashFamily.scala", "HashExpressions.scala"}
+FIXTURE_HELPER = re.compile(r"\b(fixtureMinhashSig|fixtureWindowHashes|fixtureBandHashes|"
+                            r"fixtureSimhashSig|positionExprsWide|FixtureP)\b")
+FIXTURE_TWIN = re.compile(r"\bdef (\w+Fixture)\(")
+FIXTURE_TWIN_ALLOW = {"minhashEvalFixture"}  # exact Jaccard over the fixture shingle space
+
+def hash_family():
+    repo = os.path.join(os.path.dirname(__file__), "..")
+    pattern = os.path.join(repo, "src", "main", "scala", "graft", "**", "*.scala")
+    hits = []
+    for path in sorted(glob.glob(pattern, recursive=True)):
+        rel = os.path.relpath(path, repo)
+        operators = os.sep + "operators" + os.sep in rel
+        for n, line in enumerate(open(path, encoding="utf-8"), 1):
+            m = FIXTURE_HELPER.search(line)
+            if m and os.path.basename(path) not in HASH_FAMILY_HOMES:
+                hits.append(f"{rel}:{n}: names fixture-lane helper {m.group(1)}")
+            t = FIXTURE_TWIN.search(line)
+            if t and operators and t.group(1) not in FIXTURE_TWIN_ALLOW:
+                hits.append(f"{rel}:{n}: operator twin {t.group(1)}; take a HashFamily instead")
     return hits
 
 def bench_check(path):

@@ -145,7 +145,8 @@ case class SimHashTokens(child: Expression, n: Int) extends ShingleHashExpressio
 
 /** band_hashes(signature, bands): chain-hash each contiguous signature band
   * of `len/bands` longs down to one 64-bit bucket key — the LSH banding
-  * step without the array-slice + string-cast detour.
+  * step without the array-slice + string-cast detour. A signature that
+  * does not split into `bands` bands of at least one long is rejected.
   */
 case class BandHashes(child: Expression, bands: Int)
     extends UnaryExpression with ExpectsInputTypes {
@@ -791,7 +792,7 @@ object QualityFeaturesExpr {
   * pass per document now, same shape as the production xxhash kernels.
   */
 object FixtureHashes {
-  private val P = 1000000007L
+  private final val P = graft.operators.HashFamily.Fixture.FixtureP
 
   /** Chained window hashes: per-token char chain (a*31+cp)%P over the
     * codepoints of each whitespace token of trim(text), then per-window
@@ -886,15 +887,18 @@ object FixtureHashes {
     sig
   }
 
-  /** Per-band chained hash over a signature array: (a*1000003+v)%P. */
+  /** Per-band chained hash over a signature array: (a*1000003+v)%P. The
+    * signature must hold exactly `bands × rowsPerBand` entries.
+    */
   def bandHashes(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
     val s = sig.toLongArray()
+    HashRuntime.requireBanded(s.length, bands, rowsPerBand)
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
       var a = 0L
       var j = b * rowsPerBand
-      val end = math.min(j + rowsPerBand, s.length)
+      val end = j + rowsPerBand
       while (j < end) { a = (a * 1000003 + s(j)) % P; j += 1 }
       out(b) = a
       b += 1
@@ -1235,6 +1239,7 @@ object HashRuntime {
   /** [[BandHashes]]: band b chains its `len/bands` longs from 42 ^ b. */
   def bandHashes(sig: ArrayData, bands: Int): ArrayData = {
     val r = sig.numElements() / bands
+    requireBanded(sig.numElements(), bands, r)
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
@@ -1247,19 +1252,34 @@ object HashRuntime {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
+  /** A banded signature holds exactly `bands × rowsPerBand` entries with
+    * at least one row per band; anything else would leave entries outside
+    * every band, or hash empty bands to a constant that collides
+    * everywhere.
+    */
+  def requireBanded(len: Int, bands: Int, rowsPerBand: Int): Unit =
+    if (rowsPerBand < 1 || len != bands * rowsPerBand)
+      throw new IllegalArgumentException(
+        s"signature of length $len does not split into $bands bands of $rowsPerBand rows")
+
   /** [[BloomHits]]: grams whose k positions are all set in `words`. The
     * modulus is the ONE fixture modulus: build-side positions
-    * (Bloom.positionExprs / positionSqls) derive from the same constant,
-    * so build and probe can never mix moduli.
+    * (HashFamily.bloomPositions / positionSqls) derive from the same
+    * constant, so build and probe can never mix moduli. Without
+    * `foldWide` a gram must already lie in the fixture lane's domain,
+    * [0, 2^31).
     */
   def bloomHits(grams: ArrayData, words: Array[Long], mBits: Int, k: Int,
       foldWide: Boolean): Int = {
-    val p = graft.operators.Dedup.FixtureP
+    val p = graft.operators.HashFamily.Fixture.FixtureP
     val n = grams.numElements()
     var hits = 0
     var i = 0
     while (i < n) {
       val g = grams.getLong(i)
+      if (!foldWide && (g >>> 31) != 0L)
+        throw new IllegalArgumentException(
+          s"fixture-lane bloom gram hash $g is outside its domain [0, 2^31)")
       val base = if (foldWide) (g ^ (g >>> 33)) & 0x7FFFFFFFL else g
       var all = true
       var j = 0
@@ -1282,14 +1302,16 @@ object HashRuntime {
       else java.text.Normalizer.normalize(j, java.text.Normalizer.Form.NFC))
   }
 
-  /** [[SignatureAgreement]]: agreeing positions over the common prefix. */
+  /** [[SignatureAgreement]]: agreeing positions over the common prefix; a
+    * null slot never agrees (as in [[firstAgreePos]]).
+    */
   def agreement(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     if (n == 0) return 0.0
     var same = 0
     var i = 0
     while (i < n) {
-      if (a.getLong(i) == b.getLong(i)) same += 1
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i)) same += 1
       i += 1
     }
     same.toDouble / n
@@ -1401,24 +1423,6 @@ object HashExpressions {
   def bandedLevenshtein(l: Column, r: Column, maxDist: Int): Column =
     GraftBridge.column(BandedLevenshtein(
       GraftBridge.expression(l), GraftBridge.expression(r), maxDist))
-
-  /** Fixture-family chained window hashes; see [[FixtureHashes]]. */
-  def fixtureWindowHashes(text: Column, shingle: Int): Column =
-    GraftBridge.column(FixtureTextHashes(GraftBridge.expression(text), shingle, 0))
-
-  /** Fixture-family minhash signature; see [[FixtureHashes]]. */
-  def fixtureMinhashSig(text: Column, shingle: Int, numHashes: Int): Column = {
-    require(numHashes > 0)
-    GraftBridge.column(FixtureTextHashes(GraftBridge.expression(text), shingle, numHashes))
-  }
-
-  /** Fixture-family simhash signature; see [[FixtureHashes]]. */
-  def fixtureSimhashSig(text: Column, shingle: Int, bits: Int): Column =
-    GraftBridge.column(FixtureSimhashSig(GraftBridge.expression(text), shingle, bits))
-
-  /** Fixture-family per-band chained hashes; see [[FixtureHashes]]. */
-  def fixtureBandHashes(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    GraftBridge.column(FixtureBandHashes(GraftBridge.expression(sig), bands, rowsPerBand))
 
   /** Bloom hit count over an array<bigint> of gram hashes. */
   def bloomHits(grams: Column, words: Array[Long], mBits: Int, k: Int,

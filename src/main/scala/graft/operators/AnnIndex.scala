@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persistent ANN / dedup indexes — the last rung of the 100 TB story.
@@ -600,27 +600,16 @@ object AnnIndex {
 
   // ---- MinHash: bucketed band + signature tables ----
 
-  /** (doc, band-hash array, full signature) per document — signed once;
-    * band rows and the sig table both derive from this. The signature and
-    * band-hash constructors are injectable so the SAME persistent-index
-    * pipeline runs under the production xxhash family or the
-    * SQL-replayable fixture family (the Dedup.minhashPairsFromSigs
-    * discipline applied to the index path).
+  /** (doc, band-hash array, full signature) per document — signed once
+    * under `family`; band rows and the sig table both derive from this.
     */
-  private def signedWith(df: DataFrame, idCol: String, textCol: String,
-      sig: Column => Column, band: Column => Column): DataFrame =
-    // spread before signing (Dedup.spread: conditional — only when the
-    // file layout is narrower than the session; the fixture chains are
-    // interpreted and pay for single-partition inputs hardest)
-    Dedup.spread(df)
-      .select(col(idCol).as("__id"), sig(col(textCol)).as("__sig"))
-      .withColumn("__bh", band(col("__sig")))
-
   private def signed(df: DataFrame, idCol: String, textCol: String,
-      shingle: Int, numHashes: Int, bands: Int): DataFrame =
-    signedWith(df, idCol, textCol,
-      Dedup.minhashSignature(_, shingle, numHashes),
-      graft.functions.HashExpressions.bandHashes(_, bands))
+      shingle: Int, numHashes: Int, bands: Int, family: HashFamily): DataFrame =
+    // spread before signing (Dedup.spread: conditional — only when the
+    // file layout is narrower than the session)
+    Dedup.spread(df)
+      .select(col(idCol).as("__id"), family.minhashSig(col(textCol), shingle, numHashes).as("__sig"))
+      .withColumn("__bh", family.bandHashes(col("__sig"), bands, numHashes / bands))
 
   /** One row per (doc, band), keyed by `__bb` — the 64-bit hash of
     * (band index, band hash), one column so the table can bucket on it.
@@ -635,9 +624,20 @@ object AnnIndex {
     * (session catalog, like [[graft.sources.GraftIO.storeBucketedTable]]):
     * `tableName` — band rows bucketed+sorted by `__bb` (candidate
     * generation), and `tableName_sigs` — (id, signature) bucketed+sorted
-    * by `__id` (verification). Signature parameters are baked into the
-    * layout; [[probeMinhash]] must be called with the same values.
+    * by `__id` (verification). Signature parameters and the hash family
+    * are baked into the layout; [[probeMinhash]] must be called with the
+    * same values. Under [[HashFamily.Fixture]] a DuckDB oracle gates the
+    * persistent-index probe path end to end (q_dedup_minhash_indexed_fixed).
     */
+  def buildMinhash(df: DataFrame, idCol: String, textCol: String, tableName: String,
+      shingle: Int = 3, numHashes: Int = 64, bands: Int = 16, buckets: Int = 32,
+      family: HashFamily = HashFamily.Xxhash): Unit = {
+    requireBands(numHashes, bands)
+    val s = Materialize.once(signed(df, idCol, textCol, shingle, numHashes, bands, family))
+    persistPair(bandedRows(s), "__bb", s.select(col("__id"), col("__sig")), "__id",
+      tableName, "_sigs", buckets)
+  }
+
   /** Same contract as Dedup.minhashNearDuplicates: a non-dividing band
     * count would silently leave `numHashes % bands` signature positions
     * outside every band (weaker candidate recall than the batch twin).
@@ -646,63 +646,41 @@ object AnnIndex {
     require(bands > 0 && numHashes % bands == 0,
       s"numHashes ($numHashes) must divide into bands ($bands)")
 
-  def buildMinhash(df: DataFrame, idCol: String, textCol: String, tableName: String,
-      shingle: Int = 3, numHashes: Int = 64, bands: Int = 16, buckets: Int = 32): Unit = {
-    requireBands(numHashes, bands)
-    persistMinhashTables(
-      Materialize.once(signed(df, idCol, textCol, shingle, numHashes, bands)),
-      tableName, buckets)
-  }
-
-  /** [[buildMinhash]] under the fixture hash family
-    * (Dedup.minhashSignatureFixture / bandHashesFixture): the same two
-    * bucketed tables, signatures swapped for SQL-replayable modular
-    * integer chains — what lets a DuckDB oracle gate the persistent-index
-    * probe path end to end (q_dedup_minhash_indexed_fixed).
+  /** Commit a PAIR of tables that must stay coherent — `tableName` and its
+    * sidecar `tableName + suffix` (the minhash index's `_sigs`, the LM
+    * catalog's `_bi`): both stage completely first, then two metadata
+    * swaps commit — the torn window shrinks from two distributed writes
+    * to two catalog renames, and [[recoverPair]] rolls the second swap
+    * forward whenever the first committed (staging(primary) consumed ⇒
+    * the new pair is the durable state).
     */
-  def buildMinhashFixture(df: DataFrame, idCol: String, textCol: String, tableName: String,
-      shingle: Int = 3, numHashes: Int = 64, bands: Int = 16, buckets: Int = 32): Unit = {
-    requireBands(numHashes, bands)
-    persistMinhashTables(
-      Materialize.once(signedWith(df, idCol, textCol,
-        Dedup.minhashSignatureFixture(_, shingle, numHashes),
-        Dedup.bandHashesFixture(bands, numHashes / bands))),
-      tableName, buckets)
-  }
-
-  /** The minhash index is a PAIR of tables (banded rows + signatures)
-    * that must stay coherent: both stage completely first, then two
-    * metadata swaps commit — the torn window shrinks from two
-    * distributed writes to two catalog renames, and
-    * [[recoverMinhashPair]] rolls the second swap forward whenever the
-    * first committed (staging(bands) consumed ⇒ the new pair is the
-    * durable state).
-    */
-  private def persistMinhashTables(s: DataFrame, tableName: String, buckets: Int): Unit = {
-    val spark = s.sparkSession
-    recoverMinhashPair(spark, tableName) // converge any torn predecessor first
-    replaceTable(bandedRows(s), stagingName(tableName), "__bb", buckets)
-    replaceTable(s.select(col("__id"), col("__sig")),
-      stagingName(tableName + "_sigs"), "__id", buckets)
+  private def persistPair(primary: DataFrame, primaryKey: String,
+      sidecar: DataFrame, sidecarKey: String,
+      tableName: String, suffix: String, buckets: Int): Unit = {
+    val spark = primary.sparkSession
+    recoverPair(spark, tableName, suffix) // converge any torn predecessor first
+    replaceTable(primary, stagingName(tableName), primaryKey, buckets)
+    replaceTable(sidecar, stagingName(tableName + suffix), sidecarKey, buckets)
     swapStaging(spark, tableName)
-    swapStaging(spark, tableName + "_sigs")
+    swapStaging(spark, tableName + suffix)
   }
 
-  /** Heal every crash window of [[persistMinhashTables]]'s two-table
-    * commit: per-table drop/rename windows first, then pair coherence —
-    * the sigs staging surviving AFTER the bands staging was consumed can
+  /** Heal every crash window of [[persistPair]]'s two-table commit:
+    * per-table drop/rename windows first, then pair coherence — the
+    * sidecar staging surviving AFTER the primary staging was consumed can
     * only mean the crash hit between the two swaps, so finish the
     * second. Both stagings still present = crash before either swap: the
     * OLD pair is the durable state, stagings are dead weight the next
-    * build overwrites. Called from the probes and the next build.
+    * build overwrites. Called from the probes, the loads and the next
+    * build.
     */
-  private[graft] def recoverMinhashPair(spark: SparkSession, tableName: String): Unit = {
+  private def recoverPair(spark: SparkSession, tableName: String, suffix: String): Unit = {
     recoverFingerprint(spark, tableName)
-    recoverFingerprint(spark, tableName + "_sigs")
+    recoverFingerprint(spark, tableName + suffix)
     if (!spark.catalog.tableExists(stagingName(tableName)) &&
-        spark.catalog.tableExists(stagingName(tableName + "_sigs")) &&
+        spark.catalog.tableExists(stagingName(tableName + suffix)) &&
         spark.catalog.tableExists(tableName))
-      swapStaging(spark, tableName + "_sigs")
+      swapStaging(spark, tableName + suffix)
   }
 
   /** `mode(overwrite).saveAsTable` replaces a table the CATALOG knows, but
@@ -741,39 +719,18 @@ object AnnIndex {
     * Delta-internal duplicates are NOT found here — run the batch
     * operator over the delta for those; a full ingest is the union of
     * both (plus [[Dedup.connectedComponents]] if clusters are needed).
+    * The delta is signed under `family`, which must be the family the
+    * index was built with.
     */
   def probeMinhash(spark: SparkSession, tableName: String, delta: DataFrame,
       idCol: String, textCol: String,
       shingle: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.7): DataFrame = {
+      threshold: Double = 0.7, family: HashFamily = HashFamily.Xxhash): DataFrame = {
     requireBands(numHashes, bands)
-    probeMinhashFromSigned(spark, tableName,
-      Materialize.once(signed(delta, idCol, textCol, shingle, numHashes, bands)),
-      threshold)
-  }
-
-  /** [[probeMinhash]] against a [[buildMinhashFixture]] index — the delta
-    * is signed with the SAME fixture family the index was built with; the
-    * probe pipeline (bucket join, first-agreeing-band filter, signature
-    * verify) is shared verbatim.
-    */
-  def probeMinhashFixture(spark: SparkSession, tableName: String, delta: DataFrame,
-      idCol: String, textCol: String,
-      shingle: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.7): DataFrame = {
-    requireBands(numHashes, bands)
-    probeMinhashFromSigned(spark, tableName,
-      Materialize.once(signedWith(delta, idCol, textCol,
-        Dedup.minhashSignatureFixture(_, shingle, numHashes),
-        Dedup.bandHashesFixture(bands, numHashes / bands))),
-      threshold)
-  }
-
-  private def probeMinhashFromSigned(spark: SparkSession, tableName: String,
-      s: DataFrame, threshold: Double): DataFrame = {
+    val s = Materialize.once(signed(delta, idCol, textCol, shingle, numHashes, bands, family))
     // a crashed build swap leaves a torn bands/sigs pair — converge it
     // before reading either table (the compactIvfPq heal-on-probe rule)
-    recoverMinhashPair(spark, tableName)
+    recoverPair(spark, tableName, "_sigs")
     val d = bandedRows(s)
       .select(col("__bb"), col("__id").as("idA"), col("__bh").as("__bhA"))
     val idx = spark.table(tableName)
@@ -889,10 +846,9 @@ object AnnIndex {
   // applied at loadLm time (LanguageModel.fromRaw), never at count time,
   // so updates merge by plain count addition (associative — ingest order
   // cannot change the model) and words can cross the vocabulary
-  // threshold as deltas arrive. Commit/crash discipline is the minhash
-  // pair's: both tables stage completely, then two catalog swaps;
-  // recoverLmPair rolls the second swap forward whenever the first
-  // committed.
+  // threshold as deltas arrive. Committed and healed as a pair with the
+  // `_bi` sidecar (persistPair / recoverPair, the minhash index's
+  // protocol).
 
   /** Persist a reference corpus's LM counts as a coherent two-table
     * catalog. Word-bucketed so [[updateLm]]'s merge re-aggregation and
@@ -901,25 +857,25 @@ object AnnIndex {
   def buildLm(ref: DataFrame, idCol: String, textCol: String,
       tableName: String, buckets: Int = 32): Unit = {
     val (uni, bi) = graft.operators.LanguageModel.rawCounts(ref, idCol, textCol)
-    persistLmTables(uni, bi, tableName, buckets)
+    persistPair(uni, "word", bi, "w1", tableName, "_bi", buckets)
   }
 
   /** Fold a delta corpus into the LM catalog: counts add (associative).
     * The table sides arrive pre-bucketed; only the delta counts and the
     * merged aggregates shuffle. Both merged tables stage completely
     * before either swap — a crash anywhere leaves a state
-    * [[recoverLmPair]] converges.
+    * [[recoverPair]] converges.
     */
   def updateLm(spark: SparkSession, tableName: String, delta: DataFrame,
       idCol: String, textCol: String, buckets: Int = 32): Unit = {
-    recoverLmPair(spark, tableName)
+    recoverPair(spark, tableName, "_bi")
     val (du, db) = graft.operators.LanguageModel.rawCounts(delta, idCol, textCol)
-    persistLmTables(
+    persistPair(
       spark.table(tableName).unionByName(du)
-        .groupBy("word").agg(sum(col("c")).as("c")),
+        .groupBy("word").agg(sum(col("c")).as("c")), "word",
       spark.table(tableName + "_bi").unionByName(db)
-        .groupBy("w1", "w2").agg(sum(col("c")).as("c")),
-      tableName, buckets)
+        .groupBy("w1", "w2").agg(sum(col("c")).as("c")), "w1",
+      tableName, "_bi", buckets)
   }
 
   /** Assemble a scoring model from the catalog under a `minCount`
@@ -930,30 +886,9 @@ object AnnIndex {
     */
   def loadLm(spark: SparkSession, tableName: String,
       minCount: Long = 1L): graft.operators.LanguageModel.NgramLm = {
-    recoverLmPair(spark, tableName)
+    recoverPair(spark, tableName, "_bi")
     graft.operators.LanguageModel.fromRaw(
       spark.table(tableName), spark.table(tableName + "_bi"), minCount)
-  }
-
-  private def persistLmTables(uni: DataFrame, bi: DataFrame,
-      tableName: String, buckets: Int): Unit = {
-    val spark = uni.sparkSession
-    recoverLmPair(spark, tableName) // converge any torn predecessor first
-    replaceTable(uni, stagingName(tableName), "word", buckets)
-    replaceTable(bi, stagingName(tableName + "_bi"), "w1", buckets)
-    swapStaging(spark, tableName)
-    swapStaging(spark, tableName + "_bi")
-  }
-
-  /** Heal every crash window of the LM pair commit (the
-    * [[recoverMinhashPair]] logic on the `_bi` sidecar table). */
-  private[graft] def recoverLmPair(spark: SparkSession, tableName: String): Unit = {
-    recoverFingerprint(spark, tableName)
-    recoverFingerprint(spark, tableName + "_bi")
-    if (!spark.catalog.tableExists(stagingName(tableName)) &&
-        spark.catalog.tableExists(stagingName(tableName + "_bi")) &&
-        spark.catalog.tableExists(tableName))
-      swapStaging(spark, tableName + "_bi")
   }
 
   /** Second half: drop the old table and rename the staging table in. A

@@ -34,67 +34,23 @@ import org.apache.spark.sql.functions._
   * keep the exact semi-join path for that regime instead of a broadcast
   * variable + UDF, which would leave codegen.
   *
-  * Two lanes, the established dedup discipline:
-  *  - [[ngramContaminationBloom]]: production xxhash64 gram identities
-  *    ([[graft.functions.HashExpressions.ngramHashes]]) — rows-only gate.
-  *  - [[ngramContaminationBloomFixture]]: the SQL-replayable fixture gram
-  *    hashes (Dedup.fixtureWindowHashes, all sub-2^31 modular integer
-  *    arithmetic), position mixes `((2j+3)·g + (5j+7)) mod P mod m` shared
-  *    with the DuckDB oracle via [[positionSqls]] — fully oracle-green,
-  *    INCLUDING the false positives, which both engines reproduce
-  *    bit-identically.
+  * Two hash lanes, one operator: the `family` parameter
+  * ([[HashFamily]]) picks the gram identities and the position mixes.
+  * [[HashFamily.Xxhash]] (the default) hashes grams with xxhash64 and is
+  * gated on rows only. [[HashFamily.Fixture]] uses SQL-replayable modular
+  * gram hashes and the mixes `((2j+3)·g + (5j+7)) mod P mod m`, which the
+  * DuckDB oracle renders from [[HashFamily.Fixture.positionSqls]] — fully
+  * oracle-green, INCLUDING the false positives, which both engines
+  * reproduce bit-identically.
   */
 object Bloom {
 
-  private val P = Dedup.FixtureP
-
-  /** k filter positions of a nonnegative sub-2^31 gram hash: small-literal
-    * LCG finalizers mod P, folded to m bits. Products stay < 2^36 — exact
-    * in 64-bit arithmetic on both engines.
-    */
-  def positionExprs(g: Column, mBits: Int, k: Int): Seq[Column] =
-    (0 until k).map(j => ((lit(2L * j + 3) * g + lit(5L * j + 7)) % P) % mBits)
-
-  /** The same k position mixes as DuckDB SQL fragments — ONE arithmetic
-    * definition rendered for both engines (the OracleFixtures discipline).
-    */
-  def positionSqls(g: String, mBits: Int, k: Int): Seq[String] =
-    (0 until k).map(j => s"(((${2 * j + 3}*$g + ${5 * j + 7}) % $P) % $mBits)")
-
-  /** Positions for FULL-RANGE (possibly negative) 64-bit gram hashes —
-    * the production lane. The hash is xor-folded to 31 nonnegative bits
-    * first so the LCG products stay far under 2^63 (ANSI mode overflow-
-    * checks multiplication — no wrap-around tricks); the fold costs a
-    * vanishing extra collision rate next to the filter's own fp rate.
-    */
-  private[graft] def positionExprsWide(g: Column, mBits: Int, k: Int): Seq[Column] = {
-    val folded = g.bitwiseXOR(shiftrightunsigned(g, 33)).bitwiseAND(lit(0x7FFFFFFFL))
-    (0 until k).map(j => ((lit(2L * j + 3) * folded + lit(5L * j + 7)) % P) % mBits)
-  }
-
-  /** Distinct per-doc gram-hash arrays for each lane. */
-  private def gramsWide(text: Column, shingle: Int): Column =
-    graft.functions.HashExpressions.ngramHashes(
-      graft.functions.TextFunctions.tokens(text), shingle)
-
-  private def gramsFixture(text: Column, shingle: Int): Column =
-    array_distinct(Dedup.fixtureWindowHashes(text, shingle))
-
-  /** Build the bitmap from a benchmark table: the distinct filter
-    * positions of its gram hashes, collected to a driver bitset. Driver
-    * state is bounded by mBits/64 longs REGARDLESS of pool size — that
-    * bound is the operator's reason to exist.
-    */
-  private def buildBits(benchmark: DataFrame, textCol: String,
-      gramArr: Column => Column, posOf: Column => Seq[Column],
-      mBits: Int): Array[Long] =
-    buildBitsFromHashes(benchmark, gramArr(col(textCol)), posOf, mBits)
-
-  /** [[buildBits]] from a caller-supplied integer hash-array column —
-    * the winnow lanes build the filter from winnowed FINGERPRINTS (an
-    * expected 2/(w+1) of the grams), not raw gram hashes; same driver
-    * bound (mBits/64 longs regardless of pool size), same position
-    * arithmetic.
+  /** Build the bitmap from an integer hash-array column of a benchmark
+    * table: the distinct filter positions of its hashes, collected to a
+    * driver bitset. Driver state is bounded by mBits/64 longs REGARDLESS
+    * of pool size — that bound is the operator's reason to exist. The
+    * winnow lanes pass winnowed FINGERPRINTS (an expected 2/(w+1) of the
+    * grams) instead of raw gram hashes.
     */
   private[graft] def buildBitsFromHashes(benchmark: DataFrame, hashArr: Column,
       posOf: Column => Seq[Column], mBits: Int): Array[Long] = {
@@ -134,27 +90,17 @@ object Bloom {
             .cast("double") / size(col("__grams")), 6)
           .as("contamination_bloom"))
 
-  /** Production lane: xxhash64 gram identities, wide-mix positions.
-    * Output: (idCol, contamination_bloom) — one projection over the
+  /** Output: (idCol, contamination_bloom) — one projection over the
     * corpus, zero shuffles.
     */
   def ngramContaminationBloom(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, shingle: Int = 3,
-      mBits: Int = 1 << 20, k: Int = 3): DataFrame = {
-    val pos = positionExprsWide(_: Column, mBits, k)
-    val bits = buildBits(benchmark, textCol, gramsWide(_, shingle), pos, mBits)
-    score(corpus, idCol, gramsWide(col(textCol), shingle), bits, mBits, k, foldWide = true)
-  }
-
-  /** Oracle lane: fixture gram hashes + literal position mixes; DuckDB
-    * replays the filter — false positives included — bit-for-bit.
-    */
-  def ngramContaminationBloomFixture(corpus: DataFrame, benchmark: DataFrame,
-      idCol: String, textCol: String, shingle: Int = 3,
-      mBits: Int = 1 << 16, k: Int = 3): DataFrame = {
-    val pos = positionExprs(_: Column, mBits, k)
-    val bits = buildBits(benchmark, textCol, gramsFixture(_, shingle), pos, mBits)
-    score(corpus, idCol, gramsFixture(col(textCol), shingle), bits, mBits, k, foldWide = false)
+      mBits: Int = 1 << 20, k: Int = 3,
+      family: HashFamily = HashFamily.Xxhash): DataFrame = {
+    val grams = family.windowHashSet(_: Column, shingle)
+    val bits = buildBitsFromHashes(benchmark, grams(col(textCol)),
+      family.bloomPositions(_, mBits, k), mBits)
+    score(corpus, idCol, grams(col(textCol)), bits, mBits, k, family.foldWide)
   }
 
   /** The production-lane scoring expression against a pre-built filter —
@@ -165,15 +111,17 @@ object Bloom {
     */
   def contaminationColumn(text: Column, bits: Array[Long], shingle: Int,
       mBits: Int, k: Int): Column = {
-    val grams = gramsWide(text, shingle)
+    val grams = HashFamily.Xxhash.windowHashSet(text, shingle)
     round(
-      graft.functions.HashExpressions.bloomHits(grams, bits, mBits, k, foldWide = true)
+      graft.functions.HashExpressions.bloomHits(grams, bits, mBits, k,
+        HashFamily.Xxhash.foldWide)
         .cast("double") / size(grams), 6)
   }
 
   /** Build the production-lane filter from a static benchmark table. */
   def buildFilter(benchmark: DataFrame, textCol: String, shingle: Int = 3,
       mBits: Int = 1 << 20, k: Int = 3): Array[Long] =
-    buildBits(benchmark, textCol, gramsWide(_, shingle),
-      positionExprsWide(_: Column, mBits, k), mBits)
+    buildBitsFromHashes(benchmark,
+      HashFamily.Xxhash.windowHashSet(col(textCol), shingle),
+      HashFamily.Xxhash.bloomPositions(_, mBits, k), mBits)
 }

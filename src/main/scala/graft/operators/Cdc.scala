@@ -174,7 +174,7 @@ object Cdc {
       mBits: Int = 1 << 20, k: Int = 3): Array[Long] =
     Bloom.buildBitsFromHashes(catalog,
       chunkFpsWide(col(textCol), minSize, avgBits, maxSize),
-      Bloom.positionExprsWide(_, mBits, k), mBits)
+      HashFamily.Xxhash.bloomPositions(_, mBits, k), mBits)
 
   /** Stateless scoring column against a pre-built filter: the fraction
     * of the document's distinct chunk fingerprints present in the

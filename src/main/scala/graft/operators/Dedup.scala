@@ -40,8 +40,7 @@ object Dedup {
     * distinct pass either).
     */
   def minhashSignature(text: Column, shingle: Int = 3, numHashes: Int = 64): Column =
-    graft.functions.HashExpressions.minhashTokens(
-      graft.functions.TextFunctions.tokens(text), shingle, numHashes)
+    HashFamily.Xxhash.minhashSig(text, shingle, numHashes)
 
   /** MinHash + LSH near-duplicate candidate pairs.
     *
@@ -53,26 +52,28 @@ object Dedup {
     *
     * Returns (idA, idB, est_jaccard). Scale: the only shuffles are the
     * band-key groupBy-join and a distinct on pairs.
+    *
+    * `family` picks the hash lane ([[HashFamily]]): under
+    * [[HashFamily.Fixture]] the signatures and band hashes are
+    * SQL-replayable integer arithmetic, which lets the DuckDB oracle gate
+    * this PIPELINE end to end (q_dedup_minhash_fixed).
     */
   def minhashNearDuplicates(df: DataFrame, idCol: String, textCol: String,
       shingle: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.7): DataFrame = {
+      threshold: Double = 0.7, family: HashFamily = HashFamily.Xxhash): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     // the signature table feeds banding AND both verify joins; measured 2x
     // faster materialized once than recomputed per consumer, even with the
     // cheap token-chain signatures (lifetime/fault notes: materializeOnce)
     val sigs = materializeOnce(spread(df).select(col(idCol).as("__id"),
-      minhashSignature(col(textCol), shingle, numHashes).as("__sig")))
+      family.minhashSig(col(textCol), shingle, numHashes).as("__sig")))
     minhashPairsFromSigs(sigs, bands, threshold,
-      graft.functions.HashExpressions.bandHashes(_, bands))
+      family.bandHashes(_, bands, numHashes / bands))
   }
 
-  /** The banding→candidate→verify pipeline shared by the production hash
-    * family ([[minhashNearDuplicates]]) and the oracle fixture family
-    * ([[minhashNearDuplicatesFixture]]): signatures in, thresholded
-    * (idA, idB, est_jaccard) out. Swapping only the hash columns keeps the
-    * PIPELINE — banding, bucket join, first-agreeing-band exact-once
-    * filter, full-signature verify — on the oracle-gated path.
+  /** The banding→candidate→verify pipeline of [[minhashNearDuplicates]]
+    * and [[minhashCrossDuplicates]]: signatures in, thresholded
+    * (idA, idB, est_jaccard) out.
     */
   private[graft] def minhashPairsFromSigs(sigs: DataFrame, bands: Int,
       threshold: Double, bandHash: Column => Column,
@@ -151,18 +152,20 @@ object Dedup {
     * Scale shape: identical to [[minhashNearDuplicates]] — the side tag
     * rides the banding explode; only (probe, reference) pairs survive the
     * bucket join's map-side restriction, so cross-corpus costs exactly
-    * what self-dedup costs on the union.
+    * what self-dedup costs on the union. `family` as in
+    * [[minhashNearDuplicates]] (q_dedup_cross_fixed runs the fixture lane).
     */
   def minhashCrossDuplicates(probe: DataFrame, reference: DataFrame,
       idCol: String, textCol: String, shingle: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, threshold: Double = 0.7): DataFrame = {
+      bands: Int = 16, threshold: Double = 0.7,
+      family: HashFamily = HashFamily.Xxhash): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    def sigSide(df: DataFrame, s: Int) = df.select(col(idCol).as("__id"),
-      minhashSignature(col(textCol), shingle, numHashes).as("__sig"),
+    def sigSide(df: DataFrame, s: Int) = spread(df).select(col(idCol).as("__id"),
+      family.minhashSig(col(textCol), shingle, numHashes).as("__sig"),
       lit(s).as("__side"))
     val sigs = materializeOnce(sigSide(probe, 0).unionByName(sigSide(reference, 1)))
     minhashPairsFromSigs(sigs, bands, threshold,
-      graft.functions.HashExpressions.bandHashes(_, bands),
+      family.bandHashes(_, bands, numHashes / bands),
       Some(col("__sideA") === 0 && col("__sideB") === 1))
       .withColumnsRenamed(Map("idA" -> "probe_id", "idB" -> "ref_id"))
   }
@@ -198,91 +201,13 @@ object Dedup {
     else df
   }
 
-  /** [[minhashCrossDuplicates]] under the fixture hash family — the
-    * oracle-gated twin (the q_dedup_minhash_fixed discipline).
-    */
-  def minhashCrossDuplicatesFixture(probe: DataFrame, reference: DataFrame,
-      idCol: String, textCol: String, shingle: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, threshold: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    def sigSide(df: DataFrame, s: Int) = spread(df).select(col(idCol).as("__id"),
-      minhashSignatureFixture(col(textCol), shingle, numHashes).as("__sig"),
-      lit(s).as("__side"))
-    val sigs = materializeOnce(sigSide(probe, 0).unionByName(sigSide(reference, 1)))
-    minhashPairsFromSigs(sigs, bands, threshold,
-      bandHashesFixture(bands, numHashes / bands),
-      Some(col("__sideA") === 0 && col("__sideB") === 1))
-      .withColumnsRenamed(Map("idA" -> "probe_id", "idB" -> "ref_id"))
-  }
-
-  /** The SQL-replayable minhash modulus: a prime just under 2³¹, so every
-    * intermediate (`acc*1000003 + v` with acc < p) stays far inside a
-    * 64-bit integer on both engines.
-    */
-  private[graft] final val FixtureP = 1000000007L
-
-  /** MinHash signature from the FIXTURE hash family — plain integer
-    * arithmetic end to end (per-char polynomial token hash, chained window
-    * hash, 64 literal-coefficient LCG finalizers, all mod [[FixtureP]]),
-    * so a DuckDB oracle can replay signatures exactly. Window semantics
-    * mirror [[graft.functions.MinHashTokens]] (max(1, T-n+1) windows;
-    * short texts degrade to one whole-text window). Codepoint-level
-    * hashing assumes BMP text (the test corpora are ASCII); the xxhash
-    * production family has no such caveat.
-    *
-    * Scale shape: identical to the production signature — one map-side
-    * codegen'd pass per document, no shuffle
-    * ([[graft.functions.FixtureHashes]]; the original HOF composition is
-    * kept in FixtureHashEquivalenceSpec as the reference implementation —
-    * the interpreted nesting pinned 32 cores for minutes on the x16
-    * sweep). Production dedup still wants the xxhash family for hash
-    * quality; this one exists for oracle gates and cross-engine audits.
-    */
-  private[graft] def minhashSignatureFixture(text: Column,
-      shingle: Int = 3, numHashes: Int = 64): Column =
-    graft.functions.HashExpressions.fixtureMinhashSig(text, shingle, numHashes)
-
-  /** Chained window hashes of the fixture family — the shared front half of
-    * [[minhashSignatureFixture]] and [[simhashSignatureFixture]]: per-char
-    * polynomial token hash, `shingle`-token chained window hash, all mod
-    * [[FixtureP]]. Window semantics mirror the production kernels
-    * (max(1, T-n+1) windows; short texts degrade to one whole-text window).
-    */
-  private[graft] def fixtureWindowHashes(text: Column, shingle: Int): Column =
-    graft.functions.HashExpressions.fixtureWindowHashes(text, shingle)
-
-  /** Per-band chained hash over the fixture signature — the banding dual
-    * of [[minhashSignatureFixture]] (replaces the xxhash
-    * [[graft.functions.BandHashes]] on the fixture path).
-    */
-  private[graft] def bandHashesFixture(bands: Int, rowsPerBand: Int)(sig: Column): Column =
-    graft.functions.HashExpressions.fixtureBandHashes(sig, bands, rowsPerBand)
-
-  /** [[minhashNearDuplicates]] with the fixture hash family: the SAME
-    * banding→candidate→verify pipeline ([[minhashPairsFromSigs]] — band
-    * bucket join, first-agreeing-band exact-once filter, full-signature
-    * agreement threshold), with signatures and band hashes swapped for
-    * SQL-replayable integer arithmetic. This is what lets the driver's
-    * DuckDB oracle gate the minhash PIPELINE end to end (q_dedup_minhash_
-    * fixed) — the production xxhash family keeps its rows-only gate plus
-    * ScalaTest replicas.
-    */
-  def minhashNearDuplicatesFixture(df: DataFrame, idCol: String, textCol: String,
-      shingle: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val sigs = materializeOnce(spread(df).select(col(idCol).as("__id"),
-      minhashSignatureFixture(col(textCol), shingle, numHashes).as("__sig")))
-    minhashPairsFromSigs(sigs, bands, threshold,
-      bandHashesFixture(bands, numHashes / bands))
-  }
-
   /** Dedup-quality evaluation: precision/recall of the minhash-LSH
     * pipeline against EXACT Jaccard ground truth on the SAME fixture
     * shingle space — "how good is my dedup config" as a first-class
-    * one-row aggregate. The LSH side is [[minhashNearDuplicatesFixture]]
-    * verbatim; the truth side computes exact Jaccard over each doc's
-    * DISTINCT window-hash set (what the minhash signature estimates),
+    * one-row aggregate. The LSH side is [[minhashNearDuplicates]] under
+    * [[HashFamily.Fixture]] verbatim; the truth side computes exact
+    * Jaccard over each doc's DISTINCT fixture window-hash set (what the
+    * minhash signature estimates),
     * thresholded by the integer cross-multiplication
     * `tn·c ≥ td·(na+nb−c)` (threshold = tn/td) so no float can flip a
     * pair. Output: (n_exact, n_lsh, n_common, precision, recall) —
@@ -299,11 +224,11 @@ object Dedup {
       thresholdNum: Long = 7, thresholdDen: Long = 10): DataFrame = {
     require(thresholdNum > 0 && thresholdDen >= thresholdNum,
       s"threshold must be a fraction in (0, 1], got $thresholdNum/$thresholdDen")
-    val lsh = minhashNearDuplicatesFixture(df, idCol, textCol, shingle,
-      numHashes, bands, threshold = thresholdNum.toDouble / thresholdDen)
+    val lsh = minhashNearDuplicates(df, idCol, textCol, shingle,
+      numHashes, bands, thresholdNum.toDouble / thresholdDen, HashFamily.Fixture)
       .select(col("idA"), col("idB"), lit(1).as("__l"))
     val g = materializeOnce(spread(df).select(col(idCol).as("__id"),
-      explode(array_distinct(fixtureWindowHashes(col(textCol), shingle))).as("__g")))
+      explode(HashFamily.Fixture.windowHashSet(col(textCol), shingle)).as("__g")))
     val sizes = g.groupBy("__id").agg(count(lit(1)).as("__n"))
     val common = g.as("a").join(g.as("b"), col("a.__g") === col("b.__g"))
       .where(col("a.__id") < col("b.__id"))
@@ -368,26 +293,26 @@ object Dedup {
     * expression, mirroring the array_distinct of the string path).
     */
   def simhash(text: Column, shingle: Int = 2): Column =
-    graft.functions.HashExpressions.simhashTokens(
-      graft.functions.TextFunctions.tokens(text), shingle)
+    HashFamily.Xxhash.simhashSig(text, shingle)
 
   /** SimHash near-duplicates within `maxHamming` bits. Candidates via
     * chunk-LSH (pigeonhole: two signatures within k bits agree on at least
-    * one of k+1 chunks), verified by exact hamming distance.
+    * one of k+1 chunks), verified by exact hamming distance. Under
+    * [[HashFamily.Fixture]] the DuckDB oracle replays signatures, chunk
+    * buckets, candidate pairs and hamming distances exactly
+    * (q_dedup_simhash_fixed).
     */
   def simhashNearDuplicates(df: DataFrame, idCol: String, textCol: String,
-      shingle: Int = 2, maxHamming: Int = 3): DataFrame = {
+      shingle: Int = 2, maxHamming: Int = 3,
+      family: HashFamily = HashFamily.Xxhash): DataFrame = {
     val sigs = materializeOnce(spread(df)
-      .select(col(idCol).as("__id"), simhash(col(textCol), shingle).as("__sig")))
+      .select(col(idCol).as("__id"), family.simhashSig(col(textCol), shingle).as("__sig")))
     simhashPairsFromSigs(sigs, maxHamming)
   }
 
-  /** The chunk-LSH→candidate→verify pipeline shared by the production
-    * simhash family ([[simhashNearDuplicates]]) and the oracle fixture
-    * family ([[simhashNearDuplicatesFixture]]) — the
-    * [[minhashPairsFromSigs]] discipline applied to simhash: swapping only
-    * the signature column keeps chunking, bucket join, first-agreeing-chunk
-    * exact-once filter, and the hamming verify on the oracle-gated path.
+  /** The chunk-LSH→candidate→verify pipeline of [[simhashNearDuplicates]],
+    * shared with the perceptual-hash near-duplicate operators of
+    * [[Multimodal]].
     */
   private[graft] def simhashPairsFromSigs(sigs: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 31, "maxHamming must be in [0, 31]")
@@ -419,39 +344,6 @@ object Dedup {
         "hamming", hammingDistance(col("__sigA"), col("__sigB")),
         _ <= maxHamming)
       .select(col("idA"), col("idB"), col("hamming"))
-  }
-
-  /** Effective bit width of the fixture simhash signature: the top 64-60
-    * bits are forced to zero so chunk keys come from plain nonnegative
-    * shifts — Spark's `shiftrightunsigned` and DuckDB's `>>` agree on
-    * every nonnegative long, with no sign-extension caveat to replay.
-    */
-  private[graft] val SimFixtureBits = 60
-
-  /** SimHash signature from the FIXTURE hash family: per-bit parity votes
-    * of the [[fixtureWindowHashes]] modular chains over DISTINCT windows
-    * (matching the production kernel's dedup), summed into a
-    * [[SimFixtureBits]]-bit signature — plain integer arithmetic end to
-    * end, so a DuckDB oracle replays signatures, chunk buckets, candidate
-    * pairs, and hamming distances exactly. Native codegen'd kernel since
-    * round 9 ([[graft.functions.FixtureHashes.simhashSig]]), equivalence-
-    * gated against the original HOF form in FixtureHashEquivalenceSpec.
-    */
-  private[graft] def simhashSignatureFixture(text: Column, shingle: Int = 2): Column =
-    graft.functions.HashExpressions.fixtureSimhashSig(text, shingle, SimFixtureBits)
-
-  /** [[simhashNearDuplicates]] with the fixture hash family: the SAME
-    * chunk-LSH pipeline ([[simhashPairsFromSigs]]), signatures swapped for
-    * SQL-replayable integer arithmetic — what lets the driver's DuckDB
-    * oracle gate the simhash PIPELINE end to end (q_dedup_simhash_fixed);
-    * the production xxhash family keeps its rows-only gate plus ScalaTest
-    * replicas.
-    */
-  def simhashNearDuplicatesFixture(df: DataFrame, idCol: String, textCol: String,
-      shingle: Int = 2, maxHamming: Int = 3): DataFrame = {
-    val sigs = materializeOnce(spread(df).select(col(idCol).as("__id"),
-      simhashSignatureFixture(col(textCol), shingle).as("__sig")))
-    simhashPairsFromSigs(sigs, maxHamming)
   }
 
   /** Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle.

@@ -229,8 +229,7 @@ object Profile {
       idCol, xCol, yCol)
   }
 
-  /** Hash width of the fixture hash family ([[Dedup.FixtureP]] =
-    * 10^9+7 < 2^30) — the HLL value bits are what remains above the
+  /** Hash width of [[HashFamily.Fixture]] (modulus 10^9+7 < 2^30) — the HLL value bits are what remains above the
     * bucket index.
     */
   private val HllHashBits = 30

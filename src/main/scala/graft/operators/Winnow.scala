@@ -129,22 +129,13 @@ object Winnow {
   // makes it the stateless streaming gate
   // ([[graft.streaming.GraftStreaming]] winnowDecontaminateStream).
 
-  /** Distinct winnowed integer fingerprints per document — production
-    * lane: xxhash64 window hashes in sequence order, winnow-selected,
-    * fp-projected, distinct. One map-side kernel chain.
+  /** Distinct winnowed integer fingerprints per document: the family's
+    * window hashes in sequence order, winnow-selected, fp-projected,
+    * distinct. One map-side kernel chain.
     */
-  private def winnowFpsWide(text: Column, shingle: Int, w: Int): Column =
+  private def winnowFps(text: Column, shingle: Int, w: Int, family: HashFamily): Column =
     array_distinct(transform(
-      winnowSelectLong(graft.functions.HashExpressions.ngramHashesAll(
-        graft.functions.TextFunctions.tokens(text), shingle), w),
-      s => s.getField("fp")))
-
-  /** Fixture lane: the sub-2^31 modular window hashes the oracle
-    * replays ([[Dedup.fixtureWindowHashes]], sequence order).
-    */
-  private def winnowFpsFixture(text: Column, shingle: Int, w: Int): Column =
-    array_distinct(transform(
-      winnowSelectLong(Dedup.fixtureWindowHashes(text, shingle), w),
+      winnowSelectLong(family.windowHashes(text, shingle), w),
       s => s.getField("fp")))
 
   private def scoreBloom(corpus: DataFrame, idCol: String, fpArr: Column,
@@ -161,9 +152,13 @@ object Winnow {
     */
   def buildFilter(benchmark: DataFrame, textCol: String, shingle: Int = 3,
       w: Int = 4, mBits: Int = 1 << 20, k: Int = 3): Array[Long] =
+    winnowFilter(benchmark, textCol, shingle, w, mBits, k, HashFamily.Xxhash)
+
+  private def winnowFilter(benchmark: DataFrame, textCol: String, shingle: Int,
+      w: Int, mBits: Int, k: Int, family: HashFamily): Array[Long] =
     Bloom.buildBitsFromHashes(benchmark,
-      winnowFpsWide(col(textCol), shingle, w),
-      Bloom.positionExprsWide(_, mBits, k), mBits)
+      winnowFps(col(textCol), shingle, w, family),
+      family.bloomPositions(_, mBits, k), mBits)
 
   /** Stateless scoring column against a pre-built filter — build once
     * from the static benchmark ([[buildFilter]]), then score rows with
@@ -176,35 +171,23 @@ object Winnow {
     // tokenize/hash/winnow chain never re-runs for the denominator
     // (the re-evaluation pitfall LineCorrections.clean documents)
     element_at(
-      transform(array(winnowFpsWide(text, shingle, w)), fps =>
+      transform(array(winnowFps(text, shingle, w, HashFamily.Xxhash)), fps =>
         round(graft.functions.HashExpressions
-            .bloomHits(fps, bits, mBits, k, foldWide = true)
+            .bloomHits(fps, bits, mBits, k, HashFamily.Xxhash.foldWide)
             .cast("double") / size(fps), 6)),
       1)
 
-  /** Production lane: (idCol, winnow_contamination_bloom) — one
-    * zero-shuffle projection over the corpus against the winnowed
-    * benchmark filter.
+  /** (idCol, winnow_contamination_bloom) — one zero-shuffle projection
+    * over the corpus against the winnowed benchmark filter. Under
+    * [[HashFamily.Fixture]] DuckDB replays selection, filter build AND
+    * false positives bit-identically (the [[Bloom.ngramContaminationBloom]]
+    * discipline over the winnowed index).
     */
   def contaminationBloom(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, shingle: Int = 3, w: Int = 4,
-      mBits: Int = 1 << 20, k: Int = 3): DataFrame =
-    scoreBloom(corpus, idCol, winnowFpsWide(col(textCol), shingle, w),
-      buildFilter(benchmark, textCol, shingle, w, mBits, k), mBits, k,
-      foldWide = true)
-
-  /** Oracle lane: fixture window hashes + literal position mixes —
-    * DuckDB replays selection, filter build, AND false positives
-    * bit-identically (the [[Bloom.ngramContaminationBloomFixture]]
-    * discipline over the winnowed index).
-    */
-  def contaminationBloomFixture(corpus: DataFrame, benchmark: DataFrame,
-      idCol: String, textCol: String, shingle: Int = 3, w: Int = 4,
-      mBits: Int = 1 << 16, k: Int = 3): DataFrame = {
-    val bits = Bloom.buildBitsFromHashes(benchmark,
-      winnowFpsFixture(col(textCol), shingle, w),
-      Bloom.positionExprs(_, mBits, k), mBits)
-    scoreBloom(corpus, idCol, winnowFpsFixture(col(textCol), shingle, w),
-      bits, mBits, k, foldWide = false)
-  }
+      mBits: Int = 1 << 20, k: Int = 3,
+      family: HashFamily = HashFamily.Xxhash): DataFrame =
+    scoreBloom(corpus, idCol, winnowFps(col(textCol), shingle, w, family),
+      winnowFilter(benchmark, textCol, shingle, w, mBits, k, family), mBits, k,
+      family.foldWide)
 }

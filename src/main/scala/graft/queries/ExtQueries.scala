@@ -3,7 +3,8 @@ package graft.queries
 import graft.core.{Flow, Fold}
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
-import graft.operators.{AnnIndex, AsofJoin, Dedup, Multimodal, PairBudget, Profile, RangeJoin, Sessions, Similarity}
+import graft.operators.{AnnIndex, AsofJoin, Dedup, HashFamily, Multimodal, PairBudget, Profile, RangeJoin,
+  Sessions, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -537,9 +538,10 @@ object ExtQueries {
   private val minhashFixedQ = q("q_dedup_minhash_fixed",
     s"""WITH ${OracleFixtures.minhashSigCtes},
        ${OracleFixtures.minhashPairsSql("l.doc_id < r.doc_id")}""") { (s, d) =>
-    Dedup.minhashNearDuplicatesFixture(docsWithDups(s, d), "doc_id", "text",
+    Dedup.minhashNearDuplicates(docsWithDups(s, d), "doc_id", "text",
       shingle = OracleFixtures.MhShingle, numHashes = OracleFixtures.MhNumHashes,
-      bands = OracleFixtures.MhBands, threshold = OracleFixtures.MhThreshold)
+      bands = OracleFixtures.MhBands, threshold = OracleFixtures.MhThreshold,
+      family = HashFamily.Fixture)
   }
 
   /** Cross-corpus doc-level decontamination: originals probe their shifted
@@ -553,11 +555,12 @@ object ExtQueries {
        ${OracleFixtures.minhashPairsSql(
         "l.doc_id < 10000 AND r.doc_id >= 10000", "probe_id", "ref_id")}""") { (s, d) =>
     val base = Tables.df(s, d, "documents")
-    Dedup.minhashCrossDuplicatesFixture(
+    Dedup.minhashCrossDuplicates(
       base, base.withColumn("doc_id", col("doc_id") + 10000),
       "doc_id", "text",
       shingle = OracleFixtures.MhShingle, numHashes = OracleFixtures.MhNumHashes,
-      bands = OracleFixtures.MhBands, threshold = OracleFixtures.MhThreshold)
+      bands = OracleFixtures.MhBands, threshold = OracleFixtures.MhThreshold,
+      family = HashFamily.Fixture)
   }
 
   /** Dedup-quality eval: precision/recall of the fixture minhash-LSH
@@ -609,7 +612,7 @@ object ExtQueries {
   }
 
   /** The simhash PIPELINE under the fixture hash family
-    * (Dedup.simhashNearDuplicatesFixture): same chunk-LSH → bucket join →
+    * (Dedup.simhashNearDuplicates with HashFamily.Fixture): same chunk-LSH → bucket join →
     * first-agreeing-chunk exact-once filter → hamming verify as
     * q_dedup_simhash, with the signature swapped for parity votes of
     * modular integer chains a DuckDB oracle replays exactly — signatures,
@@ -629,8 +632,9 @@ object ExtQueries {
        SELECT idA, idB, CAST(bit_count(xor(sigA, sigB)) AS INTEGER) AS hamming
        FROM pairs
        WHERE chunk = first_agree AND bit_count(xor(sigA, sigB)) <= ${OracleFixtures.ShMaxHamming}""") { (s, d) =>
-    Dedup.simhashNearDuplicatesFixture(docsWithDups(s, d), "doc_id", "text",
-      shingle = OracleFixtures.ShShingle, maxHamming = OracleFixtures.ShMaxHamming)
+    Dedup.simhashNearDuplicates(docsWithDups(s, d), "doc_id", "text",
+      shingle = OracleFixtures.ShShingle, maxHamming = OracleFixtures.ShMaxHamming,
+      family = HashFamily.Fixture)
   }
 
   private val ngramJaccardQ = q("q_ngram_jaccard",
@@ -1442,13 +1446,14 @@ object ExtQueries {
     s"""WITH ${OracleFixtures.minhashSigCtes},
        ${OracleFixtures.minhashPairsSql("l.doc_id >= 10000 AND r.doc_id < 10000")}""") { (s, d) =>
     val docs = Tables.df(s, d, "documents")
-    AnnIndex.buildMinhashFixture(docs, "doc_id", "text", "graft_mh_idx_fx",
+    AnnIndex.buildMinhash(docs, "doc_id", "text", "graft_mh_idx_fx",
       shingle = OracleFixtures.MhShingle, numHashes = OracleFixtures.MhNumHashes,
-      bands = OracleFixtures.MhBands)
-    AnnIndex.probeMinhashFixture(s, "graft_mh_idx_fx",
+      bands = OracleFixtures.MhBands, family = HashFamily.Fixture)
+    AnnIndex.probeMinhash(s, "graft_mh_idx_fx",
       docs.withColumn("doc_id", col("doc_id") + 10000), "doc_id", "text",
       shingle = OracleFixtures.MhShingle, numHashes = OracleFixtures.MhNumHashes,
-      bands = OracleFixtures.MhBands, threshold = OracleFixtures.MhThreshold)
+      bands = OracleFixtures.MhBands, threshold = OracleFixtures.MhThreshold,
+      family = HashFamily.Fixture)
   }
 
   /** PQ ENCODE under a fixed literal codebook — the deterministic half of
@@ -3704,8 +3709,8 @@ object ExtQueries {
     * irrelevant for the fp SET).
     */
   private val winnowContaminationBloomQ = q("q_winnow_contamination_bloom", {
-    val pos = graft.operators.Bloom.positionSqls("g", 1 << 16, 3).mkString("[", ", ", "]")
-    s"""WITH ${OracleFixtures.windowHashCtes("documents", 3, distinct = false)},
+    val pos = HashFamily.Fixture.positionSqls("g", 1 << 16, 3).mkString("[", ", ", "]")
+    s"""WITH ${HashFamily.Fixture.windowHashCtes("documents", 3, distinct = false)},
        wwin AS (SELECT doc_id, wh,
                   unnest(range(1, greatest(len(wh) - 4 + 1, 1) + 1)) AS j
                 FROM wh),
@@ -3723,10 +3728,11 @@ object ExtQueries {
        FROM gv GROUP BY doc_id"""
   }) { (s, d) =>
     val docs = Tables.df(s, d, "documents")
-    graft.operators.Winnow.contaminationBloomFixture(
+    graft.operators.Winnow.contaminationBloom(
       docs.where(col("doc_id") % 50 =!= 0),
       docs.where(col("doc_id") % 50 === 0),
-      "doc_id", "text", shingle = 3, w = 4, mBits = 1 << 16, k = 3)
+      "doc_id", "text", shingle = 3, w = 4, mBits = 1 << 16, k = 3,
+      family = HashFamily.Fixture)
   }
 
   // ---- SQ8 scalar quantization (faiss IndexScalarQuantizer QT_8bit):

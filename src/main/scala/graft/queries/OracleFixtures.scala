@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.operators.HashFamily
+
 /** Fixed literal parameters for the oracle-fixture twins of the hash/
   * quantization query family, plus the DuckDB SQL fragments generated FROM
   * the same constants — the q_pq_encode discipline (ExtQueries): Spark and
@@ -80,17 +82,15 @@ object OracleFixtures {
        b AS (SELECT vec_id, v, CAST($bucket AS BIGINT) AS bkt FROM e)"""
   }
 
-  // ---- MinHash fixture family (Dedup.minhashSignatureFixture /
-  // bandHashesFixture): all-integer modular chains, coefficients
-  // (2s+3, 5s+7) small enough that a*h never leaves 64 bits.
+  // ---- MinHash under HashFamily.Fixture: all-integer modular chains,
+  // coefficients (2s+3, 5s+7) small enough that a*h never leaves 64 bits.
   val MhShingle = 3
   val MhNumHashes = 64
   val MhBands = 16
   val MhRows: Int = MhNumHashes / MhBands
   val MhThreshold = 0.7
 
-  // ---- SimHash fixture family (Dedup.simhashSignatureFixture): per-bit
-  // parity votes of modular integer chains over distinct windows, summed
+  // ---- SimHash under HashFamily.Fixture: per-bit parity votes of modular integer chains over distinct windows, summed
   // into a 60-bit signature (top 4 bits zero, so chunk-key shifts are
   // plain nonnegative arithmetic in both engines).
   val ShShingle = 2
@@ -99,48 +99,17 @@ object OracleFixtures {
   val ShWidth: Int = 64 / ShChunks
   val ShMask: Long = (1L << ShWidth) - 1
 
-  /** toks/th/wh fixture window-hash CTE chain over `src` (a relation with
-    * doc_id, text): per-char polynomial token hash, then chained window
-    * hash, all mod FixtureP — THE one SQL rendering of
-    * Dedup.fixtureWindowHashes, shared by the minhash, simhash, and bloom
-    * oracle families so the arithmetic cannot fork. `distinct`
-    * list_distincts the windows (the simhash/bloom SET form; minhash
-    * keeps duplicates, mirroring the Spark kernels).
-    */
-  def windowHashCtes(src: String, shingle: Int, distinct: Boolean): String = {
-    val p = graft.operators.Dedup.FixtureP
-    val windows =
-      s"""list_transform(range(1, greatest(len(th) - ${shingle - 1}, 1) + 1), w ->
-                  list_reduce(list_prepend(CAST(0 AS BIGINT), th[w:w+${shingle - 1}]),
-                    (a, h) -> (a*1000003 + h) % $p))"""
-    val whExpr = if (distinct) s"list_distinct(\n                $windows)" else windows
-    s"""toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM $src),
-       th AS (SELECT doc_id, list_transform(w, t ->
-                list_reduce(list_prepend(CAST(0 AS BIGINT),
-                  list_transform(range(1, len(t)+1), i -> CAST(unicode(t[i:i]) AS BIGINT))),
-                  (a, c) -> (a*31 + c) % $p)) AS th FROM toks),
-       wh AS (SELECT doc_id, $whExpr AS wh FROM th)"""
-  }
-
   /** CTEs from `documents` (∪ shifted copies) to the per-doc fixture
     * simhash signature — the DuckDB replay of
-    * [[graft.operators.Dedup.simhashSignatureFixture]].
+    * [[graft.operators.Dedup.simhashNearDuplicates]]' signatures under
+    * [[HashFamily.Fixture]].
     */
-  def simhashSigCtes: String = {
-    val p = graft.operators.Dedup.FixtureP
-    val bits = graft.operators.Dedup.SimFixtureBits
+  def simhashSigCtes: String =
     s"""corpus AS (SELECT doc_id, text FROM documents
                    UNION ALL SELECT doc_id + 10000, text FROM documents),
-       ${windowHashCtes("corpus", ShShingle, distinct = true)},
+       ${HashFamily.Fixture.windowHashCtes("corpus", ShShingle, distinct = true)},
        sig AS (SELECT doc_id,
-                list_reduce(list_prepend(CAST(0 AS BIGINT),
-                  list_transform(range(0, $bits), i ->
-                    CASE WHEN list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform(wh, h -> (((i*2+3)*h + (i*5+7)) % $p % 2) * 2 - 1)),
-                        (a, v) -> a + v) > 0
-                    THEN CAST(2**i AS BIGINT) ELSE CAST(0 AS BIGINT) END)),
-                  (a, v) -> a + v) AS sig FROM wh)"""
-  }
+                ${HashFamily.Fixture.simhashSigSql("wh")} AS sig FROM wh)"""
 
   /** `(sig >> chunk*width) & mask` — one definition for both join keys and
     * the first-agreeing-chunk filter.
@@ -151,21 +120,16 @@ object OracleFixtures {
   /** CTEs from `documents` (∪ shifted copies, the docsWithDups corpus) to
     * per-doc fixture signature + band-hash arrays.
     */
-  def minhashSigCtes: String = {
-    val p = graft.operators.Dedup.FixtureP
+  def minhashSigCtes: String =
     s"""corpus AS (SELECT doc_id, text FROM documents
                    UNION ALL SELECT doc_id + 10000, text FROM documents),
-       ${windowHashCtes("corpus", MhShingle, distinct = false)},
-       sig AS (SELECT doc_id, list_transform(range(0, $MhNumHashes), s ->
-                list_min(list_transform(wh, h -> ((s*2+3)*h + (s*5+7)) % $p))) AS sig FROM wh),
-       bh AS (SELECT doc_id, sig, list_transform(range(0, $MhBands), b ->
-                list_reduce(list_prepend(CAST(0 AS BIGINT), sig[b*$MhRows+1:b*$MhRows+$MhRows]),
-                  (a, v) -> (a*1000003 + v) % $p)) AS bh FROM sig)"""
-  }
+       ${HashFamily.Fixture.windowHashCtes("corpus", MhShingle, distinct = false)},
+       sig AS (SELECT doc_id, ${HashFamily.Fixture.minhashSigSql("wh", MhNumHashes)} AS sig FROM wh),
+       bh AS (SELECT doc_id, sig, ${HashFamily.Fixture.bandHashesSql("sig", MhBands, MhRows)} AS bh FROM sig)"""
 
   // ---- Perceptual average-hash (Multimodal.phash / PhashBytes): integer
   // cell-mean-vs-payload-mean votes over payload bytes, 60 bits (the
-  // SimFixtureBits discipline: nonnegative signature, plain `>>` chunk
+  // fixture simhash discipline: nonnegative signature, plain `>>` chunk
   // keys). Unlike the minhash/simhash families this needs NO fixture
   // twin — the production arithmetic is already all-integer, so the
   // oracle replays the REAL operator.

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.functions.TextFunctions._
-import graft.operators.{Bloom, Pooling, Resample, Split, Vocabulary}
+import graft.operators.{Bloom, HashFamily, Pooling, Resample, Split, Vocabulary}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,17 +26,17 @@ object SignalQueries {
 
   /** Fixture-hash CTEs (documents -> per-doc DISTINCT window hashes →
     * exploded gram rows) — rendered from the ONE shared generator
-    * ([[OracleFixtures.windowHashCtes]], shingle 3, set form), so the
+    * ([[HashFamily.Fixture.windowHashCtes]], shingle 3, set form), so the
     * bloom oracles can never drift from the minhash/simhash families.
     */
   private val FixtureGramCtes =
-    s"""${OracleFixtures.windowHashCtes("documents", 3, distinct = true)},
+    s"""${HashFamily.Fixture.windowHashCtes("documents", 3, distinct = true)},
        g AS (SELECT doc_id, unnest(wh) AS g FROM wh)"""
 
   // bench headliner: the corpus pass is a shuffle-free projection while
   // the oracle must replay it relationally — the ratio is the point
   private val contaminationBloomQ = q("q_contamination_bloom", bench = true, oracle = {
-    val pos = Bloom.positionSqls("g", BloomM, BloomK).mkString("[", ", ", "]")
+    val pos = HashFamily.Fixture.positionSqls("g", BloomM, BloomK).mkString("[", ", ", "]")
     s"""WITH $FixtureGramCtes,
        poolpos AS (SELECT DISTINCT pos FROM
                      (SELECT unnest($pos) AS pos FROM
@@ -50,10 +50,10 @@ object SignalQueries {
        FROM gv GROUP BY doc_id"""
   }) { (s, d) =>
     val docs = Tables.df(s, d, "documents")
-    Bloom.ngramContaminationBloomFixture(
+    Bloom.ngramContaminationBloom(
       docs.where(col("doc_id") % 50 =!= 0),
       docs.where(col("doc_id") % 50 === 0),
-      "doc_id", "text", shingle = 3, mBits = BloomM, k = BloomK)
+      "doc_id", "text", shingle = 3, mBits = BloomM, k = BloomK, family = HashFamily.Fixture)
   }
 
   // ---- OOV rate against the self-built minCount=20 vocabulary.
@@ -769,8 +769,7 @@ object SignalQueries {
 
   private def hllGramStream(s: SparkSession, d: String): DataFrame =
     Tables.df(s, d, "documents").select(
-      explode(graft.functions.HashExpressions.fixtureWindowHashes(
-        col("text"), 3)).as("g"))
+      explode(HashFamily.Fixture.windowHashes(col("text"), 3)).as("g"))
 
   /** The sketch itself: (bucket, max-rho) — the engine-portable,
     * mergeable artifact, hash-gated row for row.
@@ -813,7 +812,7 @@ object SignalQueries {
     * sketch (groups are shards; merge is per-(group, bucket) MAX).
     */
   private val hllBySourceQ = q("q_hll_by_source",
-    s"""WITH ${OracleFixtures.windowHashCtes("documents", 3, distinct = true)},
+    s"""WITH ${HashFamily.Fixture.windowHashCtes("documents", 3, distinct = true)},
        gj AS (SELECT d.source, u.g
               FROM (SELECT doc_id, unnest(wh) AS g FROM wh) u
               JOIN documents d USING (doc_id)),
@@ -833,8 +832,7 @@ object SignalQueries {
               n_exact
        FROM agg JOIN ex USING (source)""") { (s, d) =>
     val grams = Tables.df(s, d, "documents").select(col("source"),
-      explode(graft.functions.HashExpressions.fixtureWindowHashes(
-        col("text"), 3)).as("g"))
+      explode(HashFamily.Fixture.windowHashes(col("text"), 3)).as("g"))
     val est = graft.operators.Profile.hllEstimateBy(
       graft.operators.Profile.hllRegistersBy(grams, "source", "g", HllP),
       "source", HllP)
@@ -1151,7 +1149,7 @@ object SignalQueries {
     * one declarative plan, the q_pipeline discipline.
     */
   private val pipelineCuratedQ = q("q_pipeline_curated", {
-    val pos = Bloom.positionSqls("g", BloomM, BloomK).mkString("[", ", ", "]")
+    val pos = HashFamily.Fixture.positionSqls("g", BloomM, BloomK).mkString("[", ", ", "]")
     s"""WITH qd AS (${ExtQueries.QualityDocsSql}),
        r AS (SELECT doc_id, quality,
                row_number() OVER (ORDER BY quality, doc_id) AS rn,
@@ -1189,9 +1187,9 @@ object SignalQueries {
     val scored = docs.select(col("doc_id"), col("text"),
       qualityScore(col("text")).as("quality"))
     val kept = Split.curriculumSample(scored, "quality", "doc_id", CurriculumRates)
-    val contam = Bloom.ngramContaminationBloomFixture(
+    val contam = Bloom.ngramContaminationBloom(
       kept, docs.where(col("doc_id") % 50 === 0),
-      "doc_id", "text", shingle = 3, mBits = BloomM, k = BloomK)
+      "doc_id", "text", shingle = 3, mBits = BloomM, k = BloomK, family = HashFamily.Fixture)
       .withColumnRenamed("contamination_bloom", "contamination")
     // aggregate barrier (PlanAssert/ProbeQap discipline): filtering the
     // projected contamination directly pushes the predicate below the

@@ -62,11 +62,11 @@ class CodegenNoFallbackSpec extends AnyFunSuite {
       HashExpressions.langIdHeuristic(col("text")).as("lang"),
       HashExpressions.qualityFeaturesExpr(col("text")).as("qf"),
       HashExpressions.bandedLevenshtein(col("text"), col("text"), 2).as("blev"),
-      HashExpressions.fixtureWindowHashes(col("text"), 3).as("fwh"),
-      HashExpressions.fixtureMinhashSig(col("text"), 3, 8).as("fmh"),
-      HashExpressions.fixtureSimhashSig(col("text"), 2, 60).as("fsh"),
-      HashExpressions.fixtureBandHashes(
-        HashExpressions.fixtureMinhashSig(col("text"), 3, 8), 4, 2).as("fbh"),
+      graft.operators.HashFamily.Fixture.windowHashes(col("text"), 3).as("fwh"),
+      graft.operators.HashFamily.Fixture.minhashSig(col("text"), 3, 8).as("fmh"),
+      graft.operators.HashFamily.Fixture.simhashSig(col("text"), 2).as("fsh"),
+      graft.operators.HashFamily.Fixture.bandHashes(
+        graft.operators.HashFamily.Fixture.minhashSig(col("text"), 3, 8), 4, 2).as("fbh"),
       Unigram.packed(col("text"), Seq(("t", 5L), ("th", 7L)), 2, 100L).as("upk"),
       Unigram.pieces(col("text"), Seq(("t", 5L), ("th", 7L)), 2, 100L).as("upc"),
       LineDrop.dropCol(col("text")).as("ldrop"),

@@ -65,7 +65,7 @@ class FixtureHashEquivalenceSpec extends AnyFunSuite {
     val sp = SparkTestSession.spark
     import sp.implicits._
     val rows = samples.toDF("t").select(
-      HashExpressions.fixtureWindowHashes(col("t"), 3).as("n"),
+      graft.operators.HashFamily.Fixture.windowHashes(col("t"), 3).as("n"),
       legacyWindowHashes(col("t"), 3).as("l")).collect()
     rows.zip(samples).foreach { case (r, s) =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"window hashes diverge on: '$s'")
@@ -76,7 +76,7 @@ class FixtureHashEquivalenceSpec extends AnyFunSuite {
     val sp = SparkTestSession.spark
     import sp.implicits._
     val rows = samples.toDF("t").select(
-      HashExpressions.fixtureMinhashSig(col("t"), 3, 64).as("n"),
+      graft.operators.HashFamily.Fixture.minhashSig(col("t"), 3, 64).as("n"),
       legacyMinhashSig(col("t"), 3, 64).as("l")).collect()
     rows.zip(samples).foreach { case (r, s) =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"minhash sig diverges on: '$s'")
@@ -87,7 +87,7 @@ class FixtureHashEquivalenceSpec extends AnyFunSuite {
     val sp = SparkTestSession.spark
     import sp.implicits._
     val rows = samples.toDF("t").select(
-      HashExpressions.fixtureSimhashSig(col("t"), 2, 60).as("n"),
+      graft.operators.HashFamily.Fixture.simhashSig(col("t"), 2).as("n"),
       legacySimhashSig(col("t"), 2, 60).as("l")).collect()
     rows.zip(samples).foreach { case (r, s) =>
       assert(r.getLong(0) == r.getLong(1), s"simhash sig diverges on: '$s'")
@@ -98,9 +98,9 @@ class FixtureHashEquivalenceSpec extends AnyFunSuite {
     val sp = SparkTestSession.spark
     import sp.implicits._
     val rows = samples.toDF("t")
-      .select(HashExpressions.fixtureMinhashSig(col("t"), 3, 64).as("sig"))
+      .select(graft.operators.HashFamily.Fixture.minhashSig(col("t"), 3, 64).as("sig"))
       .select(
-        HashExpressions.fixtureBandHashes(col("sig"), 16, 4).as("n"),
+        graft.operators.HashFamily.Fixture.bandHashes(col("sig"), 16, 4).as("n"),
         legacyBandHashes(col("sig"), 16, 4).as("l")).collect()
     rows.zip(samples).foreach { case (r, s) =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"band hashes diverge on: '$s'")

@@ -226,6 +226,62 @@ class HashExpressionsSpec extends AnyFunSuite {
     assert(r == 0.75)
   }
 
+  /** `e` over one row of array<bigint> inputs (null elements are null
+    * slots), through eval and through a generated projection: each a
+    * value or the class it threw. */
+  private def evalAndCompiled(e: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+      org.apache.spark.sql.catalyst.expressions.Expression,
+      inputs: Seq[Any]*): (Any, Any) = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val arrT = org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, true)
+    val expr = e(inputs.indices.map(BoundReference(_, arrT, true)))
+    val row = InternalRow.fromSeq(inputs.map(new GenericArrayData(_)))
+    val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(expr.dataType)
+    def outcome(f: => Any): Any = scala.util.Try(toScala(f)).fold(_.getClass, identity)
+    val compiled = GenerateUnsafeProjection.generate(Seq(expr))
+    (outcome(expr.eval(row)), outcome(compiled(row).get(0, expr.dataType)))
+  }
+  test("signature agreement: a null slot never agrees (eval and codegen)") {
+    val both = (a: Seq[Any], b: Seq[Any]) => evalAndCompiled(c => SignatureAgreement(c(0), c(1)), a, b)
+    assert(both(Seq(null, 1L), Seq(null, 1L)) == ((0.5, 0.5)))
+    assert(both(Seq(null, 1L), Seq(0L, 1L)) == ((0.5, 0.5)))
+    assert(both(Seq(1L, 2L), Seq(1L, 2L)) == ((1.0, 1.0)))
+  }
+
+  test("bloom hits: a fixture-lane gram outside [0, 2^31) fails naming the domain") {
+    val words = Array.fill(1)(-1L)
+    for (g <- Seq(-1L, Long.MinValue, 1L << 31)) {
+      val (ev, gen) = evalAndCompiled(c => BloomHits(c(0), words, 64, 2, foldWide = false), Seq(g))
+      assert(ev == classOf[IllegalArgumentException] && gen == ev, s"gram $g: $ev / $gen")
+      val msg = intercept[IllegalArgumentException](
+        HashRuntime.bloomHits(new org.apache.spark.sql.catalyst.util.GenericArrayData(Array[Any](g)),
+          words, 64, 2, foldWide = false)).getMessage
+      assert(msg.contains("[0, 2^31)"), msg)
+    }
+    // in-domain grams and the wide lane are unaffected: every bit is set
+    assert(evalAndCompiled(c => BloomHits(c(0), words, 64, 2, foldWide = false),
+      Seq(0L, (1L << 31) - 1)) == ((2, 2)))
+    assert(evalAndCompiled(c => BloomHits(c(0), words, 64, 2, foldWide = true),
+      Seq(-1L, Long.MinValue)) == ((2, 2)))
+  }
+
+  test("band hashes: a signature that is not bands × rows (rows ≥ 1) fails loudly, both lanes") {
+    val iae = classOf[IllegalArgumentException]
+    for (sig <- Seq(Seq(1L), Seq(1L, 2L, 3L), Seq.empty)) {
+      assert(evalAndCompiled(c => BandHashes(c(0), 2), sig) == ((iae, iae)), s"xxhash $sig")
+      assert(evalAndCompiled(c => FixtureBandHashes(c(0), 2, 2), sig) == ((iae, iae)), s"fixture $sig")
+    }
+    // exact bands × rows still hashes; the fixture lane takes rowsPerBand literally
+    assert(evalAndCompiled(c => FixtureBandHashes(c(0), 2, 2), Seq(1L, 2L, 3L, 4L, 5L, 6L)) ==
+      ((iae, iae)))
+    val (ev, gen) = evalAndCompiled(c => BandHashes(c(0), 2), Seq(1L, 2L, 3L, 4L))
+    assert(ev == gen && ev.asInstanceOf[scala.collection.Seq[_]].length == 2)
+  }
+
   test("audio stats: hand-computed energy + mean-crossings, empty, eval==codegen") {
     import org.apache.spark.sql.functions.col
     // bytes [10, 20, 10]: n=3, tot=40, energy=600; v*n-tot = [-10, 20, -10]

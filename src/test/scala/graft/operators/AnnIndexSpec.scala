@@ -153,14 +153,14 @@ class AnnIndexSpec extends AnyFunSuite {
     // shared pipeline, fixture hash family on both build and probe sides
     val corpus = docs()
     val delta = corpus.withColumn("doc_id", col("doc_id") + 10000)
-    AnnIndex.buildMinhashFixture(corpus, "doc_id", "text", "mh_idx_fx_spec",
-      shingle = 3, numHashes = 64, bands = 16, buckets = 4)
+    AnnIndex.buildMinhash(corpus, "doc_id", "text", "mh_idx_fx_spec",
+      shingle = 3, numHashes = 64, bands = 16, buckets = 4, family = HashFamily.Fixture)
     try {
-      val got = AnnIndex.probeMinhashFixture(spark, "mh_idx_fx_spec", delta, "doc_id", "text",
-          shingle = 3, numHashes = 64, bands = 16, threshold = 0.5)
+      val got = AnnIndex.probeMinhash(spark, "mh_idx_fx_spec", delta, "doc_id", "text",
+          shingle = 3, numHashes = 64, bands = 16, threshold = 0.5, family = HashFamily.Fixture)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val want = Dedup.minhashNearDuplicatesFixture(corpus.unionByName(delta), "doc_id", "text",
-          shingle = 3, numHashes = 64, bands = 16, threshold = 0.5)
+      val want = Dedup.minhashNearDuplicates(corpus.unionByName(delta), "doc_id", "text",
+          shingle = 3, numHashes = 64, bands = 16, threshold = 0.5, family = HashFamily.Fixture)
         .where(col("idA") < 10000 && col("idB") >= 10000)
         .collect().map(r => (r.getLong(1), r.getLong(0), r.getDouble(2))).toSet
       assert(got == want && got.nonEmpty)

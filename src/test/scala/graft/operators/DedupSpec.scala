@@ -57,12 +57,12 @@ class DedupSpec extends AnyFunSuite {
     val got = Dedup.minhashEvalFixture(df, "doc_id", "text",
       shingle = 3, numHashes = 64, bands = 16, thresholdNum = 7, thresholdDen = 10).head()
     // reference LSH side: the oracle-gated fixture pipeline itself
-    val lsh = Dedup.minhashNearDuplicatesFixture(df, "doc_id", "text", 3, 64, 16, 0.7)
+    val lsh = Dedup.minhashNearDuplicates(df, "doc_id", "text", 3, 64, 16, 0.7, HashFamily.Fixture)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // reference exact side: per-doc distinct fixture window-hash sets,
     // brute-forced pairwise with the integer threshold
     val whs = df.select(col("doc_id"),
-        array_distinct(graft.functions.HashExpressions.fixtureWindowHashes(col("text"), 3)))
+        HashFamily.Fixture.windowHashSet(col("text"), 3))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     val exact = (for {
       a <- whs.keys; b <- whs.keys if a < b
@@ -112,8 +112,8 @@ class DedupSpec extends AnyFunSuite {
     // fixture hashes are SQL-replayable integer chains; the PIPELINE
     // (band→candidate→first-agree→verify) is shared, so the behavioral
     // contract must hold under either family
-    val pairs = Dedup.minhashNearDuplicatesFixture(docs(), "doc_id", "text",
-      shingle = 3, numHashes = 64, bands = 16, threshold = 0.5)
+    val pairs = Dedup.minhashNearDuplicates(docs(), "doc_id", "text",
+      shingle = 3, numHashes = 64, bands = 16, threshold = 0.5, family = HashFamily.Fixture)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val keys = pairs.map(p => (p._1, p._2)).toSet
     assert(keys.contains((0L, 3L)), "exact dup pair must be found")
@@ -122,7 +122,7 @@ class DedupSpec extends AnyFunSuite {
     // short-text degenerate window: fewer tokens than the shingle width
     // must still sign (one whole-text window), mirroring MinHashTokens
     val short = Seq((0L, "ab"), (1L, "ab"), (2L, "zq")).toDF("doc_id", "text")
-    val sp = Dedup.minhashNearDuplicatesFixture(short, "doc_id", "text")
+    val sp = Dedup.minhashNearDuplicates(short, "doc_id", "text", family = HashFamily.Fixture)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(sp == Set((0L, 1L)))
   }
@@ -139,8 +139,8 @@ class DedupSpec extends AnyFunSuite {
   test("fixture simhash family: same pipeline semantics as the xxhash family") {
     // shared chunk-LSH pipeline (simhashPairsFromSigs); only the signature
     // swaps to SQL-replayable parity-vote integer arithmetic
-    val pairs = Dedup.simhashNearDuplicatesFixture(docs(), "doc_id", "text",
-      shingle = 2, maxHamming = 8)
+    val pairs = Dedup.simhashNearDuplicates(docs(), "doc_id", "text",
+      shingle = 2, maxHamming = 8, family = HashFamily.Fixture)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).longValue)).toList
     val exact = pairs.find(p => p._1 == 0 && p._2 == 3)
     assert(exact.exists(_._3 == 0L), s"exact dup must pair at hamming 0, got $pairs")
@@ -149,9 +149,9 @@ class DedupSpec extends AnyFunSuite {
     // zero — the cross-engine shift-semantics invariant)
     import org.apache.spark.sql.functions.{col, max}
     val sigs = docs().select(
-      Dedup.simhashSignatureFixture(col("text"), 2).as("sig"))
+      HashFamily.Fixture.simhashSig(col("text"), 2).as("sig"))
     val maxSig = sigs.agg(max(col("sig"))).head.getLong(0)
-    assert(maxSig >= 0 && maxSig < (1L << Dedup.SimFixtureBits))
+    assert(maxSig >= 0 && maxSig < (1L << HashFamily.Fixture.SimFixtureBits))
   }
 
   test("ngram jaccard matches a locally computed exact jaccard") {

@@ -43,13 +43,13 @@ class SignalOpsSpec extends AnyFunSuite {
     // exact containment computed inline
     val grams = (df: org.apache.spark.sql.DataFrame) =>
       df.select(col("doc_id"), explode(array_distinct(
-        Dedup.fixtureWindowHashes(col("text"), 3))).as("g"))
+        HashFamily.Fixture.windowHashes(col("text"), 3))).as("g"))
     val pool = grams(bench).select("g").distinct().withColumn("hit", lit(1))
     val exactFix = grams(corpus).join(pool, Seq("g"), "left")
       .groupBy("doc_id").agg((count(col("hit")).cast("double") / count(lit(1))).as("c"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val bloomFix = Bloom.ngramContaminationBloomFixture(corpus, bench, "doc_id", "text",
-      shingle = 3, mBits = 1 << 12, k = 3)
+    val bloomFix = Bloom.ngramContaminationBloom(corpus, bench, "doc_id", "text",
+      shingle = 3, mBits = 1 << 12, k = 3, family = HashFamily.Fixture)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     exactFix.foreach { case (id, e) =>
       assert(bloomFix(id) >= e - 1e-6, s"doc $id: fixture bloom ${bloomFix(id)} < exact $e")
@@ -77,8 +77,8 @@ class SignalOpsSpec extends AnyFunSuite {
     val corpus = docs.where(col("doc_id") % 8 =!= 0)
     val bench = docs.where(col("doc_id") % 8 === 0)
     def run(c: org.apache.spark.sql.DataFrame) =
-      Bloom.ngramContaminationBloomFixture(c, bench, "doc_id", "text",
-        shingle = 3, mBits = 1 << 12, k = 3)
+      Bloom.ngramContaminationBloom(c, bench, "doc_id", "text",
+        shingle = 3, mBits = 1 << 12, k = 3, family = HashFamily.Fixture)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(run(corpus) == run(corpus.repartition(7)))
   }

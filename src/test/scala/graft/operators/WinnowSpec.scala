@@ -118,7 +118,8 @@ class WinnowSpec extends AnyFunSuite {
       (100L, "the quick brown fox jumps over the lazy dog today")).toDF("doc_id", "text")
     for (df <- Seq(
         Winnow.contaminationBloom(corpus, bench, "doc_id", "text", mBits = 1 << 12),
-        Winnow.contaminationBloomFixture(corpus, bench, "doc_id", "text", mBits = 1 << 12))) {
+        Winnow.contaminationBloom(corpus, bench, "doc_id", "text", mBits = 1 << 12,
+          family = HashFamily.Fixture))) {
       val got = df.as[(Long, Double)].collect().toMap
       assert(got(1L) == 1.0, "identical doc: every winnowed fp hits")
       // disjoint text can still alias into set bits at tiny mBits — allow
