@@ -147,6 +147,10 @@ def main(sf_dir, out_dir):
         bad += 1
         print(f"XX hash family: {hit}")
 
+    for hit in word_tokens():
+        bad += 1
+        print(f"XX word tokens: {hit}")
+
     print(f"\n{len(results) - bad}/{len(results)} pass")
     return 1 if bad else 0
 
@@ -240,6 +244,33 @@ def hash_family():
             t = FIXTURE_TWIN.search(line)
             if t and operators and t.group(1) not in FIXTURE_TWIN_ALLOW:
                 hits.append(f"{rel}:{n}: operator twin {t.group(1)}; take a HashFamily instead")
+    return hits
+
+# word-rule gate: what a word is (lowercase, trim, split on \s+, drop
+# empties) is written once as a Column (TextFunctions.words) and once for the
+# kernels (KernelWords.split), and the whole-bits transition terms once
+# (LanguageModel.wholeBits). The DuckDB oracles replay these rules, so a
+# second copy that drifts changes q_lm_score, q_dsir or q_oov_rate silently.
+WORD_HOME = os.path.join("functions", "TextFunctions.scala")
+
+def word_tokens():
+    repo = os.path.join(os.path.dirname(__file__), "..")
+    root = os.path.join(repo, "src", "main", "scala", "graft")
+    hits, kernel_splits, bits_terms = [], [], []
+    for path in sorted(glob.glob(os.path.join(repo, "src", "main", "**", "*.scala"), recursive=True)):
+        rel = os.path.relpath(path, repo)
+        in_graft = os.path.relpath(path, root)
+        for n, line in enumerate(open(path, encoding="utf-8"), 1):
+            if "tokens(lower(" in line and not in_graft.startswith("..") and in_graft != WORD_HOME:
+                hits.append(f"{rel}:{n}: lowercase word split outside TextFunctions.words")
+            if "text.toLowerCase.trim()" in line:
+                kernel_splits.append(f"{rel}:{n}")
+            if "binLen(lit(" in line and os.path.basename(path) == "LanguageModel.scala":
+                bits_terms.append(f"{rel}:{n}")
+    if len(kernel_splits) > 1:
+        hits += [f"{h}: kernel word split written {len(kernel_splits)} times" for h in kernel_splits]
+    if len(bits_terms) > 1:
+        hits += [f"{h}: whole-bits term written {len(bits_terms)} times" for h in bits_terms]
     return hits
 
 def bench_check(path):

@@ -362,7 +362,15 @@ object Bpe {
     * (weighted) — merging a once-seen pair encodes nothing.
     */
   def train(df: DataFrame, textCol: String, numMerges: Int,
-      maxVocabWords: Int = 50000): Seq[(String, String)] = {
+      maxVocabWords: Int = 50000): Seq[(String, String)] =
+    learnMerges(df, textCol, numMerges, maxVocabWords, splitCodePoints)
+
+  /** The merge-learning loop both BPE lanes share; `symbolize` splits a
+    * dictionary word into its initial symbols (code points, or hex bytes
+    * for [[ByteBpe]]).
+    */
+  private[functions] def learnMerges(df: DataFrame, textCol: String, numMerges: Int,
+      maxVocabWords: Int, symbolize: String => Array[String]): Seq[(String, String)] = {
     val dict: Array[(Array[String], Long)] = df
       .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
       .where(col("w") =!= "")
@@ -370,7 +378,7 @@ object Bpe {
       .orderBy(col("c").desc, col("w").asc)
       .limit(maxVocabWords)
       .collect()
-      .map(r => (splitCodePoints(r.getString(0)), r.getLong(1)))
+      .map(r => (symbolize(r.getString(0)), r.getLong(1)))
 
     val merges = Vector.newBuilder[(String, String)]
     var words = dict
@@ -595,39 +603,8 @@ object ByteBpe {
     * (weighted). Merge symbols are uppercase hex byte strings.
     */
   def train(df: DataFrame, textCol: String, numMerges: Int,
-      maxVocabWords: Int = 50000): Seq[(String, String)] = {
-    val dict: Array[(Array[String], Long)] = df
-      .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
-      .where(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("w").asc)
-      .limit(maxVocabWords)
-      .collect()
-      .map(r => (splitHexBytes(r.getString(0)), r.getLong(1)))
-
-    val merges = Vector.newBuilder[(String, String)]
-    var words = dict
-    var done = false
-    var it = 0
-    while (it < numMerges && !done) {
-      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-      for ((syms, c) <- words; j <- 0 until syms.length - 1) {
-        val p = (syms(j), syms(j + 1))
-        counts.update(p, counts.getOrElse(p, 0L) + c)
-      }
-      if (counts.isEmpty) done = true
-      else {
-        val ((a, b), c) = counts.minBy { case ((x, y), n) => (-n, x, y) }
-        if (c < 2) done = true
-        else {
-          merges += ((a, b))
-          words = words.map { case (syms, n) => (mergeOnce(syms, a, b), n) }
-          it += 1
-        }
-      }
-    }
-    merges.result()
-  }
+      maxVocabWords: Int = 50000): Seq[(String, String)] =
+    Bpe.learnMerges(df, textCol, numMerges, maxVocabWords, splitHexBytes)
 
   /** One hex symbol per UTF-8 byte (mirrors
     * [[BpeRuntime.applyWordBytes]]'s initial symbolization).
@@ -641,17 +618,6 @@ object ByteBpe {
       i += 1
     }
     out
-  }
-
-  private def mergeOnce(syms: Array[String], a: String, b: String): Array[String] = {
-    val out = new scala.collection.mutable.ArrayBuffer[String](syms.length)
-    var j = 0
-    while (j < syms.length) {
-      if (j < syms.length - 1 && syms(j) == a && syms(j + 1) == b) {
-        out += a + b; j += 2
-      } else { out += syms(j); j += 1 }
-    }
-    out.toArray
   }
 
   /** One word → its space-joined hex byte-BPE pieces under `merges`. */

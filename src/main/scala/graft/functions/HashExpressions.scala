@@ -891,8 +891,8 @@ object FixtureHashes {
     * signature must hold exactly `bands × rowsPerBand` entries.
     */
   def bandHashes(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
+    HashRuntime.requireBanded(sig, bands, rowsPerBand)
     val s = sig.toLongArray()
-    HashRuntime.requireBanded(s.length, bands, rowsPerBand)
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
@@ -1239,7 +1239,7 @@ object HashRuntime {
   /** [[BandHashes]]: band b chains its `len/bands` longs from 42 ^ b. */
   def bandHashes(sig: ArrayData, bands: Int): ArrayData = {
     val r = sig.numElements() / bands
-    requireBanded(sig.numElements(), bands, r)
+    requireBanded(sig, bands, r)
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
@@ -1252,15 +1252,23 @@ object HashRuntime {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** A banded signature holds exactly `bands × rowsPerBand` entries with
-    * at least one row per band; anything else would leave entries outside
-    * every band, or hash empty bands to a constant that collides
-    * everywhere.
+  /** A banded signature holds exactly `bands × rowsPerBand` non-null
+    * entries with at least one row per band; anything else would leave
+    * entries outside every band, hash empty bands to a constant that
+    * collides everywhere, or read a null slot as a 0 that collides with
+    * a real 0.
     */
-  def requireBanded(len: Int, bands: Int, rowsPerBand: Int): Unit =
+  def requireBanded(sig: ArrayData, bands: Int, rowsPerBand: Int): Unit = {
+    val len = sig.numElements()
     if (rowsPerBand < 1 || len != bands * rowsPerBand)
       throw new IllegalArgumentException(
         s"signature of length $len does not split into $bands bands of $rowsPerBand rows")
+    var i = 0
+    while (i < len) {
+      if (sig.isNullAt(i)) throw new IllegalArgumentException(s"signature slot $i is null")
+      i += 1
+    }
+  }
 
   /** [[BloomHits]]: grams whose k positions are all set in `words`. The
     * modulus is the ONE fixture modulus: build-side positions

@@ -9,6 +9,21 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+/** The kernel side of [[TextFunctions.words]], Spark-exact: lowercase
+  * (UTF8String), ASCII-space trim, java regex `\s+` split with limit -1.
+  * The result may hold empty strings; each caller skips them in its own
+  * loop, so no second array is allocated per row.
+  */
+private[functions] object KernelWords {
+  private val ws = java.util.regex.Pattern.compile("\\s+")
+
+  def split(text: UTF8String): Array[String] = ws.split(text.toLowerCase.trim().toString, -1)
+
+  /** Spark's round(x, 6): BigDecimal.valueOf, setScale HALF_UP, toDouble. */
+  def round6(x: Double): Double =
+    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+}
+
 /** Runtime for [[DistilledLmScore]]: the whole per-document distilled-LM
   * scoring pass as ONE imperative scan with real hash-table lookups.
   *
@@ -24,15 +39,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole-stage-codegen-friendly.
   *
   * Parity contract (spec-gated == the join-based scoreDocs, and the
-  * oracle replays it in SQL): tokens are
-  * `filter(split(trim(lower(text)), "\\s+"), _ != "")` with Spark's
-  * exact semantics — UTF8String.toLowerCase, ASCII-space trim, java
-  * regex split with limit -1; first token scores
-  * binLen(T+V) − binLen(c(w1)+1), transitions score
-  * binLen(c(prev)+V) − binLen(cb("prev w")+1) with binLen(x) =
-  * 64 − numberOfLeadingZeros(x) (the [[BinLength]] arithmetic);
-  * bits_per_token rounds exactly like Spark's round(_, 6)
-  * (BigDecimal.valueOf → setScale HALF_UP → toDouble).
+  * oracle replays it in SQL): tokens are [[KernelWords]]; first token
+  * scores binLen(T+V) − binLen(c(w1)+1), transitions score
+  * binLen(c(prev)+V) − binLen(cb("prev w")+1) with the [[BinLength]]
+  * arithmetic; bits_per_token rounds exactly like Spark's round(_, 6).
   */
 final class DistilledLmRuntime(uni: Map[String, Long], bi: Map[String, Long],
     totalTokens: Long, vocabSize: Long) extends Serializable {
@@ -48,11 +58,6 @@ final class DistilledLmRuntime(uni: Map[String, Long], bi: Map[String, Long],
     m
   }
 
-  private val ws = java.util.regex.Pattern.compile("\\s+")
-
-  private def binLen(v: Long): Int =
-    if (v == 0L) 1 else 64 - java.lang.Long.numberOfLeadingZeros(v)
-
   private def cnt(m: java.util.HashMap[String, java.lang.Long], k: String): Long = {
     val v = m.get(k)
     if (v == null) 0L else v.longValue()
@@ -60,9 +65,7 @@ final class DistilledLmRuntime(uni: Map[String, Long], bi: Map[String, Long],
 
   /** struct(n_tokens, lm_bits, bits_per_token) or null for 0 tokens. */
   def score(text: UTF8String): InternalRow = {
-    // Spark-exact tokenize: lower (UTF8String), trim (ASCII space),
-    // regex \s+ split with limit -1, drop empties
-    val raw = ws.split(text.toLowerCase.trim().toString, -1)
+    val raw = KernelWords.split(text)
     var n = 0
     var i = 0
     while (i < raw.length) { if (!raw(i).isEmpty) n += 1; i += 1 }
@@ -74,18 +77,17 @@ final class DistilledLmRuntime(uni: Map[String, Long], bi: Map[String, Long],
       val w = raw(i)
       if (!w.isEmpty) {
         if (prev == null) {
-          bits += binLen(totalTokens + vocabSize) - binLen(cnt(uniM, w) + 1L)
+          bits += HashRuntime.binLength(totalTokens + vocabSize) -
+            HashRuntime.binLength(cnt(uniM, w) + 1L)
         } else {
-          bits += binLen(cnt(uniM, prev) + vocabSize) -
-            binLen(cnt(biM, prev + " " + w) + 1L)
+          bits += HashRuntime.binLength(cnt(uniM, prev) + vocabSize) -
+            HashRuntime.binLength(cnt(biM, prev + " " + w) + 1L)
         }
         prev = w
       }
       i += 1
     }
-    val bpt = java.math.BigDecimal.valueOf(bits.toDouble / n)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    new GenericInternalRow(Array[Any](n.toLong, bits, bpt))
+    new GenericInternalRow(Array[Any](n.toLong, bits, KernelWords.round6(bits.toDouble / n)))
   }
 }
 
@@ -94,7 +96,7 @@ final class DistilledLmRuntime(uni: Map[String, Long], bi: Map[String, Long],
   * replacing the corpus-sized token explode + vocabulary join + per-doc
   * re-aggregation when the vocabulary fits the plan budget (it is
   * frequency-thresholded, so Heaps' law bounds it regardless of corpus
-  * size). Tokenize parity is [[DistilledLmRuntime]]'s exactly; counts
+  * size). Tokens are [[KernelWords]], as in [[DistilledLmRuntime]]; counts
   * and the round(_, 6) rate replicate the join path's arithmetic
   * (spec-gated equal; the oracle replays the join form in SQL).
   */
@@ -104,11 +106,10 @@ final class OovRuntime(vocab: Seq[String]) extends Serializable {
     vocab.foreach(s.add)
     s
   }
-  private val ws = java.util.regex.Pattern.compile("\\s+")
 
   /** struct(n_tokens, n_oov, oov_rate) or null for 0 tokens. */
   def rate(text: UTF8String): InternalRow = {
-    val raw = ws.split(text.toLowerCase.trim().toString, -1)
+    val raw = KernelWords.split(text)
     var n = 0
     var oov = 0
     var i = 0
@@ -121,9 +122,7 @@ final class OovRuntime(vocab: Seq[String]) extends Serializable {
       i += 1
     }
     if (n == 0) return null
-    val r = java.math.BigDecimal.valueOf(oov.toDouble / n)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    new GenericInternalRow(Array[Any](n.toLong, oov.toLong, r))
+    new GenericInternalRow(Array[Any](n.toLong, oov.toLong, KernelWords.round6(oov.toDouble / n)))
   }
 }
 

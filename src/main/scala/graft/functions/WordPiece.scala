@@ -209,8 +209,4 @@ object WordPiece {
   def wordpieceText(text: Column, vocab: Seq[String]): Column =
     concat_ws(" ", transform(TextFunctions.tokens(text),
       w => wordpieceWord(w, vocab)))
-
-  /** Piece count of [[wordpieceText]] (pieces never contain spaces). */
-  def wordpiecePieceCount(text: Column, vocab: Seq[String]): Column =
-    size(split(wordpieceText(text, vocab), " "))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.TextFunctions.tokens
+import graft.functions.TextFunctions.words
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -33,9 +33,7 @@ object Frequent {
     */
   def frequentTokens(df: DataFrame, groupCol: String, textCol: String,
       supNum: Long, supDen: Long): DataFrame = {
-    val toks = df.select(col(groupCol).as("grp"),
-        explode(tokens(lower(col(textCol)))).as("word"))
-      .where(col("word") =!= "")
+    val toks = df.select(col(groupCol).as("grp"), explode(words(col(textCol))).as("word"))
     val counts = toks.groupBy("grp", "word").agg(count(lit(1)).as("n"))
     val totals = toks.groupBy("grp").agg(count(lit(1)).as("total"))
     counts.join(totals, "grp")
@@ -93,8 +91,7 @@ object Frequent {
     val spark = df.sparkSession
     import spark.implicits._
     val toks = df.select(col(groupCol).cast("string").as("grp"),
-        explode(tokens(lower(col(textCol)))).as("word"))
-      .where(col("word") =!= "")
+        explode(words(col(textCol))).as("word"))
       .as[(String, String)]
     toks.groupByKey(_._1).mapValues(_._2)
       .agg(new MisraGriesAgg(k).toColumn.name("summary"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TextFunctions.words
 
 /** N-gram language-model quality scoring — the CCNet/Wenzek et al.
   * perplexity-filter discipline (arXiv:1911.00359) re-expressed with
@@ -70,17 +71,7 @@ object LanguageModel {
     * (r15 plan audit, plans/r15/q_dsir_before.txt Filter(2)+Project(3)).
     */
   private def tokenArrays(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol).as("__id"),
-        filter(graft.functions.TextFunctions.tokens(lower(col(textCol))),
-          w => w =!= "").as("__t"))
-
-  /** ilog2(x)+1 — the |bin(x)| surprisal building block. One integer
-    * intrinsic since r15 ([[graft.functions.BinLength]], value-identical
-    * to `length(bin(x))`): the builtin chain allocated an up-to-64-char
-    * string per token transition per model just to read its length.
-    */
-  private def binLen(c: Column): Column =
-    graft.functions.HashExpressions.binLength(c)
+    df.select(col(idCol).as("__id"), words(col(textCol)).as("__t"))
 
   /** Train the count LM on a reference corpus. `minCount` bounds the
     * vocabulary (words below it are dropped from BOTH tables and from T,
@@ -172,12 +163,6 @@ object LanguageModel {
     NgramLm(uni, bi, t, v)
   }
 
-  /** Score documents under a trained LM: (idCol, n_tokens, lm_bits,
-    * bits_per_token). Higher bits-per-token = more surprising = worse
-    * fit to the reference (CCNet keeps the LOW end). Docs with zero
-    * tokens are absent from the output (no probability is defined for
-    * them), matching the oovRate contract.
-    */
   /** Per-token transition stream (`__id`, `__n`, `__w`, `__prev`): the
     * first token carries (null → t1) scored by the unigram model; token
     * i≥2 carries (t_i-1 → t_i) scored by the bigram model. One explode;
@@ -199,31 +184,64 @@ object LanguageModel {
           .otherwise(element_at(col("__t"), col("__pos"))))
       .select(col("__id"), col("__n"), col("__w"), col("__prev"))
 
+  /** One model of a [[wholeBits]] pass: the name of its count column in
+    * the shared unigram and bigram tables, its (T, V) scalars, and the
+    * name of its per-doc bit sum.
+    */
+  private final case class BitsModel(c: String, t: Long, v: Long, out: String)
+
+  /** The whole-bits scorer behind [[scoreDocs]], [[dsirWeights]] and the
+    * fused DSIR tail: k models whose counts sit side by side in one
+    * unigram table (word, c…) and one bigram table (w1, w2, c…); a model
+    * that lacks a gram carries null there, which scores as count 0. One
+    * transition stream, three left joins (AQE broadcasts the tables that
+    * fit), one per-doc sum: (`__id`, n_tokens, out…).
+    *
+    * A transition's bigram count counts for a model only when both its
+    * ends are in that model's vocabulary (its unigram lookups are
+    * non-null): the closed-vocabulary construction. [[fromRaw]]'s bigram
+    * tables already keep only such pairs; the fused DSIR tail's raw pair
+    * counts need the gate.
+    */
+  private def wholeBits(toks: DataFrame, uni: DataFrame, bi: DataFrame,
+      models: Seq[BitsModel]): DataFrame = {
+    def counts(t: DataFrame, keys: Seq[Column], pre: String): DataFrame =
+      t.select(keys ++ models.map(m => col(m.c).as(pre + m.c)): _*)
+    val uniW = counts(uni, Seq(col("word").as("__wordW")), "__cw")
+    val uniP = counts(uni, Seq(col("word").as("__wordP")), "__cu")
+    val biC = counts(bi, Seq(col("w1").as("__w1"), col("w2").as("__w2")), "__cb")
+    def binLen(c: Column): Column = graft.functions.HashExpressions.binLength(c)
+    def orZero(c: Column): Column = coalesce(c, lit(0L))
+    // ilog2 difference: the +1/-1 of |bin| cancels across the ratio
+    def bits(m: BitsModel): Column = {
+      val (cw, cu, cb) = (col("__cw" + m.c), col("__cu" + m.c), col("__cb" + m.c))
+      when(col("__prev").isNull,
+        binLen(lit(m.t + m.v)) - binLen(orZero(cw) + lit(1L)))
+        .otherwise(binLen(orZero(cu) + lit(m.v)) -
+          binLen(orZero(when(cu.isNotNull && cw.isNotNull, cb)) + lit(1L)))
+    }
+    transitionEvents(toks)
+      .join(uniW, col("__w") === col("__wordW"), "left").drop("__wordW")
+      .join(uniP, col("__prev") === col("__wordP"), "left").drop("__wordP")
+      .join(biC, col("__prev") === col("__w1") && col("__w") === col("__w2"), "left")
+      .drop("__w1", "__w2")
+      .withColumns(models.map(m => ("__" + m.out) -> bits(m)).toMap)
+      .groupBy(col("__id"))
+      .agg(max(col("__n")).cast("long").as("n_tokens"),
+        models.map(m => sum(col("__" + m.out)).cast("long").as(m.out)): _*)
+  }
+
+  /** Score documents under a trained LM: (idCol, n_tokens, lm_bits,
+    * bits_per_token). Higher bits-per-token = more surprising = worse
+    * fit to the reference (CCNet keeps the LOW end). Docs with zero
+    * tokens are absent from the output (no probability is defined for
+    * them), matching the oovRate contract.
+    */
   def scoreDocs(df: DataFrame, idCol: String, textCol: String,
       lm: NgramLm): DataFrame = {
     require(lm.vocabSize >= 1, "reference vocabulary is empty")
-    val toks = tokenArrays(df, idCol, textCol)
-    // One explode, two count-table left joins, one re-aggregation.
-    val events = transitionEvents(toks)
-    val uni = lm.unigrams.select(col("word"), col("c").as("__cw"))
-    val uniPrev = lm.unigrams.select(col("word").as("__prevw"), col("c").as("__cu"))
-    val bi = lm.bigrams.select(col("w1"), col("w2"), col("c").as("__cb"))
-    val scored = events
-      .join(uni, events("__w") === uni("word"), "left").drop("word")
-      .join(uniPrev, col("__prev") === col("__prevw"), "left").drop("__prevw")
-      .join(bi, col("__prev") === bi("w1") && col("__w") === bi("w2"), "left")
-      .drop("w1", "w2")
-      .withColumn("__bits",
-        when(col("__prev").isNull,
-          // ilog2 difference: the +1/-1 of |bin| cancels across the ratio
-          binLen(lit(lm.totalTokens + lm.vocabSize)) -
-            binLen(coalesce(col("__cw"), lit(0L)) + lit(1L)))
-          .otherwise(
-            binLen(coalesce(col("__cu"), lit(0L)) + lit(lm.vocabSize)) -
-              binLen(coalesce(col("__cb"), lit(0L)) + lit(1L))))
-    scored.groupBy(col("__id"))
-      .agg(max(col("__n")).cast("long").as("n_tokens"),
-        sum(col("__bits")).cast("long").as("lm_bits"))
+    wholeBits(tokenArrays(df, idCol, textCol), lm.unigrams, lm.bigrams,
+        Seq(BitsModel("c", lm.totalTokens, lm.vocabSize, "lm_bits")))
       .select(col("__id").as(idCol), col("n_tokens"), col("lm_bits"),
         round(col("lm_bits").cast("double") / col("n_tokens"), 6).as("bits_per_token"))
   }
@@ -309,49 +327,36 @@ object LanguageModel {
     * high-weight head (see `Split.curriculumSample` over
     * `dsir_bits_per_token` for the resampling step).
     *
-    * Scale shape: ONE corpus tokenize + explode feeds both models — the
-    * transition stream left-joins six count tables (2× uni/uniPrev/bi;
-    * AQE broadcasts those that fit) and re-aggregates by doc id once.
-    * Scoring under k models is one pass + k·3 bounded-table joins, never
-    * k corpus passes (the duplicateSpans shared-front-half discipline).
-    * Spec-gated exactly equal to two independent [[scoreDocs]] passes.
+    * Scale shape: the two models' count tables are joined full-outer
+    * (bounded tables), and ONE corpus tokenize + transition stream probes
+    * them in one [[wholeBits]] pass. Spec-gated exactly equal to two
+    * independent [[scoreDocs]] passes.
     */
   def dsirWeights(df: DataFrame, idCol: String, textCol: String,
       lmTarget: NgramLm, lmRaw: NgramLm): DataFrame = {
     require(lmTarget.vocabSize >= 1, "target vocabulary is empty")
     require(lmRaw.vocabSize >= 1, "raw vocabulary is empty")
-    val toks = tokenArrays(df, idCol, textCol)
-    val events = transitionEvents(toks)
-    def joined(ev: DataFrame, lm: NgramLm, sfx: String): DataFrame = {
-      val uni = lm.unigrams.select(col("word").as(s"__word$sfx"), col("c").as(s"__cw$sfx"))
-      val uniPrev = lm.unigrams.select(col("word").as(s"__pword$sfx"), col("c").as(s"__cu$sfx"))
-      val bi = lm.bigrams.select(col("w1").as(s"__w1$sfx"), col("w2").as(s"__w2$sfx"),
-        col("c").as(s"__cb$sfx"))
-      ev.join(uni, col("__w") === col(s"__word$sfx"), "left").drop(s"__word$sfx")
-        .join(uniPrev, col("__prev") === col(s"__pword$sfx"), "left").drop(s"__pword$sfx")
-        .join(bi, col("__prev") === col(s"__w1$sfx") && col("__w") === col(s"__w2$sfx"), "left")
-        .drop(s"__w1$sfx", s"__w2$sfx")
-    }
-    def bits(lm: NgramLm, sfx: String): Column =
-      when(col("__prev").isNull,
-        binLen(lit(lm.totalTokens + lm.vocabSize)) -
-          binLen(coalesce(col(s"__cw$sfx"), lit(0L)) + lit(1L)))
-        .otherwise(
-          binLen(coalesce(col(s"__cu$sfx"), lit(0L)) + lit(lm.vocabSize)) -
-            binLen(coalesce(col(s"__cb$sfx"), lit(0L)) + lit(1L)))
-    joined(joined(events, lmTarget, "T"), lmRaw, "R")
-      .withColumn("__bt", bits(lmTarget, "T"))
-      .withColumn("__br", bits(lmRaw, "R"))
-      .groupBy(col("__id"))
-      .agg(max(col("__n")).cast("long").as("n_tokens"),
-        sum(col("__bt")).cast("long").as("bits_target"),
-        sum(col("__br")).cast("long").as("bits_raw"))
-      .select(col("__id").as(idCol), col("n_tokens"),
-        col("bits_target"), col("bits_raw"),
-        (col("bits_raw") - col("bits_target")).as("dsir_bits"),
-        round((col("bits_raw") - col("bits_target")).cast("double") / col("n_tokens"), 6)
-          .as("dsir_bits_per_token"))
+    def both(keys: Seq[String], target: DataFrame, raw: DataFrame): DataFrame =
+      target.select(keys.map(col) :+ col("c").as("cT"): _*)
+        .join(raw.select(keys.map(col) :+ col("c").as("cR"): _*), keys, "full_outer")
+    dsirColumns(wholeBits(tokenArrays(df, idCol, textCol),
+      both(Seq("word"), lmTarget.unigrams, lmRaw.unigrams),
+      both(Seq("w1", "w2"), lmTarget.bigrams, lmRaw.bigrams),
+      dsirModels(lmTarget.totalTokens, lmTarget.vocabSize, lmRaw.totalTokens, lmRaw.vocabSize)),
+      idCol)
   }
+
+  /** The target and raw models of a DSIR [[wholeBits]] pass. */
+  private def dsirModels(tT: Long, vT: Long, tR: Long, vR: Long): Seq[BitsModel] =
+    Seq(BitsModel("cT", tT, vT, "bits_target"), BitsModel("cR", tR, vR, "bits_raw"))
+
+  /** The five DSIR output columns from a two-model [[wholeBits]] sum. */
+  private def dsirColumns(bits: DataFrame, idCol: String): DataFrame =
+    bits.select(col("__id").as(idCol), col("n_tokens"),
+      col("bits_target"), col("bits_raw"),
+      (col("bits_raw") - col("bits_target")).as("dsir_bits"),
+      round((col("bits_raw") - col("bits_target")).cast("double") / col("n_tokens"), 6)
+        .as("dsir_bits_per_token"))
 
   /** Train-both-slices + weigh-corpus composition (the q_dsir shape):
     * the target slice plays Wikipedia/The Pile's trusted subset, the raw
@@ -384,10 +389,7 @@ object LanguageModel {
         lit(true).as("__tgt"))
       .unionAll(rawRef.select(col(idCol).as("__id"), col(textCol).as("__x"),
         lit(false).as("__tgt")))
-    val toks = Materialize.once(tagged.select(
-      filter(graft.functions.TextFunctions.tokens(lower(col("__x"))),
-        w => w =!= "").as("__t"),
-      col("__tgt")))
+    val toks = Materialize.once(tagged.select(words(col("__x")).as("__t"), col("__tgt")))
     dsirScore(toks, tokenArrays(df, idCol, textCol), idCol, minCount)
   }
 
@@ -450,7 +452,7 @@ object LanguageModel {
     val biBoth = Materialize.once(
       bigramPairs(toks, col("__tgt"))
         .groupBy("w1", "w2")
-        .agg(sideCount(true).as("cbT"), sideCount(false).as("cbR")))
+        .agg(sideCount(true).as("cT"), sideCount(false).as("cR")))
     // both models' (T, V) from ONE action
     val tv = uniBoth.agg(
       coalesce(sum(col("cT")), lit(0L)), count(col("cT")),
@@ -458,42 +460,7 @@ object LanguageModel {
     val (tT, vT, tR, vR) = (tv.getLong(0), tv.getLong(1), tv.getLong(2), tv.getLong(3))
     require(vT >= 1, "target vocabulary is empty")
     require(vR >= 1, "raw vocabulary is empty")
-
-    val events = transitionEvents(scoredToks)
-    val uniW = uniBoth.select(col("word").as("__wordW"),
-      col("cT").as("__cwT"), col("cR").as("__cwR"))
-    val uniP = uniBoth.select(col("word").as("__wordP"),
-      col("cT").as("__cuT"), col("cR").as("__cuR"))
-    val biC = biBoth.select(col("w1"), col("w2"),
-      col("cbT").as("__cbT"), col("cbR").as("__cbR"))
-    // closed-vocabulary gate on the bigram count: a pair counts for a
-    // model only when BOTH ends are in that model's vocabulary — which
-    // is exactly "__cu and __cw are non-null" on this event row (the
-    // per-model bi tables used to encode this by dropping rows; the
-    // arithmetic is identical because a dropped row scored coalesce→0)
-    def bits(t: Long, v: Long, cw: String, cu: String, cb: String): Column =
-      when(col("__prev").isNull,
-        binLen(lit(t + v)) - binLen(coalesce(col(cw), lit(0L)) + lit(1L)))
-        .otherwise(
-          binLen(coalesce(col(cu), lit(0L)) + lit(v)) -
-            binLen(coalesce(when(col(cu).isNotNull && col(cw).isNotNull,
-              col(cb)), lit(0L)) + lit(1L)))
-    events
-      .join(uniW, col("__w") === col("__wordW"), "left").drop("__wordW")
-      .join(uniP, col("__prev") === col("__wordP"), "left").drop("__wordP")
-      .join(biC, col("__prev") === col("w1") && col("__w") === col("w2"), "left")
-      .drop("w1", "w2")
-      .withColumn("__bt", bits(tT, vT, "__cwT", "__cuT", "__cbT"))
-      .withColumn("__br", bits(tR, vR, "__cwR", "__cuR", "__cbR"))
-      .groupBy(col("__id"))
-      .agg(max(col("__n")).cast("long").as("n_tokens"),
-        sum(col("__bt")).cast("long").as("bits_target"),
-        sum(col("__br")).cast("long").as("bits_raw"))
-      .select(col("__id").as(idCol), col("n_tokens"),
-        col("bits_target"), col("bits_raw"),
-        (col("bits_raw") - col("bits_target")).as("dsir_bits"),
-        round((col("bits_raw") - col("bits_target")).cast("double") / col("n_tokens"), 6)
-          .as("dsir_bits_per_token"))
+    dsirColumns(wholeBits(scoredToks, uniBoth, biBoth, dsirModels(tT, vT, tR, vR)), idCol)
   }
 
   /** A distilled LM: the count tables collected into driver maps, bounded

@@ -30,9 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object LineCorrections {
 
-  private val CounterRe = "(?i)^\\s*[0-9]+ (likes?|comments?|shares?|views?)\\s*$"
-  private val StubRe = "(?i)(sign in|log in|click here|read more|accept cookies)"
-
   /** True when the line should be REMOVED — one codegen'd char scan
     * ([[graft.functions.LineDrop]]). The Column-arithmetic formulation
     * this replaces (three regexp_replace + two rlike + a split per

@@ -39,9 +39,6 @@ object Multimodal {
 
   case class MediaFeatures(id: Long, featureDim: Int, features: Array[Float])
 
-  val mediaSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.Encoders.product[MediaRow].schema
-
   /** Synthesize a deterministic media table from any keyed source (test
     * fixture: payload bytes derived from the id).
     */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.TextFunctions.tokens
+import graft.functions.TextFunctions.{tokens, words}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -65,9 +65,7 @@ object Retrieval {
       topK: Int = 10, k1n: Long = 6, k1d: Long = 5, bn: Long = 3, bd: Long = 4): DataFrame = {
     require(terms.nonEmpty, "terms must be non-empty")
     val (nuTf, dTf, dConst, dDlN) = bm25Coefficients(k1n, k1d, bn, bd)
-    val toks = docs.select(col(idCol).as("__id"),
-        explode(tokens(lower(col(textCol)))).as("term"))
-      .where(col("term") =!= "")
+    val toks = docs.select(col(idCol).as("__id"), explode(words(col(textCol))).as("term"))
     val dl = toks.groupBy("__id").agg(count(lit(1)).as("dl"))
     val totals = dl.agg(count(lit(1)).as("nn"), sum(col("dl")).as("sumdl"))
     val tf = toks.where(col("term").isin(terms: _*))

@@ -13,29 +13,23 @@ import org.apache.spark.sql.functions._
   * and unlike perplexity it is exact integer/ratio arithmetic — so the
   * driver's DuckDB oracle hash-gates it end to end.
   *
-  * Scale shape (100 TB): two corpus passes, both canonical — pass 1 builds
-  * the vocabulary as a hash aggregate keyed by word (map-side combine
-  * collapses each task to its distinct words before the shuffle; the
-  * thresholded output is orders of magnitude smaller than the token stream
-  * — Heaps' law puts a minCount=20 web-corpus vocab around 10^7 rows);
-  * pass 2 probes it with a token-keyed join. AQE broadcasts the vocab when
-  * it fits and degrades to a shuffled hash join when it does not; no
-  * driver-side state either way. The token stream itself is never
-  * materialized. The per-doc aggregate is keyed by doc id, same as every
-  * other per-doc signal.
+  * Scale shape (100 TB): two corpus passes. Pass 1 builds the vocabulary
+  * as a hash aggregate keyed by word (map-side combine collapses each task
+  * to its distinct words before the shuffle; Heaps' law puts a
+  * minCount=20 web-corpus vocabulary around 10^7 rows). Pass 2 scores
+  * each document. When the thresholded vocabulary fits the distillation
+  * budget (the common case) it is collected once, bounded, and pass 2 is
+  * one codegen'd scan against it ([[graft.functions.OovRateScore]]): no
+  * explode, join or re-aggregation. Past the budget the vocabulary is
+  * materialized and pass 2 is a token-keyed join (AQE broadcasts it when
+  * it fits, shuffled hash join otherwise) plus a per-doc aggregate.
   */
 object Vocabulary {
 
-  /** (`__id`, `__t`): per-doc lowercased whitespace token array — the one
-    * scan+tokenize pass behind every coverage signal. */
-  private def tokenArrays(df: DataFrame, idCol: String, textCol: String): DataFrame =
+  /** Exploded words ([[graft.functions.TextFunctions.words]]): (`__id`, `__w`). */
+  private def explodeTokens(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("__id"),
-      graft.functions.TextFunctions.tokens(lower(col(textCol))).as("__t"))
-
-  /** Exploded tokens, empties dropped: (`__id`, `__w`). */
-  private def explodeTokens(toks: DataFrame): DataFrame =
-    toks.select(col("__id"), explode(col("__t")).as("__w"))
-      .where(col("__w") =!= "")
+      explode(graft.functions.TextFunctions.words(col(textCol))).as("__w"))
 
   private def vocabularyFromTokens(tok: DataFrame, minCount: Long): DataFrame =
     tok.groupBy(col("__w").as("word"))
@@ -47,7 +41,7 @@ object Vocabulary {
     */
   def vocabulary(df: DataFrame, idCol: String, textCol: String,
       minCount: Long): DataFrame =
-    vocabularyFromTokens(explodeTokens(tokenArrays(df, idCol, textCol)), minCount)
+    vocabularyFromTokens(explodeTokens(df, idCol, textCol), minCount)
 
   /** Per-document out-of-vocabulary rate against [[vocabulary]] built from
     * the SAME corpus (self-coverage — the usual first-pass configuration;
@@ -93,7 +87,7 @@ object Vocabulary {
           .select(col(idCol), col("__s.n_tokens").as("n_tokens"),
             col("__s.n_oov").as("n_oov"), col("__s.oov_rate").as("oov_rate"))
       case None =>
-        oovFromTokens(explodeTokens(tokenArrays(df, idCol, textCol)), idCol,
+        oovFromTokens(explodeTokens(df, idCol, textCol), idCol,
           Materialize.once(vocabDf))
     }
   }

@@ -2078,10 +2078,7 @@ object ExtQueries {
        SELECT word, CAST(COUNT(*) AS BIGINT) AS n FROM w
        WHERE word <> '' GROUP BY word
        ORDER BY n DESC, word ASC LIMIT 500""") { (s, d) =>
-    Tables.df(s, d, "documents")
-      .select(explode(tokens(lower(col("text")))).as("word"))
-      .where(col("word") =!= "")
-      .groupBy("word").agg(count(lit(1)).as("n"))
+    graft.operators.Vocabulary.vocabulary(Tables.df(s, d, "documents"), "doc_id", "text", 1)
       .orderBy(col("n").desc, col("word").asc).limit(500)
   }
 

@@ -45,10 +45,6 @@ object Queries {
       fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, Option(oracle), bench, Option(twin))
 
-  /** Exact decimal sum of a 2-dp double column, surfaced as double. */
-  private def dsum(c: org.apache.spark.sql.Column) =
-    sum(c.cast("decimal(28,4)")).cast("double")
-
   // ==========================================================
   // §2.1/§2.3 map family
   // ==========================================================

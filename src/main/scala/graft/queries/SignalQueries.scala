@@ -260,8 +260,8 @@ object SignalQueries {
               JOIN ${px}uni u1 ON b0.w1 = u1.w JOIN ${px}uni u2 ON b0.w2 = u2.w)"""
 
   /** documents → (doc_id, n_tokens, bits_target, bits_raw): one
-    * transition stream scored under both models — the SQL mirror of
-    * LanguageModel.dsirWeights' single-pass six-join shape.
+    * transition stream scored under both models, six per-model count
+    * table joins — the SQL mirror of LanguageModel.dsirWeights.
     */
   private val DsirCtes =
     raw"""tok0 AS (SELECT doc_id,

@@ -100,8 +100,7 @@ object GraftStreaming {
     import spark.implicits._
     val agg = new graft.operators.Frequent.MisraGriesAgg(k)
     df.select(col(groupCol).cast("string").as("grp"),
-        explode(graft.functions.TextFunctions.tokens(lower(col(textCol)))).as("word"))
-      .where(col("word") =!= "")
+        explode(graft.functions.TextFunctions.words(col(textCol))).as("word"))
       .as[(String, String)]
       .groupByKey(_._1)
       .mapGroupsWithState[graft.operators.Frequent.MgState, (String, Map[String, Long], Long)](
@@ -769,6 +768,8 @@ object GraftStreaming {
     implicit val outEnc: Encoder[MinHashAccepted] = Encoders.product[MinHashAccepted]
     implicit val stEnc: Encoder[MinHashBucketState] = Encoders.product[MinHashBucketState]
     implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
+    def signature(s: Seq[Long]) =
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(s.toArray)
     val sigCol = graft.operators.Dedup.minhashSignature(col(textCol), shingle, numHashes)
     val prepared = df.select(
         col(idCol).cast("string").as("id"),
@@ -788,11 +789,9 @@ object GraftStreaming {
             val out = Vector.newBuilder[MinHashAccepted]
             // intra-batch arrivals are unordered: process in event-time order
             for (d <- docs.toArray.sortBy(x => (x.ts.getTime, x.id))) {
-              val isDup = held.exists { s =>
-                var agree = 0; var i = 0
-                while (i < s.length) { if (s(i) == d.sig(i)) agree += 1; i += 1 }
-                agree.toDouble / numHashes >= threshold
-              }
+              val sig = signature(d.sig)
+              val isDup = held.exists(s =>
+                graft.functions.HashRuntime.agreement(signature(s), sig) >= threshold)
               if (!isDup) {
                 out += MinHashAccepted(d.id, d.ts)
                 held = (held :+ d.sig).takeRight(bucketCap)

@@ -282,6 +282,29 @@ class HashExpressionsSpec extends AnyFunSuite {
     assert(ev == gen && ev.asInstanceOf[scala.collection.Seq[_]].length == 2)
   }
 
+  /** A null signature slot must fail, not hash like a 0: through eval and
+    * a generated projection, and with a message naming the slot. */
+  private def assertNullSlotFails(kernel: org.apache.spark.sql.catalyst.expressions.Expression =>
+      org.apache.spark.sql.catalyst.expressions.Expression,
+      runtime: org.apache.spark.sql.catalyst.util.ArrayData => Any): Unit = {
+    val iae = classOf[IllegalArgumentException]
+    assert(evalAndCompiled(c => kernel(c(0)), Seq(null, 1L)) == ((iae, iae)))
+    val msg = intercept[IllegalArgumentException](runtime(
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(Array[Any](1L, 2L, 3L, null)))).getMessage
+    assert(msg.contains("slot 3 is null"), msg)
+    // [0, 1] still hashes, identically on both paths
+    val (ev, gen) = evalAndCompiled(c => kernel(c(0)), Seq(0L, 1L))
+    assert(ev == gen && ev.asInstanceOf[scala.collection.Seq[_]].length == 2, s"$ev / $gen")
+  }
+
+  test("band hashes: a null signature slot fails naming the slot (BandHashes)") {
+    assertNullSlotFails(BandHashes(_, 2), HashRuntime.bandHashes(_, 2))
+  }
+
+  test("band hashes: a null signature slot fails naming the slot (FixtureBandHashes)") {
+    assertNullSlotFails(FixtureBandHashes(_, 2, 1), FixtureHashes.bandHashes(_, 2, 2))
+  }
+
   test("audio stats: hand-computed energy + mean-crossings, empty, eval==codegen") {
     import org.apache.spark.sql.functions.col
     // bytes [10, 20, 10]: n=3, tot=40, energy=600; v*n-tot = [-10, 20, -10]

@@ -658,11 +658,20 @@ class SignalOpsSpec extends AnyFunSuite {
   }
 
   test("scoreDocsAuto: distilled when the model fits, join-based fallback when not — identical output either way") {
-    val docs = corpusDf
-    val lm = LanguageModel.train(docs.where(col("doc_id") % 3 === 0), "doc_id", "text")
+    // edge text is scored, never trained on: tabs and newlines, blank and
+    // empty rows, space runs, non-ASCII mixed case (and a no-break space,
+    // which \s does not split) — the Column and kernel tokenizers agree
+    val docs = corpusDf.unionByName(Seq((1000L, "\tThe QUICK fox\n"), (1001L, "   "),
+      (1002L, ""), (1003L, "the  quick   fox"), (1004L, "ÉCOLE Straße ΣΟΦΊΑ Alpha\u00A0beta"),
+      (1005L, "ALPHA\tbeta  Gamma\n")).toDF("doc_id", "text"))
+    val lm = LanguageModel.train(corpusDf.where(col("doc_id") % 3 === 0), "doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     val joined = rows(LanguageModel.scoreDocs(docs, "doc_id", "text", lm))
+    val edge = joined.filter(_._1 >= 1000L).map(r => r._1 -> r._2).toMap
+    assert(edge == Map(1000L -> 3L, 1003L -> 3L, 1004L -> 4L, 1005L -> 3L), edge)
+    assert(joined.filter(r => r._1 == 1000L || r._1 == 1003L).map(_.copy(_1 = 0L)).size == 1,
+      "tab/newline and space-run spellings of one text score alike")
     // under budget: the auto path must take the distilled kernel (no
     // corpus joins in the plan) and reproduce the join arithmetic exactly
     // (plan checks read the ANALYZED plan: over a local relation the
