@@ -151,6 +151,10 @@ def main(sf_dir, out_dir):
         bad += 1
         print(f"XX word tokens: {hit}")
 
+    for hit in fp_sets():
+        bad += 1
+        print(f"XX fingerprint sets: {hit}")
+
     print(f"\n{len(results) - bad}/{len(results)} pass")
     return 1 if bad else 0
 
@@ -271,6 +275,33 @@ def word_tokens():
         hits += [f"{h}: kernel word split written {len(kernel_splits)} times" for h in kernel_splits]
     if len(bits_terms) > 1:
         hits += [f"{h}: whole-bits term written {len(bits_terms)} times" for h in bits_terms]
+    return hits
+
+# fingerprint-set gate: the n-gram, winnow and content-defined-chunk
+# operators share one bloom scorer (Bloom.containment, the only operator call
+# of the BloomHits probe), one hot-key cap (PairBudget.capHot, the only
+# caller of PairBudget.resolve) and one n-gram identity
+# (HashFamily.windowHashSet, the only operator call of the NgramHashes
+# kernel). A second copy of any of them is how the lanes drift apart.
+def fp_sets():
+    repo = os.path.join(os.path.dirname(__file__), "..")
+    ops = os.path.join("src", "main", "scala", "graft", "operators")
+    hits = []
+    for path in sorted(glob.glob(os.path.join(repo, "src", "main", "**", "*.scala"), recursive=True)):
+        rel = os.path.relpath(path, repo)
+        in_ops = rel.startswith(ops + os.sep)
+        name = os.path.basename(path)
+        owner = None  # the def whose body the line is in (the last def above it)
+        for n, line in enumerate(open(path, encoding="utf-8"), 1):
+            d = re.search(r"\bdef (\w+)", line)
+            if d:
+                owner = d.group(1)
+            if in_ops and "bloomHits(" in line and (name, owner) != ("Bloom.scala", "containment"):
+                hits.append(f"{rel}:{n}: bloom probe outside Bloom.containment")
+            if "PairBudget.resolve(" in line and name != "PairBudget.scala":
+                hits.append(f"{rel}:{n}: hot-key cap outside PairBudget.capHot")
+            if in_ops and "HashExpressions.ngramHashes(" in line and name != "HashFamily.scala":
+                hits.append(f"{rel}:{n}: n-gram identity outside HashFamily.windowHashSet")
     return hits
 
 def bench_check(path):

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * bitmap rides the plan as an `addReferenceObj` long-array, the per-gram
   * O(1) bit tests are emitted by `doGenCode` inside whole-stage codegen —
   * the array-`filter`-HOF form was rejected because HOFs are
-  * CodegenFallback; see `score()` below), so the corpus pass has NO
+  * CodegenFallback; see [[containment]]), so the corpus pass has NO
   * explode, NO join and NO shuffle — which also
   * makes the operator stateless-streamable
   * ([[graft.streaming.GraftStreaming]] `decontaminateStream`). The exact
@@ -68,27 +68,36 @@ object Bloom {
     words
   }
 
-  /** (idCol, contamination_bloom) in TWO chained projections: the gram
-    * array materializes under a name first, then the fraction reads that
-    * column. CollapseProject keeps the split (the array is non-cheap and
-    * referenced multiple times), so the tokenize+hash work runs once per
-    * row instead of once per reference. The probe itself is the native
-    * [[graft.functions.BloomHits]] expression — one codegen'd loop with
-    * O(1) bit tests, the bitmap riding the generated class as a
-    * referenced object. A `filter` HOF computes the same thing through
-    * interpreted lambda eval; measured equivalent at corpus scale
-    * (ProbeBloom — gram hashing dominates either way), the native form
-    * is kept for the library-wide no-codegen-fallback discipline.
+  /** The bloom-containment fraction of a DISTINCT fingerprint array: the
+    * share of its fps whose k filter positions are all set, rounded to
+    * 6 dp. The probe is the native [[graft.functions.BloomHits]]
+    * expression (one codegen'd loop of O(1) bit tests, the bitmap riding
+    * the generated class as a referenced object); a `filter` HOF counts
+    * the same through interpreted lambda eval, measured equivalent at
+    * corpus scale (gram hashing dominates), and stays out for the
+    * no-codegen-fallback discipline. The divisor is
+    * `greatest(size, 1)` rather than a `when` guard: an empty array
+    * still scores 0.0, a null one NULL, and with no conditional in the
+    * way subexpression elimination evaluates a twice-referenced `fps`
+    * once. The one scoring definition of every bloom lane (n-gram,
+    * winnow, content-defined chunks; batch and streaming).
     */
-  private def score(corpus: DataFrame, idCol: String, gramArr: Column,
-      words: Array[Long], mBits: Int, k: Int, foldWide: Boolean): DataFrame =
-    corpus.select(col(idCol), gramArr.as("__grams"))
+  private[operators] def containment(fps: Column, bits: Array[Long], mBits: Int, k: Int,
+      foldWide: Boolean): Column =
+    round(graft.functions.HashExpressions.bloomHits(fps, bits, mBits, k, foldWide)
+      .cast("double") / greatest(size(fps), lit(1)), 6)
+
+  /** (idCol, `name`) in TWO chained projections: the fingerprint array
+    * materializes under a name first, then [[containment]] reads that
+    * column. CollapseProject keeps the split (the array is non-cheap and
+    * referenced twice), so the tokenize+hash work runs once per row
+    * whatever the fingerprint expression holds (lambdas included).
+    */
+  private[operators] def score(corpus: DataFrame, idCol: String, fps: Column, name: String,
+      bits: Array[Long], mBits: Int, k: Int, foldWide: Boolean): DataFrame =
+    corpus.select(col(idCol), fps.as("__grams"))
       .select(col(idCol),
-        round(
-          graft.functions.HashExpressions
-            .bloomHits(col("__grams"), words, mBits, k, foldWide)
-            .cast("double") / size(col("__grams")), 6)
-          .as("contamination_bloom"))
+        containment(col("__grams"), bits, mBits, k, foldWide).as(name))
 
   /** Output: (idCol, contamination_bloom) — one projection over the
     * corpus, zero shuffles.
@@ -100,23 +109,20 @@ object Bloom {
     val grams = family.windowHashSet(_: Column, shingle)
     val bits = buildBitsFromHashes(benchmark, grams(col(textCol)),
       family.bloomPositions(_, mBits, k), mBits)
-    score(corpus, idCol, grams(col(textCol)), bits, mBits, k, family.foldWide)
+    score(corpus, idCol, grams(col(textCol)), "contamination_bloom", bits, mBits, k,
+      family.foldWide)
   }
 
   /** The production-lane scoring expression against a pre-built filter —
     * the streaming entry point: build once from the static benchmark,
-    * then score rows statelessly. Single-reference form (the gram array
-    * is evaluated inline); for a batch table prefer
-    * [[ngramContaminationBloom]], whose two-step projection shares it.
+    * then score rows statelessly. The gram array sits inline, referenced
+    * twice, and subexpression elimination evaluates it once; for a batch
+    * table prefer [[ngramContaminationBloom]].
     */
   def contaminationColumn(text: Column, bits: Array[Long], shingle: Int,
-      mBits: Int, k: Int): Column = {
-    val grams = HashFamily.Xxhash.windowHashSet(text, shingle)
-    round(
-      graft.functions.HashExpressions.bloomHits(grams, bits, mBits, k,
-        HashFamily.Xxhash.foldWide)
-        .cast("double") / size(grams), 6)
-  }
+      mBits: Int, k: Int): Column =
+    containment(HashFamily.Xxhash.windowHashSet(text, shingle), bits, mBits, k,
+      HashFamily.Xxhash.foldWide)
 
   /** Build the production-lane filter from a static benchmark table. */
   def buildFilter(benchmark: DataFrame, textCol: String, shingle: Int = 3,

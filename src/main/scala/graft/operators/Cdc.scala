@@ -158,13 +158,14 @@ object Cdc {
   // ([[graft.streaming.GraftStreaming]] cdcDecontaminateStream).
 
   /** Distinct 64-bit chunk fingerprints per document (xxhash64 over the
-    * md5 hex — one map-side kernel chain, the filter's key domain).
+    * md5 hex — one map-side kernel chain, the filter's key domain); an
+    * empty array for a null document.
     */
   private[graft] def chunkFpsWide(text: org.apache.spark.sql.Column,
       minSize: Int, avgBits: Int, maxSize: Int): org.apache.spark.sql.Column =
-    array_distinct(transform(
+    coalesce(array_distinct(transform(
       CdcChunks.chunksCol(text, minSize, avgBits, maxSize),
-      c => xxhash64(c.getField("fp"))))
+      c => xxhash64(c.getField("fp")))), array())
 
   /** Build the catalog filter — driver state bounded by mBits/64 longs
     * regardless of catalog size.
@@ -178,23 +179,16 @@ object Cdc {
 
   /** Stateless scoring column against a pre-built filter: the fraction
     * of the document's distinct chunk fingerprints present in the
-    * catalog bitmap (fp array bound ONCE via the singleton-array
-    * transform — the [[Winnow.contaminationBloomColumn]] discipline).
-    * Empty/null documents chunk to nothing (0/0 would raise under ANSI)
-    * — the lazily-evaluated `when` guard scores them 0.0: an empty
-    * document is trivially uncontaminated, so the streaming gate keeps
-    * it at any threshold.
+    * catalog bitmap ([[Bloom.containment]]). Empty and null documents
+    * chunk to nothing and score 0.0: an empty document is trivially
+    * uncontaminated, so the streaming gate keeps it at any threshold.
     */
   def contaminationBloomColumn(text: org.apache.spark.sql.Column, bits: Array[Long],
       minSize: Int = 32, avgBits: Int = 6, maxSize: Int = 256,
       mBits: Int = 1 << 20, k: Int = 3): org.apache.spark.sql.Column =
-    element_at(
-      transform(array(chunkFpsWide(text, minSize, avgBits, maxSize)), fps =>
-        when(coalesce(size(fps), lit(0)) === 0, lit(0.0))
-          .otherwise(round(graft.functions.HashExpressions
-            .bloomHits(fps, bits, mBits, k, foldWide = true)
-            .cast("double") / size(fps), 6))),
-      1)
+    // bound once through a singleton array: the fp chain's xxhash64 lambda defeats CSE
+    element_at(transform(array(chunkFpsWide(text, minSize, avgBits, maxSize)),
+      fps => Bloom.containment(fps, bits, mBits, k, foldWide = true)), 1)
 
   /** (idCol, cdc_contamination_bloom) — one zero-shuffle projection over
     * the corpus against the cataloged-chunk filter.
@@ -203,59 +197,23 @@ object Cdc {
       idCol: String, textCol: String,
       minSize: Int = 32, avgBits: Int = 6, maxSize: Int = 256,
       mBits: Int = 1 << 20, k: Int = 3): DataFrame =
-    corpus.select(col(idCol),
-      contaminationBloomColumn(col(textCol),
-        buildFilter(catalog, textCol, minSize, avgBits, maxSize, mBits, k),
-        minSize, avgBits, maxSize, mBits, k).as("cdc_contamination_bloom"))
+    Bloom.score(corpus, idCol, chunkFpsWide(col(textCol), minSize, avgBits, maxSize),
+      "cdc_contamination_bloom",
+      buildFilter(catalog, textCol, minSize, avgBits, maxSize, mBits, k), mBits, k,
+      foldWide = true)
 
   /** Shift-robust near-duplicate pairs: documents sharing ≥ `minShared`
     * distinct chunk fingerprints, with the shared count — the
     * [[Winnow.pairs]] contract over content-defined chunks instead of
     * winnowed k-grams (catches re-crawls whose edits BREAK token
-    * n-grams across the whole tail). Candidate generation is
-    * [[PairBudget]]-guarded like every exact miner.
-    *
-    * Both dials auto-derive from the corpus' own chunk-fp profile by
-    * default, exactly the [[Winnow.pairs]] discipline:
-    *  - `budget` ([[PairBudget.Auto]]) bounds candidate generation to a
-    *    linear-in-corpus row budget (manual Cap/Exact override);
-    *  - `minShared = None` sets the report threshold to max(2, p50/20)
-    *    where p50 is the approximate median per-doc distinct-chunk-fp
-    *    count. A document of L bytes carries ~L/avgChunk chunks, so a
-    *    fixed absolute bar that is right for short pages is
-    *    output-explosion on 5 KB documents; near-duplicates share ~p50
-    *    chunks (20× the bar) and survive. Pass `Some(n)` to pin.
-    *    The single per-doc aggregate behind the profile also hands the
-    *    budget resolver its nDocs, saving a second distinct shuffle.
+    * n-grams across the whole tail). Mined by
+    * [[PairBudget.sharedKeyPairs]], which documents both auto-derived
+    * dials; a document of L bytes carries ~L/avgChunk chunks, which is
+    * what the length-scaled `minShared` bar follows here.
     */
   def pairs(df: DataFrame, idCol: String, textCol: String,
       minSize: Int = 32, avgBits: Int = 6, maxSize: Int = 256,
-      minShared: Option[Int] = None, budget: PairBudget = PairBudget.Auto()): DataFrame = {
-    val fpAll = Materialize.once(
-      chunkIndex(df, idCol, textCol, minSize, avgBits, maxSize)
-        .select(col(idCol).as("__id"), col("fp")).distinct())
-    val needsProfile = minShared.isEmpty || budget.isInstanceOf[PairBudget.Auto]
-    val perDoc = if (needsProfile)
-      Some(Materialize.once(fpAll.groupBy(col("__id")).agg(count(lit(1)).as("__n"))))
-    else None
-    val fp = PairBudget.resolve(fpAll, "__id", "fp", budget,
-        knownDocs = perDoc.map(_.count())).fold(fpAll) { cap =>
-      val hot = fpAll.groupBy("fp").agg(count(lit(1)).as("__df"))
-        .where(col("__df") > cap).select(col("fp"))
-      fpAll.join(broadcast(hot), Seq("fp"), "left_anti")
-    }
-    val bar = minShared.getOrElse {
-      // null percentile = empty index (empty corpus / all-empty texts)
-      val row = perDoc.get
-        .agg(expr("approx_percentile(__n, 0.5)").as("__p50"))
-        .first()
-      val p50 = if (row.isNullAt(0)) 0L else row.getLong(0)
-      math.max(2L, p50 / 20L).toInt
-    }
-    fp.as("a").join(fp.as("b"), col("a.fp") === col("b.fp"))
-      .where(col("a.__id") < col("b.__id"))
-      .groupBy(col("a.__id").as("idA"), col("b.__id").as("idB"))
-      .agg(count(lit(1)).cast("long").as("shared"))
-      .where(col("shared") >= bar)
-  }
+      minShared: Option[Int] = None, budget: PairBudget = PairBudget.Auto()): DataFrame =
+    PairBudget.sharedKeyPairs(chunkIndex(df, idCol, textCol, minSize, avgBits, maxSize),
+      idCol, "fp", minShared, budget)
 }

@@ -267,24 +267,39 @@ object Dedup {
     * only shuffle is the per-doc count aggregation, keyed by doc id.
     */
   def ngramContamination(corpus: DataFrame, benchmark: DataFrame,
-      idCol: String, textCol: String, shingle: Int = 3): DataFrame = {
-    // shingle IDENTITY only — string-free hashed n-grams (NgramHashes),
-    // so no shingle strings are ever concatenated or shuffled
-    val grams = (df: DataFrame) => df.select(col(idCol).as("__id"),
-      explode(graft.functions.HashExpressions.ngramHashes(
-        graft.functions.TextFunctions.tokens(col(textCol)), shingle)).as("__sh"))
-    val pool = grams(benchmark).select("__sh").distinct()
-    // ONE pass over the corpus grams: the broadcast pool rides as a hit
-    // marker on a left join, so total and hit counts come out of the same
-    // aggregate — a tot/hits two-branch formulation would re-run the
-    // shingle explode (the dominant cost) once per branch
-    grams(corpus)
-      .join(broadcast(pool.withColumn("__hit", lit(1))), Seq("__sh"), "left")
+      idCol: String, textCol: String, shingle: Int = 3): DataFrame =
+    poolContainment(gramIndex(corpus, idCol, textCol, shingle),
+      gramIndex(benchmark, idCol, textCol, shingle).select("__sh").distinct(),
+      "__sh", idCol, "contamination")
+
+  /** (idCol, `name`): per document of an (__id, keyCol) index of DISTINCT
+    * keys, the fraction of its keys found in `pool` (a distinct keyCol
+    * relation), rounded to 6 dp — the exact containment of
+    * [[ngramContamination]] and [[Winnow.contamination]]. ONE pass over
+    * the index: the broadcast pool rides as a hit marker on a left join,
+    * so total and hit counts come out of the same aggregate — a tot/hits
+    * two-branch formulation would re-run the index's explode (the
+    * dominant cost) once per branch.
+    */
+  private[operators] def poolContainment(index: DataFrame, pool: DataFrame, keyCol: String,
+      idCol: String, name: String): DataFrame =
+    index
+      .join(broadcast(pool.withColumn("__hit", lit(1))), Seq(keyCol), "left")
       .groupBy("__id")
       .agg(count(lit(1)).as("__n"), count(col("__hit")).as("__h"))
       .select(col("__id").as(idCol),
-        round(col("__h").cast("double") / col("__n"), 6).as("contamination"))
-  }
+        round(col("__h").cast("double") / col("__n"), 6).as(name))
+
+  /** (__id, __sh): each document's distinct hashed word `shingle`-grams,
+    * one row per gram. Shingle IDENTITY only — string-free hashed n-grams
+    * ([[HashFamily.Xxhash]]'s window-hash set), so no shingle strings are
+    * ever concatenated or shuffled. The n-gram index of the contamination,
+    * Jaccard and SoftDeDup operators.
+    */
+  private def gramIndex(df: DataFrame, idCol: String, textCol: String,
+      shingle: Int): DataFrame =
+    df.select(col(idCol).as("__id"),
+      explode(HashFamily.Xxhash.windowHashSet(col(textCol), shingle)).as("__sh"))
 
   /** SimHash 64-bit signature over distinct word shingles: per-bit
     * weighted vote of window hashes — near-duplicate texts differ in few
@@ -389,17 +404,10 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       shingle: Int = 3, threshold: Double = 0.5,
       budget: PairBudget = PairBudget.Auto()): DataFrame = {
-    // hashed shingle identities (string-free; see ngramContamination),
-    // materialized once: the index feeds the df-rank pass, the prefix
-    // join, AND the per-pair intersection verify
-    val shAll = materializeOnce(df.select(col(idCol).as("__id"),
-      explode(graft.functions.HashExpressions.ngramHashes(
-        graft.functions.TextFunctions.tokens(col(textCol)), shingle)).as("__sh")))
-    val sh = PairBudget.resolve(shAll, "__id", "__sh", budget).fold(shAll) { cap =>
-      val hot = shAll.groupBy("__sh").agg(count(lit(1)).as("__df"))
-        .where(col("__df") > cap).select(col("__sh"))
-      shAll.join(broadcast(hot), Seq("__sh"), "left_anti")
-    }
+    // hashed shingle identities, materialized once: the index feeds the
+    // budget's df pass, the self-join AND the per-doc sizes
+    val shAll = materializeOnce(gramIndex(df, idCol, textCol, shingle))
+    val sh = PairBudget.capHot(shAll, "__id", "__sh", budget)
     // denominators from the UNCAPPED index: |A| and |B| stay exact even
     // when hot shingles are dropped from candidate generation
     val sizes = shAll.groupBy("__id").agg(count(lit(1)).as("__n"))
@@ -470,9 +478,7 @@ object Dedup {
     */
   def softWeights(df: DataFrame, idCol: String, textCol: String,
       shingle: Int = 2): DataFrame = {
-    val sh = df.select(col(idCol).as("__id"),
-      explode(graft.functions.HashExpressions.ngramHashes(
-        graft.functions.TextFunctions.tokens(col(textCol)), shingle)).as("__sh"))
+    val sh = gramIndex(df, idCol, textCol, shingle)
     val dfreq = sh.groupBy("__sh").agg(count(lit(1)).as("__df"))
     val agg = sh.join(dfreq, "__sh")
       .groupBy(col("__id"))
@@ -526,8 +532,7 @@ object Dedup {
     */
   def refGramCounts(ref: DataFrame, idCol: String, textCol: String,
       shingle: Int = 2): DataFrame =
-    ref.select(explode(graft.functions.HashExpressions.ngramHashes(
-        graft.functions.TextFunctions.tokens(col(textCol)), shingle)).as("__sh"))
+    ref.select(explode(HashFamily.Xxhash.windowHashSet(col(textCol), shingle)).as("__sh"))
       .groupBy("__sh").agg(count(lit(1)).as("__df"))
 
   /** Cross-corpus SoftDeDup: weigh PROBE documents by how much their
@@ -548,18 +553,14 @@ object Dedup {
     * it fits). One left join + one per-doc aggregate — linear, pair-free.
     */
   def softWeightsAgainstCounts(df: DataFrame, idCol: String, textCol: String,
-      counts: DataFrame, shingle: Int = 2): DataFrame = {
-    val sh = df.select(col(idCol).as("__id"),
-      explode(graft.functions.HashExpressions.ngramHashes(
-        graft.functions.TextFunctions.tokens(col(textCol)), shingle)).as("__sh"))
-    sh.join(counts, Seq("__sh"), "left")
+      counts: DataFrame, shingle: Int = 2): DataFrame =
+    gramIndex(df, idCol, textCol, shingle).join(counts, Seq("__sh"), "left")
       .groupBy(col("__id"))
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("__df"), lit(0L)) + lit(1L)).as("sum_df"))
       .select(col("__id").as(idCol), col("n_grams"), col("sum_df"),
         round(col("sum_df").cast("double") / col("n_grams"), 6).as("commonness"),
         round(col("n_grams").cast("double") / col("sum_df"), 6).as("weight"))
-  }
 
   /** [[softWeightsAgainstCounts]] with the reference counts computed
     * in-flight from `ref`. */
@@ -589,8 +590,7 @@ object Dedup {
     */
   def softWeightColumn(text: Column, dfMap: Map[Long, Long],
       shingle: Int = 2): Column = {
-    val grams = graft.functions.HashExpressions.ngramHashes(
-      graft.functions.TextFunctions.tokens(text), shingle)
+    val grams = HashFamily.Xxhash.windowHashSet(text, shingle)
     val n = size(grams).cast("long")
     val sumDf =
       if (dfMap.isEmpty) n

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Link-graph scoring (PageRank) in exact integer arithmetic.
@@ -54,10 +54,22 @@ object Graph {
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int,
       dampN: Long = 85, dampD: Long = 100): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
+    val base = nodes.crossJoin(broadcast(nodes.agg(count(lit(1)).as("n"))))
+    iterate(base, Seq(col("v")), expr(s"$Scale DIV n"),
+      rankUpdateExpr("DIV", "c", "dm", "n", dampN, dampD), edges, iters)
+  }
+
+  /** The synchronous iteration both PageRanks share. `base` carries one
+    * row per node with the columns `keep` and the update read; r0 =
+    * `base` projected to `keep` + r; each round joins ranks to out-degree
+    * (the dangling nodes have none), sums the contributions `r DIV deg`
+    * per destination and the dangling mass `dm`, and projects `base`
+    * (+ dm, + c) through the `update` SQL to the next r.
+    */
+  private def iterate(base: DataFrame, keep: Seq[Column], r0: Column, update: String,
+      edges: DataFrame, iters: Int): DataFrame = {
     val outd = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val nAgg = nodes.agg(count(lit(1)).as("n"))
-    var r = nodes.crossJoin(broadcast(nAgg))
-      .select(col("v"), expr(s"$Scale DIV n").as("r"))
+    var r = base.select(keep :+ r0.as("r"): _*)
     for (_ <- 1 to iters) {
       val rd = Materialize.once(
         r.join(outd, r("v") === outd("src"), "left")
@@ -68,10 +80,9 @@ object Graph {
         .agg(sum(expr("r DIV deg")).as("c"))
       val dang = rd.where(col("deg").isNull)
         .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
-      r = nodes.crossJoin(broadcast(nAgg)).crossJoin(broadcast(dang))
+      r = base.crossJoin(broadcast(dang))
         .join(contrib, Seq("v"), "left")
-        .select(col("v"),
-          expr(rankUpdateExpr("DIV", "c", "dm", "n", dampN, dampD)).as("r"))
+        .select(keep :+ expr(update).as("r"): _*)
     }
     r
   }
@@ -100,36 +111,20 @@ object Graph {
       seeds: DataFrame, iters: Int,
       dampN: Long = 85, dampD: Long = 100): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
-    val outd = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     // seeds restricted to real nodes: a stale seed id must not inflate s
     // (its teleport share would silently vanish from the total mass)
     val seedTbl = seeds.select(col("v")).distinct()
       .join(nodes.select(col("v")), Seq("v"), "left_semi")
     require(!seedTbl.isEmpty,
       "pageRankPersonalized: the seed set is empty (or disjoint from nodes)")
-    val sAgg = seedTbl.agg(count(lit(1)).as("s"))
     val marked = nodes
       .join(seedTbl.withColumn("__isSeed", lit(true)), Seq("v"), "left")
       .select(col("v"), coalesce(col("__isSeed"), lit(false)).as("is_seed"))
-    var r = marked.crossJoin(broadcast(sAgg))
-      .select(col("v"), col("is_seed"),
-        when(col("is_seed"), expr(s"$Scale DIV s")).otherwise(lit(0L)).as("r"))
-    for (_ <- 1 to iters) {
-      val rd = Materialize.once(
-        r.join(outd, r("v") === outd("src"), "left")
-          .select(r("v").as("u"), col("r"), col("deg")))
-      val contrib = rd.where(col("deg").isNotNull)
-        .join(edges, col("u") === edges("src"))
-        .groupBy(edges("dst").as("v"))
-        .agg(sum(expr("r DIV deg")).as("c"))
-      val dang = rd.where(col("deg").isNull)
-        .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
-      r = marked.crossJoin(broadcast(sAgg)).crossJoin(broadcast(dang))
-        .join(contrib, Seq("v"), "left")
-        .select(col("v"), col("is_seed"),
-          expr(pprUpdateExpr("DIV", "c", "dm", "s", "is_seed", dampN, dampD)).as("r"))
-    }
-    r.select(col("v"), col("r"))
+    val base = marked.crossJoin(broadcast(seedTbl.agg(count(lit(1)).as("s"))))
+    iterate(base, Seq(col("v"), col("is_seed")),
+      when(col("is_seed"), expr(s"$Scale DIV s")).otherwise(lit(0L)),
+      pprUpdateExpr("DIV", "c", "dm", "s", "is_seed", dampN, dampD), edges, iters)
+      .select(col("v"), col("r"))
   }
 
   /** `iters` rounds of synchronous min-label propagation over the

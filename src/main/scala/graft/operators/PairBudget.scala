@@ -4,8 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Candidate-generation budget for the exact pair miners
-  * ([[Dedup.ngramJaccardPairs]], [[Winnow.pairs]] and their consumers).
+/** Candidate-generation budget for the exact pair miners, applied by
+  * [[PairBudget.capHot]] for all three: [[Dedup.ngramJaccardPairs]]
+  * (hashed n-grams, exact Jaccard) and, through the shared-key miner
+  * [[PairBudget.sharedKeyPairs]], [[Winnow.pairs]] (winnowed
+  * fingerprints) and [[Cdc.pairs]] (content-defined chunks).
   *
   * The miners are inverted-index self-joins: a key (shingle /
   * fingerprint) appearing in f documents contributes f(f−1)/2 candidate
@@ -99,5 +102,68 @@ object PairBudget {
         // key contributes exactly one pair, still linearly bounded
         else Some(math.max(2L, if (row.isNullAt(0)) 2L else row.getLong(0)))
       }
+  }
+
+  /** `index` under `budget`: itself when the dial resolves to exact,
+    * otherwise without the keys whose document frequency exceeds the cap
+    * (one df aggregate, broadcast as a left-anti probe). `knownDocs` as
+    * in [[resolve]].
+    */
+  def capHot(index: DataFrame, idCol: String, keyCol: String, budget: PairBudget,
+      knownDocs: Option[Long] = None): DataFrame =
+    resolve(index, idCol, keyCol, budget, knownDocs).fold(index) { cap =>
+      val hot = index.groupBy(keyCol).agg(count(lit(1)).as("__df"))
+        .where(col("__df") > cap).select(col(keyCol))
+      index.join(broadcast(hot), Seq(keyCol), "left_anti")
+    }
+
+  /** Candidate near-duplicate pairs (idA < idB, shared) over a posting
+    * index of (idCol, keyCol) rows: document pairs sharing ≥ `minShared`
+    * distinct keys. One self-join on the key + one per-pair count, the
+    * candidates bounded by [[capHot]] (a key capped at df ≤ c contributes
+    * ≤ c(c−1)/2 join rows — the quadratic term is bounded per key, never
+    * corpus-wide).
+    *
+    * Both dials auto-derive from the index's own per-document profile by
+    * default (the knn-family `autoCells` discipline):
+    *  - `budget` ([[Auto]]) bounds candidate generation to a
+    *    linear-in-corpus row budget, capping hot boilerplate keys only
+    *    when the exact join would not fit. Manual [[Cap]]/[[Exact]]
+    *    override.
+    *  - `minShared = None` sets the report bar to max(2, p50/20) distinct
+    *    shared keys, where p50 is the (approximate, bounded-memory)
+    *    median per-document distinct-key count. Keys per document grow
+    *    with document length, so a fixed absolute bar that is right for
+    *    200-token pages is output-explosion on 5 KB documents — the
+    *    length-twin measurement behind this dial (4.39 M winnow pairs at
+    *    minShared=2, SCALE.md r13): scaling with length keeps full
+    *    near-duplicates (which share ~p50 keys, 20× the bar) while
+    *    cutting weak-overlap pairs. Pass `Some(n)` to pin.
+    */
+  private[operators] def sharedKeyPairs(index: DataFrame, idCol: String, keyCol: String,
+      minShared: Option[Int], budget: PairBudget): DataFrame = {
+    val all = Materialize.once(index.select(col(idCol).as("__id"), col(keyCol)).distinct())
+    // ONE per-doc aggregate serves both auto dials: its row count is
+    // nDocs (handed to the budget resolver, saving a second full
+    // distinct shuffle over the index) and its approx-median is the
+    // minShared profile (fixed-memory sketch, never a per-doc collect)
+    val perDoc = if (minShared.isEmpty || budget.isInstanceOf[Auto])
+      Some(Materialize.once(all.groupBy(col("__id")).agg(count(lit(1)).as("__n"))))
+    else None
+    val keys = capHot(all, "__id", keyCol, budget, knownDocs = perDoc.map(_.count()))
+    val bar = minShared.getOrElse {
+      // empty index (empty corpus, or no document yields a key) makes
+      // approx_percentile return null — fall back to the floor
+      val row = perDoc.get
+        .agg(expr("approx_percentile(__n, 0.5)").as("__p50"))
+        .first()
+      val p50 = if (row.isNullAt(0)) 0L else row.getLong(0)
+      math.max(2L, p50 / 20L).toInt
+    }
+    keys.as("a").join(keys.as("b"), col(s"a.$keyCol") === col(s"b.$keyCol"))
+      .where(col("a.__id") < col("b.__id"))
+      .groupBy(col("a.__id").as("idA"), col("b.__id").as("idB"))
+      .agg(count(lit(1)).cast("long").as("shared"))
+      .where(col("shared") >= bar)
   }
 }

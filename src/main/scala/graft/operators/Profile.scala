@@ -37,22 +37,8 @@ object Profile {
     * exactness is for the oracle gate and small-table intake checks.
     */
   def numeric(df: DataFrame, cols: Seq[String],
-      ps: Seq[Double] = Seq(0.25, 0.5, 0.75)): DataFrame = {
-    require(cols.nonEmpty, "numeric profile needs at least one column")
-    val aggs = cols.flatMap { c =>
-      Seq(round(avg(col(c)), 6).as(s"__avg_$c"),
-        round(stddev_samp(col(c)), 6).as(s"__sd_$c")) ++
-        ps.zipWithIndex.map { case (p, i) =>
-          round(percentile(col(c), lit(p)), 6).as(s"__p${i}_$c") }
-    }
-    val one = df.agg(count(lit(1)).as("__total"), aggs: _*)
-    one.select(explode(array(cols.map(c => struct(
-        Seq(lit(c).as("column"), col(s"__avg_$c").as("mean"),
-          col(s"__sd_$c").as("stddev")) ++
-          ps.zipWithIndex.map { case (p, i) =>
-            col(s"__p${i}_$c").as(s"p${(p * 100).round}") }: _*)): _*)).as("__p"))
-      .select("__p.*")
-  }
+      ps: Seq[Double] = Seq(0.25, 0.5, 0.75)): DataFrame =
+    numericBy(df, cols, ps, (c, p) => percentile(c, lit(p)))
 
   /** The 100 TB numeric profile: same output shape as [[numeric]], but
     * percentiles come from the Greenwald-Khanna sketch
@@ -65,14 +51,19 @@ object Profile {
     * the same code runs sketched at scale.
     */
   def numericApprox(df: DataFrame, cols: Seq[String],
-      ps: Seq[Double] = Seq(0.25, 0.5, 0.75), accuracy: Int = 10000): DataFrame = {
+      ps: Seq[Double] = Seq(0.25, 0.5, 0.75), accuracy: Int = 10000): DataFrame =
+    numericBy(df, cols, ps,
+      (c, p) => approx_percentile(c, lit(p), lit(accuracy)).cast("double"))
+
+  /** The numeric profile with the percentile aggregate `pct(column, p)`:
+    * ONE aggregation row, unpivoted to one row per column. */
+  private def numericBy(df: DataFrame, cols: Seq[String], ps: Seq[Double],
+      pct: (Column, Double) => Column): DataFrame = {
     require(cols.nonEmpty, "numeric profile needs at least one column")
     val aggs = cols.flatMap { c =>
       Seq(round(avg(col(c)), 6).as(s"__avg_$c"),
         round(stddev_samp(col(c)), 6).as(s"__sd_$c")) ++
-        ps.zipWithIndex.map { case (p, i) =>
-          round(approx_percentile(col(c), lit(p), lit(accuracy)).cast("double"), 6)
-            .as(s"__p${i}_$c") }
+        ps.zipWithIndex.map { case (p, i) => round(pct(col(c), p), 6).as(s"__p${i}_$c") }
     }
     val one = df.agg(count(lit(1)).as("__total"), aggs: _*)
     one.select(explode(array(cols.map(c => struct(
@@ -252,14 +243,20 @@ object Profile {
     * short of 2^30 — a ≤7% density deficit in the top value range,
     * amortized into the estimator's already ±1.04/√m error band.
     */
-  def hllRegisters(df: DataFrame, hashCol: String, p: Int): DataFrame = {
+  def hllRegisters(df: DataFrame, hashCol: String, p: Int): DataFrame =
+    registers(df, Nil, hashCol, p)
+
+  /** The (groups…, bucket, rho) register table of [[hllRegisters]] and
+    * [[hllRegistersBy]]. */
+  private def registers(df: DataFrame, groups: Seq[Column], hashCol: String,
+      p: Int): DataFrame = {
     require(p >= 7 && p <= 16, s"p must be in [7, 16], got $p")
     val w = HllHashBits - p
     val h = col(hashCol).cast("long")
     val v = shiftright(h, p)
     val rho = when(v === 0, lit(w + 1))
       .otherwise(lit(w + 1) - graft.functions.HashExpressions.binLength(v))
-    df.groupBy((h.bitwiseAND((1L << p) - 1)).cast("long").as("bucket"))
+    df.groupBy(groups :+ (h.bitwiseAND((1L << p) - 1)).cast("long").as("bucket"): _*)
       .agg(max(rho).cast("long").as("rho"))
   }
 
@@ -285,38 +282,15 @@ object Profile {
     * ([[graft.streaming.GraftStreaming]] spec-gates stream == batch).
     */
   def hllRegistersBy(df: DataFrame, groupCol: String, hashCol: String,
-      p: Int): DataFrame = {
-    require(p >= 7 && p <= 16, s"p must be in [7, 16], got $p")
-    val w = HllHashBits - p
-    val h = col(hashCol).cast("long")
-    val v = shiftright(h, p)
-    val rho = when(v === 0, lit(w + 1))
-      .otherwise(lit(w + 1) - graft.functions.HashExpressions.binLength(v))
-    df.groupBy(col(groupCol),
-        (h.bitwiseAND((1L << p) - 1)).cast("long").as("bucket"))
-      .agg(max(rho).cast("long").as("rho"))
-  }
+      p: Int): DataFrame =
+    registers(df, Seq(col(groupCol)), hashCol, p)
 
   /** Per-group raw estimates from a grouped register table: one row per
     * group (group, v_nonzero, s_scaled, estimate) — the [[hllEstimate]]
     * arithmetic applied group-wise.
     */
-  def hllEstimateBy(registers: DataFrame, groupCol: String, p: Int): DataFrame = {
-    val m = 1L << p
-    val sc = (HllHashBits - p) + 2
-    registers.groupBy(col(groupCol))
-      .agg(
-        count(lit(1)).cast("long").as("v_nonzero"),
-        sum(org.apache.spark.sql.GraftBridge.column(
-          org.apache.spark.sql.catalyst.expressions.ShiftLeft(
-            org.apache.spark.sql.catalyst.expressions.Literal(1L),
-            org.apache.spark.sql.GraftBridge.expression(
-              (lit(sc) - col("rho")).cast("int"))))).cast("long").as("__sp"))
-      .select(col(groupCol), col("v_nonzero"),
-        (col("__sp") + (lit(m) - col("v_nonzero")) * (1L << sc)).as("s_scaled"))
-      .withColumn("estimate",
-        round(lit(hllConstant(p)) / col("s_scaled").cast("double"), 6))
-  }
+  def hllEstimateBy(registers: DataFrame, groupCol: String, p: Int): DataFrame =
+    estimate(registers, Seq(col(groupCol)), col(groupCol), p)
 
   /** One-row raw HLL estimate from a register table: the harmonic sum is
     * kept INTEGER by scaling each 2^−rho term to 2^(w+2−rho) (max rho is
@@ -327,17 +301,25 @@ object Profile {
     * cross-engine exact; below ~3m distinct values use exact counting or
     * Spark's HLL++).
     */
-  def hllEstimate(registers: DataFrame, p: Int): DataFrame = {
+  def hllEstimate(registers: DataFrame, p: Int): DataFrame =
+    estimate(registers, Nil, lit(1L << p).as("m"), p)
+
+  /** (lead, v_nonzero, s_scaled, estimate) per `groups` of a register
+    * table: the integer harmonic sum and the one division of
+    * [[hllEstimate]]. */
+  private def estimate(registers: DataFrame, groups: Seq[Column], lead: Column,
+      p: Int): DataFrame = {
     val m = 1L << p
     val sc = (HllHashBits - p) + 2
-    registers.agg(
-      count(lit(1)).cast("long").as("v_nonzero"),
-      sum(org.apache.spark.sql.GraftBridge.column(
-        org.apache.spark.sql.catalyst.expressions.ShiftLeft(
-          org.apache.spark.sql.catalyst.expressions.Literal(1L),
-          org.apache.spark.sql.GraftBridge.expression(
-            (lit(sc) - col("rho")).cast("int"))))).cast("long").as("__sp"))
-      .select(lit(m).as("m"), col("v_nonzero"),
+    registers.groupBy(groups: _*)
+      .agg(
+        count(lit(1)).cast("long").as("v_nonzero"),
+        sum(org.apache.spark.sql.GraftBridge.column(
+          org.apache.spark.sql.catalyst.expressions.ShiftLeft(
+            org.apache.spark.sql.catalyst.expressions.Literal(1L),
+            org.apache.spark.sql.GraftBridge.expression(
+              (lit(sc) - col("rho")).cast("int"))))).cast("long").as("__sp"))
+      .select(lead, col("v_nonzero"),
         (col("__sp") + (lit(m) - col("v_nonzero")) * (1L << sc)).as("s_scaled"))
       .withColumn("estimate",
         round(lit(hllConstant(p)) / col("s_scaled").cast("double"), 6))

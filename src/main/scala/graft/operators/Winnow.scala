@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.TextFunctions.wordShingles
 import graft.functions.WinnowFunctions.{winnowSelect, winnowSelectLong}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -33,91 +32,32 @@ object Winnow {
   }
 
   /** Candidate near-duplicate pairs: documents sharing ≥ `minShared`
-    * distinct winnowed fingerprints, with the shared count. One
-    * self-join on the fingerprint + one per-pair aggregation — the
+    * distinct winnowed fingerprints, with the shared count — the
     * [[Dedup.ngramJaccardPairs]] shape over an index 2/(w+1) the size.
-    *
-    * Both dials auto-derive from the corpus' winnowed-df profile by
-    * default (the knn-family `autoCells` discipline):
-    *  - `budget` ([[PairBudget.Auto]]) bounds candidate generation to a
-    *    linear-in-corpus row budget, deriving the df cap that drops hot
-    *    boilerplate fingerprints only when the exact join would not fit
-    *    (a fingerprint capped at df ≤ c contributes ≤ c(c−1)/2 join rows
-    *    — the quadratic term is bounded per fingerprint, never
-    *    corpus-wide). Manual [[PairBudget.Cap]]/[[PairBudget.Exact]]
-    *    override.
-    *  - `minShared = None` derives the report threshold from the
-    *    per-document fingerprint profile: max(2, p50/20) distinct shared
-    *    fingerprints, where p50 is the (approximate, bounded-memory)
-    *    median per-doc distinct-fp count. Winnowing emits ~2/(w+1)
-    *    fingerprints per token, so a fixed absolute threshold that is
-    *    right for 200-token pages is output-explosion on 5 KB documents
-    *    — the length-twin measurement behind this dial (4.39 M pairs at
-    *    minShared=2, SCALE.md r13): scaling with document length keeps
-    *    full near-duplicates (which share ~p50 fingerprints, 20× the
-    *    bar) while cutting weak-overlap pairs. Pass `Some(n)` to pin.
+    * Mined by [[PairBudget.sharedKeyPairs]], which documents both
+    * auto-derived dials (the `budget` df cap and the `minShared` bar).
     */
   def pairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, w: Int = 4, minShared: Option[Int] = None,
-      budget: PairBudget = PairBudget.Auto()): DataFrame = {
-    val fpAll = Materialize.once(
-      fingerprints(df, idCol, textCol, k, w)
-        .select(col(idCol).as("__id"), col("fp")).distinct())
-    // ONE per-doc aggregate serves both auto dials: its row count is
-    // nDocs (handed to the budget resolver, saving a second full
-    // distinct shuffle over the index) and its approx-median is the
-    // minShared profile (fixed-memory sketch, never a per-doc collect)
-    val needsProfile = minShared.isEmpty || budget.isInstanceOf[PairBudget.Auto]
-    val perDoc = if (needsProfile)
-      Some(Materialize.once(fpAll.groupBy(col("__id")).agg(count(lit(1)).as("__n"))))
-    else None
-    val fp = PairBudget.resolve(fpAll, "__id", "fp", budget,
-        knownDocs = perDoc.map(_.count())).fold(fpAll) { cap =>
-      val hot = fpAll.groupBy("fp").agg(count(lit(1)).as("__df"))
-        .where(col("__df") > cap).select(col("fp"))
-      fpAll.join(broadcast(hot), Seq("fp"), "left_anti")
-    }
-    val bar = minShared.getOrElse {
-      // empty index (empty corpus, or every doc shorter than k tokens)
-      // makes approx_percentile return null — fall back to the floor
-      val row = perDoc.get
-        .agg(expr("approx_percentile(__n, 0.5)").as("__p50"))
-        .first()
-      val p50 = if (row.isNullAt(0)) 0L else row.getLong(0)
-      math.max(2L, p50 / 20L).toInt
-    }
-    fp.as("a").join(fp.as("b"), col("a.fp") === col("b.fp"))
-      .where(col("a.__id") < col("b.__id"))
-      .groupBy(col("a.__id").as("idA"), col("b.__id").as("idB"))
-      .agg(count(lit(1)).cast("long").as("shared"))
-      .where(col("shared") >= bar)
-  }
+      budget: PairBudget = PairBudget.Auto()): DataFrame =
+    PairBudget.sharedKeyPairs(fingerprints(df, idCol, textCol, k, w), idCol, "fp",
+      minShared, budget)
 
   /** Benchmark contamination through the winnowed index: per corpus
     * document, the fraction of its distinct winnowed fingerprints that
     * appear anywhere in the (winnowed) benchmark pool. The
-    * [[Dedup.ngramContamination]] contract at 2/(w+1) of the index
-    * bytes: the pool is a distinct fingerprint SET (its size is the
-    * benchmark's, not the corpus's), the corpus side is one semi-join +
-    * two counts per document.
+    * [[Dedup.ngramContamination]] contract and plan
+    * ([[Dedup.poolContainment]]) at 2/(w+1) of the index bytes.
     */
   def contamination(corpus: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, benchTextCol: String,
-      k: Int = 3, w: Int = 4): DataFrame = {
-    val corpusFp = Materialize.once(
+      k: Int = 3, w: Int = 4): DataFrame =
+    Dedup.poolContainment(
       fingerprints(corpus, idCol, textCol, k, w)
-        .select(col(idCol), col("fp")).distinct())
-    val pool = fingerprints(bench.select(col(benchTextCol)), benchTextCol,
-        benchTextCol, k, w)
-      .select(col("fp")).distinct()
-    val hits = corpusFp.join(pool, Seq("fp"), "left_semi")
-      .groupBy(col(idCol)).agg(count(lit(1)).as("__h"))
-    corpusFp.groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
-      .join(hits, Seq(idCol), "left")
-      .select(col(idCol),
-        round(coalesce(col("__h"), lit(0L)).cast("double") / col("__n"), 6)
-          .as("winnow_contamination"))
-  }
+        .select(col(idCol).as("__id"), col("fp")).distinct(),
+      fingerprints(bench.select(col(benchTextCol)), benchTextCol, benchTextCol, k, w)
+        .select(col("fp")).distinct(),
+      "fp", idCol, "winnow_contamination")
 
   // ---- Bloom-gated winnow contamination: [[Bloom]]'s mBits-bounded
   // membership filter built over the benchmark's WINNOWED fingerprints —
@@ -134,18 +74,7 @@ object Winnow {
     * distinct. One map-side kernel chain.
     */
   private def winnowFps(text: Column, shingle: Int, w: Int, family: HashFamily): Column =
-    array_distinct(transform(
-      winnowSelectLong(family.windowHashes(text, shingle), w),
-      s => s.getField("fp")))
-
-  private def scoreBloom(corpus: DataFrame, idCol: String, fpArr: Column,
-      bits: Array[Long], mBits: Int, k: Int, foldWide: Boolean): DataFrame =
-    corpus.select(col(idCol), fpArr.as("__fps"))
-      .select(col(idCol),
-        round(graft.functions.HashExpressions
-            .bloomHits(col("__fps"), bits, mBits, k, foldWide)
-            .cast("double") / size(col("__fps")), 6)
-          .as("winnow_contamination_bloom"))
+    array_distinct(winnowSelectLong(family.windowHashes(text, shingle), w).getField("fp"))
 
   /** Build the production filter from a static benchmark table — the
     * streaming entry point's first half.
@@ -166,16 +95,8 @@ object Winnow {
     */
   def contaminationBloomColumn(text: Column, bits: Array[Long],
       shingle: Int = 3, w: Int = 4, mBits: Int = 1 << 20, k: Int = 3): Column =
-    // bind the fingerprint array ONCE via a singleton-array transform —
-    // the lambda variable is evaluated a single time, so the
-    // tokenize/hash/winnow chain never re-runs for the denominator
-    // (the re-evaluation pitfall LineCorrections.clean documents)
-    element_at(
-      transform(array(winnowFps(text, shingle, w, HashFamily.Xxhash)), fps =>
-        round(graft.functions.HashExpressions
-            .bloomHits(fps, bits, mBits, k, HashFamily.Xxhash.foldWide)
-            .cast("double") / size(fps), 6)),
-      1)
+    Bloom.containment(winnowFps(text, shingle, w, HashFamily.Xxhash), bits, mBits, k,
+      HashFamily.Xxhash.foldWide)
 
   /** (idCol, winnow_contamination_bloom) — one zero-shuffle projection
     * over the corpus against the winnowed benchmark filter. Under
@@ -187,7 +108,8 @@ object Winnow {
       idCol: String, textCol: String, shingle: Int = 3, w: Int = 4,
       mBits: Int = 1 << 20, k: Int = 3,
       family: HashFamily = HashFamily.Xxhash): DataFrame =
-    scoreBloom(corpus, idCol, winnowFps(col(textCol), shingle, w, family),
+    Bloom.score(corpus, idCol, winnowFps(col(textCol), shingle, w, family),
+      "winnow_contamination_bloom",
       winnowFilter(benchmark, textCol, shingle, w, mBits, k, family), mBits, k,
       family.foldWide)
 }

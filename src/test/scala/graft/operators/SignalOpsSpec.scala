@@ -54,6 +54,22 @@ class SignalOpsSpec extends AnyFunSuite {
     exactFix.foreach { case (id, e) =>
       assert(bloomFix(id) >= e - 1e-6, s"doc $id: fixture bloom ${bloomFix(id)} < exact $e")
     }
+    // edge text, through both lanes and the streaming gate: null scores
+    // NULL; empty, blank and one-token text score 0.0
+    val edge = Seq((101L, null: String), (102L, ""), (103L, "   "), (104L, "zz"))
+      .toDF("doc_id", "text")
+    val bits = Bloom.buildFilter(bench, "text", shingle = 3, mBits = 1 << 12, k = 3)
+    for (df <- Seq(
+        Bloom.ngramContaminationBloom(edge, bench, "doc_id", "text",
+          shingle = 3, mBits = 1 << 12, k = 3),
+        Bloom.ngramContaminationBloom(edge, bench, "doc_id", "text",
+          shingle = 3, mBits = 1 << 12, k = 3, family = HashFamily.Fixture),
+        edge.select(col("doc_id"), Bloom.contaminationColumn(col("text"), bits, 3, 1 << 12, 3)))) {
+      val got = df.collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+      assert(got == Map(101L -> None, 102L -> Some(0.0), 103L -> Some(0.0), 104L -> Some(0.0)),
+        s"edge rows scored $got")
+    }
   }
 
   test("bloom false-positive inflation stays small at the sized load factor") {

@@ -111,21 +111,67 @@ class WinnowSpec extends AnyFunSuite {
   }
 
   test("bloom lanes: full overlap -> 1.0, disjoint -> 0.0 (both hash families)") {
+    // the batch operator in both families and the streaming gate; rows
+    // 3-6 are edge text: null scores NULL, empty, blank and one-token
+    // text score 0.0
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog today"),
-      (2L, "completely different content with no benchmark words at all")).toDF("doc_id", "text")
+      (2L, "completely different content with no benchmark words at all"),
+      (3L, null: String), (4L, ""), (5L, "   "), (6L, "zz")).toDF("doc_id", "text")
     val bench = Seq(
       (100L, "the quick brown fox jumps over the lazy dog today")).toDF("doc_id", "text")
+    val bits = Winnow.buildFilter(bench, "text", mBits = 1 << 12)
     for (df <- Seq(
         Winnow.contaminationBloom(corpus, bench, "doc_id", "text", mBits = 1 << 12),
         Winnow.contaminationBloom(corpus, bench, "doc_id", "text", mBits = 1 << 12,
-          family = HashFamily.Fixture))) {
-      val got = df.as[(Long, Double)].collect().toMap
-      assert(got(1L) == 1.0, "identical doc: every winnowed fp hits")
+          family = HashFamily.Fixture),
+        corpus.select(col("doc_id"),
+          Winnow.contaminationBloomColumn(col("text"), bits, mBits = 1 << 12)))) {
+      val got = df.collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+      assert(got(1L).contains(1.0), "identical doc: every winnowed fp hits")
       // disjoint text can still alias into set bits at tiny mBits — allow
       // the bloom's own (deterministic) false-positive rate, bounded well
       // below the gate thresholds the operator exists to serve
-      assert(got(2L) < 0.5, s"disjoint doc scored ${got(2L)}")
+      assert(got(2L).exists(_ < 0.5), s"disjoint doc scored ${got(2L)}")
+      assert(got(3L).isEmpty && Seq(4L, 5L, 6L).forall(got(_).contains(0.0)),
+        s"edge rows scored $got")
+    }
+  }
+
+  test("bloom gates score inside whole-stage codegen, with no lambda in the scoring projection") {
+    import graft.functions.BloomHits
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan,
+      WholeStageCodegenExec}
+    val benchText = "the quick brown fox jumps over the lazy dog today"
+    val bench = Seq(Tuple1(benchText)).toDF("text")
+    // a Range source, not a local relation the optimizer would fold away
+    val docs = spark.range(2).select(col("id").as("doc_id"),
+      when(col("id") === 0L, lit(benchText)).otherwise(lit("other words entirely here"))
+        .as("text"))
+    def inStage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case other => other +: other.children.flatMap(inStage)
+    }
+    for ((lane, gate) <- Seq(
+        "winnow" -> Winnow.contaminationBloomColumn(col("text"),
+          Winnow.buildFilter(bench, "text", mBits = 1 << 12), mBits = 1 << 12),
+        "bloom" -> Bloom.contaminationColumn(col("text"),
+          Bloom.buildFilter(bench, "text", mBits = 1 << 12), 3, 1 << 12, 3))) {
+      val kept = KeepRows.matching(docs, "c", gate, _ >= 0.0)
+      assert(kept.count() == 2L)
+      val plan = kept.queryExecution.executedPlan
+      def scoring(ps: Seq[SparkPlan]) = ps.collect {
+        case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[BloomHits])) => p
+      }
+      val all = scoring(plan.collect { case p => p })
+      val staged = scoring(plan.collect { case w: WholeStageCodegenExec => w }
+        .flatMap(w => inStage(w.child)))
+      assert(all.nonEmpty && staged.size == all.size,
+        s"$lane: scoring projection outside whole-stage codegen\n$plan")
+      assert(!all.exists(_.projectList.exists(_.exists(_.isInstanceOf[LambdaFunction]))),
+        s"$lane: lambda in the scoring projection\n$plan")
     }
   }
 
