@@ -155,6 +155,10 @@ def main(sf_dir, out_dir):
         bad += 1
         print(f"XX fingerprint sets: {hit}")
 
+    for hit in index_layout():
+        bad += 1
+        print(f"XX index layout: {hit}")
+
     print(f"\n{len(results) - bad}/{len(results)} pass")
     return 1 if bad else 0
 
@@ -302,6 +306,42 @@ def fp_sets():
                 hits.append(f"{rel}:{n}: hot-key cap outside PairBudget.capHot")
             if in_ops and "HashExpressions.ngramHashes(" in line and name != "HashFamily.scala":
                 hits.append(f"{rel}:{n}: n-gram identity outside HashFamily.windowHashSet")
+    return hits
+
+# index-lifecycle gate: a persistent index has one lifecycle, written in
+# AnnIndex (era write, healing read, staged catalog merge, batch marks). A
+# stream reaches it through one starter (GraftStreaming.ingestEach, the only
+# foreachBatch); an era directory name or a catalog staging step written
+# anywhere else is a second copy of the layout, which is how a built index
+# and a streamed one drifted apart before.
+INDEX_HOME = "AnnIndex.scala"
+FOREACH_BATCH = re.compile(r"\.foreachBatch\b")
+ERA_LITERAL = re.compile(r'"[^"]*batch=')
+STAGING_STEP = re.compile(r"\b(stagingName|swapStaging|tableLocation)\(")
+
+def index_layout():
+    repo = os.path.join(os.path.dirname(__file__), "..")
+    hits = []
+    for path in sorted(glob.glob(os.path.join(repo, "src", "main", "**", "*.scala"), recursive=True)):
+        rel = os.path.relpath(path, repo)
+        name = os.path.basename(path)
+        owner = None  # the def whose body the line is in (the last def above it)
+        for n, line in enumerate(open(path, encoding="utf-8"), 1):
+            code = line.strip()
+            if code.startswith(("*", "//", "/*")):
+                continue
+            d = re.search(r"\bdef (\w+)", line)
+            if d:
+                owner = d.group(1)
+            if FOREACH_BATCH.search(line) and (name, owner) != ("GraftStreaming.scala", "ingestEach"):
+                hits.append(f"{rel}:{n}: foreachBatch outside GraftStreaming.ingestEach")
+            if name == INDEX_HOME:
+                continue
+            if ERA_LITERAL.search(line):
+                hits.append(f"{rel}:{n}: era path literal outside AnnIndex (use writeEra/readEras)")
+            m = STAGING_STEP.search(line)
+            if m:
+                hits.append(f"{rel}:{n}: {m.group(1)} outside AnnIndex (use the staged catalog merge)")
     return hits
 
 def bench_check(path):

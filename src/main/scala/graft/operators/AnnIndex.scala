@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persistent ANN / dedup indexes — the last rung of the 100 TB story.
@@ -22,6 +23,38 @@ import org.apache.spark.sql.functions._
   *    (Spark aligns it to the table's bucketing); the indexed corpus —
   *    the 100 TB side — is never re-shuffled or re-signed.
   *
+  * ==Lifecycle==
+  * Every persistent index is built once and appended forever, by one
+  * lifecycle written here.
+  *
+  *  - Path-based indexes (IVF, IVF-PQ, IVF-SQ, IMI-PQ, the
+  *    [[Cdc.buildCatalogIndex]] chunk catalog) are parquet roots of ERAS,
+  *    `<path>/batch=<era>/<cell dirs>/`, with `_`-prefixed sidecars
+  *    (quantizer, codebooks) beside them. One encoder per layout turns a
+  *    DataFrame into code rows ([[ivfCodeRows]], [[imiPqRows]],
+  *    [[Cdc.catalogRows]]); the batch build and the stream ingest
+  *    ([[graft.streaming.GraftStreaming]] `indexStream*`) both call it.
+  *  - A build REPLACES the root and writes era -1. A stream APPENDS one
+  *    era per microbatch, `batch=<id>` ([[writeEra]]: heal, then overwrite
+  *    that era wholesale, so a replayed batch id is exactly-once by
+  *    idempotent rewrite — no file-sink log pins the file set).
+  *  - Compaction ([[compactIvfPq]]) folds every era into a fresh NEGATIVE
+  *    era below the lowest one, through a manifest and a staged rename.
+  *    Every reader and writer heals a crashed install first
+  *    ([[readEras]], [[writeEra]]).
+  *  - Catalog tables (fingerprint, gram-df) are bucketed session-catalog
+  *    tables, each given by a [[Catalog]]: its partial aggregate, its key
+  *    and its merge aggregate. Build, update and stream ingest all run one
+  *    staged merge ([[mergeCatalog]]): stage `merge(live ∪ partial(delta))`
+  *    (a build stages `partial(ref)`) under the staging name, run the mark
+  *    hook on the staged directory, swap. An update or ingest heals a torn
+  *    swap first; an update of a missing table fails, and only a stream's
+  *    first batch builds the table. A stream's batch mark is stamped
+  *    inside the staged directory, so state and mark publish in one
+  *    rename ([[ingestCatalogBatch]]).
+  *  - Table pairs (minhash bands + `_sigs`, LM unigrams + `_bi`) stage both
+  *    tables before two swaps ([[persistPair]] / [[recoverPair]]).
+  *
   * The reference has no persistent-index surface (its platforms rebuild
   * relations per script); this extends the dedup/ANN family the same way
   * pigpen-parquet extended its io layer — storage layout as an operator
@@ -29,16 +62,123 @@ import org.apache.spark.sql.functions._
   */
 object AnnIndex {
 
+  // ---- the era lifecycle of the path-based indexes (header: Lifecycle) ----
+
+  /** The era a build writes. Microbatch ids are >= 0 and compactions count
+    * down from the lowest era, so a built index takes stream appends and
+    * compactions with no layout change.
+    */
+  private val BuildEra = -1L
+
+  private def fsRoot(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val root = new Path(path)
+    (root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+  }
+
+  /** The one era write: heal a crashed compaction install, then overwrite
+    * `batch=<era>` wholesale, so writing an era id again yields the same
+    * rows (a replayed microbatch is exactly-once). The streaming engine
+    * commits offsets before the sink runs, so a replay carries the same
+    * input.
+    */
+  private[graft] def writeEra(rows: DataFrame, path: String, era: Long,
+      partCols: Seq[String]): Unit = {
+    val (fs, root) = fsRoot(rows.sparkSession, path)
+    recoverCompaction(fs, root)
+    rows.write.mode("overwrite").partitionBy(partCols: _*).parquet(s"$path/batch=$era")
+  }
+
+  /** A build: replace the whole root with the one era [[BuildEra]]. The
+    * caller writes its sidecars afterwards.
+    */
+  private[graft] def buildEra(rows: DataFrame, path: String, partCols: Seq[String]): Unit = {
+    val (fs, root) = fsRoot(rows.sparkSession, path)
+    fs.delete(root, true)
+    writeEra(rows, path, BuildEra, partCols)
+  }
+
+  /** The one healing read of an era layout: a probe never reads a
+    * half-installed compaction.
+    */
+  private[graft] def readEras(spark: SparkSession, path: String): DataFrame = {
+    val (fs, root) = fsRoot(spark, path)
+    recoverCompaction(fs, root)
+    spark.read.parquet(path)
+  }
+
+  /** PQ codebooks as flattened (sub, centroid, values) rows under
+    * `_codebooks/` — the IVF-PQ and IMI-PQ sidecar.
+    */
+  private def writeCodebooks(spark: SparkSession, path: String,
+      books: Array[Array[Array[Float]]]): Unit = {
+    import spark.implicits._
+    books.zipWithIndex.flatMap { case (sub, j) =>
+      sub.zipWithIndex.map { case (cent, ci) => (j, ci, cent.toSeq) }
+    }.toSeq.toDF("sub", "centroid", "values")
+      .write.mode("overwrite").parquet(path + "/_codebooks")
+  }
+
+  private def readCodebooks(spark: SparkSession, path: String): Array[Array[Array[Float]]] =
+    spark.read.parquet(path + "/_codebooks")
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.sortBy(_._2).map(_._3).toArray).toArray
+
+  // ---- the layout encoders: one per layout, shared by build and stream ----
+
+  /** (neighbor_id, __cv): the row shape every quantizer reads. */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
+
+  /** The IVF default-centroid rule: the trained centroid row when given,
+    * else the deterministic quantizer [[Similarity.ivfTopK]] uses (lowest
+    * `nCells` ids).
+    */
+  private def cellsOrDefault(corpus: DataFrame, idCol: String, vecCol: String,
+      nCells: Int, centroids: Option[DataFrame]): DataFrame =
+    centroids.getOrElse(Similarity.defaultCells(vectors(corpus, idCol, vecCol), nCells))
+
+  /** The IVF cell assignment: each `__cv` row takes its nearest centroid's
+    * id as `__cell`, map-side against the broadcast one-row centroid
+    * relation (stream-static in the ingest) — no state, no shuffle.
+    */
+  private def ivfAssigned(rows: DataFrame, centroids: DataFrame): DataFrame =
+    rows.join(broadcast(centroids))
+      .withColumn("__cell",
+        element_at(Similarity.nearestCells(col("__cv"), col("__cells"), 1), 1)("cell"))
+
+  /** The IVF-PQ / IVF-SQ encoder: (neighbor_id, __cell, __codes) rows, with
+    * `encode` the PQ or SQ8 code column.
+    */
+  private[graft] def ivfCodeRows(df: DataFrame, idCol: String, vecCol: String,
+      centroids: DataFrame, encode: Column => Column): DataFrame =
+    ivfAssigned(vectors(df, idCol, vecCol), centroids)
+      .select(col("neighbor_id"), col("__cell"), encode(col("__cv")).as("__codes"))
+
+  /** The IMI-PQ encoder: (neighbor_id, __ca, __cb, __codes) rows against the
+    * `__cellsA`/`__cellsB` half-codebooks. `residual` codes the per-half
+    * residual ([[Similarity.imiResidual]]) instead of the whole vector.
+    */
+  private[graft] def imiPqRows(df: DataFrame, idCol: String, vecCol: String,
+      bookA: DataFrame, bookB: DataFrame, books: Array[Array[Array[Float]]],
+      residual: Boolean): DataFrame =
+    Similarity.imiAssigned(
+        vectors(df, idCol, vecCol).join(broadcast(bookA)).join(broadcast(bookB)),
+        col("__cv"))
+      .select(col("neighbor_id"), col("__ca"), col("__cb"),
+        graft.functions.Pq.encodeCol(
+          if (residual) Similarity.imiResidual(col("__cv")) else col("__cv"),
+          books).as("__codes"))
+
   // ---- IVF: partitioned cell layout ----
 
-  /** Assign every corpus vector to its nearest centroid and write the
-    * assignment table partitioned by `__cell` (columns: neighbor_id,
+  /** Assign every corpus vector to its nearest centroid and build the
+    * assignment layout partitioned by `__cell` (columns: neighbor_id,
     * __cv, __cn, __cell — the exact shape [[Similarity.ivfTopK]] builds
     * in-flight). Centroids default to the same deterministic quantizer
     * as ivfTopK (lowest `nCells` ids) or take a trained
     * [[Similarity.kmeansCells]] row; they are persisted alongside the
-    * data under `_centroids/` (underscore-prefixed: invisible to parquet
-    * readers of `path`), so the probe needs only `path`.
+    * data under `_centroids/`, so the probe needs only `path`.
     *
     * Assignment is map-side against the broadcast centroid array — the
     * only shuffle in the build is the partitioned write's own file
@@ -46,14 +186,10 @@ object AnnIndex {
     */
   def buildIvf(corpus: DataFrame, idCol: String, vecCol: String, path: String,
       nCells: Int = 16, centroids: Option[DataFrame] = None): Unit = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-      l2Norm(col(vecCol)).as("__cn"))
-    val centroidRow = broadcast(centroids.getOrElse(Similarity.defaultCells(c, nCells)))
-    val assigned = c.join(centroidRow) // broadcast 1-row nested-loop: map-side
-      .withColumn("__cell",
-        element_at(Similarity.nearestCells(col("__cv"), col("__cells"), 1), 1)("cell"))
-      .select(col("neighbor_id"), col("__cv"), col("__cn"), col("__cell"))
-    assigned.write.mode("overwrite").partitionBy("__cell").parquet(path)
+    val centroidRow = cellsOrDefault(corpus, idCol, vecCol, nCells, centroids)
+    buildEra(ivfAssigned(vectors(corpus, idCol, vecCol).withColumn("__cn", l2Norm(col("__cv"))),
+        centroidRow).select(col("neighbor_id"), col("__cv"), col("__cn"), col("__cell")),
+      path, Seq("__cell"))
     centroidRow.write.mode("overwrite").parquet(path + "/_centroids")
   }
 
@@ -70,6 +206,7 @@ object AnnIndex {
     */
   def probeIvf(spark: SparkSession, path: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 4): DataFrame = {
+    val idx = readEras(spark, path)
     val centroidRow = broadcast(spark.read.parquet(path + "/_centroids"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
         l2Norm(col(vecCol)).as("__qn"))
@@ -78,8 +215,7 @@ object AnnIndex {
         explode(Similarity.nearestCells(col("__qv"), col("__cells"), nProbe)).as("__probe"))
       .select(col("query_id"), col("__qv"), col("__qn"), col("__probe")("cell").as("__cell"))
     val probed = Materialize.once(q)
-    val idx = pruneCells(spark.read.parquet(path), probed)
-    val scored = idx.join(broadcast(probed), "__cell")
+    val scored = pruneCells(idx, probed).join(broadcast(probed), "__cell")
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", Similarity.pairCosine)
     Similarity.topKByCosine(scored, k)
@@ -90,41 +226,27 @@ object AnnIndex {
   /** [[buildIvf]]'s compressed sibling: assignments carry PQ CODES instead
     * of raw vectors — at m=8 codes per 64-dim float vector the on-disk
     * index is ~32× smaller, which is the asset that makes a 100 TB ANN
-    * store scannable. Layout: parquet partitioned by `__cell`, centroids
-    * under `_centroids/`, codebooks under `_codebooks/` (flattened
-    * (subspace, centroid, values) rows), so the probe needs only `path`.
+    * store scannable. Sidecars: centroids under `_centroids/`, codebooks
+    * under `_codebooks/`, so the probe needs only `path`.
     */
   def buildIvfPq(corpus: DataFrame, idCol: String, vecCol: String, path: String,
       books: Array[Array[Array[Float]]], nCells: Int = 16,
       centroids: Option[DataFrame] = None): Unit = {
-    val spark = corpus.sparkSession
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-    val centroidRow = broadcast(centroids.getOrElse(Similarity.defaultCells(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-        l2Norm(col(vecCol)).as("__cn")), nCells)))
-    c.join(centroidRow)
-      .withColumn("__cell",
-        element_at(Similarity.nearestCells(col("__cv"), col("__cells"), 1), 1)("cell"))
-      .select(col("neighbor_id"), col("__cell"),
-        graft.functions.Pq.encodeCol(col("__cv"), books).as("__codes"))
-      .write.mode("overwrite").partitionBy("__cell").parquet(path)
-    writeIvfPqMeta(spark, path, centroidRow, books)
+    val centroidRow = cellsOrDefault(corpus, idCol, vecCol, nCells, centroids)
+    buildEra(ivfCodeRows(corpus, idCol, vecCol, centroidRow,
+      graft.functions.Pq.encodeCol(_, books)), path, Seq("__cell"))
+    writeIvfPqMeta(corpus.sparkSession, path, centroidRow, books)
   }
 
-  /** Centroid + codebook sidecars for an IVF-PQ layout (underscore
-    * prefixed: invisible to parquet readers of `path`). Shared by
-    * [[buildIvfPq]] and the streaming ingest path
-    * ([[graft.streaming.GraftStreaming.indexStreamIvfPq]]), which appends
-    * code rows but never changes the quantizer.
+  /** Centroid + codebook sidecars for an IVF-PQ layout — written by
+    * [[buildIvfPq]], or first by a stream-first setup whose ingest
+    * ([[graft.streaming.GraftStreaming.indexStreamIvfPq]]) appends code
+    * rows but never changes the quantizer.
     */
   def writeIvfPqMeta(spark: SparkSession, path: String, centroids: DataFrame,
       books: Array[Array[Array[Float]]]): Unit = {
     centroids.write.mode("overwrite").parquet(path + "/_centroids")
-    import spark.implicits._
-    books.zipWithIndex.flatMap { case (sub, j) =>
-      sub.zipWithIndex.map { case (cent, ci) => (j, ci, cent.toSeq) }
-    }.toSeq.toDF("sub", "centroid", "values")
-      .write.mode("overwrite").parquet(path + "/_codebooks")
+    writeCodebooks(spark, path, books)
   }
 
   /** ADC top-k against a [[buildIvfPq]] index: probed cell ids plan as
@@ -135,14 +257,8 @@ object AnnIndex {
     */
   def probeIvfPq(spark: SparkSession, path: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 4): DataFrame = {
-    // a crashed compaction install leaves a complete staged era: heal it
-    // before the scan so the probe never reads a partial layout
-    val rootPath = new org.apache.hadoop.fs.Path(path)
-    recoverCompaction(rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration), rootPath)
-    val books: Array[Array[Array[Float]]] = spark.read.parquet(path + "/_codebooks")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3).toArray).toArray
+    val idx = readEras(spark, path)
+    val books = readCodebooks(spark, path)
     val ksub = books(0).length
     val centroidRow = broadcast(spark.read.parquet(path + "/_centroids"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
@@ -152,9 +268,8 @@ object AnnIndex {
         explode(Similarity.nearestCells(col("__qv"), col("__cells"), nProbe)).as("__probe"))
       .select(col("query_id"), col("__lut"), col("__probe")("cell").as("__cell"))
     val probed = Materialize.once(q)
-    val idx = pruneCells(spark.read.parquet(path), probed)
     graft.functions.Pq.rankTail(
-      idx.join(broadcast(probed), "__cell")
+      pruneCells(idx, probed).join(broadcast(probed), "__cell")
         .where(col("query_id") =!= col("neighbor_id"))
         .withColumn("adist", graft.functions.Pq.adcCol(col("__lut"), col("__codes"), ksub))
         .where(col("adist").isNotNull),
@@ -185,32 +300,23 @@ object AnnIndex {
   /** [[buildIvfPq]]'s scalar-quantized sibling (faiss `IVF<n>,SQ8`):
     * assignments carry per-dimension uint8 codes — 4× smaller than raw
     * float32 with NO trained codebooks (the quantizer is the corpus's
-    * per-dimension min/max, one aggregate over `dim` keys). Layout:
-    * parquet partitioned by `__cell`, centroids under `_centroids/`,
-    * the (dim, mn, mx) bounds under `_sqbounds/`, so the probe needs
-    * only `path`.
+    * per-dimension min/max, one aggregate over `dim` keys). Sidecars:
+    * centroids under `_centroids/`, the (dim, mn, mx) bounds under
+    * `_sqbounds/`, so the probe needs only `path`.
     */
   def buildIvfSq(corpus: DataFrame, idCol: String, vecCol: String, path: String,
       nCells: Int = 16, centroids: Option[DataFrame] = None,
       bounds: Option[(Array[Double], Array[Double])] = None): Unit = {
-    val spark = corpus.sparkSession
     val (mins, maxs) = bounds.getOrElse(graft.functions.Sq.trainBounds(corpus, vecCol))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-    val centroidRow = broadcast(centroids.getOrElse(Similarity.defaultCells(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-        l2Norm(col(vecCol)).as("__cn")), nCells)))
-    c.join(centroidRow)
-      .withColumn("__cell",
-        element_at(Similarity.nearestCells(col("__cv"), col("__cells"), 1), 1)("cell"))
-      .select(col("neighbor_id"), col("__cell"),
-        graft.functions.Sq.encodeCol(col("__cv"), mins, maxs).as("__codes"))
-      .write.mode("overwrite").partitionBy("__cell").parquet(path)
-    writeIvfSqMeta(spark, path, centroidRow, mins, maxs)
+    val centroidRow = cellsOrDefault(corpus, idCol, vecCol, nCells, centroids)
+    buildEra(ivfCodeRows(corpus, idCol, vecCol, centroidRow,
+      graft.functions.Sq.encodeCol(_, mins, maxs)), path, Seq("__cell"))
+    writeIvfSqMeta(corpus.sparkSession, path, centroidRow, mins, maxs)
   }
 
   /** Centroid + quantizer-bounds sidecars for an IVF-SQ layout (the
-    * [[writeIvfPqMeta]] contract). Shared by [[buildIvfSq]] and
-    * stream-first setups — persist the quantizer, then
+    * [[writeIvfPqMeta]] contract). Stream-first setups persist the
+    * quantizer here, then
     * [[graft.streaming.GraftStreaming.indexStreamIvfSq]] appends forever
     * (it reads BOTH sidecars from `path`, so streamed codes cannot
     * disagree with the persisted quantizer).
@@ -225,17 +331,10 @@ object AnnIndex {
       .write.mode("overwrite").parquet(path + "/_sqbounds")
   }
 
-  /** ADC top-k against a [[buildIvfSq]] index: probed cell ids plan as
-    * literal partition filters (the probeIvf pruning discipline),
-    * scoring reads uint8 codes against the raw query vector — dim
-    * multiply-adds per pair, no per-query LUT memory (the structural
-    * difference from PQ). Identical results to
-    * [[graft.functions.Sq.ivfTopK]] with the same quantizer and bounds.
-    */
   /** The (mins, maxs) quantizer bounds persisted beside an IVF-SQ index —
     * the quantizer lives WITH the index, so probes and streaming ingest
     * read it from `path` and can never disagree with the build about the
-    * affine domain (the indexStreamImiPq `_meta` lesson, made structural).
+    * affine domain.
     */
   private[graft] def readSqBounds(spark: SparkSession, path: String): (Array[Double], Array[Double]) = {
     val boundRows = spark.read.parquet(path + "/_sqbounds")
@@ -245,12 +344,16 @@ object AnnIndex {
     (boundRows.map(_.getDouble(1)), boundRows.map(_.getDouble(2)))
   }
 
+  /** ADC top-k against a [[buildIvfSq]] index: probed cell ids plan as
+    * literal partition filters (the probeIvf pruning discipline),
+    * scoring reads uint8 codes against the raw query vector — dim
+    * multiply-adds per pair, no per-query LUT memory (the structural
+    * difference from PQ). Identical results to
+    * [[graft.functions.Sq.ivfTopK]] with the same quantizer and bounds.
+    */
   def probeIvfSq(spark: SparkSession, path: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 4): DataFrame = {
-    // heal a crashed compaction install before the scan (probeIvfPq's
-    // discipline — the SQ layout compacts through the same era machinery)
-    val rootPath = new org.apache.hadoop.fs.Path(path)
-    recoverCompaction(rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration), rootPath)
+    val idx = readEras(spark, path)
     val (mins, maxs) = readSqBounds(spark, path)
     val centroidRow = broadcast(spark.read.parquet(path + "/_centroids"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
@@ -259,9 +362,8 @@ object AnnIndex {
         explode(Similarity.nearestCells(col("__qv"), col("__cells"), nProbe)).as("__probe"))
       .select(col("query_id"), col("__qv"), col("__probe")("cell").as("__cell"))
     val probed = Materialize.once(q)
-    val idx = pruneCells(spark.read.parquet(path), probed)
     graft.functions.Pq.rankTail(
-      idx.join(broadcast(probed), "__cell")
+      pruneCells(idx, probed).join(broadcast(probed), "__cell")
         .where(col("query_id") =!= col("neighbor_id"))
         .withColumn("adist",
           graft.functions.Sq.adcCol(col("__qv"), col("__codes"), mins, maxs))
@@ -275,52 +377,42 @@ object AnnIndex {
     * planning time. At 10⁹ vectors this is the index whose BUILD is also
     * sublinear in the cell count: assignment scores 2√c half-centroids
     * per vector ([[Similarity.imiTopK]]'s boundary argument), and the
-    * on-disk asset stays m bytes per vector.
+    * on-disk asset stays m bytes per vector. `residual = true` stores
+    * per-half-residual codes (the production accuracy dial at fixed m —
+    * train `books` with Pq.trainResidualImi); the flag is persisted in
+    * `_meta` so the probe builds its LUTs from the same residual.
     */
   def buildImiPq(corpus: DataFrame, idCol: String, vecCol: String, path: String,
       books: Array[Array[Array[Float]]], nPerHalf: Int = 8,
       codebooks: Option[(DataFrame, DataFrame)] = None,
       residual: Boolean = false): Unit = {
-    val spark = corpus.sparkSession
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val (bookA, bookB) = codebooks match {
       case Some((a, b)) =>
         (a.withColumnRenamed("__cells", "__cellsA"),
           b.withColumnRenamed("__cells", "__cellsB"))
-      case None => Similarity.imiDefaultBooks(c, nPerHalf)
+      case None => Similarity.imiDefaultBooks(vectors(corpus, idCol, vecCol), nPerHalf)
     }
-    // residual = true stores per-half-residual codes (the production
-    // accuracy dial at fixed m — train `books` with Pq.trainResidualImi);
-    // the flag is persisted in _meta so the probe builds its LUTs from
-    // the same per-probe residual
-    Similarity.imiAssigned(c.join(broadcast(bookA)).join(broadcast(bookB)), col("__cv"))
-      .select(col("neighbor_id"), col("__ca"), col("__cb"),
-        graft.functions.Pq.encodeCol(
-          if (residual) Similarity.imiResidual(col("__cv")) else col("__cv"),
-          books).as("__codes"))
-      .write.mode("overwrite").partitionBy("__ca", "__cb").parquet(path)
-    writeImiPqMeta(spark, path, bookA, bookB, books, residual)
+    buildEra(imiPqRows(corpus, idCol, vecCol, bookA, bookB, books, residual),
+      path, Seq("__ca", "__cb"))
+    writeImiPqMeta(corpus.sparkSession, path, bookA, bookB, books, residual)
   }
 
   /** Half-codebook + PQ-codebook sidecars for an IMI-PQ layout — the
-    * [[writeIvfPqMeta]] sibling, shared by [[buildImiPq]] and the
-    * streaming ingest ([[graft.streaming.GraftStreaming.indexStreamImiPq]]
-    * appends code rows but never changes the quantizer). `bookA`/`bookB`
-    * must already carry `__cellsA`/`__cellsB` columns
-    * ([[Similarity.imiDefaultBooks]]'s shape).
+    * [[writeIvfPqMeta]] sibling, written by [[buildImiPq]] or first by a
+    * stream-first setup
+    * ([[graft.streaming.GraftStreaming.indexStreamImiPq]] appends code rows
+    * but never changes the quantizer). `bookA`/`bookB` must already carry
+    * `__cellsA`/`__cellsB` columns ([[Similarity.imiDefaultBooks]]'s shape).
     */
   def writeImiPqMeta(spark: SparkSession, path: String, bookA: DataFrame,
       bookB: DataFrame, books: Array[Array[Array[Float]]],
       residual: Boolean = false): Unit = {
     bookA.write.mode("overwrite").parquet(path + "/_cellsA")
     bookB.write.mode("overwrite").parquet(path + "/_cellsB")
-    import spark.implicits._
-    books.zipWithIndex.flatMap { case (sub, j) =>
-      sub.zipWithIndex.map { case (cent, ci) => (j, ci, cent.toSeq) }
-    }.toSeq.toDF("sub", "centroid", "values")
-      .write.mode("overwrite").parquet(path + "/_codebooks")
+    writeCodebooks(spark, path, books)
     // one-row layout descriptor; absent (pre-r12 indexes) reads as
     // whole-vector codes
+    import spark.implicits._
     Seq(residual).toDF("residual")
       .write.mode("overwrite").parquet(path + "/_meta")
   }
@@ -334,8 +426,7 @@ object AnnIndex {
     * signal).
     */
   private[graft] def imiPqResidual(spark: SparkSession, path: String): Boolean = {
-    val meta = new org.apache.hadoop.fs.Path(path + "/_meta")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, meta) = fsRoot(spark, path + "/_meta")
     if (!fs.exists(meta)) false
     else spark.read.parquet(meta.toString).head().getAs[Boolean]("residual")
   }
@@ -353,14 +444,8 @@ object AnnIndex {
       corpus: DataFrame, idCol: String, vecCol: String, k: Int,
       nProbe: Int = 4, refine: Int = 3): DataFrame = {
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    // a crashed compaction install leaves a complete staged era: heal it
-    // before the scan (the probeIvfPq discipline on the two-level layout)
-    val rootPath = new org.apache.hadoop.fs.Path(path)
-    recoverCompaction(rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration), rootPath)
-    val books: Array[Array[Array[Float]]] = spark.read.parquet(path + "/_codebooks")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3).toArray).toArray
+    val idx = readEras(spark, path)
+    val books = readCodebooks(spark, path)
     val ksub = books(0).length
     val bookA = broadcast(spark.read.parquet(path + "/_cellsA"))
     val bookB = broadcast(spark.read.parquet(path + "/_cellsB"))
@@ -377,7 +462,6 @@ object AnnIndex {
         graft.functions.Pq.lutCol(qVec, books).as("__lut"),
         col("__ca"), col("__cb"))
     val probed = Materialize.once(q)
-    val idx = spark.read.parquet(path)
     def pruneOn(c: String) = {
       val t = idx.schema(c).dataType
       val vs = probed.select(col(c)).distinct().collect().map(r => lit(r.get(0)).cast(t))
@@ -395,43 +479,40 @@ object AnnIndex {
       queries, corpus, idCol, vecCol, k)
   }
 
-  /** Compact a streamed IVF-PQ index
-    * ([[graft.streaming.GraftStreaming.indexStreamIvfPq]] appends one
-    * `batch=<id>` directory per microbatch — at streaming cadence that is
-    * the classic small-files decay: probe cost grows with FILE count even
-    * when pruned bytes do not). Rewrites every code row into a single
-    * `batch=-1` era with one file per cell partition, preserving the
-    * probe layout and the `_centroids`/`_codebooks` sidecars —
-    * [[probeIvfPq]] results are identical pre/post (spec-gated).
+  /** Compact an IVF-PQ index: streamed eras (one `batch=<id>` directory
+    * per microbatch) are the classic small-files decay — probe cost grows
+    * with FILE count even when pruned bytes do not. Rewrites every code
+    * row into one fresh negative era with one file per cell partition,
+    * preserving the probe layout and the sidecars — [[probeIvfPq]]
+    * results are identical pre/post (spec-gated).
     *
     * Operational contract: run with the ingest STOPPED after a clean
     * `processAllAvailable()`/`stop()` — a trailing batch whose sink write
     * committed but whose checkpoint offset did not would replay AFTER
-    * compaction beside its compacted copy. Compacted eras carry NEGATIVE
-    * batch ids (`batch=-1`, then `batch=-2` on re-compaction, …), which
-    * never collide with real microbatch ids, so ingest resumes against
-    * the same checkpoint and compaction itself is idempotent result-wise
-    * (re-compacting folds the current era into the next one).
+    * compaction beside its compacted copy. Compacted eras count down
+    * from the lowest existing era (`batch=-1` from a stream-only root,
+    * `batch=-2` after a build or a first compaction, …), which never
+    * collide with microbatch ids, so ingest resumes against the same
+    * checkpoint and compaction itself is idempotent result-wise.
     *
-    * Crash discipline (the fingerprint catalog's stage-then-swap applied
-    * to a directory layout): the rewrite lands COMPLETE in a sibling tmp
-    * dir together with a `_COMPACTION_MANIFEST` naming the target era and
-    * the EXACT source dirs folded in, atomically renames to an invisible
+    * Crash discipline (the catalog tables' stage-then-swap applied to a
+    * directory layout): the rewrite lands COMPLETE in a sibling tmp dir
+    * together with a `_COMPACTION_MANIFEST` naming the target era and the
+    * EXACT source dirs folded in, atomically renames to an invisible
     * `.compact_staged` inside the root, and only then are the manifest's
     * source dirs deleted and the staged dir flipped to the target era in
     * one rename. The manifest is what makes every heal SAFE against
-    * concurrent progress: a batch dir ingested AFTER the staging rename
-    * (crash, stream resumed — [[graft.streaming.GraftStreaming.writeIndexBatch]]
-    * also heals before appending) is not in the manifest and can never be
-    * deleted by the install, and the target era name is fresh per
-    * compaction, so a racing second healer replaying the same manifest
-    * can delete only already-deleted sources — never the installed era.
-    * Every crash window is healed by the recovery scan at the next
-    * compact/probe/ingest: staged present → re-run the install from its
-    * manifest; only tmp present → the source dirs are untouched, delete
-    * tmp and start over. No window leaves a silently PARTIAL index:
-    * readers during the install see missing data only if they race the
-    * stop-the-world maintenance op itself.
+    * concurrent progress: an era written AFTER the staging rename (crash,
+    * stream resumed — [[writeEra]] also heals before appending) is not in
+    * the manifest and can never be deleted by the install, and the target
+    * era name is fresh per compaction, so a racing second healer
+    * replaying the same manifest can delete only already-deleted sources
+    * — never the installed era. Every crash window is healed by the
+    * recovery scan at the next compact/probe/ingest: staged present →
+    * re-run the install from its manifest; only tmp present → the source
+    * dirs are untouched, delete tmp and start over. No window leaves a
+    * silently PARTIAL index: readers during the install see missing data
+    * only if they race the stop-the-world maintenance op itself.
     */
   def compactIvfPq(spark: SparkSession, path: String): Unit =
     compactEras(spark, path, Seq("neighbor_id", "__codes"), Seq("__cell"))
@@ -443,25 +524,18 @@ object AnnIndex {
   def compactIvfSq(spark: SparkSession, path: String): Unit =
     compactIvfPq(spark, path)
 
-  /** [[compactIvfPq]] on the two-level IMI layout
-    * ([[graft.streaming.GraftStreaming.indexStreamImiPq]] appends one
-    * `batch=<id>` directory per microbatch above the `__ca/__cb`
-    * directory pair): identical era/manifest/staged-swap discipline, one
-    * file per (ca, cb) composite cell after the rewrite, `_cellsA`/
-    * `_cellsB`/`_codebooks` sidecars untouched — [[probeImiPqRefined]]
-    * results are identical pre/post (spec-gated).
+  /** [[compactIvfPq]] on the two-level IMI layout: one file per (ca, cb)
+    * composite cell after the rewrite, sidecars untouched —
+    * [[probeImiPqRefined]] results are identical pre/post (spec-gated).
     */
   def compactImiPq(spark: SparkSession, path: String): Unit =
     compactEras(spark, path, Seq("neighbor_id", "__codes"), Seq("__ca", "__cb"))
 
-  /** [[compactIvfPq]] on the CDC chunk-fp catalog layout
-    * ([[graft.streaming.GraftStreaming.indexStreamCdc]] appends one
-    * `batch=<id>` directory of fp rows above the `__b` bucket
-    * directories): identical era/manifest/staged-swap discipline, PLUS a
-    * distinct — the catalog is a fingerprint SET, and re-crawled
-    * boilerplate would otherwise accumulate one copy per ingest batch
-    * forever. Distinct is exact here because (fp, __b) is the entire
-    * row and __b derives from fp.
+  /** [[compactIvfPq]] on the CDC chunk-fp catalog layout, PLUS a distinct —
+    * the catalog is a fingerprint SET, and re-crawled boilerplate would
+    * otherwise accumulate one copy per ingest batch forever. Distinct is
+    * exact here because (fp, __b) is the entire row and __b derives from
+    * fp.
     */
   def compactCdcCatalog(spark: SparkSession, path: String): Unit =
     compactEras(spark, path, Seq("fp"), Seq("__b"), dedup = true)
@@ -475,15 +549,13 @@ object AnnIndex {
     */
   private def compactEras(spark: SparkSession, path: String,
       dataCols: Seq[String], partCols: Seq[String], dedup: Boolean = false): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, root) = fsRoot(spark, path)
     // refuse a file-sink-logged layout outright: spark.read would serve
     // only the logged files and the install would delete files the log
     // still references — log-unaware compaction corrupts such an index
     require(!fs.exists(new Path(root, "_spark_metadata")),
       s"$path carries a streaming file-sink log (_spark_metadata); " +
-        "era compaction only supports the foreachBatch (writeIndexBatch) layout")
+        "era compaction only supports the era layout (writeEra)")
     recoverCompaction(fs, root) // heal a crashed prior install first
     // everything partition discovery sees is data; sidecars are _-prefixed
     val dataDirs = fs.listStatus(root).filter(s => s.isDirectory &&
@@ -509,8 +581,7 @@ object AnnIndex {
     installStaged(fs, root)
   }
 
-  private def stagedPath(root: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(root, ".compact_staged")
+  private def stagedPath(root: Path) = new Path(root, ".compact_staged")
 
   private val ManifestName = "_COMPACTION_MANIFEST"
 
@@ -522,15 +593,14 @@ object AnnIndex {
     * parquet readers; written into tmp BEFORE the staging rename, so a
     * staged dir always carries the manifest that describes it.
     */
-  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, target: String, sources: Seq[String]): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, ManifestName), true)
+  private def writeManifest(fs: FileSystem, dir: Path, target: String,
+      sources: Seq[String]): Unit = {
+    val out = fs.create(new Path(dir, ManifestName), true)
     try out.write((target +: sources).mkString("\n").getBytes("UTF-8")) finally out.close()
   }
 
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      staged: org.apache.hadoop.fs.Path): (String, Seq[String]) = {
-    val in = fs.open(new org.apache.hadoop.fs.Path(staged, ManifestName))
+  private def readManifest(fs: FileSystem, staged: Path): (String, Seq[String]) = {
+    val in = fs.open(new Path(staged, ManifestName))
     val lines = try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq finally in.close()
     (lines.head, lines.tail)
   }
@@ -550,12 +620,11 @@ object AnnIndex {
     * fine iff the winner installed the era; only a rename that failed
     * with neither dir in place is a real error.
     */
-  private def installStaged(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
+  private def installStaged(fs: FileSystem, root: Path): Unit = {
     val staged = stagedPath(root)
     val (target, sources) = readManifest(fs, staged)
-    sources.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(root, n), true))
-    val targetPath = new org.apache.hadoop.fs.Path(root, target)
+    sources.foreach(n => fs.delete(new Path(root, n), true))
+    val targetPath = new Path(root, target)
     if (!fs.rename(staged, targetPath))
       require(!fs.exists(staged) && fs.exists(targetPath),
         s"compaction flip failed under $root")
@@ -566,17 +635,13 @@ object AnnIndex {
     * finish the install; a staged dir missing either cannot exist (both
     * land in tmp before the staging rename) but is deleted defensively —
     * the source dirs are untouched until the staged rename succeeds.
-    * Called from [[compactIvfPq]], [[probeIvfPq]], and the streaming
-    * ingest ([[graft.streaming.GraftStreaming.writeIndexBatch]]), so a
-    * resumed stream converges a crashed install instead of appending
-    * beside it forever.
+    * Run by every era write and read, so a resumed stream converges a
+    * crashed install instead of appending beside it forever.
     */
-  private[graft] def recoverCompaction(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
+  private def recoverCompaction(fs: FileSystem, root: Path): Unit = {
     val staged = stagedPath(root)
     if (fs.exists(staged)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(staged, "_SUCCESS")) &&
-          fs.exists(new org.apache.hadoop.fs.Path(staged, ManifestName)))
+      if (fs.exists(new Path(staged, "_SUCCESS")) && fs.exists(new Path(staged, ManifestName)))
         installStaged(fs, root)
       else fs.delete(staged, true)
     }
@@ -675,8 +740,8 @@ object AnnIndex {
     * build.
     */
   private def recoverPair(spark: SparkSession, tableName: String, suffix: String): Unit = {
-    recoverFingerprint(spark, tableName)
-    recoverFingerprint(spark, tableName + suffix)
+    recoverSwap(spark, tableName)
+    recoverSwap(spark, tableName + suffix)
     if (!spark.catalog.tableExists(stagingName(tableName)) &&
         spark.catalog.tableExists(stagingName(tableName + suffix)) &&
         spark.catalog.tableExists(tableName))
@@ -693,8 +758,7 @@ object AnnIndex {
       bucketCol: String, buckets: Int): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS `$tableName`")
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val loc = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(warehouse), tableName)
+    val loc = tableLocation(spark, tableName)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
     df.write.mode("overwrite")
@@ -763,23 +827,29 @@ object AnnIndex {
 
   // ---- exact dedup: persistent fingerprint catalog ----
 
-  /** Persist the corpus's exact-dedup state ([[Dedup.exact]] semantics):
-    * one row per distinct canonical-text fingerprint with its winning
-    * (minimum) id and duplicate count, as a bucketed+sorted catalog table
-    * keyed by the fingerprint. The exact-dedup member of the persistent-
-    * index family: screening NEW data against an indexed 100 TB corpus
-    * becomes a delta-sized bucket-aligned join instead of a corpus
-    * re-scan, and re-builds are incremental by construction (union the
-    * delta's fingerprint aggregate with the table and re-aggregate).
+  /** The exact-dedup catalog ([[Dedup.exact]] semantics): one row per
+    * distinct canonical-text fingerprint with its winning (minimum) id and
+    * duplicate count. Min winner and summed counts are associative, so
+    * ingest order cannot change the table.
     */
-  def buildFingerprint(df: DataFrame, idCol: String, textCol: String,
-      tableName: String, buckets: Int = 32): Unit =
-    replaceTableStaged(
-      df.select(col(idCol).as("__id"),
+  private[graft] def fingerprintCatalog(idCol: String, textCol: String): Catalog =
+    Catalog("__fp",
+      _.select(col(idCol).as("__id"),
           graft.functions.TextFunctions.fingerprint(col(textCol)).as("__fp"))
         .groupBy("__fp")
         .agg(min(col("__id")).as("__id"), count(lit(1)).as("__n")),
-      tableName, "__fp", buckets)
+      Seq(min(col("__id")).as("__id"), sum(col("__n")).as("__n")))
+
+  /** Persist the corpus's exact-dedup state as a bucketed+sorted catalog
+    * table keyed by the fingerprint. The exact-dedup member of the
+    * persistent-index family: screening NEW data against an indexed
+    * 100 TB corpus becomes a delta-sized bucket-aligned join instead of a
+    * corpus re-scan, and [[updateFingerprint]] folds deltas in.
+    */
+  def buildFingerprint(df: DataFrame, idCol: String, textCol: String,
+      tableName: String, buckets: Int = 32): Unit =
+    mergeCatalog(df.sparkSession, tableName, fingerprintCatalog(idCol, textCol),
+      df, buckets, onto = false)
 
   /** Screen a delta against a [[buildFingerprint]] index: one row per
     * delta document with `dup_of` = the corpus winner id when its
@@ -791,7 +861,7 @@ object AnnIndex {
     */
   def probeFingerprint(spark: SparkSession, tableName: String, delta: DataFrame,
       idCol: String, textCol: String): DataFrame = {
-    recoverFingerprint(spark, tableName) // heal a crashed staged swap
+    recoverSwap(spark, tableName) // heal a crashed staged swap
     delta.select(col(idCol),
         graft.functions.TextFunctions.fingerprint(col(textCol)).as("__fp"))
       .join(spark.table(tableName).select(col("__fp"), col("__id").as("dup_of")),
@@ -799,45 +869,15 @@ object AnnIndex {
       .select(col(idCol), col("dup_of"))
   }
 
-  /** Fold a delta INTO a [[buildFingerprint]] index: union the delta's
-    * fingerprint aggregate with the table and re-aggregate (min winner,
-    * summed counts — associative, so ingest order cannot change the
-    * result). The table side arrives pre-bucketed; only the delta and the
-    * merged aggregate shuffle. The rewrite is a full table replace —
-    * atomic at the catalog level, the same contract as the build.
+  /** Fold a delta INTO a [[buildFingerprint]] index by the staged merge
+    * (header: Lifecycle). The table side arrives pre-bucketed; only the
+    * delta and the merged aggregate shuffle.
     */
   def updateFingerprint(spark: SparkSession, tableName: String, delta: DataFrame,
-      idCol: String, textCol: String, buckets: Int = 32,
-      stageSidecar: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit = {
-    stageFingerprintUpdate(spark, tableName, delta, idCol, textCol, buckets, stageSidecar)
-    swapStaging(spark, tableName)
-  }
-
-  /** First half of [[updateFingerprint]]'s stage-then-swap (NOT drop-then-
-    * rewrite: a crash inside a drop-first replace would lose the
-    * ACCUMULATED catalog and leave only the replayed batch after
-    * recovery): the merged state lands complete under the staging name,
-    * then `stageSidecar` runs with the staging table's directory — the
-    * hook the streaming ingest uses to stamp its batch mark INSIDE the
-    * staging dir, so the catalog rename later makes state and mark live
-    * in ONE atomic move (exactly-once counts; see
-    * [[graft.streaming.GraftStreaming.indexStreamFingerprint]]).
-    * Package-visible separately from [[swapStaging]] so the
-    * crash-window spec can stop between the two.
-    */
-  private[graft] def stageFingerprintUpdate(spark: SparkSession, tableName: String,
-      delta: DataFrame, idCol: String, textCol: String, buckets: Int,
-      stageSidecar: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit = {
-    val deltaAgg = delta.select(col(idCol).as("__id"),
-        graft.functions.TextFunctions.fingerprint(col(textCol)).as("__fp"))
-      .groupBy("__fp")
-      .agg(min(col("__id")).as("__id"), count(lit(1)).as("__n"))
-    val merged = spark.table(tableName).unionByName(deltaAgg)
-      .groupBy("__fp")
-      .agg(min(col("__id")).as("__id"), sum(col("__n")).as("__n"))
-    val staging = stagingName(tableName)
-    replaceTable(merged, staging, "__fp", buckets)
-    stageSidecar(tableLocation(spark, staging))
+      idCol: String, textCol: String, buckets: Int = 32): Unit = {
+    recoverSwap(spark, tableName)
+    mergeCatalog(spark, tableName, fingerprintCatalog(idCol, textCol), delta,
+      buckets, onto = true)
   }
 
   // ---- persistent n-gram LM catalog ---------------------------------
@@ -891,9 +931,149 @@ object AnnIndex {
       spark.table(tableName), spark.table(tableName + "_bi"), minCount)
   }
 
+  // ---- catalog tables: one staged merge (header: Lifecycle) ----
+
+  /** A catalog table as the staged merge sees it: `partial` turns a delta
+    * into rows keyed by `key`, and `merge` re-aggregates any union of such
+    * rows grouped by `key`. The merge must be associative, so a table
+    * grown by deltas equals one built from their union.
+    */
+  private[graft] final case class Catalog(key: String,
+      partial: DataFrame => DataFrame, merge: Seq[Column])
+
+  /** The first half of the staged merge: `merge(live ∪ partial(delta))`
+    * when `onto`, else `partial(delta)` alone (a build), lands complete
+    * under the staging name, then `mark` runs with the staging table's
+    * directory. `onto` reads the live table, so a missing one fails here
+    * (TABLE_OR_VIEW_NOT_FOUND) before anything is staged. Package-visible
+    * so the crash-window specs can stop before the swap.
+    */
+  private[graft] def stageMerge(spark: SparkSession, tableName: String,
+      catalog: Catalog, delta: DataFrame, buckets: Int, onto: Boolean,
+      mark: Path => Unit = _ => ()): Unit = {
+    val partial = catalog.partial(delta)
+    val rows = if (!onto) partial else spark.table(tableName).unionByName(partial)
+      .groupBy(catalog.key).agg(catalog.merge.head, catalog.merge.tail: _*)
+    val staging = stagingName(tableName)
+    replaceTable(rows, staging, catalog.key, buckets)
+    mark(tableLocation(spark, staging))
+  }
+
+  /** The one staged merge of every catalog build, update and ingest:
+    * stage, mark, swap. NOT drop-then-rewrite: a crash inside a drop-first
+    * replace would lose the ACCUMULATED catalog. A build (`onto = false`)
+    * replaces the table; an update or ingest heals a torn swap
+    * ([[recoverSwap]]) before it calls this.
+    */
+  private def mergeCatalog(spark: SparkSession, tableName: String, catalog: Catalog,
+      delta: DataFrame, buckets: Int, onto: Boolean,
+      mark: Path => Unit = _ => ()): Unit = {
+    stageMerge(spark, tableName, catalog, delta, buckets, onto, mark)
+    swapStaging(spark, tableName)
+  }
+
+  /** One microbatch of a catalog stream
+    * ([[graft.streaming.GraftStreaming.indexStreamFingerprint]],
+    * [[graft.streaming.GraftStreaming.indexStreamGramDf]]) — package-visible
+    * so the replay specs can drive it with explicit batch ids. Batch ids
+    * at or below the stream's mark are skipped. Otherwise the staged
+    * merge stamps the mark INSIDE the staged directory, so the swap
+    * publishes (state, mark) in one rename: a replay after any crash
+    * either sees the old state without the mark (re-applies, the correct
+    * fold) or the new state with it (skips) — exactly-once counts. The
+    * mark is scoped to (table, CHECKPOINT): batch ids restart at 0 under
+    * a fresh checkpoint, so a per-table mark would silently discard the
+    * first batches of a new stream appending to an existing table.
+    */
+  private[graft] def ingestCatalogBatch(batch: DataFrame, catalog: Catalog,
+      tableName: String, buckets: Int, batchId: Long, checkpoint: String): Unit = {
+    val spark = batch.sparkSession
+    val live = recoverSwap(spark, tableName)
+    if (batchId > (if (live) readBatchMark(spark, tableName, checkpoint) else -1L))
+      mergeCatalog(spark, tableName, catalog, batch, buckets, onto = live, staged => {
+        // other checkpoints' marks must survive the swap
+        if (live) copyMarks(spark, tableName, staged)
+        writeMarkInto(spark, staged, checkpoint, batchId)
+      })
+  }
+
+  private val MarkPrefix = "_INGEST_MARK_"
+
+  /** Checkpoint-identity tag for a mark sidecar file name: scope by the
+    * checkpoint's query uuid, not just its path string — Spark stamps a
+    * fresh uuid into <checkpoint>/metadata whenever the dir is
+    * (re)created, so "operator wiped the checkpoint in place and
+    * restarted" (same path, batch ids back at 0) gets a NEW tag and
+    * starts from mark -1 instead of inheriting the old stream's mark and
+    * silently discarding its first batches. The path string stays in the
+    * digest for distinct checkpoints that carry no metadata (directly
+    * driven batches in specs).
+    */
+  private def markTag(spark: SparkSession, checkpoint: String): String = {
+    val queryId = scala.util.Try {
+      val p = new Path(checkpoint, "metadata")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) "" else {
+        val in = fs.open(p)
+        try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      }
+    }.getOrElse("")
+    java.security.MessageDigest.getInstance("MD5")
+      .digest((checkpoint + " " + queryId).getBytes("UTF-8"))
+      .take(6).map("%02x".format(_)).mkString
+  }
+
+  /** The mark sidecar lives INSIDE the table's data directory
+    * (underscore-prefixed — parquet readers skip it): it dies with the
+    * table and MOVES with the staging-swap rename, which is what makes
+    * (state, mark) one atomic publication.
+    */
+  private def markPath(spark: SparkSession, tableName: String, checkpoint: String): Path =
+    new Path(tableLocation(spark, tableName), MarkPrefix + markTag(spark, checkpoint))
+
+  private def writeMarkInto(spark: SparkSession, dir: Path, checkpoint: String,
+      batchId: Long): Unit = {
+    val p = new Path(dir, MarkPrefix + markTag(spark, checkpoint))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(p, true)
+    try out.write(s"$batchId\n".getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Copy every checkpoint's mark sidecar from the live table dir into
+    * the staging dir, so OTHER streams' progress survives this stream's
+    * swap (each stream only ever overwrites its own tag).
+    */
+  private def copyMarks(spark: SparkSession, tableName: String, stagingDir: Path): Unit = {
+    val live = tableLocation(spark, tableName)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(new Path(live, MarkPrefix + "*"))).getOrElse(Array.empty).foreach { st =>
+      val in = fs.open(st.getPath)
+      val bytes = try in.readAllBytes() finally in.close()
+      val out = fs.create(new Path(stagingDir, st.getPath.getName), true)
+      try out.write(bytes) finally out.close()
+    }
+  }
+
+  /** Unreadable/empty/garbage marks degrade to -1 (one batch re-applies
+    * against the PRE-swap state it describes — safe, because the mark
+    * and the state publish atomically), never a crash loop: a
+    * crash between `fs.create`'s truncate and the write leaves a 0-byte
+    * file in exactly the window this scheme exists to tolerate.
+    */
+  private def readBatchMark(spark: SparkSession, tableName: String, checkpoint: String): Long = {
+    val p = markPath(spark, tableName, checkpoint)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) -1L
+    else scala.util.Try {
+      val in = fs.open(p)
+      try new java.io.BufferedReader(new java.io.InputStreamReader(in)).readLine().trim.toLong
+      finally in.close()
+    }.getOrElse(-1L)
+  }
+
   /** Second half: drop the old table and rename the staging table in. A
     * crash between the two leaves the complete staging table (sidecars
-    * included) for [[recoverFingerprint]].
+    * included) for [[recoverSwap]].
     */
   private[graft] def swapStaging(spark: SparkSession, tableName: String): Unit = {
     val staging = stagingName(tableName)
@@ -902,7 +1082,7 @@ object AnnIndex {
     // in-memory catalog is gone, the files are not — the replaceTable
     // defense): the rename would fail LOCATION_ALREADY_EXISTS. Deleting
     // here is safe: the complete staged table is the durable state, and a
-    // crash before the rename is exactly recoverFingerprint's window.
+    // crash before the rename is exactly recoverSwap's window.
     val loc = tableLocation(spark, tableName)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!spark.catalog.tableExists(tableName) && fs.exists(loc)) fs.delete(loc, true)
@@ -914,30 +1094,16 @@ object AnnIndex {
     * prefixed, invisible to parquet readers) live and MOVE with the
     * table on rename.
     */
-  private[graft] def tableLocation(spark: SparkSession, tableName: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir")), tableName)
+  private[graft] def tableLocation(spark: SparkSession, tableName: String): Path =
+    new Path(new Path(spark.conf.get("spark.sql.warehouse.dir")), tableName)
 
   private[graft] def stagingName(tableName: String): String = tableName + "__staging"
 
-  /** Stage-then-swap single-table replace: the new state lands COMPLETE
-    * under the staging name before the old table is touched — a crash
-    * during the (arbitrarily long, 100 TB) write leaves the old index
-    * fully live, where a drop-first replace would have destroyed it and
-    * left nothing; the remaining drop/rename metadata window is healed
-    * by [[recoverFingerprint]]. Every catalog-index build funnels here.
-    */
-  private def replaceTableStaged(df: DataFrame, tableName: String,
-      bucketCol: String, buckets: Int): Unit = {
-    replaceTable(df, stagingName(tableName), bucketCol, buckets)
-    swapStaging(df.sparkSession, tableName)
-  }
-
-  /** Recover from a crash between [[updateFingerprint]]'s drop and rename:
-    * if the live table is gone but a complete staging table exists, rename
+  /** Recover from a crash between [[swapStaging]]'s drop and rename: if
+    * the live table is gone but a complete staging table exists, rename
     * it in. Returns true when the table exists afterwards.
     */
-  private[graft] def recoverFingerprint(spark: SparkSession, tableName: String): Boolean = {
+  private[graft] def recoverSwap(spark: SparkSession, tableName: String): Boolean = {
     val exists = spark.catalog.tableExists(tableName)
     val staged = spark.catalog.tableExists(stagingName(tableName))
     if (!exists && staged) {
@@ -960,7 +1126,9 @@ object AnnIndex {
     val grams = Dedup.gramPositions(df, idCol, textCol, k)
     val dup = grams.groupBy("__gh").agg(count(lit(1)).as("__c"))
       .where(col("__c") >= 2).select("__gh")
-    replaceTableStaged(dup, tableName, "__gh", buckets)
+    // staged, so a crash during the write leaves the old index live
+    replaceTable(dup, stagingName(tableName), "__gh", buckets)
+    swapStaging(df.sparkSession, tableName)
   }
 
   /** [[Dedup.duplicateSpans]] through a [[buildGramIndex]] table: gram the
@@ -971,7 +1139,7 @@ object AnnIndex {
     */
   def probeSpans(spark: SparkSession, tableName: String, df: DataFrame,
       idCol: String, textCol: String, k: Int = 3, minSpan: Int = 5): DataFrame = {
-    recoverFingerprint(spark, tableName) // heal a crashed staged-build swap
+    recoverSwap(spark, tableName) // heal a crashed staged-build swap
     val grams = Dedup.gramPositions(df, idCol, textCol, k)
     val dupPos = grams.join(spark.table(tableName), Seq("__gh"), "left_semi")
     Dedup.spansFromDupPositions(dupPos, idCol, k, minSpan)
@@ -979,49 +1147,33 @@ object AnnIndex {
 
   // ---- cross-corpus SoftDeDup: persistent gram-df catalog ----
 
-  /** Persist [[Dedup.refGramCounts]] — (__sh, __df) reference gram
-    * document frequencies — as a bucketed+sorted catalog table: the
+  /** The gram-df catalog: [[Dedup.refGramCounts]] — (__sh, __df)
+    * reference gram document frequencies. Frequencies ADD across disjoint
+    * corpora (each doc contributes its distinct grams once), so the merge
+    * is an associative count sum.
+    */
+  private[graft] def gramDfCatalog(textCol: String, shingle: Int): Catalog =
+    Catalog("__sh", Dedup.refGramCounts(_, textCol, shingle),
+      Seq(sum(col("__df")).as("__df")))
+
+  /** Persist the gram-df catalog as a bucketed+sorted catalog table: the
     * reusable half of [[Dedup.softWeightsAgainst]]. Bucketed on __sh, so
     * the index side of every probe join reads its buckets without an
     * Exchange (the [[buildGramIndex]] discipline).
     */
-  def buildGramDf(ref: DataFrame, idCol: String, textCol: String,
+  def buildGramDf(ref: DataFrame, textCol: String,
       tableName: String, shingle: Int = 2, buckets: Int = 32): Unit =
-    replaceTableStaged(Dedup.refGramCounts(ref, idCol, textCol, shingle),
-      tableName, "__sh", buckets)
+    mergeCatalog(ref.sparkSession, tableName, gramDfCatalog(textCol, shingle),
+      ref, buckets, onto = false)
 
-  /** Fold a delta corpus into the gram-df catalog: document frequencies
-    * ADD across disjoint corpora (each doc contributes its distinct grams
-    * once), so the merge is an associative count sum — era append, never
-    * a rebuild. Heals a torn predecessor swap first; the staged
-    * replace-then-swap keeps every crash window recoverable
-    * ([[recoverFingerprint]]). `stageSidecar` is the streaming ingest's
-    * atomic batch-mark hook ([[stageFingerprintUpdate]] contract).
+  /** Fold a delta corpus into the gram-df catalog by the staged merge
+    * (header: Lifecycle) — era append, never a rebuild.
     */
   def updateGramDf(spark: SparkSession, tableName: String, delta: DataFrame,
-      idCol: String, textCol: String, shingle: Int = 2, buckets: Int = 32,
-      stageSidecar: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit = {
-    recoverFingerprint(spark, tableName)
-    stageGramDfUpdate(spark, tableName, delta, idCol, textCol, shingle,
-      buckets, stageSidecar)
-    swapStaging(spark, tableName)
-  }
-
-  /** First half of [[updateGramDf]]'s stage-then-swap — package-visible
-    * separately so the crash-window spec can stop between the two, and
-    * the streaming ingest can stamp its mark into the staged dir before
-    * the one atomic rename publishes (state, mark) together.
-    */
-  private[graft] def stageGramDfUpdate(spark: SparkSession, tableName: String,
-      delta: DataFrame, idCol: String, textCol: String, shingle: Int,
-      buckets: Int,
-      stageSidecar: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit = {
-    val merged = spark.table(tableName)
-      .unionByName(Dedup.refGramCounts(delta, idCol, textCol, shingle))
-      .groupBy("__sh").agg(sum(col("__df")).as("__df"))
-    val staging = stagingName(tableName)
-    replaceTable(merged, staging, "__sh", buckets)
-    stageSidecar(tableLocation(spark, staging))
+      textCol: String, shingle: Int = 2, buckets: Int = 32): Unit = {
+    recoverSwap(spark, tableName)
+    mergeCatalog(spark, tableName, gramDfCatalog(textCol, shingle), delta,
+      buckets, onto = true)
   }
 
   /** The catalog as a counts relation for
@@ -1029,7 +1181,7 @@ object AnnIndex {
     * heals a torn swap first.
     */
   def loadGramDf(spark: SparkSession, tableName: String): DataFrame = {
-    recoverFingerprint(spark, tableName)
+    recoverSwap(spark, tableName)
     spark.table(tableName)
   }
 }

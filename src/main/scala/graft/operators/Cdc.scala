@@ -79,13 +79,11 @@ object Cdc {
     reassembled.unionByName(empties)
   }
 
-  // ---- persistent chunk-fp catalog: the era layout every other
-  // streaming-fed catalog uses ([[AnnIndex]] IVF-PQ/IMI-PQ/IVF-SQ), so a
-  // rolling crawl can GROW the against-side of [[dedupAgainst]] /
-  // [[contaminationBloom]] without batch rebuilds —
-  // [[graft.streaming.GraftStreaming.indexStreamCdc]] appends one
-  // `batch=<id>` directory per microbatch, [[AnnIndex.compactCdcCatalog]]
-  // folds eras (with an exact cross-era distinct — the catalog is a SET).
+  // ---- persistent chunk-fp catalog: an era layout under the
+  // [[AnnIndex]] lifecycle, so a rolling crawl can GROW the against-side
+  // of [[dedupAgainst]] / [[contaminationBloom]] without batch rebuilds;
+  // [[AnnIndex.compactCdcCatalog]] folds eras with an exact cross-era
+  // distinct (the catalog is a SET).
 
   /** Bucket id for a persistent catalog row. Derived from the fp itself,
     * so (fp, __b) is a pure function of chunk content — what makes the
@@ -96,10 +94,10 @@ object Cdc {
   private[graft] def catalogBucket(fp: org.apache.spark.sql.Column, buckets: Int) =
     pmod(xxhash64(fp), lit(buckets.toLong)).cast("int")
 
-  /** The catalog rows ONE ingest contributes (batch build or one
-    * microbatch): the ingest corpus' distinct chunk fps, bucketed.
-    * Deterministic for a fixed input — the property that makes the
-    * streaming sink's wholesale `batch=<id>` rewrite exactly-once.
+  /** The catalog layout's encoder: the rows ONE ingest contributes (batch
+    * build or one microbatch) — the ingest corpus' distinct chunk fps,
+    * bucketed. Deterministic for a fixed input, so a replayed era rewrite
+    * is exactly-once.
     */
   private[graft] def catalogRows(df: DataFrame, textCol: String, buckets: Int,
       minSize: Int, avgBits: Int, maxSize: Int): DataFrame =
@@ -107,33 +105,25 @@ object Cdc {
       .withColumn("__b", catalogBucket(col("fp"), buckets))
 
   /** Build the persistent chunk-fp catalog at `path` from a batch corpus:
-    * fp rows partitioned by `__b` under the initial era `batch=-1` — the
-    * SAME era layout [[graft.streaming.GraftStreaming.indexStreamCdc]]
-    * appends to (real microbatch ids are >= 0; compactions count further
-    * down from the most negative era), so build-once-then-append-forever
-    * needs no layout migration. One shuffle (the distinct), one file per
-    * bucket directory.
+    * fp rows partitioned by `__b` as the build era of the [[AnnIndex]]
+    * lifecycle, which [[graft.streaming.GraftStreaming.indexStreamCdc]]
+    * appends to. One shuffle (the distinct), one file per bucket
+    * directory.
     */
   def buildCatalogIndex(corpus: DataFrame, textCol: String, path: String,
       buckets: Int = 32, minSize: Int = 32, avgBits: Int = 6, maxSize: Int = 256): Unit =
-    catalogRows(corpus, textCol, buckets, minSize, avgBits, maxSize)
-      .repartition(col("__b"))
-      .write.mode("overwrite").partitionBy("__b").parquet(path + "/batch=-1")
+    AnnIndex.buildEra(catalogRows(corpus, textCol, buckets, minSize, avgBits, maxSize)
+      .repartition(col("__b")), path, Seq("__b"))
 
   /** Read a persistent catalog back as the `fp` relation [[dedupAgainst]]
-    * and [[contaminationBloom]] consume. Heals a crashed compaction
-    * install first (the probe-side discipline of every era catalog).
+    * and [[contaminationBloom]] consume, through the healing era read.
     * Cross-era duplicate fps may exist until the next
     * [[AnnIndex.compactCdcCatalog]]; both consumers are set-semantic
     * (anti-join / bloom bits), so duplicates cost bytes, never
     * correctness.
     */
-  def readCatalog(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    AnnIndex.recoverCompaction(
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
-    spark.read.parquet(path).select(col("fp"))
-  }
+  def readCatalog(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    AnnIndex.readEras(spark, path).select(col("fp"))
 
   /** Distill a chunk-fp catalog to a bounded, sorted driver array for the
     * plan-literal stateless streaming gate

@@ -530,8 +530,7 @@ object Dedup {
     * catalog by [[AnnIndex.buildGramDf]] (counts add associatively, so
     * the catalog grows by era append, never a rebuild).
     */
-  def refGramCounts(ref: DataFrame, idCol: String, textCol: String,
-      shingle: Int = 2): DataFrame =
+  def refGramCounts(ref: DataFrame, textCol: String, shingle: Int = 2): DataFrame =
     ref.select(explode(HashFamily.Xxhash.windowHashSet(col(textCol), shingle)).as("__sh"))
       .groupBy("__sh").agg(count(lit(1)).as("__df"))
 
@@ -567,7 +566,7 @@ object Dedup {
   def softWeightsAgainst(df: DataFrame, idCol: String, textCol: String,
       ref: DataFrame, shingle: Int = 2): DataFrame =
     softWeightsAgainstCounts(df, idCol, textCol,
-      refGramCounts(ref, idCol, textCol, shingle), shingle)
+      refGramCounts(ref, textCol, shingle), shingle)
 
   /** Collect a gram-df counts relation into a literal map for the
     * map-side scorer ([[softWeightColumn]]) and the stateless streaming

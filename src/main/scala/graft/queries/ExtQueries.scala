@@ -830,10 +830,10 @@ object ExtQueries {
     import graft.operators.AnnIndex
     val docs = Tables.df(s, d, "documents")
     val ref = docs.where(col("doc_id") % 3 === 0)
-    AnnIndex.buildGramDf(ref.where(col("doc_id") % 2 === 0), "doc_id", "text",
+    AnnIndex.buildGramDf(ref.where(col("doc_id") % 2 === 0), "text",
       "graft_gramdf_idx", shingle = 2)
     AnnIndex.updateGramDf(s, "graft_gramdf_idx",
-      ref.where(col("doc_id") % 2 =!= 0), "doc_id", "text", shingle = 2)
+      ref.where(col("doc_id") % 2 =!= 0), "text", shingle = 2)
     Dedup.softWeightsAgainstCounts(docs, "doc_id", "text",
       AnnIndex.loadGramDf(s, "graft_gramdf_idx"), shingle = 2)
   }
@@ -3588,13 +3588,14 @@ object ExtQueries {
 
   /** Same relation (and same oracle) as q_cdc_dedup_against through the
     * PERSISTENT chunk-fp catalog's FULL lifecycle on the oracled path —
-    * the q_lm_score_indexed discipline applied to the CDC family: era
-    * `batch=-1` batch-built from half the catalog slice
-    * (Cdc.buildCatalogIndex), the other half appended as era `batch=0`
-    * (exactly the indexStreamCdc microbatch write), compacted with the
-    * exact cross-era distinct (AnnIndex.compactCdcCatalog), then read
-    * back through the healing reader and consumed by the same anti-join
-    * — must equal building the catalog in one shot.
+    * the q_lm_score_indexed discipline applied to the CDC family: the
+    * build era from half the catalog slice (Cdc.buildCatalogIndex, which
+    * replaces the root, so every run starts from the same layout), the
+    * other half appended as era 0 through the era write a stream
+    * microbatch uses (AnnIndex.writeEra), compacted with the exact
+    * cross-era distinct (AnnIndex.compactCdcCatalog), then read back
+    * through the healing reader and consumed by the same anti-join — must
+    * equal building the catalog in one shot.
     */
   private val cdcDedupAgainstIndexedQ = q("q_cdc_dedup_against_indexed",
     cdcDedupAgainstQ.oracle.get) { (s, d) =>
@@ -3604,15 +3605,11 @@ object ExtQueries {
       .select(col("doc_id"), concat(col("text"), lit(" "), col("__t2")).as("text"))
     val path = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_cdc_cat_idx_" + Integer.toHexString(d.hashCode)).getAbsolutePath
-    // fresh lifecycle per run: stale compacted eras from a previous run
-    // hold the same fps (deterministic content) but would keep counting
-    // the era id down — start clean so the layout is reproducible
-    val root = new org.apache.hadoop.fs.Path(path)
-    root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
     graft.operators.Cdc.buildCatalogIndex(docs.where(col("doc_id") % 10 === 0), "text", path)
-    graft.operators.Cdc.catalogRows(docs.where(col("doc_id") % 5 === 0 && col("doc_id") % 10 =!= 0),
-        "text", buckets = 32, minSize = 32, avgBits = 6, maxSize = 256)
-      .write.mode("overwrite").partitionBy("__b").parquet(path + "/batch=0")
+    AnnIndex.writeEra(
+      graft.operators.Cdc.catalogRows(docs.where(col("doc_id") % 5 === 0 && col("doc_id") % 10 =!= 0),
+        "text", buckets = 32, minSize = 32, avgBits = 6, maxSize = 256),
+      path, era = 0L, partCols = Seq("__b"))
     AnnIndex.compactCdcCatalog(s, path)
     graft.operators.Cdc.dedupAgainst(corpus, "doc_id", "text",
       graft.operators.Cdc.readCatalog(s, path))

@@ -999,118 +999,67 @@ object GraftStreaming {
       .toDF("key", "ts", "payload", "lo", "hi", "match_payload")
   }
 
-  // ---- streaming ANN index ingest ----
+  // ---- streaming index ingest: the append half of the
+  // [[graft.operators.AnnIndex]] lifecycle (era layout, exactly-once
+  // replay, compaction and crash healing are stated there once) ----
 
-  /** Stream embeddings INTO a persistent IVF-PQ index: each arriving
-    * vector assigns to its coarse cell and encodes to PQ codes map-side
-    * (stream-static broadcast join against the one-row centroid relation
-    * + plan-constant codebooks — no state, no shuffle), and each
-    * microbatch lands as cell-partitioned code rows under its OWN
-    * `batch=<id>` directory in exactly the layout
-    * [[graft.operators.AnnIndex.probeIvfPq]] reads (both `batch` and
-    * `__cell` are discovered partition columns, so cell pruning is
-    * unchanged). The quantizer itself is fixed at ingest time (the faiss
-    * operational split: train/build batch-side —
-    * [[graft.operators.AnnIndex.writeIvfPqMeta]] persists the sidecars —
-    * then append forever; retrain = rebuild).
-    *
-    * EXACTLY-ONCE under replay by idempotent rewrite, NOT the file-sink
-    * `_spark_metadata` log ([[storeStreamParquet]]'s mechanism): a
-    * foreachBatch sink re-invoked with a batch id it already wrote (the
-    * at-least-once contract after a crash between sink write and
-    * checkpoint commit) OVERWRITES `batch=<id>` wholesale — same rows,
-    * same layout, no duplicates ([[writeIndexBatch]]; replay-tested in
-    * GraftStreamingSpec). The log-free layout is what makes
-    * [[graft.operators.AnnIndex.compactIvfPq]] possible: a sink log
-    * pins the visible file set, so log-unaware compaction would corrupt
-    * reads.
+  /** The one index-ingest starter: a checkpointed append query whose sink
+    * runs `sink(microbatch, batchId)`. Every `indexStream*` starts here;
+    * the path-based ones sink into [[graft.operators.AnnIndex.writeEra]].
+    */
+  private def ingestEach(stream: DataFrame, checkpoint: String)(
+      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream.outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => sink(batch, batchId) }
+      .start()
+
+  /** Stream embeddings INTO a persistent IVF-PQ index
+    * ([[graft.operators.AnnIndex.buildIvfPq]] layout): each arriving vector
+    * assigns to its coarse cell and encodes to PQ codes map-side through
+    * the build's encoder (stream-static broadcast join against the one-row
+    * centroid relation — no state, no shuffle). The quantizer is fixed at
+    * ingest time (the faiss operational split: train/build batch-side, or
+    * persist the sidecars with
+    * [[graft.operators.AnnIndex.writeIvfPqMeta]]; then append forever;
+    * retrain = rebuild). Compaction =
+    * [[graft.operators.AnnIndex.compactIvfPq]].
     *
     * `stream` columns: (`idCol`, `vecCol`). Returns the running query.
     */
   def indexStreamIvfPq(stream: DataFrame, idCol: String, vecCol: String,
       path: String, checkpoint: String, centroids: DataFrame,
-      books: Array[Array[Array[Float]]]): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Similarity
-    val centroidRow = broadcast(centroids)
-    val assigned = stream
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-      .join(centroidRow) // stream-static 1-row broadcast join: map-side
-      .withColumn("__cell",
-        element_at(Similarity.nearestCells(col("__cv"), col("__cells"), 1), 1)("cell"))
-      .select(col("neighbor_id"), col("__cell"),
-        graft.functions.Pq.encodeCol(col("__cv"), books).as("__codes"))
-    assigned.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeIndexBatch(batch, path, batchId)
-      }
-      .start()
-  }
-
-  /** The idempotent per-microbatch index write: `batch=<id>` is replaced
-    * wholesale, so replaying a batch id yields byte-equivalent state.
-    * Deterministic input for a given id is guaranteed by the streaming
-    * engine (offsets are committed to the checkpoint BEFORE the sink
-    * runs, so a replay reprocesses the same offset range). Heals a
-    * crashed compaction install first, so a resumed stream converges it
-    * instead of appending beside it forever.
-    */
-  private[graft] def writeIndexBatch(batch: DataFrame, path: String, batchId: Long,
-      partCols: Seq[String] = Seq("__cell")): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    graft.operators.AnnIndex.recoverCompaction(
-      root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration), root)
-    batch.write.mode("overwrite")
-      .partitionBy(partCols: _*)
-      .parquet(s"$path/batch=$batchId")
-  }
+      books: Array[Array[Array[Float]]]): org.apache.spark.sql.streaming.StreamingQuery =
+    ingestEach(graft.operators.AnnIndex.ivfCodeRows(stream, idCol, vecCol, centroids,
+        graft.functions.Pq.encodeCol(_, books)), checkpoint)((batch, id) =>
+      graft.operators.AnnIndex.writeEra(batch, path, id, Seq("__cell")))
 
   /** Stream embeddings INTO a persistent IVF-SQ index
-    * ([[graft.operators.AnnIndex.buildIvfSq]] layout) — the
-    * scalar-quantized sibling of [[indexStreamIvfPq]] with one
-    * structural improvement: the quantizer (centroids AND the
-    * per-dimension SQ bounds) is READ FROM THE INDEX SIDECARS at stream
-    * definition rather than passed by the caller, so streamed codes can
-    * never land in a different affine domain than the batch build — the
-    * indexStreamImiPq `residual`-mismatch class is unrepresentable here.
-    * Assignment + encode are map-side per microbatch; each batch lands
-    * wholesale-overwritten under `batch=<id>` (exactly-once by
-    * idempotent rewrite, [[writeIndexBatch]]); compaction =
-    * [[graft.operators.AnnIndex.compactIvfSq]].
+    * ([[graft.operators.AnnIndex.buildIvfSq]] layout). The quantizer
+    * (centroids AND the per-dimension SQ bounds) is READ FROM THE INDEX
+    * SIDECARS at stream definition rather than passed by the caller, so
+    * streamed codes can never land in a different affine domain than the
+    * batch build. Compaction = [[graft.operators.AnnIndex.compactIvfSq]].
     *
     * `stream` columns: (`idCol`, `vecCol`). Returns the running query.
     */
   def indexStreamIvfSq(stream: DataFrame, idCol: String, vecCol: String,
       path: String, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Similarity
     val spark = stream.sparkSession
     val (mins, maxs) = graft.operators.AnnIndex.readSqBounds(spark, path)
-    val centroidRow = broadcast(spark.read.parquet(path + "/_centroids"))
-    val assigned = stream
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-      .join(centroidRow) // stream-static 1-row broadcast join: map-side
-      .withColumn("__cell",
-        element_at(Similarity.nearestCells(col("__cv"), col("__cells"), 1), 1)("cell"))
-      .select(col("neighbor_id"), col("__cell"),
-        graft.functions.Sq.encodeCol(col("__cv"), mins, maxs).as("__codes"))
-    assigned.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeIndexBatch(batch, path, batchId)
-      }
-      .start()
+    ingestEach(graft.operators.AnnIndex.ivfCodeRows(stream, idCol, vecCol,
+        spark.read.parquet(path + "/_centroids"),
+        graft.functions.Sq.encodeCol(_, mins, maxs)), checkpoint)((batch, id) =>
+      graft.operators.AnnIndex.writeEra(batch, path, id, Seq("__cell")))
   }
 
   /** Stream documents INTO a persistent CDC chunk-fp catalog
     * ([[graft.operators.Cdc.buildCatalogIndex]] layout): each microbatch
-    * chunks map-side via the gear-hash kernel, distincts its own fps (one
-    * bounded shuffle per microbatch — deterministic for the batch's
-    * offset range), and lands wholesale-overwritten under `batch=<id>`
-    * above the `__b` bucket directories — exactly-once by idempotent
-    * rewrite ([[writeIndexBatch]]; the IVF-PQ/IVF-SQ/IMI-PQ discipline).
-    * Cross-batch duplicate fps (re-crawled boilerplate) are tolerated by
-    * every reader ([[graft.operators.Cdc.readCatalog]] feeds set-semantic
-    * consumers) and collapsed by
+    * chunks map-side via the gear-hash kernel and distincts its own fps
+    * (one bounded shuffle per microbatch — deterministic for the batch's
+    * offset range). Cross-batch duplicate fps (re-crawled boilerplate) are
+    * tolerated by every reader ([[graft.operators.Cdc.readCatalog]] feeds
+    * set-semantic consumers) and collapsed by
     * [[graft.operators.AnnIndex.compactCdcCatalog]]'s exact distinct.
     * This is what lets a rolling crawl GROW the decontamination catalog
     * without batch rebuilds; the stateless scoring gate over the result
@@ -1121,36 +1070,24 @@ object GraftStreaming {
   def indexStreamCdc(stream: DataFrame, textCol: String, path: String,
       checkpoint: String, buckets: Int = 32, minSize: Int = 32,
       avgBits: Int = 6, maxSize: Int = 256): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeIndexBatch(
-          graft.operators.Cdc.catalogRows(batch, textCol, buckets,
-            minSize, avgBits, maxSize),
-          path, batchId, partCols = Seq("__b"))
-      }
-      .start()
+    ingestEach(stream, checkpoint)((batch, id) =>
+      graft.operators.AnnIndex.writeEra(
+        graft.operators.Cdc.catalogRows(batch, textCol, buckets, minSize, avgBits, maxSize),
+        path, id, Seq("__b")))
 
-  /** Stream embeddings INTO a persistent IMI-PQ index — the two-level
-    * sibling of [[indexStreamIvfPq]]: each arriving vector assigns to its
-    * (ca, cb) composite cell map-side (two one-row broadcast half-codebook
-    * joins + in-row argmin — [[graft.operators.Similarity.imiTopK]]'s
-    * assignment, no state, no shuffle), encodes to PQ codes, and each
-    * microbatch lands wholesale-overwritten under its own `batch=<id>`
-    * directory above the `__ca/__cb` directory pair — exactly the layout
-    * [[graft.operators.AnnIndex.probeImiPqRefined]] reads (all three are
-    * discovered partition columns; both-level pruning is unchanged).
-    * Exactly-once under replay, sidecar contract, and compaction
-    * ([[graft.operators.AnnIndex.compactImiPq]]) all mirror
-    * [[indexStreamIvfPq]]; `bookA`/`bookB` carry `__cellsA`/`__cellsB`
-    * and are persisted by [[graft.operators.AnnIndex.writeImiPqMeta]]
-    * before the stream starts (train batch-side, append forever).
+  /** Stream embeddings INTO a persistent IMI-PQ index
+    * ([[graft.operators.AnnIndex.buildImiPq]] layout): each arriving vector
+    * assigns to its (ca, cb) composite cell map-side (two one-row
+    * broadcast half-codebook joins + in-row argmin) and encodes to PQ codes
+    * through the build's encoder. `bookA`/`bookB` carry
+    * `__cellsA`/`__cellsB` and are persisted by
+    * [[graft.operators.AnnIndex.writeImiPqMeta]] (or a build) before the
+    * stream starts. Compaction = [[graft.operators.AnnIndex.compactImiPq]].
     */
   def indexStreamImiPq(stream: DataFrame, idCol: String, vecCol: String,
       path: String, checkpoint: String, bookA: DataFrame, bookB: DataFrame,
       books: Array[Array[Array[Float]]],
       residual: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Similarity
     // residual must match the _meta flag writeImiPqMeta persisted — a
     // mismatch would append codes in the wrong domain (whole-vector vs
     // per-half residual) while probeImiPqRefined builds LUTs from _meta,
@@ -1161,231 +1098,41 @@ object GraftStreaming {
       s"indexStreamImiPq residual=$residual contradicts the index _meta at " +
         s"$path (residual=$persisted); streamed codes must share the batch " +
         "build's domain or the probe's ADC LUTs are wrong")
-    val assigned = Similarity.imiAssigned(
-        stream.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-          .join(broadcast(bookA)).join(broadcast(bookB)),
-        col("__cv"))
-      .select(col("neighbor_id"), col("__ca"), col("__cb"),
-        graft.functions.Pq.encodeCol(
-          if (residual) Similarity.imiResidual(col("__cv")) else col("__cv"),
-          books).as("__codes"))
-    assigned.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeIndexBatch(batch, path, batchId, partCols = Seq("__ca", "__cb"))
-      }
-      .start()
+    ingestEach(graft.operators.AnnIndex.imiPqRows(stream, idCol, vecCol,
+        bookA, bookB, books, residual), checkpoint)((batch, id) =>
+      graft.operators.AnnIndex.writeEra(batch, path, id, Seq("__ca", "__cb")))
   }
 
   /** Stream documents INTO the persistent exact-dedup fingerprint catalog
     * ([[graft.operators.AnnIndex.buildFingerprint]] layout): each
-    * microbatch folds into the bucketed table via the associative
-    * (min-winner, summed-count) merge
-    * ([[graft.operators.AnnIndex.updateFingerprint]]; the first batch
-    * builds the table). A sidecar batch mark skips microbatch ids already
-    * ingested, so the normal replay path is a no-op.
-    *
-    * Replay contract, stated honestly: the catalog is an AGGREGATE, so
-    * the `batch=<id>` wholesale-overwrite trick of [[indexStreamIvfPq]]
-    * does not apply. The update is stage-then-swap (the merged state
-    * lands complete under a staging name before the old table drops;
-    * a crash between drop and rename is healed by
-    * [[graft.operators.AnnIndex.recoverFingerprint]] at the next batch),
-    * so no crash can lose accumulated state. Counts are EXACTLY-once:
-    * the batch mark is stamped INSIDE the staging table's directory
-    * (underscore-prefixed sidecar, invisible to parquet readers) before
-    * the swap, so the catalog rename publishes state and mark in ONE
-    * atomic move — a replay after any crash either sees the old state
-    * without the mark (re-applies, which is the correct fold) or the new
-    * state with it (skips). Same discipline as [[indexStreamIvfPq]]'s
-    * batch-era overwrite, adapted to an aggregate that cannot be
-    * wholesale-replayed.
+    * microbatch folds into the bucketed table by the catalog's staged
+    * merge (the first batch builds the table), exactly-once through every
+    * crash window ([[graft.operators.AnnIndex.ingestCatalogBatch]]).
     */
   def indexStreamFingerprint(stream: DataFrame, idCol: String, textCol: String,
       tableName: String, checkpoint: String, buckets: Int = 32)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestFingerprintBatch(batch, idCol, textCol, tableName, buckets, batchId, checkpoint)
-      }
-      .start()
-
-  /** One microbatch of [[indexStreamFingerprint]] — package-visible so the
-    * replay spec can drive it with explicit batch ids. The mark is scoped
-    * to (table, CHECKPOINT): batch ids restart at 0 under a fresh
-    * checkpoint, so a per-table mark would silently discard the first
-    * mark+1 microbatches of a new stream appending to an existing table.
-    */
-  private[graft] def ingestFingerprintBatch(batch: DataFrame, idCol: String,
-      textCol: String, tableName: String, buckets: Int, batchId: Long,
-      checkpoint: String): Unit = {
-    val spark = batch.sparkSession
-    // crash between updateFingerprint's drop and rename leaves the live
-    // name absent but the complete staging table present — rename it in
-    // (the staged mark sidecar rides along, so the replay then skips)
-    val exists = graft.operators.AnnIndex.recoverFingerprint(spark, tableName)
-    // marks live INSIDE the table directory, so they die with the table
-    // (a dropped predecessor of the same name cannot leak a stale mark)
-    // and move with the swap rename — state and mark are one atom
-    val mark = if (exists) readBatchMark(spark, tableName, checkpoint) else -1L
-    if (batchId > mark) {
-      if (exists)
-        graft.operators.AnnIndex.updateFingerprint(spark, tableName, batch,
-          idCol, textCol, buckets,
-          stageSidecar = stagingDir => {
-            // other checkpoints' marks must survive the swap: copy every
-            // mark sidecar from the live dir, then stamp our own
-            copyMarks(spark, tableName, stagingDir)
-            writeMarkInto(spark, stagingDir, checkpoint, batchId)
-          })
-      else {
-        // first batch: build under the STAGING name, stamp the mark into
-        // the staged dir, then swap — the same atomic (state, mark)
-        // publication as the update path. A direct build-then-mark would
-        // leave a crash window where the replay finds the table present
-        // but unmarked and re-MERGES batch 0 onto itself.
-        val staging = graft.operators.AnnIndex.stagingName(tableName)
-        graft.operators.AnnIndex.buildFingerprint(batch, idCol, textCol, staging, buckets)
-        writeMarkInto(spark,
-          graft.operators.AnnIndex.tableLocation(spark, staging), checkpoint, batchId)
-        graft.operators.AnnIndex.swapStaging(spark, tableName)
-      }
-    }
-  }
+    ingestEach(stream, checkpoint)((batch, id) =>
+      graft.operators.AnnIndex.ingestCatalogBatch(batch,
+        graft.operators.AnnIndex.fingerprintCatalog(idCol, textCol),
+        tableName, buckets, id, checkpoint))
 
   /** Rolling-crawl ingest into the cross-corpus SoftDeDup gram-df catalog
-    * ([[graft.operators.AnnIndex.buildGramDf]] family): each microbatch's
+    * ([[graft.operators.AnnIndex.buildGramDf]] layout): each microbatch's
     * distinct-gram document frequencies fold into the bucketed catalog by
-    * the associative count sum — era append, never a batch rebuild — so
-    * [[graft.operators.Dedup.softWeightsAgainstCounts]] probes (and the
+    * its staged merge (the associative count sum), exactly-once through
+    * every crash window ([[graft.operators.AnnIndex.ingestCatalogBatch]]),
+    * so [[graft.operators.Dedup.softWeightsAgainstCounts]] probes (and the
     * distilled [[softDedupStream]] gate after a re-distill) always see
-    * everything ingested so far. Exactly-once through every crash window
-    * by the [[indexStreamFingerprint]] (state, mark)-atomic discipline:
-    * the batch mark is stamped INSIDE the staged table directory before
-    * the one catalog rename publishes both together; replayed batch ids
-    * at or below the mark are skipped, a torn swap heals on the next
-    * batch or load (spec-gated kill-resume matrix in
-    * GraftStreamingSpec).
+    * everything ingested so far.
     */
-  def indexStreamGramDf(stream: DataFrame, idCol: String, textCol: String,
+  def indexStreamGramDf(stream: DataFrame, textCol: String,
       tableName: String, checkpoint: String, shingle: Int = 2,
       buckets: Int = 32): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestGramDfBatch(batch, idCol, textCol, tableName, shingle, buckets,
-          batchId, checkpoint)
-      }
-      .start()
-
-  /** One microbatch of [[indexStreamGramDf]] — package-visible so the
-    * replay spec can drive it with explicit batch ids
-    * ([[ingestFingerprintBatch]] contract, including the
-    * (table, CHECKPOINT) mark scope).
-    */
-  private[graft] def ingestGramDfBatch(batch: DataFrame, idCol: String,
-      textCol: String, tableName: String, shingle: Int, buckets: Int,
-      batchId: Long, checkpoint: String): Unit = {
-    val spark = batch.sparkSession
-    val exists = graft.operators.AnnIndex.recoverFingerprint(spark, tableName)
-    val mark = if (exists) readBatchMark(spark, tableName, checkpoint) else -1L
-    if (batchId > mark) {
-      if (exists)
-        graft.operators.AnnIndex.updateGramDf(spark, tableName, batch,
-          idCol, textCol, shingle, buckets,
-          stageSidecar = stagingDir => {
-            copyMarks(spark, tableName, stagingDir)
-            writeMarkInto(spark, stagingDir, checkpoint, batchId)
-          })
-      else {
-        val staging = graft.operators.AnnIndex.stagingName(tableName)
-        graft.operators.AnnIndex.buildGramDf(batch, idCol, textCol, staging,
-          shingle, buckets)
-        writeMarkInto(spark,
-          graft.operators.AnnIndex.tableLocation(spark, staging), checkpoint, batchId)
-        graft.operators.AnnIndex.swapStaging(spark, tableName)
-      }
-    }
-  }
-
-  private val MarkPrefix = "_INGEST_MARK_"
-
-  /** Checkpoint-identity tag for a mark sidecar file name: scope by the
-    * checkpoint's query uuid, not just its path string — Spark stamps a
-    * fresh uuid into <checkpoint>/metadata whenever the dir is
-    * (re)created, so "operator wiped the checkpoint in place and
-    * restarted" (same path, batch ids back at 0) gets a NEW tag and
-    * starts from mark -1 instead of inheriting the old stream's mark and
-    * silently discarding its first batches. The path string stays in the
-    * digest for distinct checkpoints that carry no metadata (directly
-    * driven batches in specs).
-    */
-  private def markTag(spark: SparkSession, checkpoint: String): String = {
-    val queryId = scala.util.Try {
-      val p = new org.apache.hadoop.fs.Path(checkpoint, "metadata")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) "" else {
-        val in = fs.open(p)
-        try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      }
-    }.getOrElse("")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest((checkpoint + " " + queryId).getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-  }
-
-  /** The mark sidecar lives INSIDE the table's data directory
-    * (underscore-prefixed — parquet readers skip it): it dies with the
-    * table and MOVES with the staging-swap rename, which is what makes
-    * (state, mark) one atomic publication.
-    */
-  private def markPath(spark: SparkSession, tableName: String, checkpoint: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      graft.operators.AnnIndex.tableLocation(spark, tableName),
-      MarkPrefix + markTag(spark, checkpoint))
-
-  private def writeMarkInto(spark: SparkSession, dir: org.apache.hadoop.fs.Path,
-      checkpoint: String, batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, MarkPrefix + markTag(spark, checkpoint))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(s"$batchId\n".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Copy every checkpoint's mark sidecar from the live table dir into
-    * the staging dir, so OTHER streams' progress survives this stream's
-    * swap (each stream only ever overwrites its own tag).
-    */
-  private def copyMarks(spark: SparkSession, tableName: String,
-      stagingDir: org.apache.hadoop.fs.Path): Unit = {
-    val live = graft.operators.AnnIndex.tableLocation(spark, tableName)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val glob = new org.apache.hadoop.fs.Path(live, MarkPrefix + "*")
-    Option(fs.globStatus(glob)).getOrElse(Array.empty).foreach { st =>
-      val in = fs.open(st.getPath)
-      val bytes = try in.readAllBytes() finally in.close()
-      val out = fs.create(new org.apache.hadoop.fs.Path(stagingDir, st.getPath.getName), true)
-      try out.write(bytes) finally out.close()
-    }
-  }
-
-  /** Unreadable/empty/garbage marks degrade to -1 (one batch re-applies
-    * against the PRE-swap state it describes — safe, because the mark
-    * and the state publish atomically), never a crash loop: a
-    * crash between `fs.create`'s truncate and the write leaves a 0-byte
-    * file in exactly the window this scheme exists to tolerate.
-    */
-  private def readBatchMark(spark: SparkSession, tableName: String, checkpoint: String): Long = {
-    val p = markPath(spark, tableName, checkpoint)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
-    else scala.util.Try {
-      val in = fs.open(p)
-      try new java.io.BufferedReader(new java.io.InputStreamReader(in)).readLine().trim.toLong
-      finally in.close()
-    }.getOrElse(-1L)
-  }
+    ingestEach(stream, checkpoint)((batch, id) =>
+      graft.operators.AnnIndex.ingestCatalogBatch(batch,
+        graft.operators.AnnIndex.gramDfCatalog(textCol, shingle),
+        tableName, buckets, id, checkpoint))
 
   // ---- sinks ----
 
@@ -1396,8 +1143,8 @@ object GraftStreaming {
     * to (log-aware) readers, so duplicates never surface. The flip side:
     * the log pins the file set, so files under `path` must never be
     * rewritten or deleted out-of-band (no external compaction) — an
-    * index that needs compaction uses the log-free idempotent-rewrite
-    * layout of [[indexStreamIvfPq]] instead.
+    * index that needs compaction uses the log-free era layout of
+    * [[graft.operators.AnnIndex]] instead.
     */
   def storeStreamParquet(df: DataFrame, path: String, checkpoint: String,
       outputMode: String = "append"): org.apache.spark.sql.streaming.StreamingQuery =

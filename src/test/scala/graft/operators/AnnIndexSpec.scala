@@ -148,6 +148,38 @@ class AnnIndexSpec extends AnyFunSuite {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t").collect())
   }
 
+  test("updateFingerprint heals a torn swap first: live table dropped, staging complete") {
+    val corpus = docs()
+    val table = "fp_torn_update_spec"
+    val staging = AnnIndex.stagingName(table)
+    def drop(): Unit = Seq(table, staging, "fp_torn_full_spec")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`").collect())
+    drop()
+    try {
+      AnnIndex.buildFingerprint(corpus.where(col("doc_id") < 200), "doc_id", "text", table,
+        buckets = 4)
+      // crash between a swap's drop and rename: only the complete staging
+      // table is left
+      spark.sql(s"ALTER TABLE `$table` RENAME TO `$staging`")
+      AnnIndex.updateFingerprint(spark, table, corpus.where(col("doc_id") >= 200),
+        "doc_id", "text", buckets = 4)
+      AnnIndex.buildFingerprint(corpus, "doc_id", "text", "fp_torn_full_spec", buckets = 4)
+      def rows(t: String) = spark.table(t).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+      assert(rows(table) == rows("fp_torn_full_spec") && rows(table).nonEmpty,
+        "the update must heal the swap and fold the delta onto the pre-crash state")
+      assert(!spark.catalog.tableExists(staging), "staging must be renamed back in")
+      // with no staging to heal from, an update must fail rather than
+      // build a catalog from the delta alone
+      drop()
+      intercept[org.apache.spark.sql.AnalysisException](AnnIndex.updateFingerprint(
+        spark, table, corpus, "doc_id", "text", buckets = 4))
+      intercept[org.apache.spark.sql.AnalysisException](AnnIndex.updateGramDf(
+        spark, table, corpus, "text", buckets = 4))
+      assert(!spark.catalog.tableExists(table) && !spark.catalog.tableExists(staging))
+    } finally drop()
+  }
+
   test("probeMinhashFixture == batch fixture twin restricted to delta-vs-corpus pairs") {
     // the oracle-replayable analogue of the probeMinhash parity test: same
     // shared pipeline, fixture hash family on both build and probe sides
@@ -411,7 +443,7 @@ class AnnIndexSpec extends AnyFunSuite {
       assert(probe() == want, "pair recovery must finish the second swap")
       assert(!spark.catalog.tableExists(stagS), "sigs staging must be consumed")
       // torn window: crash between sigs-staging drop and rename
-      // (recoverFingerprint's window) — live sigs gone, staging complete
+      // (recoverSwap's window) — live sigs gone, staging complete
       spark.sql(s"ALTER TABLE `$sigs` RENAME TO `$stagS`")
       assert(probe() == want, "probe must heal the drop/rename window")
       assert(spark.catalog.tableExists(sigs) && !spark.catalog.tableExists(stagS))
@@ -446,10 +478,8 @@ class AnnIndexSpec extends AnyFunSuite {
         graft.functions.Pq.encodeCol(col("embedding"), books).as("__codes"))
     def buildPristine(dir: String): Unit = {
       AnnIndex.writeIvfPqMeta(spark, dir, cells, books)
-      graft.streaming.GraftStreaming.writeIndexBatch(
-        codeRows(df.where(col("vec_id") < 100)), dir, 0L)
-      graft.streaming.GraftStreaming.writeIndexBatch(
-        codeRows(df.where(col("vec_id") >= 100)), dir, 1L)
+      AnnIndex.writeEra(codeRows(df.where(col("vec_id") < 100)), dir, 0L, Seq("__cell"))
+      AnnIndex.writeEra(codeRows(df.where(col("vec_id") >= 100)), dir, 1L, Seq("__cell"))
     }
     val queries = df.where(col("vec_id") < 10)
     def probe(dir: String) = AnnIndex.probeIvfPq(spark, dir, queries,
@@ -553,14 +583,14 @@ class AnnIndexSpec extends AnyFunSuite {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`").collect())
     drop()
     try {
-      AnnIndex.buildGramDf(d.where(col("doc_id") % 2 === 0), "doc_id", "text",
+      AnnIndex.buildGramDf(d.where(col("doc_id") % 2 === 0), "text",
         table, shingle = 2, buckets = 4)
       AnnIndex.updateGramDf(spark, table, d.where(col("doc_id") % 2 =!= 0),
-        "doc_id", "text", shingle = 2, buckets = 4)
+        "text", shingle = 2, buckets = 4)
       def weigh(counts: org.apache.spark.sql.DataFrame) =
         Dedup.softWeightsAgainstCounts(d, "doc_id", "text", counts, shingle = 2)
           .collect().map(r => (r.getLong(0), r.getLong(2), r.getDouble(4))).toSet
-      val want = weigh(Dedup.refGramCounts(d, "doc_id", "text", shingle = 2))
+      val want = weigh(Dedup.refGramCounts(d, "text", shingle = 2))
       assert(weigh(AnnIndex.loadGramDf(spark, table)) == want && want.nonEmpty,
         "build+append catalog must weigh exactly like in-flight whole-corpus counts")
       // catalog is bucketed+sorted on the join key, so a shuffle-join probe

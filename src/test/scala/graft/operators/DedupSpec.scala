@@ -612,7 +612,7 @@ class DedupSpec extends AnyFunSuite {
     assert(w(11L) == 1.0, s"reference-disjoint must weigh exactly 1.0: $w")
     assert(w(12L) == 0.5, s"1x-in-ref must weigh 1/2: $w")
     // the distilled map-side scorer reproduces the join form bit-for-bit
-    val counts = Dedup.refGramCounts(ref, "doc_id", "text", shingle = 2)
+    val counts = Dedup.refGramCounts(ref, "text", shingle = 2)
     val dfMap = Dedup.distillGramDf(counts)
     val viaCol = probe.select(col("doc_id"),
         Dedup.softWeightColumn(col("text"), dfMap, shingle = 2).as("s"))
@@ -640,7 +640,7 @@ class DedupSpec extends AnyFunSuite {
     // each distiller over a shuffling upstream aggregate of the file
     val distillers: Seq[(String, Int => Int)] = Seq(
       "distillGramDf" -> (m => Dedup.distillGramDf(
-        Dedup.refGramCounts(ref, "doc_id", "text", shingle = 2), m).size),
+        Dedup.refGramCounts(ref, "text", shingle = 2), m).size),
       "distillBenchmarkGrams" -> (m => Dedup.distillBenchmarkGrams(ref, "text", 3, m).length),
       "distillParagraphCatalog" -> (m => Dedup.distillParagraphCatalog(
         Dedup.paragraphCatalog(ref, "text"), m).length),

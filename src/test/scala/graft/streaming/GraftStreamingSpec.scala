@@ -1018,10 +1018,12 @@ class GraftStreamingSpec extends AnyFunSuite {
       // drive microbatches directly (the foreachBatch body, explicit ids)
       val ckpt = "target/io_tmp/fp_stream_ckpt_a"
       val (b1, b2) = texts.splitAt(30)
-      GraftStreaming.ingestFingerprintBatch(b1.toDF("doc_id", "text"),
-        "doc_id", "text", table, buckets = 4, batchId = 0L, checkpoint = ckpt)
-      GraftStreaming.ingestFingerprintBatch(b2.toDF("doc_id", "text"),
-        "doc_id", "text", table, buckets = 4, batchId = 1L, checkpoint = ckpt)
+      graft.operators.AnnIndex.ingestCatalogBatch(b1.toDF("doc_id", "text"),
+        graft.operators.AnnIndex.fingerprintCatalog("doc_id", "text"),
+        table, buckets = 4, batchId = 0L, checkpoint = ckpt)
+      graft.operators.AnnIndex.ingestCatalogBatch(b2.toDF("doc_id", "text"),
+        graft.operators.AnnIndex.fingerprintCatalog("doc_id", "text"),
+        table, buckets = 4, batchId = 1L, checkpoint = ckpt)
       def state() = spark.table(table).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       val streamed = state()
@@ -1030,8 +1032,9 @@ class GraftStreamingSpec extends AnyFunSuite {
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       assert(streamed == batchBuilt && streamed.nonEmpty)
       // normal replay (mark guard): same batch id again is a NO-OP
-      GraftStreaming.ingestFingerprintBatch(b2.toDF("doc_id", "text"),
-        "doc_id", "text", table, buckets = 4, batchId = 1L, checkpoint = ckpt)
+      graft.operators.AnnIndex.ingestCatalogBatch(b2.toDF("doc_id", "text"),
+        graft.operators.AnnIndex.fingerprintCatalog("doc_id", "text"),
+        table, buckets = 4, batchId = 1L, checkpoint = ckpt)
       assert(state() == batchBuilt, "guarded replay must not change the catalog")
       // crash-window replay (mark lost): counts may inflate, but WINNERS
       // are idempotent under min — the dedup verdicts cannot change
@@ -1042,22 +1045,24 @@ class GraftStreamingSpec extends AnyFunSuite {
         "winner ids must survive an unguarded batch re-apply")
       // crash between updateFingerprint's drop and rename: live table
       // gone, complete staging present — the next batch heals via
-      // recoverFingerprint instead of rebuilding from one batch
+      // recoverSwap instead of rebuilding from one batch
       val staging = graft.operators.AnnIndex.stagingName(table)
       spark.sql(s"ALTER TABLE `$table` RENAME TO `$staging`")
       val healedState = state _ // call only after recovery
-      GraftStreaming.ingestFingerprintBatch(
+      graft.operators.AnnIndex.ingestCatalogBatch(
         Seq((900L, "post crash new document")).toDF("doc_id", "text"),
-        "doc_id", "text", table, buckets = 4, batchId = 7L, checkpoint = ckpt)
+        graft.operators.AnnIndex.fingerprintCatalog("doc_id", "text"),
+        table, buckets = 4, batchId = 7L, checkpoint = ckpt)
       assert(healedState().map(_._1).size > 1,
         "recovered catalog must retain pre-crash fingerprints, not just the new batch")
       assert(!spark.catalog.tableExists(staging), "staging must be renamed back in")
       // fresh checkpoint over the SAME table: batch ids restart at 0 and
       // must APPLY (a per-table mark would silently drop them)
       val before = state()
-      GraftStreaming.ingestFingerprintBatch(
+      graft.operators.AnnIndex.ingestCatalogBatch(
         Seq((901L, "second stream novel document")).toDF("doc_id", "text"),
-        "doc_id", "text", table, buckets = 4, batchId = 0L,
+        graft.operators.AnnIndex.fingerprintCatalog("doc_id", "text"),
+        table, buckets = 4, batchId = 0L,
         checkpoint = "target/io_tmp/fp_stream_ckpt_b")
       assert(state().size == before.size + 1,
         "a fresh checkpoint's batch 0 must ingest into the existing table")
@@ -1072,21 +1077,24 @@ class GraftStreamingSpec extends AnyFunSuite {
           new java.io.File(ckptC, "metadata").toPath, s"""{"id":"$uuid"}""")
       }
       writeMeta("run-a")
-      GraftStreaming.ingestFingerprintBatch(
+      graft.operators.AnnIndex.ingestCatalogBatch(
         Seq((902L, "third stream doc one")).toDF("doc_id", "text"),
-        "doc_id", "text", table, buckets = 4, batchId = 0L,
+        graft.operators.AnnIndex.fingerprintCatalog("doc_id", "text"),
+        table, buckets = 4, batchId = 0L,
         checkpoint = ckptC.getPath)
-      GraftStreaming.ingestFingerprintBatch(
+      graft.operators.AnnIndex.ingestCatalogBatch(
         Seq((903L, "third stream doc two")).toDF("doc_id", "text"),
-        "doc_id", "text", table, buckets = 4, batchId = 1L,
+        graft.operators.AnnIndex.fingerprintCatalog("doc_id", "text"),
+        table, buckets = 4, batchId = 1L,
         checkpoint = ckptC.getPath)
       val beforeWipe = state()
       // the operator's standard reset: delete the checkpoint, same path
       org.apache.commons.io.FileUtils.deleteDirectory(ckptC)
       writeMeta("run-b")
-      GraftStreaming.ingestFingerprintBatch(
+      graft.operators.AnnIndex.ingestCatalogBatch(
         Seq((904L, "fourth stream novel doc")).toDF("doc_id", "text"),
-        "doc_id", "text", table, buckets = 4, batchId = 0L,
+        graft.operators.AnnIndex.fingerprintCatalog("doc_id", "text"),
+        table, buckets = 4, batchId = 0L,
         checkpoint = ckptC.getPath)
       assert(state().size == beforeWipe.size + 1,
         "batch 0 after a checkpoint wipe must apply (new query uuid => new mark scope)")
@@ -1107,7 +1115,8 @@ class GraftStreamingSpec extends AnyFunSuite {
     def state() = spark.table(table).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     def ingest(df: org.apache.spark.sql.DataFrame, id: Long) =
-      GraftStreaming.ingestFingerprintBatch(df, "doc_id", "text", table,
+      graft.operators.AnnIndex.ingestCatalogBatch(df,
+        graft.operators.AnnIndex.fingerprintCatalog("doc_id", "text"), table,
         buckets = 4, batchId = id, checkpoint = ckpt)
     val staging = graft.operators.AnnIndex.stagingName(table)
     Seq(table, staging, "fp_eo_t1", "fp_eo_t2")
@@ -1117,8 +1126,9 @@ class GraftStreamingSpec extends AnyFunSuite {
       // crash window A: batch 1 staged (no mark yet), live still present.
       // The replay must re-apply ONCE against the pre-swap state — the
       // dangling staging is overwritten, counts land exact.
-      graft.operators.AnnIndex.stageFingerprintUpdate(spark, table,
-        batch(20, 40), "doc_id", "text", buckets = 4)
+      graft.operators.AnnIndex.stageMerge(spark, table,
+        graft.operators.AnnIndex.fingerprintCatalog("doc_id", "text"),
+        batch(20, 40), buckets = 4, onto = true)
       ingest(batch(20, 40), 1L)
       assert(state() == truthOn(40, "fp_eo_t1"),
         "crash-before-swap replay must yield exactly-once COUNTS, not just winners")
@@ -1146,15 +1156,16 @@ class GraftStreamingSpec extends AnyFunSuite {
     def batch(lo: Long, hi: Long) =
       (lo until hi).map(i => (i, s"shared body text ${i % 5} tail")).toDF("doc_id", "text")
     def truthOn(hi: Long, name: String) = {
-      graft.operators.AnnIndex.buildGramDf(batch(0, hi), "doc_id", "text", name,
+      graft.operators.AnnIndex.buildGramDf(batch(0, hi), "text", name,
         shingle = 2, buckets = 4)
       spark.table(name).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     def state() = spark.table(table).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     def ingest(df: org.apache.spark.sql.DataFrame, id: Long) =
-      GraftStreaming.ingestGramDfBatch(df, "doc_id", "text", table,
-        shingle = 2, buckets = 4, batchId = id, checkpoint = ckpt)
+      graft.operators.AnnIndex.ingestCatalogBatch(df,
+        graft.operators.AnnIndex.gramDfCatalog("text", shingle = 2), table,
+        buckets = 4, batchId = id, checkpoint = ckpt)
     val staging = graft.operators.AnnIndex.stagingName(table)
     Seq(table, staging, "gramdf_eo_t1", "gramdf_eo_t2")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`").collect())
@@ -1162,8 +1173,9 @@ class GraftStreamingSpec extends AnyFunSuite {
       ingest(batch(0, 20), 0L)
       // crash window A: batch 1 staged (no mark yet), live still present —
       // the replay must re-apply ONCE against the pre-swap state
-      graft.operators.AnnIndex.stageGramDfUpdate(spark, table,
-        batch(20, 40), "doc_id", "text", shingle = 2, buckets = 4)
+      graft.operators.AnnIndex.stageMerge(spark, table,
+        graft.operators.AnnIndex.gramDfCatalog("text", shingle = 2),
+        batch(20, 40), buckets = 4, onto = true)
       ingest(batch(20, 40), 1L)
       assert(state() == truthOn(40, "gramdf_eo_t1"),
         "crash-before-swap replay must yield exactly-once df counts")
@@ -1232,7 +1244,7 @@ class GraftStreamingSpec extends AnyFunSuite {
         graft.operators.Similarity.nearestCells(col("embedding"), col("__cells"), 1), 1)("cell"))
       .select(col("vec_id").as("neighbor_id"), col("__cell"),
         graft.functions.Sq.encodeCol(col("embedding"), mins, maxs).as("__codes"))
-    GraftStreaming.writeIndexBatch(replay, path, batchId = 1L)
+    graft.operators.AnnIndex.writeEra(replay, path, era = 1L, partCols = Seq("__cell"))
     assert(spark.read.parquet(path).count() == before, "replayed batch must not duplicate rows")
     assert(probe() == want, "probe must be stable under batch replay")
     // compaction (the shared era machinery on the identical layout):
@@ -1288,7 +1300,7 @@ class GraftStreamingSpec extends AnyFunSuite {
         graft.operators.Similarity.nearestCells(col("embedding"), col("__cells"), 1), 1)("cell"))
       .select(col("vec_id").as("neighbor_id"), col("__cell"),
         graft.functions.Pq.encodeCol(col("embedding"), books).as("__codes"))
-    GraftStreaming.writeIndexBatch(replay, path, batchId = 1L)
+    graft.operators.AnnIndex.writeEra(replay, path, era = 1L, partCols = Seq("__cell"))
     assert(spark.read.parquet(path).count() == before, "replayed batch must not duplicate rows")
     assert(probe() == want, "probe must be stable under batch replay")
 
@@ -1381,7 +1393,7 @@ class GraftStreamingSpec extends AnyFunSuite {
         col("__cv"))
       .select(col("neighbor_id"), col("__ca"), col("__cb"),
         graft.functions.Pq.encodeCol(col("__cv"), books).as("__codes"))
-    GraftStreaming.writeIndexBatch(replay, path, batchId = 1L,
+    graft.operators.AnnIndex.writeEra(replay, path, era = 1L,
       partCols = Seq("__ca", "__cb"))
     assert(spark.read.parquet(path).count() == before, "replayed batch must not duplicate rows")
     assert(probe() == want, "probe must be stable under batch replay")
@@ -1735,7 +1747,7 @@ class GraftStreamingSpec extends AnyFunSuite {
     val table = "gramdf_stream_spec"
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     try {
-      AnnIndex.buildGramDf(ref, "doc_id", "text", table, shingle = 2, buckets = 2)
+      AnnIndex.buildGramDf(ref, "text", table, shingle = 2, buckets = 2)
       val counts = AnnIndex.loadGramDf(spark, table)
       val cand = Seq(
         (100L, base),                                    // 6x in ref: weight 1/7
@@ -2065,10 +2077,10 @@ class GraftStreamingSpec extends AnyFunSuite {
     // replay idempotence: re-writing an already-written batch id leaves
     // row counts unchanged (batch=<id> replaced wholesale)
     val before = spark.read.parquet(path).count()
-    GraftStreaming.writeIndexBatch(
+    graft.operators.AnnIndex.writeEra(
       graft.operators.Cdc.catalogRows(docs.slice(60, 90).toDF("doc_id", "text"),
         "text", 8, mn, ab, mx),
-      path, batchId = 1L, partCols = Seq("__b"))
+      path, era = 1L, partCols = Seq("__b"))
     assert(spark.read.parquet(path).count() == before,
       "replayed batch must not duplicate catalog rows")
     // cross-era duplicates exist (the boilerplate band repeats per crawl)…
@@ -2082,6 +2094,82 @@ class GraftStreamingSpec extends AnyFunSuite {
     val eras = new java.io.File(path).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).toSet
     assert(eras == Set("batch=-2"), s"all rows must land in the fresh era below the build's, got $eras")
+  }
+
+  test("batch-built IVF-PQ, IVF-SQ and IMI-PQ indexes take stream appends: probe == in-flight over build + stream") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    import graft.operators.{AnnIndex, Similarity}
+    val rnd = new scala.util.Random(59L)
+    val vecs = (0L until 160L).map(i => (i, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
+    val df = vecs.toDF("vec_id", "embedding")
+    val built = df.where(col("vec_id") < 80)
+    val queries = df.where(col("vec_id") < 10)
+    val books = graft.functions.Pq.train(df, "vec_id", "embedding",
+      m = 4, ksub = 8, sampleSize = 160)
+    val (mins, maxs) = graft.functions.Sq.trainBounds(df, "embedding")
+    // one quantizer for build, stream and the in-flight reference
+    val cells = Similarity.kmeansCells(df, "vec_id", "embedding", nCells = 8, iters = 2).persist()
+    def halfBook(h: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+      Similarity.kmeansCells(df.select(col("vec_id"), h(col("embedding")).as("__h")),
+        "vec_id", "__h", nCells = 4, iters = 2).persist()
+    val (ba, bb) = (halfBook(Similarity.halfA), halfBook(Similarity.halfB))
+    // build from the first half of the vectors, then stream the second
+    // half into the SAME path as one microbatch
+    def buildThenStream(name: String)(build: String => Unit)(
+        start: (org.apache.spark.sql.DataFrame, String, String) =>
+          org.apache.spark.sql.streaming.StreamingQuery): String = {
+      val path = s"target/io_tmp/${name}_build_stream_idx"
+      val checkpoint = s"target/io_tmp/${name}_build_stream_ckpt"
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(checkpoint))
+      build(path)
+      val input = MemoryStream[(Long, Array[Float])]
+      val query = start(input.toDF().toDF("vec_id", "embedding"), path, checkpoint)
+      try { input.addData(vecs.drop(80)); query.processAllAvailable() } finally query.stop()
+      path
+    }
+    def ranked(r: org.apache.spark.sql.Row, rankAt: Int) = (r.getLong(0), r.getInt(rankAt), r.getLong(1))
+    try {
+      val pq = buildThenStream("ivfpq")(
+        AnnIndex.buildIvfPq(built, "vec_id", "embedding", _, books, nCells = 8,
+          centroids = Some(cells)))(
+        GraftStreaming.indexStreamIvfPq(_, "vec_id", "embedding", _, _, cells, books))
+      val gotPq = AnnIndex.probeIvfPq(spark, pq, queries, "vec_id", "embedding",
+        k = 5, nProbe = 3).collect().map(ranked(_, 3)).toSet
+      val wantPq = graft.functions.Pq.ivfTopK(queries, df, "vec_id", "embedding",
+        books, k = 5, nCells = 8, nProbe = 3, centroids = Some(cells))
+        .collect().map(ranked(_, 3)).toSet
+      assert(gotPq == wantPq && gotPq.nonEmpty, "IVF-PQ: build + stream must probe like the whole corpus")
+
+      val sqPath = buildThenStream("ivfsq")(
+        AnnIndex.buildIvfSq(built, "vec_id", "embedding", _, nCells = 8,
+          centroids = Some(cells), bounds = Some((mins, maxs))))(
+        GraftStreaming.indexStreamIvfSq(_, "vec_id", "embedding", _, _))
+      val gotSq = AnnIndex.probeIvfSq(spark, sqPath, queries, "vec_id", "embedding",
+        k = 5, nProbe = 3).collect().map(ranked(_, 3)).toSet
+      val wantSq = graft.functions.Sq.ivfTopK(queries, df, "vec_id", "embedding",
+        k = 5, nCells = 8, nProbe = 3, centroids = Some(cells), bounds = Some((mins, maxs)))
+        .collect().map(ranked(_, 3)).toSet
+      assert(gotSq == wantSq && gotSq.nonEmpty, "IVF-SQ: build + stream must probe like the whole corpus")
+
+      val imi = buildThenStream("imipq")(
+        AnnIndex.buildImiPq(built, "vec_id", "embedding", _, books,
+          codebooks = Some((ba, bb))))(
+        GraftStreaming.indexStreamImiPq(_, "vec_id", "embedding", _, _,
+          ba.withColumnRenamed("__cells", "__cellsA"),
+          bb.withColumnRenamed("__cells", "__cellsB"), books))
+      val gotImi = AnnIndex.probeImiPqRefined(spark, imi, queries, df, "vec_id", "embedding",
+        k = 5, nProbe = 3, refine = 2).collect().map(ranked(_, 2)).toSet
+      val wantImi = graft.functions.Pq.imiTopKRefined(queries, df, "vec_id", "embedding",
+        books, k = 5, nProbe = 3, refine = 2, codebooks = Some((ba, bb)))
+        .collect().map(ranked(_, 2)).toSet
+      assert(gotImi == wantImi && gotImi.nonEmpty, "IMI-PQ: build + stream must probe like the whole corpus")
+      // the build wrote era -1 and the stream appended era 0 beside it
+      val eras = new java.io.File(imi).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).toSet
+      assert(eras == Set("batch=-1", "batch=0"), s"expected the build era and one stream era, got $eras")
+    } finally Seq(cells, ba, bb).foreach(_.unpersist())
   }
 
   test("indexStreamCdc: kill-resume matrix — between-batch kill and mid-batch torn write both heal to the exact catalog") {
@@ -2150,7 +2238,7 @@ class GraftStreamingSpec extends AnyFunSuite {
     // ---- kill MID-batch: simulate the sink dying partway through the
     // upcoming batch-1 write — a TORN batch=1 directory exists (a few
     // rows, no checkpoint commit). The resumed stream must replay batch 1
-    // and writeIndexBatch must replace the torn directory WHOLESALE.
+    // and writeEra must replace the torn directory WHOLESALE.
     val torn = df.where(col("vec_id") >= 100 && col("vec_id") < 105)
       .join(broadcast(cells))
       .withColumn("__cell", element_at(
